@@ -30,18 +30,23 @@ import org.apache.spark.sql.functions._
 object BloomSemiJoin {
 
   /** Register the bloom expressions under callable names (the same
-    * temp-function technique as graft_fvdot). */
+    * temp-function technique as graft_fvdot) — once per session, like
+    * `GraftFunctions.ensureRegistered`: a repeat call is a no-op. */
   def ensureRegistered(spark: SparkSession): Unit = {
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
     import org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain
     import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_bloom_agg",
-      children => new BloomFilterAggregate(children(0), children(1), children(2)),
-      "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_bloom_contains",
-      children => BloomFilterMightContain(children(0), children(1)),
-      "scala_udf")
+    val registry = spark.sessionState.functionRegistry
+    if (!registry.functionExists(FunctionIdentifier("graft_bloom_agg")))
+      registry.createOrReplaceTempFunction(
+        "graft_bloom_agg",
+        children => new BloomFilterAggregate(children(0), children(1), children(2)),
+        "scala_udf")
+    if (!registry.functionExists(FunctionIdentifier("graft_bloom_contains")))
+      registry.createOrReplaceTempFunction(
+        "graft_bloom_contains",
+        children => BloomFilterMightContain(children(0), children(1)),
+        "scala_udf")
   }
 
   /** Serialized bloom filter (binary) over `key`, built distributed

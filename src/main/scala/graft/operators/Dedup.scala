@@ -273,30 +273,51 @@ object Dedup {
     loadIndex(spark, tag)
   }
 
-  /** Incremental dedup: the rows of `batch` that survive against an
-    * already-deduped corpus — the shape a continuously-ingested
+  /** Incremental dedup: the rows of `batch` that survive against
+    * already-deduped scopes — the shape a continuously-ingested
     * training corpus actually runs (the full-corpus rebuild
     * `dedupedCorpus` is the bootstrap; this is every day after).
     *
-    * A batch doc is dropped when (a) its exact content exists in the
-    * corpus or earlier in the batch (min doc_id wins, matching
+    * A batch doc is dropped when (a) its exact content exists in any
+    * scope or earlier in the batch (min doc_id wins, matching
     * `exact`), or (b) an LSH-proposed, exact-Jaccard-verified near-dup
-    * exists in the corpus or earlier in the batch — the same
+    * exists in any scope or earlier in the batch — the same
     * propose-then-verify policy as `dedupedCorpus`, made asymmetric:
-    * the corpus side always wins regardless of id.
+    * a scope always wins regardless of id.
+    *
+    * `scopes` is a flat list: a streaming twin passes the settled
+    * corpus, its persisted frontier index and an in-plan index of its
+    * tail deltas together. The batch-side frames (md5s, bucket rows,
+    * shingle sets) are built once; each scope is probed on its own
+    * stored layout (no union of scopes, which would discard the
+    * bucketed clustering and re-shuffle every index); all losers meet
+    * in one anti-join. The plan thus references the batch O(scopes)
+    * times, where chaining one call per scope multiplied the
+    * references (~10^k subplans for k scopes).
+    *
+    * Flat equals chained: batch and scope ids are disjoint and every
+    * verdict is per pair, so a doc's scope hits do not depend on which
+    * other batch docs survived. In-batch dedup re-run on a subset of
+    * the batch cannot drop a doc the first pass kept: its winner would
+    * be a smaller-id survivor in the subset, hence in the batch, which
+    * already dropped it. So the survivors are the batch minus every
+    * scope's hits minus the in-batch losers, whichever way it is
+    * composed (IncrementalDedupSpec asserts both).
     *
     * Scale shape: every join is batch-driven. Batch bucket rows probe
-    * the corpus bucket table (|B|·bands rows against a bucket-keyed
+    * each scope's bucket table (|B|·bands rows against a bucket-keyed
     * index — at 100 TB, bucketed-by-`bucket` storage makes this probe
     * shuffle only the batch side), verification joins only the
-    * candidate pairs against the shingle-set index, and the corpus
-    * text is never rescanned. Cost ∝ |batch| + collisions, not
-    * |corpus|. */
-  def incremental(index: CorpusIndex, batch: DataFrame, text: Column,
+    * candidate pairs against that scope's shingle-set index, and no
+    * scope's text is ever rescanned. Cost ∝ |scopes|·|batch| +
+    * collisions, not the scopes' size. */
+  def incremental(scopes: Seq[CorpusIndex], batch: DataFrame, text: Column,
                   id: Column, n: Int, threshold: Double): DataFrame = {
+    require(scopes.nonEmpty, "incremental dedup needs at least one scope")
     val bMd5 = batch.select(id.as("doc_id"), md5(text.cast("binary")).as("content_md5"))
-    val exactVsCorpus = bMd5.join(index.md5s, Seq("content_md5"), "left_semi")
-      .select("doc_id")
+    val exactVsScopes = scopes.map(s =>
+        bMd5.join(s.md5s, Seq("content_md5"), "left_semi").select("doc_id"))
+      .reduce(_ unionByName _)
     val exactInBatch = bMd5
       .join(bMd5.groupBy("content_md5").agg(min(col("doc_id")).as("keep_id")),
         Seq("content_md5"))
@@ -304,22 +325,23 @@ object Dedup {
 
     val sigB = minhashSignatures(batch, text, id, n)
     val bkB = lshBuckets(sigB)
-    val candVsCorpus = bkB.as("b").join(index.buckets.as("c"),
-        col("b.band") === col("c.band") && col("b.bucket") === col("c.bucket"))
-      .select(col("b.doc_id").as("batch_id"), col("c.doc_id").as("other_id"))
-      .distinct()
+    def candVs(buckets: DataFrame): DataFrame =
+      bkB.as("b").join(buckets.as("c"),
+          col("b.band") === col("c.band") && col("b.bucket") === col("c.bucket"))
+        .select(col("b.doc_id").as("batch_id"), col("c.doc_id").as("other_id"))
+        .distinct()
     val candInBatch = bkB.as("b").join(bkB.as("o"),
         col("b.band") === col("o.band") && col("b.bucket") === col("o.bucket")
           && col("b.doc_id") > col("o.doc_id"))
       .select(col("b.doc_id").as("batch_id"), col("o.doc_id").as("other_id"))
       .distinct()
 
-    // Verification runs per candidate SOURCE (corpus / earlier-batch),
-    // so the corpus half joins the shingle-set index directly on its
-    // stored doc_id clustering instead of through a union with the
-    // batch frame (a union would discard the persisted layout and
-    // re-shuffle the corpus side). Corpus and batch ids are disjoint
-    // by contract, so the split is the same pair set.
+    // Verification runs per candidate SOURCE (each scope / earlier-
+    // batch), so a scope's half joins its shingle-set index directly
+    // on its stored doc_id clustering instead of through a union with
+    // the batch frame (a union would discard the persisted layout and
+    // re-shuffle the scope side). Scope and batch ids are disjoint by
+    // contract, so the split is the same pair set.
     val setsB = shingleSets(batch, text, id, n)
     def verifiedLosers(cand: DataFrame, otherSets: DataFrame): DataFrame =
       cand
@@ -333,13 +355,19 @@ object Dedup {
             / (size(col("sha")) + size(col("shb")) - col("common")), 6))
         .filter(col("jaccard") >= threshold)
         .select(col("batch_id").as("doc_id"))
-    val nearLosers = verifiedLosers(candVsCorpus, index.shingleSets)
+    val nearLosers = scopes.map(s => verifiedLosers(candVs(s.buckets), s.shingleSets))
+      .reduce(_ unionByName _)
       .unionByName(verifiedLosers(candInBatch, setsB)).distinct()
 
     batch.join(
-      exactVsCorpus.unionByName(exactInBatch).unionByName(nearLosers).distinct(),
+      exactVsScopes.unionByName(exactInBatch).unionByName(nearLosers).distinct(),
       Seq("doc_id"), "left_anti")
   }
+
+  /** One settled scope — the single-index form of the above. */
+  def incremental(index: CorpusIndex, batch: DataFrame, text: Column,
+                  id: Column, n: Int, threshold: Double): DataFrame =
+    incremental(Seq(index), batch, text, id, n, threshold)
 
   /** Bootstrap convenience: index the corpus in-plan, then dedupe the
     * batch against it. */

@@ -265,39 +265,35 @@ object GraftFunctions {
       s"graft_entropy(text, delim): delim must be a string literal, got $other")
   }
 
+  /** Every runtime-registered graft function with its builder. */
+  private val runtimeFunctions: Seq[(String, Seq[Expression] => Expression)] = Seq(
+    ("graft_fvdot", (children: Seq[Expression]) => FloatVectorDot(children(0), children(1))),
+    ("graft_grams", mkGrams _),
+    ("graft_entropy", mkEntropy _),
+    ("graft_rep_stats", mkRepStats _),
+    ("graft_winnow", mkWinnow _),
+    ("graft_dsir_counts", mkDsirCounts _),
+    ("graft_dsir_score", mkDsirScore _),
+    ("graft_hash_embed", mkHashEmbed _),
+    ("graft_minhash", mkMinhash _),
+    ("graft_simhash", mkSimhash _),
+    ("graft_html_extract", mkHtmlExtract _),
+    ("graft_url_pct", (cs: Seq[Expression]) => UrlPercentNorm(cs(0))),
+    ("graft_url_qsort", (cs: Seq[Expression]) => UrlQuerySort(cs(0))),
+    ("graft_url_dotfold", (cs: Seq[Expression]) => UrlDotFold(cs(0))),
+    ("graft_url_canon", (cs: Seq[Expression]) => UrlCanon(cs(0))),
+    ("graft_prophet_solve", (cs: Seq[Expression]) => ProphetSolve(cs(0))))
+
+  /** Registers each graft function the session does not have yet, so
+    * a repeat call (one per operator entry point, several per
+    * micro-batch) is a no-op rather than a replace-and-WARN of all of
+    * them. */
   def ensureRegistered(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_fvdot", children => FloatVectorDot(children(0), children(1)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_grams", mkGrams, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_entropy", mkEntropy, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_rep_stats", mkRepStats, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_winnow", mkWinnow, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_dsir_counts", mkDsirCounts, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_dsir_score", mkDsirScore, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_hash_embed", mkHashEmbed, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_minhash", mkMinhash, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_simhash", mkSimhash, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_html_extract", mkHtmlExtract, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_url_pct", cs => UrlPercentNorm(cs(0)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_url_qsort", cs => UrlQuerySort(cs(0)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_url_dotfold", cs => UrlDotFold(cs(0)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_url_canon", cs => UrlCanon(cs(0)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_prophet_solve", cs => ProphetSolve(cs(0)), "scala_udf")
+    val registry = spark.sessionState.functionRegistry
+    runtimeFunctions.foreach { case (name, builder) =>
+      if (!registry.functionExists(FunctionIdentifier(name)))
+        registry.createOrReplaceTempFunction(name, builder, "scala_udf")
+    }
     if (!spark.experimental.extraOptimizations.contains(RewriteVectorDot)) {
       spark.experimental.extraOptimizations =
         spark.experimental.extraOptimizations :+ RewriteVectorDot

@@ -19,8 +19,12 @@ import graft.operators.Dedup
   * tables are built ONCE (amortized per settle window, on first use —
   * which also covers a crash between the settle and the build) and
   * every batch probes them batch-driven; only the short tail of
-  * un-settled deltas is still indexed in-plan. Per-batch compute is
-  * then ∝ |batch| + |tail|, flat in the corpus like scope (a).
+  * un-settled deltas is still indexed in-plan. [[dedupScope]] returns
+  * both as entries of a flat scope list, so the streaming twins probe
+  * corpus, frontier and tail in ONE `Dedup.incremental` call (one
+  * batch-side subplan, one anti-join) rather than chaining a call per
+  * scope. Per-batch compute is then ∝ |batch| + |tail|, flat in the
+  * corpus like scope (a).
   *
   * Layout: tables `ci_*_fr<dirhash>_<m>` (Dedup.saveIndex naming)
   * with files under `dir/_frindex_<m>` — a name [[Frontier.scan]]
@@ -37,14 +41,15 @@ private[streaming] object FrontierIndex {
   private[streaming] def tag(dir: String, m: Long): String =
     s"fr${dirHash(dir)}_$m"
 
-  /** Scope (c) for batch `batchId` over `dir`: the settled frontier
-    * as a persisted [[Dedup.CorpusIndex]] (None until a settle has
-    * happened) plus the live tail-delta paths. */
+  /** Scope (c) for batch `batchId` over `dir`, as the flat scope list
+    * `Dedup.incremental` probes next to the settled corpus: the settled
+    * frontier's persisted [[Dedup.CorpusIndex]] (once a settle has
+    * happened), then an in-plan index of the live tail deltas (when
+    * there are any). Empty before the stream has accepted anything. */
   def dedupScope(spark: SparkSession, dir: String, batchId: Long,
-                 text: Column, id: Column, n: Int)
-      : (Option[Dedup.CorpusIndex], Seq[String]) = {
+                 text: Column, id: Column, n: Int): Seq[Dedup.CorpusIndex] = {
     val (front, deltas) = Frontier.scopeParts(spark, dir, batchId)
-    val idx = front.map { case (m, path) =>
+    val frontIdx = front.map { case (m, path) =>
       // GC runs only when this generation's index is not built yet —
       // i.e. once per settle window, not a catalog listing per batch
       if (!spark.catalog.tableExists(s"ci_md5_${tag(dir, m)}"))
@@ -53,7 +58,10 @@ private[streaming] object FrontierIndex {
         Dedup.indexCorpus(spark.read.parquet(path), text, id, n)
       }
     }
-    (idx, deltas)
+    val tailIdx =
+      if (deltas.isEmpty) None
+      else Some(Dedup.indexCorpus(spark.read.parquet(deltas: _*), text, id, n))
+    frontIdx.toSeq ++ tailIdx
   }
 
   /** GC index generations older than `m`: catalog tables and the

@@ -15,8 +15,13 @@ import graft.operators.{Dedup, LanguageModel, TextAnalysis}
   * boundaries), then the survivors dedup against (a) the settled
   * corpus index, (b) themselves, and (c) every earlier batch this
   * stream accepted — the same three scopes as [[IngestDedup]], with
-  * scope (c) served as the settled [[Frontier]] plus at most
-  * `settleEvery` tail deltas (flat per-batch probe cost).
+  * scope (c) served as the settled [[Frontier]]'s persisted index plus
+  * an in-plan index of at most `settleEvery` tail deltas (flat
+  * per-batch probe cost). Corpus, frontier and tail go to ONE
+  * `Dedup.incremental` call as a flat scope list: the batch-side
+  * frames are built once and one anti-join drops every scope's
+  * losers, with the same survivors as a call per scope (see its
+  * scaladoc for why flat equals chained).
   * The LM rides along as its single count table (`bigramLm`'s
   * "persisting the model is persisting this one frame"), loaded once
   * outside the stream — scoring inside the batch is two equi-keyed
@@ -53,22 +58,14 @@ object IngestCuration {
           .join(lmGate, Seq("doc_id"))
         val quality = flagged.filter(!col("rep_fail") && !col("lm_fail"))
           .select(col("doc_id"), col("__text").as("text"))
-        val vsCorpus = Dedup.incremental(index, quality, text, id, n, threshold)
-        // earlier batches only (current id excluded — replay-safe, see
-        // BatchLayout/Frontier); settled frontier via its persisted
-        // index, tail deltas in-plan (FrontierIndex — per-batch
-        // compute flat in the accepted corpus)
-        val (frontIdx, tailPaths) = FrontierIndex.dedupScope(
-          spark, s"$outDir/accepted", batchId, text, id, n)
-        val vsFrontier = frontIdx match {
-          case Some(fi) => Dedup.incremental(fi, vsCorpus, text, id, n, threshold)
-          case None => vsCorpus
-        }
-        val accepted =
-          if (tailPaths.isEmpty) vsFrontier
-          else Dedup.incremental(
-            spark.read.parquet(tailPaths: _*).select("doc_id", "text"),
-            vsFrontier, text, id, n, threshold)
+        // scope (c) is earlier batches only (current id excluded —
+        // replay-safe, see BatchLayout/Frontier): settled frontier via
+        // its persisted index, tail deltas in-plan (FrontierIndex),
+        // probed with the corpus in one flat call — per-batch compute
+        // flat in the accepted corpus
+        val accepted = Dedup.incremental(
+          index +: FrontierIndex.dedupScope(spark, s"$outDir/accepted", batchId, text, id, n),
+          quality, text, id, n, threshold)
         accepted.write.mode("overwrite")
           .parquet(s"$outDir/accepted/batch_$batchId")
         flagged

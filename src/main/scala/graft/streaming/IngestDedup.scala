@@ -20,14 +20,20 @@ import graft.operators.Dedup
   * foreachBatch's at-least-once retries idempotent — the delta state
   * IS the sink, no side ledger to reconcile.
   *
-  * Scale shape: scope (a) is the batch-driven persisted-index probe
-  * (cost ∝ |batch|); scope (c) probes the latest settled [[Frontier]]
-  * plus at most `settleEvery` tail deltas — every `settleEvery`
-  * batches the accepted deltas fold into one compacted
-  * `frontier_<m>` dir, so the per-batch probe reads O(1) sources
-  * however long the stream has run (the same base+delta posture as
-  * scope (a), applied to the stream's own output). Consumers read
-  * the accepted corpus via [[Frontier.readLayered]].
+  * Scale shape: scopes (a) and (c) are one flat scope list handed to
+  * a single `Dedup.incremental` call, which builds the batch-side
+  * frames once, probes each scope on its own stored layout and drops
+  * every scope's losers in one anti-join (the same survivors as
+  * chaining a call per scope — see its scaladoc — without the
+  * multiplied batch subplans). Scope (a) is the batch-driven
+  * persisted-index probe (cost ∝ |batch|); scope (c) is the latest
+  * settled [[Frontier]]'s persisted index plus an in-plan index of at
+  * most `settleEvery` tail deltas ([[FrontierIndex.dedupScope]]) —
+  * every `settleEvery` batches the accepted deltas fold into one
+  * compacted `frontier_<m>` dir, so the per-batch probe reads O(1)
+  * sources however long the stream has run (the same base+delta
+  * posture as scope (a), applied to the stream's own output).
+  * Consumers read the accepted corpus via [[Frontier.readLayered]].
   */
 object IngestDedup {
 
@@ -40,26 +46,17 @@ object IngestDedup {
         val spark = batch.sparkSession
         val text = col("text")
         val id = col("doc_id")
-        val vsCorpus = Dedup.incremental(index, batch.toDF(), text, id, n, threshold)
-        // earlier survivors act as settled corpus too (the CURRENT
-        // batch id excluded — an at-least-once retry must not dedup
-        // the batch against its own partial output, which would empty
-        // it on replay; see BatchLayout/Frontier). The settled
-        // frontier probes through its PERSISTED index (built once per
-        // settle window — FrontierIndex); only the short un-settled
-        // tail is indexed in-plan, so per-batch compute is
-        // ∝ |batch| + |tail|, flat in the accepted corpus.
-        val (frontIdx, tailPaths) = FrontierIndex.dedupScope(
-          spark, survivorDir, batchId, text, id, n)
-        val vsFrontier = frontIdx match {
-          case Some(fi) => Dedup.incremental(fi, vsCorpus, text, id, n, threshold)
-          case None => vsCorpus
-        }
-        val out =
-          if (tailPaths.isEmpty) vsFrontier
-          else Dedup.incremental(
-            spark.read.parquet(tailPaths: _*).select(batch.columns.map(col): _*),
-            vsFrontier, text, id, n, threshold)
+        // scope (c) is earlier survivors only (the CURRENT batch id
+        // excluded — an at-least-once retry must not dedup the batch
+        // against its own partial output, which would empty it on
+        // replay; see BatchLayout/Frontier): the settled frontier via
+        // its PERSISTED index (built once per settle window —
+        // FrontierIndex), the short un-settled tail indexed in-plan.
+        // One flat probe of all scopes keeps per-batch compute and
+        // planning ∝ |batch| + |tail|, flat in the accepted corpus.
+        val out = Dedup.incremental(
+          index +: FrontierIndex.dedupScope(spark, survivorDir, batchId, text, id, n),
+          batch.toDF(), text, id, n, threshold)
         out.write.mode("overwrite").parquet(s"$survivorDir/batch_$batchId")
         Frontier.maybeSettle(spark, survivorDir, batchId,
           Seq("doc_id"), settleEvery)

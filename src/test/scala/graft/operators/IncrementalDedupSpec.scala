@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.SparkSpec
 import graft.queries.DataOps
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 
 /** The SimHash and embedding incremental-dedup variants must carry
@@ -179,6 +180,75 @@ class IncrementalDedupSpec extends SparkSpec {
         e1.select("vec_id", "embedding", "label"), 0.95)
       .select("vec_id").collect().map(_.getLong(0)).toSet
     assert(eids2 == eids1 && eids1.nonEmpty)
+  }
+
+  private def words(tag: String): Seq[String] = (1 to 40).map(i => s"$tag$i")
+  private def text(tag: String): String = words(tag).mkString(" ")
+  private def replaced(ws: Seq[String], at: Range, tag: String): Seq[String] =
+    ws.zipWithIndex.map { case (w, i) => if (at.contains(i)) s"$tag$i" else w }
+
+  // An in-batch near-dup chain 10 < 11 < 12 (each pair verified) whose
+  // head alone is near the scope doc 300: 11 and 12 share too few
+  // shingles with 300 (J ≈ 0.23), so only the in-batch pass drops them.
+  // Token choice checked against the documented MinHash constants.
+  private val chainHead = words("m")
+  private val chainScope = replaced(chainHead, 0 until 14, "s")
+  private val chainMid = replaced(chainHead, 30 until 40, "b")
+  private val chainTail = chainMid.updated(0, "cc")
+
+  private def scopesAndBatch() = {
+    import spark.implicits._
+    val idx = (docs: Seq[(Long, String)]) =>
+      Dedup.indexCorpus(docs.toDF("doc_id", "text"), col("text"), col("doc_id"), 3)
+    val scopes = Seq(
+      idx(Seq((100L, text("x")), (101L, text("y")))),
+      idx(Seq((200L, text("x").replace("x40", "qq")), (201L, "ok go"))),
+      idx(Seq((300L, chainScope.mkString(" ")), (301L, text("d")))))
+    val batch = Seq(
+      (1L, text("x")),                      // exact dup of scope 0, near dup of scope 1
+      (2L, text("y").replace("y1 ", "qq ")), // near dup of scope 0
+      (10L, chainHead.mkString(" ")),        // near dup of scope 2 only
+      (11L, chainMid.mkString(" ")),         // near dup of 10 → in-batch loser
+      (12L, chainTail.mkString(" ")),        // near dup of 11 → in-batch loser
+      (20L, text("e")),                      // kept: min id of an exact pair
+      (21L, text("e")),                      // exact in-batch dup of 20
+      (22L, text("d")),                      // exact dup of scope 2
+      (30L, "hi there"),                     // shorter than n: exact path only, kept
+      (31L, "hi there"),                     // exact in-batch dup of 30
+      (32L, "ok go"),                        // short exact dup of scope 1
+      (40L, text("n")))                      // novel
+      .toDF("doc_id", "text")
+    (scopes, batch)
+  }
+
+  private def ids(df: org.apache.spark.sql.DataFrame): Set[Long] =
+    df.select("doc_id").collect().map(_.getLong(0)).toSet
+
+  test("multi-scope incremental equals one single-scope call per scope, chained") {
+    val (scopes, batch) = scopesAndBatch()
+    val flat = ids(Dedup.incremental(scopes, batch, col("text"), col("doc_id"), 3, 0.3))
+    // the chained composition, each level materialized so its plan
+    // stays small: survivors of one scope are the next level's batch
+    val chained = scopes.foldLeft(batch) { (b, scope) =>
+      val out = Dedup.incremental(scope, b, col("text"), col("doc_id"), 3, 0.3)
+      spark.createDataFrame(out.collectAsList(), out.schema)
+    }
+    assert(flat == ids(chained), s"flat $flat vs chained ${ids(chained)}")
+    assert(flat == Set(20L, 30L, 40L), s"survivors: $flat")
+  }
+
+  test("the batch subplan is referenced O(scopes) times, not once per chained level") {
+    val (scopes, batch) = scopesAndBatch()
+    val rows = batch.queryExecution.analyzed.collectFirst { case l: LocalRelation => l.data }.get
+    // the analyzer re-instances a self-joined leaf's attributes, so the
+    // batch is recognized by its rows
+    def batchLeaves(k: Int): Int =
+      Dedup.incremental(scopes.take(k), batch, col("text"), col("doc_id"), 3, 0.3)
+        .queryExecution.analyzed.collect { case l: LocalRelation if l.data == rows => l }.size
+    val one = batchLeaves(1)
+    val three = batchLeaves(3)
+    assert(one > 0)
+    assert(three <= 2 * one, s"3 scopes reference the batch $three times vs $one for 1")
   }
 
   test("incremental embedding: corpus wins regardless of id; batch self-dedups by min id") {

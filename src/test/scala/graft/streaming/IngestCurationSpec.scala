@@ -53,4 +53,39 @@ class IngestCurationSpec extends SparkSpec {
       10L -> "kept", 11L -> "repetition", 12L -> "lm",
       20L -> "duplicate", 21L -> "duplicate", 22L -> "kept"))
   }
+
+  test("settling every batch: batch 2 dedups against corpus, frontier index and tail together") {
+    implicit val sqlCtx = spark.sqlContext
+    val dir = java.nio.file.Files.createTempDirectory("ingest_cur_post_settle").toString
+
+    val ref = Seq("a", "c", "e", "g").flatMap(t => Seq.fill(10)(text(t))).toDF("text")
+    val lm = LanguageModel.bigramLm(ref, col("text"))
+    val corpus = Seq((100L, text("e"))).toDF("doc_id", "text")
+    val index = Dedup.indexCorpus(corpus, col("text"), col("doc_id"), 3)
+
+    val input = MemoryStream[(Long, String)]
+    val q = IngestCuration.curatedIngest(
+      input.toDF().toDF("doc_id", "text"), index, lm, dir, maxAvgNll = 3.3,
+      settleEvery = 1)
+    try {
+      input.addData((1L, text("a")))
+      q.processAllAvailable() // batch 0
+      input.addData((2L, text("c")))
+      q.processAllAvailable() // batch 1: settles 0 → frontier_0, tail = batch_1
+      input.addData(
+        (10L, text("e")),                       // dup of the settled CORPUS
+        (11L, text("a").replace("a40", "qq")),  // near dup of the FRONTIER doc
+        (12L, text("c")),                       // exact dup of the TAIL delta
+        (13L, text("g")))                       // in-domain, novel → kept
+      q.processAllAvailable() // batch 2: all three scopes at once
+    } finally q.stop()
+
+    val accepted = Frontier.readLayered(spark, s"$dir/accepted")
+      .select("doc_id").collect().map(_.getLong(0)).toSet
+    assert(accepted == Set(1L, 2L, 13L), s"accepted: $accepted")
+    val audit = spark.read.parquet(s"$dir/audit/batch_2")
+      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+    assert(audit == Map(
+      10L -> "duplicate", 11L -> "duplicate", 12L -> "duplicate", 13L -> "kept"))
+  }
 }

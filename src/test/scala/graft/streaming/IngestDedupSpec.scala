@@ -79,6 +79,37 @@ class IngestDedupSpec extends SparkSpec {
       assert(spark.catalog.tableExists(s"$pre$t"), s"missing $pre$t")
   }
 
+  test("settling every batch: batch 2 probes corpus, frontier index and tail in one pass") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val dir = java.nio.file.Files.createTempDirectory("ingest_dedup_post_settle").toString
+    val corpus = Seq((100L, text("z"))).toDF("doc_id", "text")
+    val index = Dedup.indexCorpus(corpus, col("text"), col("doc_id"), 3)
+
+    val input = MemoryStream[(Long, String)]
+    val q = IngestDedup.dedupedIngest(
+      input.toDF().toDF("doc_id", "text"), index, dir, settleEvery = 1)
+    try {
+      input.addData((1L, text("b")))
+      q.processAllAvailable() // batch 0
+      input.addData((2L, text("c")))
+      q.processAllAvailable() // batch 1: settles 0 → frontier_0, tail = batch_1
+      input.addData(
+        (10L, text("z")),                       // exact dup of the settled CORPUS
+        (11L, text("b").replace("b40", "qq")),  // near dup of the FRONTIER doc
+        (12L, text("c")),                       // exact dup of the TAIL delta
+        (13L, text("e")))                       // novel
+      q.processAllAvailable() // batch 2: all three scopes at once
+    } finally q.stop()
+
+    val survivors = Frontier.readLayered(spark, dir)
+      .select("doc_id").collect().map(_.getLong(0)).toSet
+    assert(survivors == Set(1L, 2L, 13L), s"survivors: $survivors")
+    val t = FrontierIndex.tag(dir, 0L)
+    for (pre <- Seq("ci_md5_", "ci_bkt_", "ci_sh_"))
+      assert(spark.catalog.tableExists(s"$pre$t"), s"batch 2 never built $pre$t")
+  }
+
   test("near-duplicates of earlier survivors are dropped too (LSH + verify scope)") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
