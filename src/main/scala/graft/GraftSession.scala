@@ -4,60 +4,81 @@ import org.apache.spark.sql.SparkSession
 
 /** Engine session factory: one place for the configuration the
   * engine's correctness and scale posture depend on — UTC session
-  * time, shuffle parallelism = local cores (32 on the harness, set
+  * time, shuffle parallelism = local cores (set
   * `spark.sql.shuffle.partitions` to cluster-appropriate values in a
-  * real deployment), nanosecond-parquet handling, small-file split
-  * tuning for the MB-scale local test data, and the graft function +
+  * real deployment), nanosecond-parquet handling, the file-scan
+  * posture below, codegen limits, and the graft function +
   * optimizer-rule registration (FloatVectorDot / RewriteVectorDot).
+  *
+  * File scans use Spark's default split planning, and files are
+  * listed on the driver. A split holds up to
+  * `min(128 MB, max(openCost, bytes / cores))`, each file counted at
+  * its length plus the 4 MB open cost, so the candy year's 365 day
+  * files of ~60 KB pack into ~12 splits while one multi-MB file still
+  * spreads across the cores. A split cap at or below the open cost
+  * gives every small file its own scan task, and Spark's own listing
+  * runs a Spark job for more than 32 paths. Measured on the 365-file
+  * year (4 cores): with a 4 MB cap and job listing, a cold run took
+  * 2,314 tasks and a median 21.8 s; with this posture, 184 tasks and
+  * 17.9 s (traced read + normalize: 11.0 s → 6.5 s).
   */
 object GraftSession {
 
+  /** The engine's session settings for `local[cpus]`, as one list so
+    * that every session built for the engine (this factory, the test
+    * session) plans and executes the same way. */
+  def settings(cpus: String): Map[String, String] = Map(
+    "spark.master" -> s"local[$cpus]",
+    "spark.sql.shuffle.partitions" -> cpus,
+    "spark.sql.session.timeZone" -> "UTC",
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+    // List files on the driver, never with a Spark job: the master is
+    // always local[n], so a listing job's tasks would run in this JVM
+    // against the same file system, adding only task scheduling.
+    "spark.sql.sources.parallelPartitionDiscovery.threshold" ->
+      Int.MaxValue.toString,
+    // Trust the sortBy order of bucketed tables at read time (off by
+    // default since Spark 3.0). Safe engine-wide: Spark only reports
+    // the ordering when every bucket is a single file — the layout
+    // Bucketing.writeBucketed guarantees — and it's what removes the
+    // per-bucket re-sort from co-located sort-merge joins.
+    "spark.sql.legacy.bucketedTableScan.outputOrdering" -> "true",
+    // Fuse only what the JVM will actually JIT: HotSpot never
+    // compiles methods over 8000 bytecode bytes (-XX:HugeMethodLimit),
+    // so a fused consume method past that limit runs INTERPRETED —
+    // silently, with no CodeGenerator error. Spark's default here
+    // (65535) only guards the classfile limit; aligning it with the
+    // JIT limit makes Spark fall back to per-operator execution for
+    // exactly the stages fusion would de-optimize. Measured on the
+    // 100x url_dedup keep-first (the r16/r17 inversion case): fused
+    // 12.0 s, per-operator 8.5 s, this setting 8.3 s — the fallback
+    // picks the fast posture per stage, engine-wide, instead of the
+    // per-family no-fuse session the r16 workaround hand-maintained.
+    "spark.sql.codegen.hugeMethodLimit" ->
+      sys.env.getOrElse("SPARK_GRAFT_HUGE_METHOD_LIMIT", "8000"),
+    // Janino-compiled codegen cache (STATIC conf, default 100
+    // entries): the composite queries alone hold several hundred
+    // distinct codegen units, so the default thrashes INSIDE one
+    // query — every repeated fragment re-pays a full Janino compile
+    // on the driver (measured r21: ds_curate spends ~2 s of its
+    // 2.8 s plan+build in non-rule driver work, dominated by
+    // codegen compilation; optimizer rules are only 0.7 s). Keys
+    // are weak references to the source text, so the cache holds
+    // only live generated classes; 10k entries is a few hundred MB
+    // ceiling on a driver that actually runs 10k distinct stages,
+    // and identical fragments across queries/passes hit instead of
+    // recompiling. Scale-neutral: a production driver running a
+    // query stream benefits identically.
+    "spark.sql.codegen.cache.maxEntries" ->
+      sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "10000"),
+    "spark.ui.enabled" -> "false")
+
   def create(appName: String,
              cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-               Runtime.getRuntime.availableProcessors().toString),
-             maxPartitionBytes: String = "4m"): SparkSession = {
+               Runtime.getRuntime.availableProcessors().toString)): SparkSession = {
     val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
       .appName(appName)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.files.maxPartitionBytes", maxPartitionBytes)
-      // Trust the sortBy order of bucketed tables at read time (off by
-      // default since Spark 3.0). Safe engine-wide: Spark only reports
-      // the ordering when every bucket is a single file — the layout
-      // Bucketing.writeBucketed guarantees — and it's what removes the
-      // per-bucket re-sort from co-located sort-merge joins.
-      .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-      // Fuse only what the JVM will actually JIT: HotSpot never
-      // compiles methods over 8000 bytecode bytes (-XX:HugeMethodLimit),
-      // so a fused consume method past that limit runs INTERPRETED —
-      // silently, with no CodeGenerator error. Spark's default here
-      // (65535) only guards the classfile limit; aligning it with the
-      // JIT limit makes Spark fall back to per-operator execution for
-      // exactly the stages fusion would de-optimize. Measured on the
-      // 100x url_dedup keep-first (the r16/r17 inversion case): fused
-      // 12.0 s, per-operator 8.5 s, this setting 8.3 s — the fallback
-      // picks the fast posture per stage, engine-wide, instead of the
-      // per-family no-fuse session the r16 workaround hand-maintained.
-      .config("spark.sql.codegen.hugeMethodLimit",
-        sys.env.getOrElse("SPARK_GRAFT_HUGE_METHOD_LIMIT", "8000"))
-      // Janino-compiled codegen cache (STATIC conf, default 100
-      // entries): the composite queries alone hold several hundred
-      // distinct codegen units, so the default thrashes INSIDE one
-      // query — every repeated fragment re-pays a full Janino compile
-      // on the driver (measured r21: ds_curate spends ~2 s of its
-      // 2.8 s plan+build in non-rule driver work, dominated by
-      // codegen compilation; optimizer rules are only 0.7 s). Keys
-      // are weak references to the source text, so the cache holds
-      // only live generated classes; 10k entries is a few hundred MB
-      // ceiling on a driver that actually runs 10k distinct stages,
-      // and identical fragments across queries/passes hit instead of
-      // recompiling. Scale-neutral: a production driver running a
-      // query stream benefits identically.
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "10000"))
-      .config("spark.ui.enabled", "false")
+      .config(settings(cpus))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     graft.plans.GraftFunctions.ensureRegistered(spark)

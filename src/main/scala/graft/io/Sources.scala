@@ -32,7 +32,10 @@ final case class CsvSource(path: String, schema: StructType,
 /** S2/S4-equivalent: (multiline) JSON documents with a declared
   * schema. `paths` may be a glob — the reference's per-day collection
   * fan-out (src/data_processor.py:195-222) becomes one multi-file
-  * scan; day identity survives in the data itself. */
+  * scan; day identity survives in the data itself. The glob is listed
+  * on the driver, and the day files are packed into a few splits; a
+  * multiline file is never split, so it is read whole inside one
+  * (see `GraftSession`). */
 final case class JsonSource(paths: Seq[String], schema: StructType, multiLine: Boolean = true)
     extends TableSource {
   def load(spark: SparkSession): DataFrame =

@@ -253,7 +253,9 @@ object TextAnalysis {
     * ONE compiled projection pass ([[graft.plans.RepetitionStats]]:
     * token hash + char prefix sums shared across all widths; same
     * rolling gram fingerprints, counts and tie-breaks as the previous
-    * exploded form, asserted equal in TextAnalysisSpec). The r21-shape
+    * exploded form: RepetitionSpec pins the fractions, tie-breaks and
+    * coverage merging against hand counts, RollingGramHashSpec the
+    * fingerprint against its definitional polynomial). The r21-shape
     * alternative — per width, a corpus-wide
     * explode → Exchange(doc_id, h) → Exchange(doc_id) chain, plus a
     * positions-distinct Exchange and a positions join for the dup

@@ -30,7 +30,15 @@ object CandyPipeline {
     * sequence key before any shuffle: day from the source file name,
     * seq = row position within the file (monotonically increasing id
     * follows the read order of the unsplittable multiline-JSON file),
-    * pos = item index within the transaction (posexplode). */
+    * pos = item index within the transaction (posexplode).
+    *
+    * The allocator sorts by `(product, day, seq, pos)`, so seq only
+    * has to order the rows of one day file, and it does however the
+    * files are packed into splits: a multiline JSON file is never
+    * split, so each file is read whole and in order inside one split,
+    * and within a split `monotonically_increasing_id` grows with the
+    * read order. Packing several day files into one split changes the
+    * seq values, not their order within a file. */
   def normalize(transactions: DataFrame): DataFrame =
     transactions
       .withColumn("day",

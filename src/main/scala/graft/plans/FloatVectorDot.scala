@@ -66,33 +66,12 @@ case class FloatVectorDot(left: Expression, right: Expression) extends BinaryExp
   * config. */
 class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
   override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit = {
-    ext.injectFunction(GraftFunctions.fvdotDescriptor)
-    ext.injectFunction(GraftFunctions.gramsDescriptor)
-    ext.injectFunction(GraftFunctions.entropyDescriptor)
-    ext.injectFunction(GraftFunctions.winnowDescriptor)
-    ext.injectFunction(GraftFunctions.dsirCountsDescriptor)
-    ext.injectFunction(GraftFunctions.dsirScoreDescriptor)
-    ext.injectFunction(GraftFunctions.hashEmbedDescriptor)
-    ext.injectFunction(GraftFunctions.minhashDescriptor)
-    ext.injectFunction(GraftFunctions.simhashDescriptor)
-    ext.injectFunction(GraftFunctions.urlPctDescriptor)
-    ext.injectFunction(GraftFunctions.urlQsortDescriptor)
-    ext.injectFunction(GraftFunctions.urlDotFoldDescriptor)
+    GraftFunctions.descriptors.foreach(ext.injectFunction)
     ext.injectOptimizerRule(_ => RewriteVectorDot)
   }
 }
 
 object GraftFunctions {
-  val fvdotDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("graft_fvdot"),
-    new ExpressionInfo(classOf[FloatVectorDot].getName, "graft_fvdot"),
-    (children: Seq[Expression]) => FloatVectorDot(children(0), children(1)))
-
-  val gramsDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("graft_grams"),
-    new ExpressionInfo(classOf[RollingGramHash].getName, "graft_grams"),
-    mkGrams _)
-
   // the window size parameterizes generated code, so it must be a
   // compile-time literal, not a runtime column
   private def mkGrams(children: Seq[Expression]): Expression = children(1) match {
@@ -101,11 +80,6 @@ object GraftFunctions {
     case other => throw new IllegalArgumentException(
       s"graft_grams(tokens, k): k must be an integer literal, got $other")
   }
-
-  val winnowDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("graft_winnow"),
-    new ExpressionInfo(classOf[WinnowSelect].getName, "graft_winnow"),
-    mkWinnow _)
 
   // the window size parameterizes generated code, so it must be a
   // compile-time literal, not a runtime column
@@ -116,11 +90,6 @@ object GraftFunctions {
       s"graft_winnow(hashes, w): w must be an integer literal, got $other")
   }
 
-  val dsirCountsDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("graft_dsir_counts"),
-    new ExpressionInfo(classOf[DsirBucketCounts].getName, "graft_dsir_counts"),
-    mkDsirCounts _)
-
   // the bucket count sizes the aggregation buffer, so it must be a
   // compile-time literal, not a runtime column
   private def mkDsirCounts(children: Seq[Expression]): Expression = children(2) match {
@@ -129,11 +98,6 @@ object GraftFunctions {
     case other => throw new IllegalArgumentException(
       s"graft_dsir_counts(text, is_target, buckets): buckets must be an integer literal, got $other")
   }
-
-  val dsirScoreDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("graft_dsir_score"),
-    new ExpressionInfo(classOf[DsirScore].getName, "graft_dsir_score"),
-    mkDsirScore _)
 
   // the fitted model rides as a foldable array literal (the
   // BloomSemiJoin bounded-artifact pattern), indexed by bucket
@@ -146,11 +110,6 @@ object GraftFunctions {
       s"graft_dsir_score(text, llr): llr must be an array<long> literal, got $other")
   }
 
-  val hashEmbedDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("graft_hash_embed"),
-    new ExpressionInfo(classOf[HashEmbed].getName, "graft_hash_embed"),
-    mkHashEmbed _)
-
   // the dimension count sizes the per-row accumulator, so it must be
   // a compile-time literal, not a runtime column
   private def mkHashEmbed(children: Seq[Expression]): Expression = children(1) match {
@@ -159,11 +118,6 @@ object GraftFunctions {
     case other => throw new IllegalArgumentException(
       s"graft_hash_embed(text, dims): dims must be an integer literal, got $other")
   }
-
-  val minhashDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("graft_minhash"),
-    new ExpressionInfo(classOf[MinHashSig].getName, "graft_minhash"),
-    mkMinhash _)
 
   // the shingle width parameterizes the window walk, so it must be a
   // compile-time literal, not a runtime column
@@ -174,11 +128,6 @@ object GraftFunctions {
       s"graft_minhash(text, n): n must be an integer literal, got $other")
   }
 
-  val simhashDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("graft_simhash"),
-    new ExpressionInfo(classOf[SimHashFp].getName, "graft_simhash"),
-    mkSimhash _)
-
   // the bit width sizes the vote array, so it must be a compile-time
   // literal, not a runtime column
   private def mkSimhash(children: Seq[Expression]): Expression = children(1) match {
@@ -187,11 +136,6 @@ object GraftFunctions {
     case other => throw new IllegalArgumentException(
       s"graft_simhash(text, bits): bits must be an integer literal, got $other")
   }
-
-  val htmlExtractDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("graft_html_extract"),
-    new ExpressionInfo(classOf[HtmlExtract].getName, "graft_html_extract"),
-    mkHtmlExtract _)
 
   // the keep thresholds parameterize generated code, so they must be
   // compile-time literals, not runtime columns
@@ -204,41 +148,6 @@ object GraftFunctions {
         s"graft_html_extract(html, min_tokens, density_inv): thresholds " +
           s"must be integer literals, got $other")
     }
-
-  val urlPctDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("graft_url_pct"),
-    new ExpressionInfo(classOf[UrlPercentNorm].getName, "graft_url_pct"),
-    (children: Seq[Expression]) => UrlPercentNorm(children(0)))
-
-  val urlQsortDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("graft_url_qsort"),
-    new ExpressionInfo(classOf[UrlQuerySort].getName, "graft_url_qsort"),
-    (children: Seq[Expression]) => UrlQuerySort(children(0)))
-
-  val urlDotFoldDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("graft_url_dotfold"),
-    new ExpressionInfo(classOf[UrlDotFold].getName, "graft_url_dotfold"),
-    (children: Seq[Expression]) => UrlDotFold(children(0)))
-
-  val urlCanonDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("graft_url_canon"),
-    new ExpressionInfo(classOf[UrlCanon].getName, "graft_url_canon"),
-    (children: Seq[Expression]) => UrlCanon(children(0)))
-
-  val prophetSolveDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("graft_prophet_solve"),
-    new ExpressionInfo(classOf[ProphetSolve].getName, "graft_prophet_solve"),
-    (children: Seq[Expression]) => ProphetSolve(children(0)))
-
-  val entropyDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("graft_entropy"),
-    new ExpressionInfo(classOf[TextEntropy].getName, "graft_entropy"),
-    mkEntropy _)
-
-  val repStatsDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("graft_rep_stats"),
-    new ExpressionInfo(classOf[RepetitionStats].getName, "graft_rep_stats"),
-    mkRepStats _)
 
   // the gram widths size the per-document passes, so they must be
   // array<int> literals, not runtime columns
@@ -265,24 +174,32 @@ object GraftFunctions {
       s"graft_entropy(text, delim): delim must be a string literal, got $other")
   }
 
-  /** Every runtime-registered graft function with its builder. */
-  private val runtimeFunctions: Seq[(String, Seq[Expression] => Expression)] = Seq(
-    ("graft_fvdot", (children: Seq[Expression]) => FloatVectorDot(children(0), children(1))),
-    ("graft_grams", mkGrams _),
-    ("graft_entropy", mkEntropy _),
-    ("graft_rep_stats", mkRepStats _),
-    ("graft_winnow", mkWinnow _),
-    ("graft_dsir_counts", mkDsirCounts _),
-    ("graft_dsir_score", mkDsirScore _),
-    ("graft_hash_embed", mkHashEmbed _),
-    ("graft_minhash", mkMinhash _),
-    ("graft_simhash", mkSimhash _),
-    ("graft_html_extract", mkHtmlExtract _),
-    ("graft_url_pct", (cs: Seq[Expression]) => UrlPercentNorm(cs(0))),
-    ("graft_url_qsort", (cs: Seq[Expression]) => UrlQuerySort(cs(0))),
-    ("graft_url_dotfold", (cs: Seq[Expression]) => UrlDotFold(cs(0))),
-    ("graft_url_canon", (cs: Seq[Expression]) => UrlCanon(cs(0))),
-    ("graft_prophet_solve", (cs: Seq[Expression]) => ProphetSolve(cs(0))))
+  /** Every graft function: its name, the expression class its
+    * `ExpressionInfo` names, and its builder. Both registration paths
+    * (`GraftExtensions` and `ensureRegistered`) read this one table. */
+  private val functions: Seq[(String, Class[_ <: Expression], Seq[Expression] => Expression)] = Seq(
+    ("graft_fvdot", classOf[FloatVectorDot], cs => FloatVectorDot(cs(0), cs(1))),
+    ("graft_grams", classOf[RollingGramHash], mkGrams),
+    ("graft_entropy", classOf[TextEntropy], mkEntropy),
+    ("graft_rep_stats", classOf[RepetitionStats], mkRepStats),
+    ("graft_winnow", classOf[WinnowSelect], mkWinnow),
+    ("graft_dsir_counts", classOf[DsirBucketCounts], mkDsirCounts),
+    ("graft_dsir_score", classOf[DsirScore], mkDsirScore),
+    ("graft_hash_embed", classOf[HashEmbed], mkHashEmbed),
+    ("graft_minhash", classOf[MinHashSig], mkMinhash),
+    ("graft_simhash", classOf[SimHashFp], mkSimhash),
+    ("graft_html_extract", classOf[HtmlExtract], mkHtmlExtract),
+    ("graft_url_pct", classOf[UrlPercentNorm], cs => UrlPercentNorm(cs(0))),
+    ("graft_url_qsort", classOf[UrlQuerySort], cs => UrlQuerySort(cs(0))),
+    ("graft_url_dotfold", classOf[UrlDotFold], cs => UrlDotFold(cs(0))),
+    ("graft_url_canon", classOf[UrlCanon], cs => UrlCanon(cs(0))),
+    ("graft_prophet_solve", classOf[ProphetSolve], cs => ProphetSolve(cs(0))))
+
+  /** The table as `SparkSessionExtensions.injectFunction` descriptors. */
+  def descriptors: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] =
+    functions.map { case (name, cls, builder) =>
+      (FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), builder)
+    }
 
   /** Registers each graft function the session does not have yet, so
     * a repeat call (one per operator entry point, several per
@@ -290,7 +207,7 @@ object GraftFunctions {
     * them. */
   def ensureRegistered(spark: SparkSession): Unit = {
     val registry = spark.sessionState.functionRegistry
-    runtimeFunctions.foreach { case (name, builder) =>
+    functions.foreach { case (name, _, builder) =>
       if (!registry.functionExists(FunctionIdentifier(name)))
         registry.createOrReplaceTempFunction(name, builder, "scala_udf")
     }

@@ -3,20 +3,18 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local session for all suites (one JVM, sbt forks once). */
+/** Shared local session for all suites (one JVM, sbt forks once),
+  * built from the engine's own settings so the specs plan and execute
+  * the way the engine does. Unlike `GraftSession.create`, it does not
+  * register the graft functions up front: the operators register
+  * them on use. */
 object TestSpark {
   lazy val spark: SparkSession = {
     val s = SparkSession.builder()
-      .master("local[4]")
       .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // mirror GraftSession: bucketed scans report their sortBy order
-      .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
+      .config(GraftSession.settings("4"))
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft_wh").toString)
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

@@ -30,6 +30,26 @@ class GraftFunctionsSpec extends SparkSpec {
     assert(s.experimental.extraOptimizations.count(_ == RewriteVectorDot) == 1)
   }
 
+  test("the extension path injects the functions the runtime path registers") {
+    val injected = scala.collection.mutable.ArrayBuffer[(String, String)]()
+    var rules = 0
+    new GraftExtensions().apply(new org.apache.spark.sql.SparkSessionExtensions {
+      override def injectFunction(f: FunctionDescription): Unit = {
+        injected += f._1.funcName -> f._2.getName
+        super.injectFunction(f)
+      }
+      override def injectOptimizerRule(builder: RuleBuilder): Unit = {
+        rules += 1
+        super.injectOptimizerRule(builder)
+      }
+    })
+    val s = spark.newSession()
+    GraftFunctions.ensureRegistered(s)
+    assert(injected.map(_._1).sorted == graftInfos(s).keys.toSeq.sorted)
+    injected.foreach { case (name, infoName) => assert(infoName == name) }
+    assert(rules == 1)
+  }
+
   test("the bloom functions register once per session too") {
     val s = spark.newSession()
     BloomSemiJoin.ensureRegistered(s)
