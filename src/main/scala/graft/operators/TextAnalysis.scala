@@ -220,10 +220,8 @@ object TextAnalysis {
     *     total token chars. Overlapping windows each count (the
     *     published definition), so a degenerate "a a a a" doc can
     *     exceed 1.0 — the filter thresholds sit far below that.
-    *     Ties break deterministically to the lexicographically
-    *     greatest gram (one `max(struct(cnt, gram))` — partial-
-    *     aggregatable, so the map side collapses before the
-    *     exchange; no rank window).
+    *     Count ties break deterministically to the gram with the
+    *     most characters (`max(struct(cnt, chars))` over the grams).
     *   - `dup_{n}gram_frac` (n ∈ dupNs): characters COVERED by any
     *     n-gram that occurs ≥2 times in the document, each position
     *     counted once however many duplicated grams overlap it —
@@ -236,10 +234,8 @@ object TextAnalysis {
     * Character totals count token characters only (the corpus'
     * single-space convention makes inter-token spaces a constant
     * n−1 per gram; excluding them keeps numerator and denominator
-    * on the same basis). Shape at corpus scale: one explode +
-    * per-doc groupBy per n — every shuffle keyed by doc_id, nothing
-    * cross-document, so it scales like a projection + local
-    * aggregation however large the corpus. */
+    * on the same basis). Shape at corpus scale: one projection, no
+    * shuffle (see [[repetitionStats]]). */
   def repetitionSignals(df: DataFrame, text: Column, id: Column,
                         topNs: Seq[Int] = Seq(2, 3, 4),
                         dupNs: Seq[Int] = Seq(5, 10)): DataFrame = {
@@ -255,7 +251,9 @@ object TextAnalysis {
     * rolling gram fingerprints, counts and tie-breaks as the previous
     * exploded form: RepetitionSpec pins the fractions, tie-breaks and
     * coverage merging against hand counts, RollingGramHashSpec the
-    * fingerprint against its definitional polynomial). The r21-shape
+    * fingerprint against its definitional polynomial, and
+    * RepetitionExplodedSpec the fractions bit-equal against a
+    * per-width explode → groupBy reference). The r21-shape
     * alternative — per width, a corpus-wide
     * explode → Exchange(doc_id, h) → Exchange(doc_id) chain, plus a
     * positions-distinct Exchange and a positions join for the dup

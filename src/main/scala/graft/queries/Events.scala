@@ -146,10 +146,13 @@ object Events {
     * y ≈ β₀ + β₁t + γ·max(0,t−s) + Σ_{k≤3} aₖsin(2πkt/7)+bₖcos(2πkt/7),
     * ridge-fit exactly as MLlib's normal solver does with
     * standardization=false: center features and label, solve
-    * (Zᵀ Z + (λ·n/σ_y)·I) β = Zᵀ ỹ  (the λ·n/σ_y diagonal is MLlib's
-    * measured convention — pinned by ForecasterSpec's parity law),
-    * intercept = ȳ − βᵀx̄. Oracle quantizations, both documented and
-    * mirrored in the spec law: ONE changepoint at s = ⌊0.4n⌋ (integer,
+    * (Zᵀ Z + (λ·n/σ_y)·I) β = Zᵀ ỹ, intercept = ȳ − βᵀx̄. The λ·n/σ_y
+    * diagonal is MLlib's scaled-space L2 weight λ/σ_y/σ_j² carried
+    * back to raw features; ProphetLikeForecaster's driver solve
+    * follows the same convention, ForecasterSpec pins that solve
+    * against MLlib and this plan against the solve. Oracle
+    * quantizations, both documented and mirrored in the spec law:
+    * ONE changepoint at s = ⌊0.4n⌋ (integer,
     * so the hinge stays in exact integer arithmetic; Prophet's
     * default uniform placement, floored) and Fourier features read
     * from 7 shared residue literals (period 7 divides integer t, so

@@ -3,8 +3,9 @@ package graft.forecast
 import graft.SparkSpec
 
 /** Deterministic forecaster behavior: exact recovery of linear
-  * series, seasonal-naive repetition, in-sample metrics, and the
-  * MLlib variant agreeing with the closed-form OLS on trend data. */
+  * series, seasonal-naive repetition, in-sample metrics, the MLlib
+  * variant agreeing with the closed-form OLS on trend data, and the
+  * prophet-like driver solve agreeing with MLlib's normal solver. */
 class ForecasterSpec extends SparkSpec {
 
   private val linear = Array.tabulate(14)(t => 10.0 + 2.5 * t)
@@ -137,6 +138,37 @@ class ForecasterSpec extends SparkSpec {
       s"got ${pred(0)}, want ${10.0 + 2.5 * 14}")
     val (mae, _) = m.metrics(linear)
     assert(mae < 1e-6)
+  }
+
+  test("prophet-like driver solve == MLlib normal-solver LinearRegression, 1-400 points") {
+    import org.apache.spark.ml.linalg.Vectors
+    import org.apache.spark.ml.regression.LinearRegression
+    import spark.implicits._
+    val rng = new scala.util.Random(20240301)
+    def noisy(n: Int, spike: Boolean): Array[Double] = Array.tabulate(n) { t =>
+      val y = 800.0 + 2.5 * t + 60.0 * math.sin(2 * math.Pi * t / 7) + 30.0 * rng.nextGaussian()
+      if (spike && t == n / 2) y + 9000.0 else y
+    }
+    val series: Seq[(String, Array[Double])] =
+      (for {
+        n <- (1 to 40) ++ Seq(60, 90, 180, 365, 400)
+        spike <- Seq(false, true)
+      } yield s"n=$n spike=$spike" -> noisy(n, spike)) :+
+        ("flat n=30" -> Array.fill(30)(123.45))
+    series.foreach { case (label, y) =>
+      val m = new ProphetLikeForecaster(spark)
+      m.fit(y)
+      val x = Array.tabulate(y.length + 3)(t => Vectors.dense(m.features(t)))
+      val ref = new LinearRegression()
+        .setSolver("normal").setRegParam(0.01).setStandardization(false)
+        .fit(y.indices.map(t => (y(t), x(t))).toDF("label", "features"))
+      val want = x.map(ref.predict)
+      val got = m.fitted ++ m.predict(3)
+      got.zip(want).zipWithIndex.foreach { case ((g, w), t) =>
+        assert(math.abs(g - w) <= 1e-6 * math.max(1.0, math.abs(w)),
+          s"$label, t=$t: driver solve $g != MLlib $w")
+      }
+    }
   }
 
   test("prophet-like model captures a trend break + weekly season the line can't") {
