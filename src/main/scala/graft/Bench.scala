@@ -6,6 +6,11 @@ import org.apache.spark.sql.SparkSession
   * SPARK_GRAFT_SF_DIR and prints one JSON line
   * {"metric","value","unit","queries","sf"}.
   *
+  * SPARK_GRAFT_MULT (default 1) runs the same queries at scale: above
+  * 1 the tables are first replicated ×MULT with salted keys and
+  * vocabularies (`Tables.replica`, written once, untimed) and the
+  * queries read that copy; `sf` then reads `<sf dir basename>x<MULT>`.
+  *
   * A short warmup (schema reads + one full query) runs untimed first
   * so codegen/JIT startup isn't charged to whichever query happens to
   * run first; queries then execute in name order for run-to-run
@@ -99,13 +104,15 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val mult = sys.env.get("SPARK_GRAFT_MULT").flatMap(_.toIntOption).getOrElse(1)
     val spark = GraftSession.create("graft-bench")
+    val tablesDir = Tables.replica(spark, sfDir, mult)
 
     // Warmup: file listing + parquet footers + codegen/JIT paths.
     Tables.names.foreach { t =>
-      try Tables(spark, sfDir, t).schema catch { case _: Throwable => }
+      try Tables(spark, tablesDir, t).schema catch { case _: Throwable => }
     }
-    try SparkEntry.queries("q5_pricing_summary")(spark, sfDir).count()
+    try SparkEntry.queries("q5_pricing_summary")(spark, tablesDir).count()
     catch { case _: Throwable => }
 
     // optional comma-separated filter for focused A/B timing
@@ -134,7 +141,7 @@ object Bench {
     (1 to runs).foreach { _ =>
       names.foreach { case (name, fn) =>
         val t0 = System.nanoTime()
-        val ok = try { fn(spark, sfDir).count(); true }
+        val ok = try { fn(spark, tablesDir).count(); true }
                  catch { case e: Throwable =>
                    System.err.println(s"BENCH FAIL $name: ${e.getMessage}"); false }
         // A failed query is recorded as -1.0 so crashes are visibly distinct
@@ -166,7 +173,7 @@ object Bench {
     // line competes with the tail-capture budget (see scaladoc).
     // getFileName is null for "/" or "" — fall back to the raw string.
     val sfName = Option(java.nio.file.Paths.get(sfDir).getFileName)
-      .fold(sfDir)(_.toString)
+      .fold(sfDir)(_.toString) + (if (mult > 1) s"x$mult" else "")
     println(renderStdoutLine(results.map { case (k, v, _, _) => (k, v) }, sfName))
 
     val fullRows = results.map { case (k, v, ts, diag) =>
@@ -181,7 +188,7 @@ object Bench {
     // ambient load (the r11 drift) without re-running the other side
     val box = s""""box":{"cpus":${rt.availableProcessors()},"loadavg":${
       boxSamples.map(s => "\"" + s + "\"").mkString("[", ",", "]")}}"""
-    val full = s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfName","sf_dir":"$sfDir","runs_per_query":$runs,$box,"queries":$fullRows,"errors":$errs}"""
+    val full = s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfName","sf_dir":"$tablesDir","runs_per_query":$runs,$box,"queries":$fullRows,"errors":$errs}"""
     try java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
       (full + "\n").getBytes("UTF-8"))
     catch { case e: Throwable => System.err.println(s"BENCH_OUT write failed: $e") }

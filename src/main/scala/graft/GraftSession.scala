@@ -112,8 +112,11 @@ object GraftSession {
 
   /** One bounded child per parent session (r21): the child's conf is a
     * fixed constant, so recreating it per query only re-paid session
-    * setup + relation re-resolution (see Tables.cache). Memoizing is
-    * behavior-identical — same conf, same isolation from the parent. */
-  private val boundedChildren =
-    new java.util.concurrent.ConcurrentHashMap[SparkSession, SparkSession]()
+    * setup + relation re-resolution (see Tables.apply). Memoizing is
+    * behavior-identical — same conf, same isolation from the parent.
+    * Keyed weakly (SparkSession keeps Object identity); the child holds
+    * no reference to its parent, so a dropped parent and its child are
+    * both collected. */
+  private val boundedChildren = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[SparkSession, SparkSession]())
 }

@@ -1,6 +1,13 @@
 package graft
 
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.util.concurrent.ConcurrentHashMap
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.QualifiedTableName
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.catalyst.trees.TreeNodeTag
+import org.apache.spark.sql.functions._
 
 /** Parquet-backed table loader for the harness star schema
   * (TESTDATA.md: region nation customer supplier part orders lineitem
@@ -16,7 +23,7 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** Resolved-relation cache, keyed per session+path (r21, guide §1/§6):
+  /** Each table resolves once per session (r21, guide §1/§6):
     * `spark.read.parquet` builds a fresh FileIndex and re-infers the
     * schema on EVERY call, and the composite queries reference the
     * same base table dozens of times — measured via
@@ -25,15 +32,28 @@ object Tables {
     * session; this cache gives the path-based loader the same
     * behavior. METADATA only — the returned frame is a lazy scan, so
     * every action still reads the parquet bytes; nothing of the data
-    * is memoized. Keyed by session identity so a child session (isolated
-    * SQL conf — boundedAggSession) resolves its own copy and executes
-    * under its own conf, exactly as before. */
-  private val cache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-
+    * is memoized. A child session (isolated SQL conf —
+    * boundedAggSession) resolves its own copy and executes under its
+    * own conf, exactly as before. */
   def apply(spark: SparkSession, dir: String, name: String): DataFrame =
-    cache.computeIfAbsent((spark, s"$dir/$name.parquet"),
-      { case (_, path) => spark.read.parquet(path) })
+    frames(spark).computeIfAbsent(s"$dir/$name.parquet", path => spark.read.parquet(path))
+
+  /** The session's loaded frames. The map lives where the session keeps
+    * its resolved catalog relations — a tag on a placeholder entry of
+    * its catalog's relation cache — so it is collected with the
+    * session. A global map keyed by session, even weakly, would pin
+    * every session it had seen, because each frame references its
+    * session. The placeholder never enters a query plan, so nothing of
+    * the cache travels with a query's plan nodes. */
+  private def frames(spark: SparkSession): ConcurrentHashMap[String, DataFrame] =
+    spark.sessionState.catalog.getCachedPlan(framesKey, () => {
+      val holder = LocalRelation()
+      holder.setTagValue(framesTag, new ConcurrentHashMap[String, DataFrame]())
+      holder
+    }).getTagValue(framesTag).get
+
+  private val framesKey = QualifiedTableName("graft", "tables", "frames")
+  private val framesTag = TreeNodeTag[ConcurrentHashMap[String, DataFrame]]("graft.tables.frames")
 
   /** The events table with `ts` normalized to a NANOSECOND epoch Long
     * regardless of how the parquet spells it — harness data has
@@ -42,12 +62,100 @@ object Tables {
     * so it is read in the UTC session zone, the same reading DuckDB's
     * `epoch_us` gives the oracle. */
   def eventsNanos(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.functions.{col, lit, unix_micros}
     val raw = apply(spark, dir, "events")
     raw.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType => raw
       case _ => raw.withColumn("ts",
         unix_micros(col("ts").cast("timestamp")) * lit(1000L))
     }
+  }
+
+  /** The tables of `dir` replicated ×`mult`, written once to
+    * `DataOps.tableRoot/x<mult>_<dir sanitized>` and returned as an
+    * sf dir; `mult` ≤ 1 returns `dir` itself and writes nothing. The
+    * copy is complete once its `_SUCCESS` marker exists, and a later
+    * call returns at once. Being its own dir, the copy also keys every
+    * layout a query persists under its dir string (bucketed tables,
+    * dedup/ANN indexes) apart from those of `dir`.
+    *
+    * Replication is salted so the bigger corpus is realistic, not
+    * degenerate:
+    *  - documents: every token gets a per-replica suffix, so replicas
+    *    occupy disjoint shingle/token vocabularies — the corpus keeps
+    *    its planted near-dup rate per replica instead of every doc
+    *    acquiring MULT exact twins (which would measure the input's
+    *    quadratic duplicate structure, not the operator).
+    *  - lineitem/orders: keys that define sequences/partitions
+    *    (l_orderkey, o_orderkey) are salted unique; grouping keys
+    *    (l_partkey, o_custkey) are kept, so per-product demand
+    *    sequences and per-customer windows genuinely grow ×MULT — the
+    *    stress is on partition depth, the hard axis for sort-based
+    *    operators.
+    *  - embeddings: ids salted unique; each replica's vectors get a
+    *    deterministic per-replica, per-dim perturbation so the corpus
+    *    isn't MULT exact copies of the same point cloud (which would
+    *    hand the quantizers degenerate, identical cells).
+    * The other six tables are copied file for file, so their parquet
+    * types (the events timestamp) stay exactly as in `dir`. */
+  def replica(spark: SparkSession, dir: String, mult: Int): String = {
+    if (mult <= 1) return dir
+    val out = s"${graft.queries.DataOps.tableRoot}/x${mult}_${
+      dir.replaceAll("[^A-Za-z0-9]", "_")}"
+    val done = Paths.get(out, "_SUCCESS")
+    if (!Files.exists(done)) {
+      val rules = salted(mult)
+      rules.foreach { case (name, rewrite) =>
+        val rep = spark.range(mult).select(col("id").as("__rep"))
+        rewrite(apply(spark, dir, name).crossJoin(rep))
+          .write.mode("overwrite").parquet(s"$out/$name.parquet")
+      }
+      names.filterNot(rules.contains).foreach { name =>
+        copyTree(Paths.get(dir, s"$name.parquet"), Paths.get(out, s"$name.parquet"))
+      }
+      Files.createFile(done)
+    }
+    out
+  }
+
+  /** Per-replica rewrites of the salted tables, over the table crossed
+    * with `__rep` = 0 until `mult`. */
+  private def salted(mult: Int): Map[String, DataFrame => DataFrame] = {
+    val m = lit(mult.toLong)
+    Map(
+      "documents" -> { d =>
+        d.select((col("doc_id") * m + col("__rep")).as("doc_id"),
+          // suffix EVERY token with the replica id → replica vocabularies
+          // are pairwise disjoint; within a replica the text (and its
+          // near-dup structure) is isomorphic to the original
+          regexp_replace(col("text"), lit("(\\S+)"), concat(lit("$1_"), col("__rep"))).as("text"),
+          col("lang"), col("source"), col("n_chars"))
+      },
+      "lineitem" -> { d =>
+        d.withColumn("l_orderkey", col("l_orderkey") * m + col("__rep")).drop("__rep")
+      },
+      "orders" -> { d =>
+        d.withColumn("o_orderkey", col("o_orderkey") * m + col("__rep")).drop("__rep")
+      },
+      "embeddings" -> { d =>
+        d.select((col("vec_id") * m + col("__rep")).as("vec_id"),
+          zip_with(col("embedding"),
+            transform(sequence(lit(1), size(col("embedding"))),
+              i => (col("__rep") % 97).cast("float") * lit(1e-3f) * i.cast("float")),
+            (x, p) => x + p).as("embedding"),
+          col("label"))
+      })
+  }
+
+  /** Copies a file, or a directory with everything under it. */
+  private def copyTree(from: Path, to: Path): Unit = {
+    val walk = Files.walk(from)
+    try walk.forEach { p =>
+      val target = to.resolve(from.relativize(p).toString)
+      if (Files.isDirectory(p)) Files.createDirectories(target)
+      else {
+        Files.createDirectories(target.getParent)
+        Files.copy(p, target, StandardCopyOption.REPLACE_EXISTING)
+      }
+    } finally walk.close()
   }
 }

@@ -1480,38 +1480,23 @@ object DataOps {
       .agg(count(lit(1)).as("n_lines"), (sum(col("cents")) / 100.0).as("revenue"))
   }
 
-  def allocGreedy(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    import graft.pipeline.{Allocate, Model}
-    val demand = Tables(s, d, "lineitem")
-      .join(broadcast(Tables(s, d, "part").select(col("p_partkey"),
-        (col("p_size").cast("long") * 100L).as("opening_stock"))),
-        col("l_partkey") === col("p_partkey"))
-      .select(
-        col("l_orderkey").as("order_id"),
-        col("l_suppkey").as("customer_id"),
-        date_format(col("l_shipdate"), "yyyy-MM-dd'T'HH:mm:ss").as("order_datetime"),
-        col("l_partkey").as("product_id"),
-        col("l_quantity").cast("long").as("qty"),
-        round(col("l_extendedprice") / col("l_quantity"), 2)
-          .cast("decimal(38,18)").as("unit_price"),
-        col("opening_stock"),
-        date_format(col("l_shipdate"), "yyyyMMdd").cast("int").as("day"),
-        col("l_orderkey").as("seq"),
-        col("l_linenumber").as("pos"))
-      .as[Model.DemandLine]
-    Allocate(demand)
-      .groupBy("product_id")
-      .agg(sum(col("quantity")).as("filled_qty"),
-        sum(when(col("quantity") === 0, 1L).otherwise(0L)).as("cancelled_lines"),
-        count(lit(1)).as("total_lines"))
-  }
+  def allocGreedy(s: SparkSession, d: String): DataFrame =
+    allocByProduct(s, d) { demand =>
+      import s.implicits._
+      graft.pipeline.Allocate(demand.as[graft.pipeline.Model.DemandLine]).toDF()
+    }
 
   /** Same allocation through the custom Catalyst operator
     * (plans.GreedyAllocationNode) — must produce identical rows to
     * p_alloc_greedy (asserted in DataOpsSpec). */
-  def allocGreedyPlan(s: SparkSession, d: String): DataFrame = {
-    import graft.pipeline.Allocate
+  def allocGreedyPlan(s: SparkSession, d: String): DataFrame =
+    allocByProduct(s, d)(graft.pipeline.Allocate.viaPlan(_))
+
+  /** lineitem as candy demand lines (order = l_orderkey, product =
+    * l_partkey, opening stock = p_size·100), allocated by `allocate`
+    * and rolled up per product. */
+  private def allocByProduct(s: SparkSession, d: String)(
+      allocate: DataFrame => DataFrame): DataFrame = {
     val demand = Tables(s, d, "lineitem")
       .join(broadcast(Tables(s, d, "part").select(col("p_partkey"),
         (col("p_size").cast("long") * 100L).as("opening_stock"))),
@@ -1528,7 +1513,7 @@ object DataOps {
         date_format(col("l_shipdate"), "yyyyMMdd").cast("int").as("day"),
         col("l_orderkey").as("seq"),
         col("l_linenumber").as("pos"))
-    Allocate.viaPlan(demand)
+    allocate(demand)
       .groupBy("product_id")
       .agg(sum(col("quantity")).as("filled_qty"),
         sum(when(col("quantity") === 0, 1L).otherwise(0L)).as("cancelled_lines"),

@@ -66,14 +66,15 @@ object GraftBridge {
 
   /** Unpersist every staged checkpoint block still reachable. Call at
     * a CONSUME boundary — after the frames built on staged lineage
-    * have been materialized (Bench between queries, Rehearsal between
-    * cases): a released frame re-materialized later fails loudly
-    * (checkpoint block gone), it never silently recomputes. Without a
+    * have been materialized (Bench, Verify and perfbench's
+    * QuerySample, each between queries): a released frame
+    * re-materialized later fails loudly (checkpoint block gone), it
+    * never silently recomputes. Without a
     * call, reclamation falls to the ContextCleaner once the RDDs go
     * unreferenced (the registry is weak, so it never blocks that).
     *
     * CONTRACT: this is a process-global boundary — it assumes ONE
-    * in-flight query stream per JVM (the Bench/Verify/Rehearsal
+    * in-flight query stream per JVM (the Bench/Verify/QuerySample
     * harness shape). With concurrent queries on a shared session,
     * thread B's boundary would unpersist thread A's still-in-flight
     * staged blocks and fail A's query; concurrent callers should skip
