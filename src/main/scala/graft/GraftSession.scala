@@ -54,8 +54,7 @@ object GraftSession {
     // 12.0 s, per-operator 8.5 s, this setting 8.3 s — the fallback
     // picks the fast posture per stage, engine-wide, instead of the
     // per-family no-fuse session the r16 workaround hand-maintained.
-    "spark.sql.codegen.hugeMethodLimit" ->
-      sys.env.getOrElse("SPARK_GRAFT_HUGE_METHOD_LIMIT", "8000"),
+    "spark.sql.codegen.hugeMethodLimit" -> "8000",
     // Janino-compiled codegen cache (STATIC conf, default 100
     // entries): the composite queries alone hold several hundred
     // distinct codegen units, so the default thrashes INSIDE one
@@ -69,8 +68,7 @@ object GraftSession {
     // and identical fragments across queries/passes hit instead of
     // recompiling. Scale-neutral: a production driver running a
     // query stream benefits identically.
-    "spark.sql.codegen.cache.maxEntries" ->
-      sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "10000"),
+    "spark.sql.codegen.cache.maxEntries" -> "10000",
     "spark.ui.enabled" -> "false")
 
   def create(appName: String,

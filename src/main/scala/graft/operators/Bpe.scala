@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.GraftBridge.stageLocal
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -20,8 +21,10 @@ import org.apache.spark.sql.functions._
   * one window-pass merge application, all partitioned by word. Only
   * the argmax pair — the model itself, k rows after k rounds —
   * touches the driver, the same boundary as the Lloyd trainer's
-  * centroids. Lineage is truncated per round with localCheckpoint and
-  * the previous round's blocks are released as the loop advances.
+  * centroids. Each round's symbol frame is staged with
+  * `GraftBridge.stageLocal`, which truncates the lineage; the staged
+  * blocks stay until the caller's `releaseStaged` consume boundary, or
+  * until the ContextCleaner collects the dropped rounds.
   *
   * Greedy left-to-right merge application is the published tie rule:
   * overlapping matches only arise when lhs == rhs (runs like "aaaa"),
@@ -34,27 +37,13 @@ object Bpe {
   val EndOfWord = "</w>"
 
   /** A trained tokenizer: the merge table (driver-side — k rows, it
-    * IS the model) plus the final per-word symbol frame (a
-    * localCheckpoint, so it survives for the session). Production
-    * tokenizers are trained ONCE and served many times; every view
-    * below (merge table, vocabulary, document encode) derives from
-    * one `Trained` so the k-round loop never re-runs per query. */
+    * IS the model) plus the final per-word symbol frame (staged, so
+    * it lives until the caller's consume boundary). Every view below
+    * (merge table, vocabulary, document encode) derives from one
+    * `Trained`; a model that must outlive a query is written once with
+    * `ensureModel` and served from its tables. */
   final case class Trained(merges: Seq[(Int, String, String, Long)],
                            symbols: DataFrame)
-
-  /** Session-scoped model memo keyed by (session, corpus tag,
-    * numMerges) — the in-session analogue of persisting the merge
-    * table (same idempotent pattern as `Bucketing.ensureBucketed`). */
-  private val models =
-    scala.collection.concurrent.TrieMap
-      .empty[(org.apache.spark.sql.SparkSession, String, Int), Trained]
-
-  def trainedFor(docs: DataFrame, text: Column, numMerges: Int,
-                 tag: String): Trained =
-    models.getOrElseUpdate((docs.sparkSession, tag, numMerges), {
-      val (m, sym) = train(docs, text, numMerges)
-      Trained(m, sym)
-    })
 
   /** Corpus words → per-word character symbols: (word, freq, pos, sym). */
   private def initialSymbols(docs: DataFrame, text: Column): DataFrame =
@@ -89,17 +78,13 @@ object Bpe {
           .otherwise(col("sym")).as("sym"))
   }
 
-  /** Run the training loop; returns the merge table (driver-side — it
-    * IS the model) and the final symbol frame (checkpointed). */
-  private def train(docs: DataFrame, text: Column, numMerges: Int)
-      : (Seq[(Int, String, String, Long)], DataFrame) = {
-    var sym = initialSymbols(docs, text).localCheckpoint(false)
-    // lazy checkpoints: each round's argmax job does double duty,
-    // materializing the previous round's merge result — one job per
-    // round instead of two. The PREVIOUS frame's blocks can only be
-    // released after the job that materializes its successor, so the
-    // unpersist trails by one round (connectedComponents' pattern).
-    var prev: DataFrame = null
+  /** Run the training loop: the merge table (driver-side — it IS the
+    * model) and the final symbol frame. A staged frame's blocks are
+    * written by the first job that reads it, so each round's argmax
+    * job also materializes the previous round's merge result — one
+    * job per round instead of two. */
+  def train(docs: DataFrame, text: Column, numMerges: Int): Trained = {
+    var sym = stageLocal(initialSymbols(docs, text))
     val merges = Seq.newBuilder[(Int, String, String, Long)]
     var rank = 1
     var done = false
@@ -111,32 +96,20 @@ object Bpe {
         .groupBy("sym", "nxt").agg(sum(col("freq")).as("cnt"))
         .agg(max(struct(col("cnt"), col("sym"), col("nxt"))).as("b"))
         .select(col("b.cnt"), col("b.sym"), col("b.nxt"))
-        .collect()(0) // materializes `sym`; `prev` is now safe to drop
-      if (prev != null) { prev.unpersist(); prev = null }
+        .collect()(0)
       if (best.isNullAt(0)) done = true // every word fully merged
       else {
         merges += ((rank, best.getString(1), best.getString(2), best.getLong(0)))
-        val next = applyMerge(sym, best.getString(1), best.getString(2))
-          .localCheckpoint(false)
-        prev = sym
-        sym = next
+        sym = stageLocal(applyMerge(sym, best.getString(1), best.getString(2)))
         rank += 1
       }
     }
-    // the last round's frame may still be lazy and leaning on prev's
-    // blocks — settle it before releasing them
-    if (prev != null) { sym.count(); prev.unpersist() }
-    (merges.result(), sym)
+    Trained(merges.result(), sym)
   }
 
   /** The learned merge table: (merge_rank, lhs, rhs, freq). */
-  def trainMerges(docs: DataFrame, text: Column, numMerges: Int): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val (merges, sym) = train(docs, text, numMerges)
-    sym.unpersist()
-    merges.toDF("merge_rank", "lhs", "rhs", "freq")
-  }
+  def trainMerges(docs: DataFrame, text: Column, numMerges: Int): DataFrame =
+    mergesOf(train(docs, text, numMerges))
 
   /** Merge-table view of a trained model. */
   def mergesOf(t: Trained): DataFrame = {
@@ -154,11 +127,9 @@ object Bpe {
 
   /** The corpus vocabulary tokenized under the learned merges:
     * (word, freq, encoding) — encoding is the space-joined subword
-    * sequence. (The final frame is a localCheckpoint handed to the
-    * caller; like connectedComponents' labels, it cannot be safely
-    * unpersisted here.) */
+    * sequence. */
   def encodeWords(docs: DataFrame, text: Column, numMerges: Int): DataFrame =
-    vocabOf(Trained(Nil, train(docs, text, numMerges)._2))
+    vocabOf(train(docs, text, numMerges))
 
   /** Documents tokenized under the learned merges — the inference
     * half of the tokenizer: (doc_id, n_tokens, tokens), tokens the
@@ -175,8 +146,7 @@ object Bpe {
     * one join probe per word; nothing is quadratic in |vocab|. */
   def encodeDocs(docs: DataFrame, id: Column, text: Column,
                  numMerges: Int): DataFrame =
-    encodeDocsWith(Trained(Nil, train(docs, text, numMerges)._2),
-      docs, id, text)
+    encodeDocsWith(train(docs, text, numMerges), docs, id, text)
 
   /** Document encode against an already-trained model — the serving
     * half: no training jobs, one vocabulary join. */
@@ -198,7 +168,8 @@ object Bpe {
       .select(col("doc_id"),
         size(split(col("tokens"), " ")).as("n_tokens"), col("tokens"))
 
-  private def modelTables(tag: String): (String, String) =
+  /** The (vocab, merges) table names of the model persisted as `tag`. */
+  def modelTables(tag: String): (String, String) =
     (s"bpe_vocab_$tag", s"bpe_merges_$tag")
 
   /** Persist a trained tokenizer: the per-word vocabulary bucketed on

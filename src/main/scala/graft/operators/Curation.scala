@@ -62,21 +62,19 @@ object Curation {
     val lmScores = LanguageModel.scoreCore(docs, text, id,
         LanguageModel.bigramLm(lmRef, text))
       .select(col("doc_id"), col("avg_nll"))
-    // truncate here: the gate subtree (the gate projection + the LM
+    // stage here: the gate subtree (the gate projection + the LM
     // probe joins) feeds SIX downstream scans — quality's exact
     // keepers, the signature/shingle-set/band frames inside dedup,
     // the semi/anti assembly, and the audit join. Without a stage
     // boundary every one re-scans the corpus and re-runs the gates
-    // (measured: 70 parquet scans, zero exchange reuse). The lazy
-    // localCheckpoint materializes the flagged corpus once — the
-    // in-session analogue of the staged-parquet boundary a production
-    // run would write between filter and dedup. (Handed to the
-    // caller's lineage, so it cannot be unpersisted here.)
-    val flagged = gated
+    // (measured: 70 parquet scans, zero exchange reuse). The staged
+    // frame holds the flagged corpus once — the in-session analogue
+    // of the staged-parquet boundary a production run would write
+    // between filter and dedup — until the caller's consume boundary.
+    val flagged = org.apache.spark.sql.GraftBridge.stageLocal(gated
       .join(lmScores, Seq("doc_id"), "left")
       .select(col("doc_id"), col("__text"), col("rep_fail"),
-        (col("avg_nll").isNull || col("avg_nll") > maxAvgNll).as("lm_fail"))
-      .localCheckpoint(false)
+        (col("avg_nll").isNull || col("avg_nll") > maxAvgNll).as("lm_fail")))
     val quality = flagged.filter(!col("rep_fail") && !col("lm_fail"))
       .select(col("doc_id"), col("__text").as("text"))
     val survivors = Dedup

@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.GraftBridge.stageLocal
 import org.apache.spark.sql.functions._
 
 /** Distributed connected components over an undirected edge list —
@@ -20,63 +21,35 @@ import org.apache.spark.sql.functions._
   * and safe for chain-shaped graphs, while near-duplicate clusters
   * (near-cliques) still finish in 2–3 rounds.
   *
-  * Per round the lineage is truncated with localCheckpoint —
-  * iterative DataFrame loops otherwise re-plan the whole history and
-  * the optimizer time grows quadratically. Intermediate rounds are
-  * unpersisted as the loop advances, and the FINAL labels are handed
-  * back as a reliable (disk) checkpoint, not a block-manager-resident
-  * one: a returned localCheckpoint can never be safely unpersisted by
-  * this function (the caller's action hasn't run yet) and leaking it
-  * degrades every later job in the session — block-manager residency
-  * evicts shuffle/cache blocks. The disk copy is tiny (two longs per
-  * node), survives any number of downstream actions, and costs one
-  * extra write+read of the label table.
+  * Every frame the loop reads more than once — the symmetrized edge
+  * list, the initial labels and each round's labels — is staged with
+  * `GraftBridge.stageLocal`, so iterative DataFrame loops do not
+  * re-plan the whole history (optimizer time would otherwise grow
+  * quadratically). The returned labels are the last round's staged
+  * frame: like every staged frame its blocks stay until the
+  * `releaseStaged` consume boundary, or until the ContextCleaner
+  * collects them once the caller drops the frame. Nothing is written
+  * to a checkpoint directory.
   */
 object Graph {
-
-  /** Reliable checkpoints need a checkpoint dir. Local/default: a
-    * driver temp dir. Cluster deployments should point
-    * `sparkContext.setCheckpointDir` at shared storage (HDFS/object
-    * store) BEFORE calling — this fallback only fires when unset. */
-  private def ensureCheckpointDir(spark: SparkSession): Unit =
-    if (spark.sparkContext.getCheckpointDir.isEmpty) {
-      spark.sparkContext.setCheckpointDir(
-        java.nio.file.Files.createTempDirectory("graft-ckpt").toString)
-    }
 
   /** Components over `edges(srcCol, dstCol)`. Returns (node,
     * component) where component = the minimum node id reachable.
     * Nodes are those that appear in at least one edge — callers join
     * isolated vertices back with coalesce(component, id). */
-  private val trace = sys.env.contains("SPARK_GRAFT_CC_TRACE")
-  private def traced[T](label: String)(f: => T): T =
-    if (!trace) f else {
-      val t0 = System.nanoTime()
-      val r = f
-      System.err.println(f"CC $label ${(System.nanoTime() - t0) / 1e9}%.3fs")
-      r
-    }
-
   def connectedComponents(edges: DataFrame, srcCol: String, dstCol: String,
                           maxIter: Int = 25): DataFrame = {
-    val sym = traced("sym") {
-      // Edge list staged ONCE (r21): symmetrization references the
-      // caller's edge frame twice — for the dedup family that frame is
-      // the whole LSH candidate-pair subtree, so the unstaged union
-      // ran pair generation twice (measured: 'sym' was 0.7 s of
-      // dd_cc's 1.1 s warm loop). stageLocal: ids are raw source ids.
-      val e0 = org.apache.spark.sql.GraftBridge.stageLocal(
-        edges.select(col(srcCol).cast("long").as("u"),
-          col(dstCol).cast("long").as("v")))
-      e0.union(e0.select(col("v").as("u"), col("u").as("v")))
-        .distinct()
-        .localCheckpoint()
-    }
-    var labels = traced("init") {
-      sym.select(col("u").as("node")).distinct()
-        .select(col("node"), col("node").as("component"))
-        .localCheckpoint()
-    }
+    // Edge list staged ONCE (r21): symmetrization references the
+    // caller's edge frame twice — for the dedup family that frame is
+    // the whole LSH candidate-pair subtree, so the unstaged union ran
+    // pair generation twice (measured: 'sym' was 0.7 s of dd_cc's
+    // 1.1 s warm loop).
+    val e0 = stageLocal(edges.select(col(srcCol).cast("long").as("u"),
+      col(dstCol).cast("long").as("v")))
+    val sym = stageLocal(
+      e0.union(e0.select(col("v").as("u"), col("u").as("v"))).distinct())
+    var labels = stageLocal(sym.select(col("u").as("node")).distinct()
+      .select(col("node"), col("node").as("component")))
     var converged = false
     var i = 0
     while (!converged && i < maxIter) {
@@ -97,39 +70,22 @@ object Graph {
         .groupBy("node").agg(min("component").as("component"), max("prev").as("prev"))
       // pointer jump: follow the label chain one level (component is
       // always itself a node id, so the self-join resolves its label)
-      val next = hop
+      val next = stageLocal(hop
         .join(hop.select(col("node").as("cnode"), col("component").as("cc")),
           col("component") === col("cnode"), "left")
         .select(col("node"),
           least(col("component"), coalesce(col("cc"), col("component")))
             .as("component"),
-          col("prev"))
-        .localCheckpoint(eager = false)
+          col("prev")))
       // One job does double duty: count() scans EVERY partition of the
       // filtered view (unlike isEmpty's take-1 short circuit), which
       // fully materializes the lazy checkpoint above AND answers the
       // convergence test — halving the per-round job count, the
       // dominant cost once components collapse to a few labels.
-      converged = traced(s"round$i") {
-        next.filter(col("component") =!= col("prev")).count() == 0
-      }
-      // `next` is checkpointed, so it no longer depends on the previous
-      // round's blocks — free them now. Leaked checkpoint blocks squat
-      // in the block manager for the session lifetime and evict/starve
-      // every later job's shuffle and cache blocks.
-      labels.unpersist()
+      converged = next.filter(col("component") =!= col("prev")).count() == 0
       labels = next
       i += 1
     }
-    sym.unpersist()
-    // Dematerialize before returning: copy the converged labels to a
-    // reliable checkpoint (disk-backed, zero block-manager residency)
-    // and free the last round's localCheckpoint blocks. Callers get a
-    // frame they can re-run any number of actions against without this
-    // function having leaked session-lifetime storage blocks.
-    ensureCheckpointDir(labels.sparkSession)
-    val out = traced("final-ckpt") { labels.select("node", "component").checkpoint() }
-    labels.unpersist()
-    out
+    labels.select("node", "component")
   }
 }

@@ -2926,42 +2926,44 @@ object DataOps {
     * words are suffixed (guaranteed-OOV vocabulary drift), the rest
     * unchanged — the monitoring query that decides when the persisted
     * tokenizer needs retraining. */
-  def txBpeCoverage(s: SparkSession, d: String): DataFrame = {
-    val batch = docs(s, d).withColumn("text",
+  def txBpeCoverage(s: SparkSession, d: String): DataFrame =
+    graft.operators.Bpe.coverage(
+      s.table(graft.operators.Bpe.modelTables(bpeTag(s, d))._1),
+      bpeDriftBatch(s, d), col("text"))
+
+  private[queries] def bpeDriftBatch(s: SparkSession, d: String): DataFrame =
+    docs(s, d).withColumn("text",
       when(pmod(col("doc_id"), lit(5L)) === 0,
         concat_ws(" ", transform(split(col("text"), " "),
           w => concat(w, lit("_v2"))))).otherwise(col("text")))
-    graft.operators.Bpe.coverage(
-      graft.operators.Bpe.vocabOf(bpeModel(s, d)), batch, col("text"))
+
+  /** One trained tokenizer per (merges, corpus), written once as the
+    * persisted vocab and merge tables (`Bpe.ensureModel`): the merge
+    * table / vocab / encode / coverage queries read those tables, so
+    * the k-round training loop runs once, not per query — the
+    * train-once/serve-many shape of a production tokenizer. Returns
+    * the model's tag. */
+  private def bpeTag(s: SparkSession, d: String): String = {
+    val tag = s"m${bpeMerges}_${d.replaceAll("[^A-Za-z0-9]", "_")}"
+    graft.operators.Bpe.ensureModel(s, s"$tableRoot/bpe_$tag", tag,
+      bucketCount) {
+      graft.operators.Bpe.train(docs(s, d), col("text"), bpeMerges)
+    }
+    tag
   }
 
-  /** One trained tokenizer per (session, corpus): the merge-table /
-    * vocab / encode queries are three VIEWS of the same model, so the
-    * k-round training loop runs once, not three times — the
-    * train-once/serve-many shape of a production tokenizer. */
-  private[queries] def bpeModel(s: SparkSession, d: String) =
-    graft.operators.Bpe.trainedFor(docs(s, d), col("text"), bpeMerges, d)
-
   def txBpeMerges(s: SparkSession, d: String): DataFrame =
-    graft.operators.Bpe.mergesOf(bpeModel(s, d))
+    s.table(graft.operators.Bpe.modelTables(bpeTag(s, d))._2)
 
   def txBpeVocab(s: SparkSession, d: String): DataFrame =
-    graft.operators.Bpe.vocabOf(bpeModel(s, d))
-
-  def txBpeEncode(s: SparkSession, d: String): DataFrame =
-    graft.operators.Bpe.encodeDocsWith(bpeModel(s, d), docs(s, d),
-      col("doc_id"), col("text"))
+    s.table(graft.operators.Bpe.modelTables(bpeTag(s, d))._1)
 
   /** Tokenizer SERVING: encode against the persisted vocab table —
     * zero training jobs in the probe plan, the document side joins
     * the stored bucket layout. */
-  def txBpeEncodePersisted(s: SparkSession, d: String): DataFrame = {
-    val tag = s"m${bpeMerges}_${d.replaceAll("[^A-Za-z0-9]", "_")}"
-    graft.operators.Bpe.ensureModel(s, s"$tableRoot/bpe_$tag", tag,
-      bucketCount) { bpeModel(s, d) }
-    graft.operators.Bpe.encodeDocsPersisted(s, tag, docs(s, d),
+  def txBpeEncode(s: SparkSession, d: String): DataFrame =
+    graft.operators.Bpe.encodeDocsPersisted(s, bpeTag(s, d), docs(s, d),
       col("doc_id"), col("text"))
-  }
 
   /** Unrolled round-by-round BPE replay (mirrors Bpe.train): each
     * round computes the argmax pair with the same (count, lhs, rhs)
@@ -4614,7 +4616,7 @@ object DataOps {
     "tx_bpe_merges" -> txBpeMerges _,
     "tx_bpe_vocab" -> txBpeVocab _,
     "tx_bpe_encode" -> txBpeEncode _,
-    "tx_bpe_encode_persisted" -> txBpeEncodePersisted _,
+    "tx_bpe_encode_persisted" -> txBpeEncode _,
     "tx_bpe_coverage" -> txBpeCoverage _,
     "tx_lm_bigrams" -> txLmBigrams _,
     "tx_lm_score" -> txLmScore _,

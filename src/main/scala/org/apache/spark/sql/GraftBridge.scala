@@ -10,8 +10,10 @@ object GraftBridge {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
-  /** Constraint-free lazy local checkpoint — the staging primitive
-    * for frames that are re-used across several joins of ONE query.
+  /** Constraint-free lazy local checkpoint — the engine's one staging
+    * primitive: every frame that is re-used across several joins of
+    * one query, or across the rounds of an iterative loop, is staged
+    * here.
     *
     * `Dataset.localCheckpoint` stamps the resulting LogicalRDD with
     * the optimized plan's `originConstraints`, expressed on the
@@ -27,18 +29,9 @@ object GraftBridge {
     * it). This helper wraps the checkpointed RDD in a bare LogicalRDD
     * with NO origin stats/constraints, so nothing can leak; the cost
     * is only that downstream loses inherited partitioning/ordering
-    * info, which the staged-frame call sites reshuffle anyway.
-    *
-    * When is plain `localCheckpoint` still safe? Constraints are
-    * expressed over the frame's OUTPUT attributes, so the leak needs
-    * the staged output to pass source attributes through UN-ALIASED
-    * (a filter/join keeps the exprId; `col.as("x")` mints a fresh
-    * one). Graph/Bpe/Curation stage frames whose outputs are all
-    * aliases or aggregate results — fresh exprIds, nothing for
-    * InferFiltersFromConstraints to bind elsewhere — and they keep
-    * Dataset.localCheckpoint for its unpersist() discipline. Frames
-    * that forward raw source ids (the dedup family's vec_id) MUST
-    * come through here. */
+    * info, which the staged-frame call sites reshuffle anyway. Its
+    * blocks are freed at the [[releaseStaged]] boundary; a frame that
+    * must outlive a query is written to a table instead. */
   def stageLocal(df: DataFrame): DataFrame = {
     val ds = df.asInstanceOf[classic.Dataset[Row]]
     val qe = ds.queryExecution

@@ -28,7 +28,7 @@ class BpeModelSpec extends SparkSpec {
 
   test("persisted serving equals the live encode and scans the bucketed vocab") {
     val root = java.nio.file.Files.createTempDirectory("bpe_model").toString
-    val t = Bpe.trainedFor(corpus, col("text"), 6, tag = "bpemodelspec")
+    val t = Bpe.train(corpus, col("text"), 6)
     Bpe.ensureModel(spark, root, "spec1", nBuckets = 4) { t }
 
     val live = Bpe.encodeDocsWith(t, corpus, col("doc_id"), col("text"))
@@ -67,13 +67,13 @@ class BpeModelSpec extends SparkSpec {
   test("ensureModel is idempotent and a fresh-session probe needs no retrain") {
     val root = java.nio.file.Files.createTempDirectory("bpe_model2").toString
     Bpe.ensureModel(spark, root, "spec2", nBuckets = 4) {
-      Bpe.trainedFor(corpus, col("text"), 6, tag = "bpemodelspec")
+      Bpe.train(corpus, col("text"), 6)
     }
     var built = false
     // second call must not invoke the build thunk
     Bpe.ensureModel(spark, root, "spec2", nBuckets = 4) {
       built = true
-      Bpe.trainedFor(corpus, col("text"), 6, tag = "bpemodelspec")
+      Bpe.train(corpus, col("text"), 6)
     }
     assert(!built, "ensureModel rebuilt an existing model")
     // a CHILD session (fresh SQL state, shared catalog) serves from

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.SparkSpec
+import org.apache.spark.sql.GraftBridge
 import org.apache.spark.sql.functions._
 
 /** Connected components (min-label propagation) unit tests: chains
@@ -12,6 +13,10 @@ class GraphSpec extends SparkSpec {
     import spark.implicits._
     es.toDF("a", "b")
   }
+
+  /** A random graph of the union-find fixture: 30 edges over 20 nodes. */
+  private def randomEdges(rng: scala.util.Random): Seq[(Long, Long)] =
+    Seq.fill(30)((rng.nextLong(20), rng.nextLong(20))).filter(e => e._1 != e._2)
 
   private def components(es: Seq[(Long, Long)]): Map[Long, Long] =
     Graph.connectedComponents(edges(es), "a", "b").collect()
@@ -32,7 +37,7 @@ class GraphSpec extends SparkSpec {
   test("random graphs agree with a union-find oracle") {
     val rng = new scala.util.Random(11)
     for (_ <- 1 to 5) {
-      val es = Seq.fill(30)((rng.nextLong(20), rng.nextLong(20))).filter(e => e._1 != e._2)
+      val es = randomEdges(rng)
       val parent = scala.collection.mutable.Map[Long, Long]()
       def find(x: Long): Long = {
         val p = parent.getOrElseUpdate(x, x)
@@ -45,5 +50,25 @@ class GraphSpec extends SparkSpec {
       val oracle = parent.keys.map(k => k -> find(k)).toMap
       assert(components(es) == oracle, s"edges=$es")
     }
+  }
+
+  test("nothing is left behind: no pinned blocks after releaseStaged, no checkpoint files") {
+    val sc = spark.sparkContext
+    def files(dir: Option[String]): Long = dir.fold(0L) { d =>
+      val walk = java.nio.file.Files.walk(
+        java.nio.file.Paths.get(new org.apache.hadoop.fs.Path(d).toUri.getPath))
+      try walk.filter(java.nio.file.Files.isRegularFile(_)).count() finally walk.close()
+    }
+    GraftBridge.releaseStaged() // clear anything earlier tests staged
+    val rddsBefore = sc.getPersistentRDDs.keySet.toSet
+    val dirBefore = sc.getCheckpointDir
+    val filesBefore = files(dirBefore)
+    val es = randomEdges(new scala.util.Random(11))
+    assert(Graph.connectedComponents(edges(es), "a", "b").count() > 0)
+    GraftBridge.releaseStaged()
+    val left = sc.getPersistentRDDs.keySet.toSet -- rddsBefore
+    assert(left.isEmpty, s"RDDs still persisted after releaseStaged: $left")
+    assert(sc.getCheckpointDir == dirBefore, "connectedComponents set a checkpoint dir")
+    assert(files(dirBefore) == filesBefore, "connectedComponents wrote checkpoint files")
   }
 }
