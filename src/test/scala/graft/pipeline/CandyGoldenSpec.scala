@@ -5,23 +5,13 @@ import java.time.LocalDateTime
 import scala.jdk.CollectionConverters._
 import graft.SparkSpec
 
-/** Golden end-to-end parity with the reference's published outputs
-  * (reference CI model, .gitlab-ci.yml:124-170: shape + column names
-  * exact, money within ±0.01/rtol 1e-2, datetimes compared parsed,
-  * everything else exact INCLUDING row order).
-  */
-class CandyGoldenSpec extends SparkSpec {
+/** The reference CI's comparison rules (.gitlab-ci.yml:124-170): shape
+  * + column names exact, money within ±0.01/rtol 1e-2, datetimes
+  * compared parsed, everything else exact INCLUDING row order. */
+object CandyGoldenSpec {
+  import org.scalatest.Assertions._
 
-  private val dataDir = "/root/reference/data/dataset_15"
-  private val goldenDir = "/root/reference/data/output"
-
-  private lazy val outDir = {
-    val d = Files.createTempDirectory("candy_golden").toString
-    CandyPipeline.run(spark, dataDir, outputDir = Some(d))
-    d
-  }
-
-  private def readCsv(path: String): (Array[String], Seq[Array[String]]) = {
+  def readCsv(path: String): (Array[String], Seq[Array[String]]) = {
     val lines = Files.readAllLines(Paths.get(path)).asScala.toSeq.filter(_.nonEmpty)
     (lines.head.split(",", -1), lines.tail.map(_.split(",", -1)))
   }
@@ -29,7 +19,8 @@ class CandyGoldenSpec extends SparkSpec {
   private val moneyCols = Set("total_amount", "line_total", "total_sales", "total_profit", "unit_price")
   private val dtCols = Set("order_datetime")
 
-  private def compare(file: String): Unit = {
+  /** `outDir/file` against `goldenDir/file` under those rules. */
+  def compare(goldenDir: String, outDir: String, file: String): Unit = {
     val (gh, grows) = readCsv(s"$goldenDir/$file")
     val (oh, orows) = readCsv(s"$outDir/$file")
     assert(oh.toSeq == gh.toSeq, s"$file header")
@@ -49,6 +40,29 @@ class CandyGoldenSpec extends SparkSpec {
         }
       }
     }
+  }
+}
+
+/** Golden end-to-end parity with the reference's published outputs.
+  * The "matches golden" tests need the reference checkout and cancel
+  * where it is absent; `CandyReplaySpec` checks the same four files
+  * against the independent replay on the committed fixture. */
+class CandyGoldenSpec extends SparkSpec {
+  import CandyGoldenSpec.readCsv
+
+  private val dataDir = CandyData.inputDir
+  private val goldenDir = CandyData.goldenDir
+
+  private lazy val outDir = {
+    val d = Files.createTempDirectory("candy_golden").toString
+    CandyPipeline.run(spark, dataDir, outputDir = Some(d))
+    d
+  }
+
+  private def compare(file: String): Unit = {
+    assume(CandyData.goldenPresent,
+      s"golden parity needs ${CandyData.referenceDir} and $goldenDir")
+    CandyGoldenSpec.compare(goldenDir, outDir, file)
   }
 
   test("orders.csv matches golden (9,846 rows)") { compare("orders.csv") }

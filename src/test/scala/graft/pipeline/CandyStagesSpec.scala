@@ -7,7 +7,7 @@ import graft.SparkSpec
   * produce exactly the single-session pipeline's results. */
 class CandyStagesSpec extends SparkSpec {
 
-  private val dataDir = "/root/reference/data/dataset_15"
+  private val dataDir = CandyData.inputDir
 
   test("ingest → process → report equals the single-session run") {
     val ckpt = Files.createTempDirectory("candy_stages").toString

@@ -8,7 +8,7 @@ import graft.SparkSpec
 class DiagnosticsSpec extends SparkSpec {
 
   test("inventory and dataset-info blocks render from pipeline outputs") {
-    val r = CandyPipeline.run(spark, "/root/reference/data/dataset_15",
+    val r = CandyPipeline.run(spark, CandyData.inputDir,
       None, reloadDaily = false, 1, () => new graft.forecast.LinearTrendForecaster())
 
     val inv = collection.mutable.ArrayBuffer[String]()
@@ -32,7 +32,7 @@ class DiagnosticsSpec extends SparkSpec {
   test("staged pipeline emits all three console blocks through the injected sink") {
     val tmp = java.nio.file.Files.createTempDirectory("graft-diag-staged").toString
     val lines = collection.mutable.ArrayBuffer[String]()
-    Orchestrate.staged(spark, "/root/reference/data/dataset_15",
+    Orchestrate.staged(spark, CandyData.inputDir,
       s"$tmp/_stages", tmp, log = Some(lines.append(_)))
     // process stage: dataset info + inventory; report stage: forecast
     // metrics with real in-sample MAE/MSE from the fitted models
