@@ -7,8 +7,9 @@ import org.apache.spark.sql.SparkSession
   * time, shuffle parallelism = local cores (set
   * `spark.sql.shuffle.partitions` to cluster-appropriate values in a
   * real deployment), nanosecond-parquet handling, the file-scan
-  * posture below, codegen limits, and the graft function +
-  * optimizer-rule registration (FloatVectorDot / RewriteVectorDot).
+  * posture below and codegen limits. It registers no function and no
+  * optimizer rule: the graft kernels are typed Columns
+  * (graft.plans.GraftFunctions).
   *
   * File scans use Spark's default split planning, and files are
   * listed on the driver. A split holds up to
@@ -79,7 +80,6 @@ object GraftSession {
       .config(settings(cpus))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    graft.plans.GraftFunctions.ensureRegistered(spark)
     spark
   }
 
@@ -104,7 +104,6 @@ object GraftSession {
       val child = parent.newSession()
       child.conf.set(
         "spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "4194304")
-      graft.plans.GraftFunctions.ensureRegistered(child)
       child
     })
 

@@ -1,7 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, GraftBridge}
 import org.apache.spark.sql.functions._
+import graft.plans.FloatVectorDot
 
 /** Vector kernels over `array<float>` embedding columns, built from
   * codegen'd built-ins (`zip_with`/`aggregate`/`transform`) — no UDFs,
@@ -21,11 +22,12 @@ object VectorFunctions {
       zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
       lit(0.0), (acc, v) => acc + v)
 
-  /** Native-codegen dot product (graft.plans.FloatVectorDot); the
-    * session must have graft functions registered
-    * (GraftFunctions.ensureRegistered / GraftExtensions). */
+  /** Native-codegen dot product (graft.plans.FloatVectorDot) with
+    * `dot`'s numeric contract; on equal-length arrays the two are
+    * bit-equal (FastDotSpec). Unlike `dot`, which is null when the
+    * lengths differ, it sums over the common prefix. */
   def fastDot(a: Column, b: Column): Column =
-    call_function("graft_fvdot", a, b)
+    GraftBridge.column(FloatVectorDot(GraftBridge.expression(a), GraftBridge.expression(b)))
 
   /** Σ aᵢ² in double precision. */
   def normSq(a: Column): Column =

@@ -1,7 +1,9 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.GraftBridge.{column, expression}
+import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
+import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.sql.functions._
 
 /** Bloom-filter join pruning — the big-big join optimization that
@@ -24,39 +26,19 @@ import org.apache.spark.sql.functions._
   * serialized filter is collected and re-broadcast as a LITERAL into a
   * BloomFilterMightContain predicate on the fact scan — the same
   * bounded driver state Spark's runtime filter keeps as its scalar
-  * subquery result. Both expressions are codegen'd Catalyst natives;
-  * no UDF anywhere.
+  * subquery result. Both expressions are codegen'd Catalyst natives,
+  * built as Columns straight over the expression (GraftBridge.column),
+  * so no UDF and no registered function anywhere.
   */
 object BloomSemiJoin {
-
-  /** Register the bloom expressions under callable names (the same
-    * temp-function technique as graft_fvdot) — once per session, like
-    * `GraftFunctions.ensureRegistered`: a repeat call is a no-op. */
-  def ensureRegistered(spark: SparkSession): Unit = {
-    import org.apache.spark.sql.catalyst.FunctionIdentifier
-    import org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain
-    import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
-    val registry = spark.sessionState.functionRegistry
-    if (!registry.functionExists(FunctionIdentifier("graft_bloom_agg")))
-      registry.createOrReplaceTempFunction(
-        "graft_bloom_agg",
-        children => new BloomFilterAggregate(children(0), children(1), children(2)),
-        "scala_udf")
-    if (!registry.functionExists(FunctionIdentifier("graft_bloom_contains")))
-      registry.createOrReplaceTempFunction(
-        "graft_bloom_contains",
-        children => BloomFilterMightContain(children(0), children(1)),
-        "scala_udf")
-  }
 
   /** Serialized bloom filter (binary) over `key`, built distributed
     * with map-side partial filters. `numBits` bounds filter size (and
     * so driver/broadcast cost): 8 M bits ≈ 1 MB ≈ 1% fpp at 1 M keys. */
   def buildFilter(dim: DataFrame, key: Column,
                   expectedItems: Long, numBits: Long): Array[Byte] = {
-    ensureRegistered(dim.sparkSession)
-    dim.agg(call_function("graft_bloom_agg", xxhash64(key),
-        lit(expectedItems), lit(numBits)).as("bloom"))
+    dim.agg(column(new BloomFilterAggregate(expression(xxhash64(key)),
+        Literal(expectedItems), Literal(numBits)).toAggregateExpression()).as("bloom"))
       .collect()(0).getAs[Array[Byte]](0)
   }
 
@@ -65,7 +47,7 @@ object BloomSemiJoin {
     * (its other accepted shape is the scalar subquery Spark's own
     * runtime filter plants). */
   def mightContain(bloom: Array[Byte], key: Column): Column =
-    call_function("graft_bloom_contains", lit(bloom), xxhash64(key))
+    column(BloomFilterMightContain(Literal(bloom), expression(xxhash64(key))))
 
   /** Inner equi-join with the fact side pre-pruned through a bloom of
     * the dim keys. Exactly the plain join's rows (no false negatives);

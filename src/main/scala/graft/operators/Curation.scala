@@ -36,7 +36,6 @@ object Curation {
   def audit(docs: DataFrame, text: Column, id: Column, lmRef: DataFrame,
             n: Int, jaccardThreshold: Double,
             maxTop2: Double, maxDup5: Double, maxAvgNll: Double): DataFrame = {
-    graft.plans.GraftFunctions.ensureRegistered(docs.sparkSession)
     // repetition gate INLINE (r22): the signals are within-document
     // statistics, computed by the same compiled pass repetitionSignals
     // rides (graft.plans.RepetitionStats) — so the gate is a projection

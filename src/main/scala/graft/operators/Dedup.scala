@@ -85,10 +85,9 @@ object Dedup {
     * portable md5-based tokenHash over shingle strings. */
   private[operators] def hashedShingles(df: DataFrame, text: Column,
                                         id: Column, n: Int): DataFrame = {
-    graft.plans.GraftFunctions.ensureRegistered(df.sparkSession)
     df.select(id.as("doc_id"), split(text, " ").as("__toks"))
       .select(col("doc_id"),
-        explode(call_function("graft_grams", col("__toks"), lit(n))).as("h"))
+        explode(graft.plans.GraftFunctions.grams(col("__toks"), n)).as("h"))
       .distinct()
   }
 
@@ -393,7 +392,6 @@ object Dedup {
     * law); documents with fewer than n tokens keep producing NO row
     * (the kernel returns an empty signature, filtered here). */
   def minhashSignatures(df: DataFrame, text: Column, id: Column, n: Int): DataFrame = {
-    graft.plans.GraftFunctions.ensureRegistered(df.sparkSession)
     // the short-doc gate runs on the CHEAP token count, before the
     // kernel projection — filtering on size(__sig) AFTER it lets
     // predicate pushdown substitute the kernel into the filter and
@@ -403,7 +401,7 @@ object Dedup {
     // shingle window guard always applied
     df.where(text.isNotNull && size(split(text, " ")) >= n)
       .select(id.as("doc_id"),
-        call_function("graft_minhash", text, lit(n)).as("__sig"))
+        graft.plans.GraftFunctions.minhash(text, n).as("__sig"))
       .select(col("doc_id") +:
         minhashAB.indices.map(i => col("__sig")(i).as(s"m$i")): _*)
   }
@@ -512,10 +510,9 @@ object Dedup {
     // before — ≤32 bits the portable md5 tokenHash (dd_simhash's
     // DuckDB-replayable backend), wider xxhash64 (tokenHash's upper
     // 32 bits are constant zero and would degenerate the high bands)
-    graft.plans.GraftFunctions.ensureRegistered(df.sparkSession)
     df.where(text.isNotNull)
       .select(id.as("doc_id"),
-        call_function("graft_simhash", text, lit(bits)).as("simhash"))
+        graft.plans.GraftFunctions.simhash(text, bits).as("simhash"))
   }
 
   /** The relational twin — retained ONLY as the specs' independent
@@ -610,7 +607,6 @@ object Dedup {
     * misses — the standard IVF trade). */
   def embeddingNearDupsBy(emb: DataFrame, blockCol: String,
                           threshold: Double): DataFrame = {
-    graft.plans.GraftFunctions.ensureRegistered(emb.sparkSession)
     val e = emb.withColumn("nrm", sqrt(graft.functions.VectorFunctions.fastNormSq(col("embedding"))))
     e.as("a")
       .join(e.as("b"), col(s"a.$blockCol") === col(s"b.$blockCol")
@@ -675,7 +671,6 @@ object Dedup {
   def semDedup(emb: DataFrame, centroids: DataFrame,
                threshold: Double, maxCell: Int = 0): DataFrame = {
     import graft.functions.VectorFunctions.{fastDot, fastNormSq, tokenHash}
-    graft.plans.GraftFunctions.ensureRegistered(emb.sparkSession)
     val assigned = Similarity.lloydAssignDist(emb, centroids)
     val blockedRaw =
       if (maxCell <= 0) assigned.withColumn("block", col("centroid_id"))
@@ -765,7 +760,6 @@ object Dedup {
   def incrementalSemDedup(corpusAssigned: DataFrame, centroids: DataFrame,
                           batch: DataFrame, threshold: Double): DataFrame = {
     import graft.functions.VectorFunctions.{fastDot, fastNormSq}
-    graft.plans.GraftFunctions.ensureRegistered(batch.sparkSession)
     // stage the batch frame once (GraftBridge.stageLocal — the
     // CONSTRAINT-FREE checkpoint: Dataset.localCheckpoint leaks the
     // batch plan's constraints onto the corpus side through shared
@@ -949,7 +943,6 @@ object Dedup {
   def incrementalEmbedding(corpusAssigned: DataFrame, centroids: DataFrame,
                            batch: DataFrame, threshold: Double): DataFrame = {
     import graft.functions.VectorFunctions.{fastDot, fastNormSq}
-    graft.plans.GraftFunctions.ensureRegistered(batch.sparkSession)
     val b = Similarity.lloydAssign(batch, centroids)
       .withColumn("nrm", sqrt(fastNormSq(col("embedding"))))
     val c = corpusAssigned.withColumn("nrm", sqrt(fastNormSq(col("embedding"))))
@@ -1022,11 +1015,10 @@ object Dedup {
     * `repeatedSpans` and `trimRepeatedSpans`. */
   private def dupWindowHits(df: DataFrame, text: Column, id: Column,
                             k: Int): DataFrame = {
-    graft.plans.GraftFunctions.ensureRegistered(df.sparkSession)
     val grams = df
       .select(id.as("doc_id"), split(text, " ").as("__toks"))
       .select(col("doc_id"),
-        posexplode(call_function("graft_grams", col("__toks"), lit(k)))
+        posexplode(graft.plans.GraftFunctions.grams(col("__toks"), k))
           .as(Seq("off", "gram")))
       .select(col("doc_id"), (col("off") + 1).cast("long").as("pos"), col("gram"))
     val dup = grams.groupBy("gram").agg(count(lit(1)).as("n"))

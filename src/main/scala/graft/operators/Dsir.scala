@@ -120,10 +120,8 @@ object Dsir {
     * Null-text rows contribute nothing (the exploded form's explode
     * drops them; the kernel skips them — DsirSpec pins the parity). */
   def bucketCounts(pool: DataFrame, text: Column, isTarget: Column): DataFrame = {
-    GraftFunctions.ensureRegistered(pool.sparkSession)
     pool.select(text.as("__t"), isTarget.as("__tgt"))
-      .agg(call_function("graft_dsir_counts", col("__t"), col("__tgt"),
-        lit(buckets)).as("c"))
+      .agg(GraftFunctions.dsirCounts(col("__t"), col("__tgt"), buckets).as("c"))
       .select(posexplode(col("c")))
       .select(col("pos").cast("long").as("bucket"),
         col("col.rn").as("rn"), col("col.tn").as("tn"))
@@ -183,10 +181,9 @@ object Dsir {
     * produced no gram rows there, hence no weight row. */
   def scoreAgainst(llr: Array[Long], pool: DataFrame, text: Column,
                    id: Column): DataFrame = {
-    GraftFunctions.ensureRegistered(pool.sparkSession)
     pool.where(text.isNotNull)
       .select(id.as("doc_id"),
-        call_function("graft_dsir_score", text, lit(llr)).as("weight_micro"))
+        GraftFunctions.dsirScore(text, llr).as("weight_micro"))
   }
 
   /** (doc_id, weight_micro): exact-integer importance weight of every

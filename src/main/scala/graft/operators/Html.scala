@@ -71,7 +71,6 @@ object Html {
                       densityInv: Int = linkDensityInv,
                       carry: Seq[Column] = Nil,
                       dropNullHtml: Boolean = true): DataFrame = {
-    graft.plans.GraftFunctions.ensureRegistered(df.sparkSession)
     // the output schema's names are a CONTRACT — a carry column named
     // main_text would be silently clobbered by the struct expansion
     // below, so collisions (and carry-vs-carry duplicates) fail loudly
@@ -87,8 +86,8 @@ object Html {
     require(carryNames.distinct == carryNames,
       s"extractMainText: duplicate carry column names $carryNames")
     val in = if (dropNullHtml) df.filter(html.isNotNull) else df
-    in.select(id.as("doc_id") +: call_function("graft_html_extract", html,
-        lit(minTokens), lit(densityInv)).as(eTmp) +: carry: _*)
+    in.select(id.as("doc_id") +: graft.plans.GraftFunctions.htmlExtract(html,
+        minTokens, densityInv).as(eTmp) +: carry: _*)
       .withColumn("main_text", col(s"$eTmp.main_text"))
       .withColumn("n_blocks", col(s"$eTmp.n_blocks"))
       .withColumn("kept_blocks", col(s"$eTmp.kept_blocks"))

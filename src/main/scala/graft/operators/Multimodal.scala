@@ -342,6 +342,10 @@ object Multimodal {
       }
   }
 
+  /** Largest payload [[gunzip]] inflates: 64 MiB, above the sitemap
+    * protocol's 50 MB uncompressed limit. */
+  val maxInflatedBytes: Int = 64 << 20
+
   final case class InflateResult(media_id: Long, payload: Array[Byte],
       was_gzip: Boolean, ok: Boolean)
 
@@ -353,7 +357,10 @@ object Multimodal {
     * payloads pass through untouched (`was_gzip=false`), a corrupt
     * member degrades to a flagged null row instead of killing the job
     * (`ok=false` — at corpus scale a decode failure is a data point,
-    * the [[decodeWavOne]] discipline). */
+    * the [[decodeWavOne]] discipline). A member that inflates past
+    * [[maxInflatedBytes]] is flagged the same way, so a gzip bomb
+    * (a few KB of deflated zeros can claim gigabytes) fills a buffer
+    * bounded by the cap, not the executor's heap. */
   def gunzip(media: Dataset[MediaRecord]): Dataset[InflateResult] = {
     import media.sparkSession.implicits._
     media.mapPartitions(_.grouped(batchSize).flatMap(_.map { r =>
@@ -363,12 +370,16 @@ object Multimodal {
       else try {
         val in = new java.util.zip.GZIPInputStream(
           new java.io.ByteArrayInputStream(p))
-        val out = new java.io.ByteArrayOutputStream(p.length * 4)
+        val out = new java.io.ByteArrayOutputStream(
+          math.min(p.length.toLong * 4, maxInflatedBytes.toLong).toInt)
         val buf = new Array[Byte](8192)
         var n = in.read(buf)
-        while (n >= 0) { out.write(buf, 0, n); n = in.read(buf) }
+        while (n >= 0 && out.size + n <= maxInflatedBytes) {
+          out.write(buf, 0, n); n = in.read(buf)
+        }
         in.close()
-        InflateResult(r.media_id, out.toByteArray, was_gzip = true, ok = true)
+        if (n >= 0) InflateResult(r.media_id, null, was_gzip = true, ok = false)
+        else InflateResult(r.media_id, out.toByteArray, was_gzip = true, ok = true)
       } catch {
         case _: java.io.IOException =>
           InflateResult(r.media_id, null, was_gzip = true, ok = false)

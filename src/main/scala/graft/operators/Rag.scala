@@ -45,10 +45,9 @@ object Rag {
     * produced no token rows there, hence no embedding row). */
   def hashEmbed(df: DataFrame, text: Column, id: Column,
                 dims: Int = Similarity.lshDims): DataFrame = {
-    graft.plans.GraftFunctions.ensureRegistered(df.sparkSession)
     df.where(text.isNotNull)
       .select(id.as("vec_id"),
-        call_function("graft_hash_embed", text, lit(dims)).as("embedding"))
+        graft.plans.GraftFunctions.hashEmbed(text, dims).as("embedding"))
   }
 
   /** The relational twin — retained ONLY as the specs' independent

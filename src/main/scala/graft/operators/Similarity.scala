@@ -4,7 +4,6 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.VectorFunctions.{fastCosine, fastDot, fastNormSq}
-import graft.plans.GraftFunctions
 
 /** Approximate-nearest-neighbor search over an `array<float>`
   * embedding column.
@@ -26,7 +25,6 @@ object Similarity {
     * by vec_id for determinism). Norms are precomputed per side, so
     * each of the |Q|·|C| pairs costs one dot product. */
   def bruteForceTopK(corpus: DataFrame, queries: DataFrame, k: Int): DataFrame = {
-    GraftFunctions.ensureRegistered(corpus.sparkSession)
     val c = corpus.withColumn("nrm", sqrt(fastNormSq(col("embedding"))))
     val q = queries.withColumn("nrm", sqrt(fastNormSq(col("embedding"))))
     val scored = q.as("q")
@@ -60,7 +58,6 @@ object Similarity {
     * dot products against literal plane vectors (one tight codegen
     * loop each — not a 16×64-term expression tree). */
   def lshBucket(emb: DataFrame, nPlanes: Int = lshPlanes): DataFrame = {
-    GraftFunctions.ensureRegistered(emb.sparkSession)
     val dims = lshDims
     val bucket = (0 until nPlanes).map { p =>
       val plane = lit((0 until dims).map(d => planeWeight(p, d).toFloat).toArray)
@@ -120,7 +117,6 @@ object Similarity {
     * to answer a handful of lookups. */
   def lshAnnFor(corpus: DataFrame, queries: DataFrame, k: Int,
                 nPlanes: Int = 16): DataFrame = {
-    GraftFunctions.ensureRegistered(corpus.sparkSession)
     val b = bucketedNormed(corpus, nPlanes)
     val qb = bucketedNormed(queries, nPlanes).withColumn("probe", col("bucket"))
     rerankByBucket(qb, b, k)
@@ -174,7 +170,6 @@ object Similarity {
     * per side, joined back on the bucket key. */
   private def crossScored(a: DataFrame, b: DataFrame, nPlanes: Int,
                           maxBucket: Int): DataFrame = {
-    GraftFunctions.ensureRegistered(a.sparkSession)
     val ab = bucketedNormed(a, nPlanes)
     val bb = bucketedNormed(b, nPlanes)
     val (aj, bj) =
@@ -276,7 +271,6 @@ object Similarity {
     * built from. */
   def lshAnnProbe(index: DataFrame, queries: DataFrame, k: Int,
                   nPlanes: Int = lshPlanes): DataFrame = {
-    GraftFunctions.ensureRegistered(queries.sparkSession)
     val qb = bucketedNormed(queries, nPlanes).withColumn("probe", col("bucket"))
     rerankByBucket(qb, index, k)
   }
@@ -293,7 +287,6 @@ object Similarity {
     * two-sided form doubled them; BENCH r5 showed 1.77s → 3.56s). */
   def lshAnnMultiProbe(emb: DataFrame, k: Int, nPlanes: Int = 16,
                        probeRadius: Int = 1): DataFrame = {
-    GraftFunctions.ensureRegistered(emb.sparkSession)
     val b = bucketedNormed(emb, nPlanes)
     rerankByBucket(withProbes(b, probeMasks(nPlanes, probeRadius)), b, k)
   }
@@ -309,7 +302,6 @@ object Similarity {
                           nPlanes: Int = 16, probeRadius: Int = 1): DataFrame =
     if (corpus eq queries) lshAnnMultiProbe(corpus, k, nPlanes, probeRadius)
     else {
-      GraftFunctions.ensureRegistered(corpus.sparkSession)
       val b = bucketedNormed(corpus, nPlanes)
       val probes = withProbes(bucketedNormed(queries, nPlanes),
         probeMasks(nPlanes, probeRadius))
@@ -330,7 +322,6 @@ object Similarity {
     * replays the projection exactly (same trick as the LSH planes).
     * One codegen'd dot per output dim; no shuffle at all. */
   def randomProject(emb: DataFrame, outDims: Int = 16): DataFrame = {
-    GraftFunctions.ensureRegistered(emb.sparkSession)
     emb.select(col("vec_id"), rpColumn(outDims).as("rp"))
   }
 
@@ -371,7 +362,6 @@ object Similarity {
     * build, and answering |Q| lookups costs |Q| bucket probes. */
   def rpAnnFor(corpus: DataFrame, queries: DataFrame, k: Int,
                outDims: Int = 16): DataFrame = {
-    GraftFunctions.ensureRegistered(corpus.sparkSession)
     val b = rpBucketedNormed(corpus, outDims)
     val qb = rpBucketedNormed(queries, outDims).withColumn("probe", col("bucket"))
     rerankByBucket(qb, b, k)
@@ -678,7 +668,6 @@ object Similarity {
     * their own cell. */
   def ivfProbe(index: DataFrame, centroids: DataFrame, queries: DataFrame,
                k: Int): DataFrame = {
-    GraftFunctions.ensureRegistered(queries.sparkSession)
     val q = ivfAssign(queries, centroids)
       .withColumn("nrm", sqrt(fastNormSq(col("embedding"))))
       .withColumn("probe", col("centroid_id"))
@@ -795,7 +784,6 @@ object Similarity {
     * overall top-k", which can silently return fewer than k. Exact
     * form: |Q|·|C| dots, the oracle baseline. */
   def hardNegatives(corpus: DataFrame, queries: DataFrame, k: Int): DataFrame = {
-    GraftFunctions.ensureRegistered(corpus.sparkSession)
     val c = corpus.withColumn("nrm", sqrt(fastNormSq(col("embedding"))))
     val q = queries.withColumn("nrm", sqrt(fastNormSq(col("embedding"))))
     rankNegatives(q.as("q").join(c.as("c"),
@@ -813,7 +801,6 @@ object Similarity {
     * new query batch touches only its own buckets. */
   def hardNegativesAnn(corpus: DataFrame, queries: DataFrame, k: Int,
                        nPlanes: Int = lshPlanes): DataFrame = {
-    GraftFunctions.ensureRegistered(corpus.sparkSession)
     def prep(df: DataFrame) = lshBucket(df, nPlanes)
       .select("vec_id", "embedding", "label", "bucket")
       .withColumn("nrm", sqrt(fastNormSq(col("embedding"))))
@@ -836,7 +823,6 @@ object Similarity {
   }
 
   def ivfAssign(emb: DataFrame, centroids: DataFrame): DataFrame = {
-    GraftFunctions.ensureRegistered(emb.sparkSession)
     // argmin as min(struct(dist, id)) — lexicographic struct ordering
     // reproduces (dist ASC, centroid_id ASC) tie-breaking, but unlike a
     // row_number window it's a partial-aggregatable hash agg: map-side

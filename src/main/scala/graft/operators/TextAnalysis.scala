@@ -55,9 +55,8 @@ object TextAnalysis {
     * wide-vocabulary boilerplate. Micro-nat integer terms make both
     * entropies summation-order-invariant (oracle-exact). */
   def entropySignals(df: DataFrame, text: Column, idCols: Column*): DataFrame = {
-    graft.plans.GraftFunctions.ensureRegistered(df.sparkSession)
-    val ch = call_function("graft_entropy", text, lit(""))
-    val tk = call_function("graft_entropy", text, lit(" "))
+    val ch = graft.plans.GraftFunctions.entropy(text, "")
+    val tk = graft.plans.GraftFunctions.entropy(text, " ")
     df.select(idCols :+ ch.as("__ch") :+ tk.as("__tk"): _*)
       .withColumn("n_codepoints", col("__ch.n"))
       .withColumn("distinct_chars", col("__ch.distinct"))
@@ -239,7 +238,6 @@ object TextAnalysis {
   def repetitionSignals(df: DataFrame, text: Column, id: Column,
                         topNs: Seq[Int] = Seq(2, 3, 4),
                         dupNs: Seq[Int] = Seq(5, 10)): DataFrame = {
-    graft.plans.GraftFunctions.ensureRegistered(df.sparkSession)
     df.select(id.as("doc_id"), repetitionStats(text, topNs, dupNs).as("__st"))
       .select(repetitionFracs(topNs, dupNs): _*)
   }
@@ -261,8 +259,7 @@ object TextAnalysis {
     * §2.4: those shuffles are removable outright, so remove them). */
   private[graft] def repetitionStats(text: Column, topNs: Seq[Int],
                                      dupNs: Seq[Int]): Column =
-    call_function("graft_rep_stats", tokens(text),
-      lit(topNs.toArray), lit(dupNs.toArray))
+    graft.plans.GraftFunctions.repStats(tokens(text), topNs, dupNs)
 
   /** Output columns over the `__st` stats struct — `doc_id` plus the
     * rounded fractions, in the operator's documented column order. */

@@ -60,20 +60,14 @@ object Urls {
     * codegen'd call the cascade is CSE-eligible end to end again
     * (both rows back in their r13 envelopes — the same HOF→kernel
     * lesson as minhash/hash-embed). */
-  private def percentNormalize(u: Column): Column = {
-    graft.plans.GraftFunctions.ensureRegistered(
-      org.apache.spark.sql.SparkSession.active)
-    call_function("graft_url_pct", u)
-  }
+  private def percentNormalize(u: Column): Column =
+    graft.plans.GraftFunctions.urlPct(u)
 
   /** Step 9: byte-lexicographic query-parameter sort; `…?` → no '?'
     * (`graft_url_qsort`, [[graft.plans.UrlQuerySort]] — kernel for
     * the same CSE reason as step 2). */
-  private def sortQueryParams(u: Column): Column = {
-    graft.plans.GraftFunctions.ensureRegistered(
-      org.apache.spark.sql.SparkSession.active)
-    call_function("graft_url_qsort", u)
-  }
+  private def sortQueryParams(u: Column): Column =
+    graft.plans.GraftFunctions.urlQsort(u)
 
   /** Relational references for the two kernel steps — the shapes the
     * DuckDB oracle mirrors, retained as the living spec: UrlsSpec's
@@ -116,11 +110,8 @@ object Urls {
     * Idempotent by construction (a folded path has no dot segments
     * left). Runs BEFORE the trailing-slash strip so `/a/..` → `/a/`
     * → `/a` composes. */
-  private def foldDotSegments(u: Column): Column = {
-    graft.plans.GraftFunctions.ensureRegistered(
-      org.apache.spark.sql.SparkSession.active)
-    call_function("graft_url_dotfold", u)
-  }
+  private def foldDotSegments(u: Column): Column =
+    graft.plans.GraftFunctions.urlDotfold(u)
 
   /** The whole cascade as ONE codegen'd byte-walk kernel
     * (`graft_url_canon`, [[graft.plans.UrlCanon]]). Why not the staged
@@ -133,11 +124,8 @@ object Urls {
     * JIT-friendly again and the r16 no-fuse child session is deleted.
     * [[canonicalizeStaged]] is the retained relational spec; the
     * UrlsSpec full-cascade fuzz law pins kernel ≡ staged bit-equality. */
-  def canonicalize(url: Column): Column = {
-    graft.plans.GraftFunctions.ensureRegistered(
-      org.apache.spark.sql.SparkSession.active)
-    call_function("graft_url_canon", url)
-  }
+  def canonicalize(url: Column): Column =
+    graft.plans.GraftFunctions.urlCanon(url)
 
   /** Relational reference for the whole cascade — the shape the
     * DuckDB oracle mirrors, retained as the living spec the

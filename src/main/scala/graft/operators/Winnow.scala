@@ -53,19 +53,18 @@ object Winnow {
   def fingerprints(df: DataFrame, text: Column, id: Column,
                    k: Int, w: Int, oracleHash: Boolean = false,
                    kernelSelect: Boolean = true): DataFrame = {
-    graft.plans.GraftFunctions.ensureRegistered(df.sparkSession)
     val hashes =
       if (oracleHash)
         transform(sequence(lit(1), col("m")),
           i => tokenHash(concat_ws(" ", slice(col("toks"), i, lit(k)))))
-      else call_function("graft_grams", col("toks"), lit(k))
+      else graft.plans.GraftFunctions.grams(col("toks"), k)
     val withToks = df
       .select(id.as("doc_id"), split(text, " ").as("toks"))
       .filter(size(col("toks")) >= k)
       .withColumn("m", (size(col("toks")) - (k - 1)))
       .withColumn("hs", hashes)
     val sel =
-      if (kernelSelect) call_function("graft_winnow", col("hs"), lit(w))
+      if (kernelSelect) graft.plans.GraftFunctions.winnow(col("hs"), w)
       else array_distinct(selectionInterpreted(col("hs"), col("m"), w))
     withToks.select(col("doc_id"), explode(sel).as("s"))
       .select(col("doc_id"), col("s.p").cast("long").as("pos"),

@@ -354,10 +354,9 @@ object Events {
     * generated code is one static call) at in-plan cost ~zero.
     * ProphetKernelSpec pins bit-equality of the two paths. */
   private def prophetSolved(s: SparkSession, d: String): DataFrame = {
-    graft.plans.GraftFunctions.ensureRegistered(s)
     val k = graft.plans.ProphetSolveKernel
     prophetSums(s, d)
-      .withColumn("__s", call_function("graft_prophet_solve",
+      .withColumn("__s", graft.plans.GraftFunctions.prophetSolve(
         struct(k.inputCols.map(col): _*)))
       .select((col("*") +:
         k.outputNames.map(n => col(s"__s.$n").as(n))): _*)

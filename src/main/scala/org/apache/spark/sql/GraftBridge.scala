@@ -1,14 +1,24 @@
 package org.apache.spark.sql
 
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
-/** Bridge into the `private[sql]` Dataset constructor so the engine
-  * can materialize DataFrames from its own logical nodes
-  * (GreedyAllocationNode). Spark offers no public API for this; the
+/** Bridge into `private[sql]` API: the Dataset constructor, so the
+  * engine can materialize DataFrames from its own logical nodes
+  * (GreedyAllocationNode), and the Column/Expression conversions its
+  * kernels are built with. Spark offers no public API for either; the
   * in-package object is the standard library-extension technique. */
 object GraftBridge {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+
+  /** A Column over a Catalyst expression: how the engine's kernels
+    * (graft.plans.GraftFunctions) reach the DataFrame API without a
+    * function registry. */
+  def column(e: Expression): Column = classic.ExpressionUtils.column(e)
+
+  /** The Catalyst expression behind a Column, for a kernel's children. */
+  def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
 
   /** Constraint-free lazy local checkpoint — the engine's one staging
     * primitive: every frame that is re-used across several joins of

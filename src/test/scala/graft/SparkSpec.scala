@@ -5,9 +5,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for all suites (one JVM, sbt forks once),
   * built from the engine's own settings so the specs plan and execute
-  * the way the engine does. Unlike `GraftSession.create`, it does not
-  * register the graft functions up front: the operators register
-  * them on use. */
+  * the way the engine does. Nothing is registered in it: the graft
+  * kernels are typed Columns (graft.plans.GraftFunctions). */
 object TestSpark {
   lazy val spark: SparkSession = {
     val s = SparkSession.builder()

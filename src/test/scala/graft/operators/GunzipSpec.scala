@@ -41,6 +41,17 @@ class GunzipSpec extends SparkSpec {
     assert(out(4L) == ((None, true, false)), s"$out")
   }
 
+  test("a member that inflates past the cap is flagged, not inflated") {
+    val bo = new java.io.ByteArrayOutputStream()
+    val g = new java.util.zip.GZIPOutputStream(bo)
+    val zeros = new Array[Byte](1 << 20)
+    (0 to Multimodal.maxInflatedBytes / zeros.length).foreach(_ => g.write(zeros))
+    g.close()
+    val bomb = bo.toByteArray
+    assert(bomb.length < Multimodal.maxInflatedBytes / 100, s"${bomb.length} bytes")
+    assert(run(1L -> bomb)(1L) == ((None, true, false)))
+  }
+
   test("the chain: sniffMime routes the gzipped sitemap to gunzip, " +
       "and the unpacked body yields the same entries as the plain one") {
     val xml = "<?xml version=\"1.0\"?><urlset>" +

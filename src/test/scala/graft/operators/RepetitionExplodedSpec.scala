@@ -54,7 +54,7 @@ class RepetitionExplodedSpec extends SparkSpec {
     val totals = toks.select(col("doc_id"), charSum(col("toks")).as("total_chars"))
     def windows(n: Int): DataFrame = toks
       .select(col("doc_id"), col("toks"),
-        posexplode(call_function("graft_grams", col("toks"), lit(n))).as(Seq("off", "h")))
+        posexplode(GraftFunctions.grams(col("toks"), n)).as(Seq("off", "h")))
       .select(col("doc_id"), col("off"), col("h"),
         charSum(slice(col("toks"), col("off") + 1, lit(n))).as("adj"))
     val tops = topNs.map { n =>
@@ -87,7 +87,6 @@ class RepetitionExplodedSpec extends SparkSpec {
     df.collect().map(r => r.getLong(0) -> (1 to 5).map(r.getDouble)).toMap
 
   test("graft_rep_stats fractions are bit-equal to the exploded group-by reference") {
-    GraftFunctions.ensureRegistered(spark)
     val df = docs.toDF("doc_id", "text")
     val kernel = byDoc(TextAnalysis.repetitionSignals(df, col("text"), col("doc_id"),
       topNs, dupNs))

@@ -708,11 +708,10 @@ class UrlsSpec extends SparkSpec {
         .map(_ => pieces(rng.nextInt(pieces.size))).mkString) :+
       "" :+ "?" :+ "%" :+ "a?b?c&d"
     val df = urls.toDF("u")
-    graft.plans.GraftFunctions.ensureRegistered(spark)
     val rows = df.select(col("u"),
-        call_function("graft_url_pct", col("u")).as("kp"),
+        graft.plans.GraftFunctions.urlPct(col("u")).as("kp"),
         Urls.percentNormalizeStaged(col("u")).as("sp"),
-        call_function("graft_url_qsort", col("u")).as("kq"),
+        graft.plans.GraftFunctions.urlQsort(col("u")).as("kq"),
         Urls.sortQueryParamsStaged(col("u")).as("sq"))
       .collect()
     rows.foreach { r =>
@@ -744,9 +743,8 @@ class UrlsSpec extends SparkSpec {
       s"http://h.com$path$tail"
     } ++ Seq("http://h.com", "http://h.com/", "no-scheme/./x", "",
       "http://h.com/..", "http://h.com/.", "mailto:x@y")
-    graft.plans.GraftFunctions.ensureRegistered(spark)
     val rows = urls.toDF("u").select(col("u"),
-        call_function("graft_url_dotfold", col("u")).as("k"),
+        graft.plans.GraftFunctions.urlDotfold(col("u")).as("k"),
         Urls.foldDotSegmentsStaged(col("u")).as("s"))
       .collect()
     rows.foreach { r =>

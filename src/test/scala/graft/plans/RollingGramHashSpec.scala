@@ -23,9 +23,8 @@ class RollingGramHashSpec extends SparkSpec {
 
   private def viaSpark(text: String, k: Int): Seq[Long] = {
     import spark.implicits._
-    GraftFunctions.ensureRegistered(spark)
     Seq(text).toDF("text")
-      .select(call_function("graft_grams", split(col("text"), " "), lit(k)).as("g"))
+      .select(GraftFunctions.grams(split(col("text"), " "), k).as("g"))
       .collect()(0).getSeq[Long](0)
   }
 

@@ -46,7 +46,6 @@ class ProphetKernelSpec extends SparkSpec {
 
   test("a mistyped Gram-sum field fails analysis, never reinterprets bits") {
     import graft.plans.ProphetSolveKernel
-    graft.plans.GraftFunctions.ensureRegistered(spark)
     // right field COUNT, wrong type in one slot: solve() reads by
     // ordinal with getLong, so a double here would silently yield
     // garbage coefficients if analysis let it through
@@ -57,7 +56,7 @@ class ProphetKernelSpec extends SparkSpec {
     }
     val err = intercept[org.apache.spark.sql.AnalysisException] {
       spark.range(1)
-        .select(call_function("graft_prophet_solve", struct(fields: _*)))
+        .select(graft.plans.GraftFunctions.prophetSolve(struct(fields: _*)))
         .collect()
     }
     assert(err.getMessage.contains("cnt_0"),
