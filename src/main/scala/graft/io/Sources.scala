@@ -32,14 +32,24 @@ final case class CsvSource(path: String, schema: StructType,
 /** S2/S4-equivalent: (multiline) JSON documents with a declared
   * schema. `paths` may be a glob — the reference's per-day collection
   * fan-out (src/data_processor.py:195-222) becomes one multi-file
-  * scan; day identity survives in the data itself. The glob is listed
-  * on the driver, and the day files are packed into a few splits; a
-  * multiline file is never split, so it is read whole inside one
-  * (see `GraftSession`). */
+  * scan; day identity survives in the data itself. Each glob is
+  * expanded on the driver and Spark gets the sorted file list: handed
+  * one glob, Spark's streaming-metadata probe logs a stack trace per
+  * read. A glob that matches nothing stays literal, so the read still
+  * fails with PATH_NOT_FOUND. The day files are packed into a few
+  * splits; a multiline file is never split, so it is read whole
+  * inside one (see `GraftSession`). */
 final case class JsonSource(paths: Seq[String], schema: StructType, multiLine: Boolean = true)
     extends TableSource {
-  def load(spark: SparkSession): DataFrame =
-    spark.read.option("multiLine", multiLine.toString).schema(schema).json(paths: _*)
+  def load(spark: SparkSession): DataFrame = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val files = paths.flatMap { p =>
+      val glob = new Path(p)
+      val hits = Option(glob.getFileSystem(conf).globStatus(glob)).getOrElse(Array.empty)
+      if (hits.isEmpty) Seq(p) else hits.map(_.getPath.toString).sorted.toSeq
+    }
+    spark.read.option("multiLine", multiLine.toString).schema(schema).json(files: _*)
+  }
 }
 
 final case class ParquetSource(path: String) extends TableSource {

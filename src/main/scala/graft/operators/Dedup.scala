@@ -77,9 +77,9 @@ object Dedup {
     * when the measured size allows and falls back to a shuffled join
     * on id_a/id_b otherwise. */
   /** Distinct 8-byte rolling-fingerprint shingles per document:
-    * `(doc_id, h)` — the shared blocking/verification currency of the
-    * overlap measures, the exact-confirm pass, and the incremental
-    * index ([[graft.plans.RollingGramHash]]: O(len) per document, no
+    * `(doc_id, h)` — the blocking currency of the overlap measures
+    * and the exploded form of the per-document [[shingleSets]]
+    * ([[graft.plans.RollingGramHash]]: O(len) per document, no
     * per-window string rebuild). NOT the MinHash input — signature
     * VALUES must replay in the oracle, so that path keeps the
     * portable md5-based tokenHash over shingle strings. */
@@ -170,8 +170,8 @@ object Dedup {
   def lshVerifiedPairs(df: DataFrame, text: Column, id: Column, n: Int,
                        threshold: Double): DataFrame = {
     // Staged ONCE (r21): the id_a and id_b verification joins each
-    // read the shingle-set frame — unstaged, the corpus explode +
-    // collect ran twice. stageLocal: doc_id is a raw source id.
+    // read the shingle-set frame — unstaged, the corpus shingling ran
+    // twice. stageLocal: doc_id is a raw source id.
     val sets = org.apache.spark.sql.GraftBridge.stageLocal(
       shingleSets(df, text, id, n))
     minhashCandidatePairs(df, text, id, n)
@@ -207,10 +207,16 @@ object Dedup {
 
   /** Per-document hashed shingle sets — the verification payload for
     * the exact-Jaccard confirm pass (and, persisted, the corpus half
-    * of incremental dedup). */
+    * of incremental dedup). A per-row projection with no shuffle, at
+    * most one row per input row: the same sets as exploding
+    * [[hashedShingles]] and regrouping on doc_id (ShingleSetsSpec).
+    * Documents with fewer than n tokens, or null text, have no shingle
+    * and get no row; the gate runs on the cheap token count, before the
+    * kernel, for the reason given in [[minhashSignatures]]. */
   def shingleSets(df: DataFrame, text: Column, id: Column, n: Int): DataFrame =
-    hashedShingles(df, text, id, n)
-      .groupBy("doc_id").agg(collect_list(col("h")).as("sh"))
+    df.where(text.isNotNull && size(split(text, " ")) >= n)
+      .select(id.as("doc_id"),
+        array_distinct(graft.plans.GraftFunctions.grams(split(text, " "), n)).as("sh"))
 
   /** The corpus-side dedup state incremental ingestion probes against.
     * In production these three frames are PERSISTED artifacts of the
@@ -285,8 +291,8 @@ object Dedup {
     * a scope always wins regardless of id.
     *
     * `scopes` is a flat list: a streaming twin passes the settled
-    * corpus, its persisted frontier index and an in-plan index of its
-    * tail deltas together. The batch-side frames (md5s, bucket rows,
+    * corpus index and an in-plan index of its own accepted output
+    * together. The batch-side frames (md5s, bucket rows,
     * shingle sets) are built once; each scope is probed on its own
     * stored layout (no union of scopes, which would discard the
     * bucketed clustering and re-shuffle every index); all losers meet
@@ -303,13 +309,19 @@ object Dedup {
     * scope's hits minus the in-batch losers, whichever way it is
     * composed (IncrementalDedupSpec asserts both).
     *
-    * Scale shape: every join is batch-driven. Batch bucket rows probe
-    * each scope's bucket table (|B|·bands rows against a bucket-keyed
-    * index — at 100 TB, bucketed-by-`bucket` storage makes this probe
-    * shuffle only the batch side), verification joins only the
-    * candidate pairs against that scope's shingle-set index, and no
-    * scope's text is ever rescanned. Cost ∝ |scopes|·|batch| +
-    * collisions, not the scopes' size. */
+    * Scale shape: every join is keyed by the batch side. Batch bucket
+    * rows probe each scope's bucket table, verification joins only the
+    * candidate pairs against that scope's shingle-set table, and a
+    * persisted scope's text is never re-indexed. Each scope's md5,
+    * bucket and shingle-set tables are still read in full per call (as
+    * a broadcast build side, or as a full bucketed scan on the
+    * sort-merge path, since no join key prunes buckets): a persisted
+    * index saves the kernel work over the scope's text, not its scan.
+    * An in-plan scope (`indexCorpus` over a frame) also re-runs the
+    * kernels over its whole text per call. Candidate pairs, verified
+    * losers and the loser union are not de-duplicated: the final
+    * `left_anti` join ignores duplicate keys, and every verdict is per
+    * pair. */
   def incremental(scopes: Seq[CorpusIndex], batch: DataFrame, text: Column,
                   id: Column, n: Int, threshold: Double): DataFrame = {
     require(scopes.nonEmpty, "incremental dedup needs at least one scope")
@@ -328,12 +340,10 @@ object Dedup {
       bkB.as("b").join(buckets.as("c"),
           col("b.band") === col("c.band") && col("b.bucket") === col("c.bucket"))
         .select(col("b.doc_id").as("batch_id"), col("c.doc_id").as("other_id"))
-        .distinct()
     val candInBatch = bkB.as("b").join(bkB.as("o"),
         col("b.band") === col("o.band") && col("b.bucket") === col("o.bucket")
           && col("b.doc_id") > col("o.doc_id"))
       .select(col("b.doc_id").as("batch_id"), col("o.doc_id").as("other_id"))
-      .distinct()
 
     // Verification runs per candidate SOURCE (each scope / earlier-
     // batch), so a scope's half joins its shingle-set index directly
@@ -356,10 +366,9 @@ object Dedup {
         .select(col("batch_id").as("doc_id"))
     val nearLosers = scopes.map(s => verifiedLosers(candVs(s.buckets), s.shingleSets))
       .reduce(_ unionByName _)
-      .unionByName(verifiedLosers(candInBatch, setsB)).distinct()
+      .unionByName(verifiedLosers(candInBatch, setsB))
 
-    batch.join(
-      exactVsScopes.unionByName(exactInBatch).unionByName(nearLosers).distinct(),
+    batch.join(exactVsScopes.unionByName(exactInBatch).unionByName(nearLosers),
       Seq("doc_id"), "left_anti")
   }
 

@@ -15,10 +15,9 @@ import graft.operators.{Dedup, LanguageModel, TextAnalysis}
   * boundaries), then the survivors dedup against (a) the settled
   * corpus index, (b) themselves, and (c) every earlier batch this
   * stream accepted — the same three scopes as [[IngestDedup]], with
-  * scope (c) served as the settled [[Frontier]]'s persisted index plus
-  * an in-plan index of at most `settleEvery` tail deltas (flat
-  * per-batch probe cost). Corpus, frontier and tail go to ONE
-  * `Dedup.incremental` call as a flat scope list: the batch-side
+  * scope (c) indexed in the probe plan from the accepted output
+  * ([[IngestDedup.acceptedScope]]). Corpus and accepted scope go to
+  * ONE `Dedup.incremental` call as a flat scope list: the batch-side
   * frames are built once and one anti-join drops every scope's
   * losers, with the same survivors as a call per scope (see its
   * scaladoc for why flat equals chained).
@@ -59,12 +58,11 @@ object IngestCuration {
         val quality = flagged.filter(!col("rep_fail") && !col("lm_fail"))
           .select(col("doc_id"), col("__text").as("text"))
         // scope (c) is earlier batches only (current id excluded —
-        // replay-safe, see BatchLayout/Frontier): settled frontier via
-        // its persisted index, tail deltas in-plan (FrontierIndex),
-        // probed with the corpus in one flat call — per-batch compute
-        // flat in the accepted corpus
+        // replay-safe, see BatchLayout), probed with the corpus in one
+        // flat call
         val accepted = Dedup.incremental(
-          index +: FrontierIndex.dedupScope(spark, s"$outDir/accepted", batchId, text, id, n),
+          index +: IngestDedup.acceptedScope(spark, s"$outDir/accepted", batchId,
+            text, id, n).toSeq,
           quality, text, id, n, threshold)
         accepted.write.mode("overwrite")
           .parquet(s"$outDir/accepted/batch_$batchId")

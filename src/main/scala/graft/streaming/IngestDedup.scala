@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
 
@@ -22,17 +22,16 @@ import graft.operators.Dedup
   *
   * Scale shape: scopes (a) and (c) are one flat scope list handed to
   * a single `Dedup.incremental` call, which builds the batch-side
-  * frames once, probes each scope on its own stored layout and drops
-  * every scope's losers in one anti-join (the same survivors as
-  * chaining a call per scope — see its scaladoc — without the
-  * multiplied batch subplans). Scope (a) is the batch-driven
-  * persisted-index probe (cost ∝ |batch|); scope (c) is the latest
-  * settled [[Frontier]]'s persisted index plus an in-plan index of at
-  * most `settleEvery` tail deltas ([[FrontierIndex.dedupScope]]) —
-  * every `settleEvery` batches the accepted deltas fold into one
-  * compacted `frontier_<m>` dir, so the per-batch probe reads O(1)
-  * sources however long the stream has run (the same base+delta
-  * posture as scope (a), applied to the stream's own output).
+  * frames once, probes each scope on its own layout and drops every
+  * scope's losers in one anti-join (the same survivors as chaining a
+  * call per scope — see its scaladoc — without the multiplied batch
+  * subplans). Scope (a) is the persisted corpus index, read in full by
+  * each probe but never re-indexed; scope (c) is indexed in the probe
+  * plan from the stream's own output ([[acceptedScope]]), so each
+  * batch re-runs the shingle and MinHash kernels over everything the
+  * stream has accepted. Every `settleEvery` batches the accepted
+  * deltas fold into one compacted `frontier_<m>` dir, so that read
+  * opens O(settleEvery) sources however long the stream has run.
   * Consumers read the accepted corpus via [[Frontier.readLayered]].
   */
 object IngestDedup {
@@ -46,16 +45,11 @@ object IngestDedup {
         val spark = batch.sparkSession
         val text = col("text")
         val id = col("doc_id")
-        // scope (c) is earlier survivors only (the CURRENT batch id
-        // excluded — an at-least-once retry must not dedup the batch
-        // against its own partial output, which would empty it on
-        // replay; see BatchLayout/Frontier): the settled frontier via
-        // its PERSISTED index (built once per settle window —
-        // FrontierIndex), the short un-settled tail indexed in-plan.
-        // One flat probe of all scopes keeps per-batch compute and
-        // planning ∝ |batch| + |tail|, flat in the accepted corpus.
+        // scope (c) is earlier survivors only: the CURRENT batch id is
+        // excluded, since an at-least-once retry must not dedup the
+        // batch against its own partial output (see BatchLayout)
         val out = Dedup.incremental(
-          index +: FrontierIndex.dedupScope(spark, survivorDir, batchId, text, id, n),
+          index +: acceptedScope(spark, survivorDir, batchId, text, id, n).toSeq,
           batch.toDF(), text, id, n, threshold)
         out.write.mode("overwrite").parquet(s"$survivorDir/batch_$batchId")
         Frontier.maybeSettle(spark, survivorDir, batchId,
@@ -64,4 +58,14 @@ object IngestDedup {
       }
       .outputMode(OutputMode.Append())
       .start()
+
+  /** Scope (c) for batch `batchId`: everything the stream under `dir`
+    * accepted before it (settled frontier plus tail deltas, the current
+    * batch excluded — [[BatchLayout.earlierBatches]]), indexed in the
+    * probe plan. None before anything has landed. */
+  private[streaming] def acceptedScope(spark: SparkSession, dir: String, batchId: Long,
+                                       text: Column, id: Column,
+                                       n: Int): Option[Dedup.CorpusIndex] =
+    BatchLayout.earlierBatches(spark, dir, batchId).map(paths =>
+      Dedup.indexCorpus(spark.read.parquet(paths: _*), text, id, n))
 }

@@ -136,4 +136,13 @@ class SourcesSpec extends SparkSpec {
     }
     assert(e.getMessage.contains("enablePartialResults"), e.getMessage)
   }
+
+  test("JsonSource: a glob that matches nothing still fails with PATH_NOT_FOUND") {
+    val dir = java.nio.file.Files.createTempDirectory("json_glob_empty").toString
+    val schema = StructType(Seq(StructField("transaction_id", LongType)))
+    val e = intercept[org.apache.spark.sql.AnalysisException] {
+      JsonSource(Seq(s"$dir/transactions_*.json"), schema).load(spark)
+    }
+    assert(e.getCondition == "PATH_NOT_FOUND", e.getMessage)
+  }
 }

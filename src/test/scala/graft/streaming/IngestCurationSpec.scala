@@ -54,7 +54,7 @@ class IngestCurationSpec extends SparkSpec {
       20L -> "duplicate", 21L -> "duplicate", 22L -> "kept"))
   }
 
-  test("settling every batch: batch 2 dedups against corpus, frontier index and tail together") {
+  test("settling every batch: batch 2 dedups against corpus, frontier and tail together") {
     implicit val sqlCtx = spark.sqlContext
     val dir = java.nio.file.Files.createTempDirectory("ingest_cur_post_settle").toString
 
@@ -87,5 +87,6 @@ class IngestCurationSpec extends SparkSpec {
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     assert(audit == Map(
       10L -> "duplicate", 11L -> "duplicate", 12L -> "duplicate", 13L -> "kept"))
+    IngestDedupSpec.assertNoFrontierIndex(spark, s"$dir/accepted")
   }
 }

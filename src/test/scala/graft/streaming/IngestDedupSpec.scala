@@ -44,7 +44,7 @@ class IngestDedupSpec extends SparkSpec {
     assert(survivors == Set(11L, 22L))
   }
 
-  test("the settled frontier probes via its persisted index, same verdicts") {
+  test("the settled frontier is probed in-plan, same verdicts, no index artifacts") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val dir = java.nio.file.Files.createTempDirectory("ingest_dedup_settle").toString
@@ -72,14 +72,10 @@ class IngestDedupSpec extends SparkSpec {
     val survivors = Frontier.readLayered(spark, dir)
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(survivors == Set(1L, 2L, 3L, 13L), s"survivors: $survivors")
-    // the frontier generation's index tables exist in the catalog
-    // (built once per settle window, probed batch-driven thereafter)
-    val t = FrontierIndex.tag(dir, 1L)
-    for (pre <- Seq("ci_md5_", "ci_bkt_", "ci_sh_"))
-      assert(spark.catalog.tableExists(s"$pre$t"), s"missing $pre$t")
+    IngestDedupSpec.assertNoFrontierIndex(spark, dir)
   }
 
-  test("settling every batch: batch 2 probes corpus, frontier index and tail in one pass") {
+  test("settling every batch: batch 2 probes corpus, frontier and tail in one pass") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val dir = java.nio.file.Files.createTempDirectory("ingest_dedup_post_settle").toString
@@ -105,9 +101,7 @@ class IngestDedupSpec extends SparkSpec {
     val survivors = Frontier.readLayered(spark, dir)
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(survivors == Set(1L, 2L, 13L), s"survivors: $survivors")
-    val t = FrontierIndex.tag(dir, 0L)
-    for (pre <- Seq("ci_md5_", "ci_bkt_", "ci_sh_"))
-      assert(spark.catalog.tableExists(s"$pre$t"), s"batch 2 never built $pre$t")
+    IngestDedupSpec.assertNoFrontierIndex(spark, dir)
   }
 
   test("near-duplicates of earlier survivors are dropped too (LSH + verify scope)") {
@@ -132,5 +126,26 @@ class IngestDedupSpec extends SparkSpec {
     val survivors = spark.read.parquet(s"$dir/batch_*")
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(survivors == Set(1L))
+  }
+}
+
+object IngestDedupSpec {
+
+  import org.scalatest.Assertions._
+
+  /** The accepted scope is indexed in the probe plan: a run leaves no
+    * `ci_*` catalog table carrying the stream's frontier tag (the
+    * per-generation `ci_*_fr<md5(dir)>_<m>` index tables) and no
+    * `_frindex_*` dir under the output dir. */
+  def assertNoFrontierIndex(spark: org.apache.spark.sql.SparkSession,
+                            dir: String): Unit = {
+    val tag = "_fr" + java.security.MessageDigest.getInstance("MD5")
+      .digest(dir.getBytes("UTF-8")).take(6).map("%02x".format(_)).mkString + "_"
+    val tables = spark.catalog.listTables().collect().map(_.name)
+      .filter(t => t.startsWith("ci_") && t.contains(tag))
+    assert(tables.isEmpty, s"frontier index tables: ${tables.mkString(", ")}")
+    val dirs = Option(new java.io.File(dir).list()).toSeq.flatten
+      .filter(_.startsWith("_frindex_"))
+    assert(dirs.isEmpty, s"frontier index dirs under $dir: ${dirs.mkString(", ")}")
   }
 }
