@@ -32,23 +32,29 @@ final case class CsvSource(path: String, schema: StructType,
 /** S2/S4-equivalent: (multiline) JSON documents with a declared
   * schema. `paths` may be a glob — the reference's per-day collection
   * fan-out (src/data_processor.py:195-222) becomes one multi-file
-  * scan; day identity survives in the data itself. Each glob is
-  * expanded on the driver and Spark gets the sorted file list: handed
-  * one glob, Spark's streaming-metadata probe logs a stack trace per
-  * read. A glob that matches nothing stays literal, so the read still
-  * fails with PATH_NOT_FOUND. The day files are packed into a few
-  * splits; a multiline file is never split, so it is read whole
+  * scan; day identity survives in the data itself ([[Globs.expand]]
+  * lists each glob on the driver). The day files are packed into a
+  * few splits; a multiline file is never split, so it is read whole
   * inside one (see `GraftSession`). */
 final case class JsonSource(paths: Seq[String], schema: StructType, multiLine: Boolean = true)
     extends TableSource {
-  def load(spark: SparkSession): DataFrame = {
+  def load(spark: SparkSession): DataFrame =
+    spark.read.option("multiLine", multiLine.toString).schema(schema)
+      .json(Globs.expand(spark, paths): _*)
+}
+
+/** Driver-side glob expansion for the file sources: each glob becomes
+  * its sorted file list. Handed a glob, Spark's streaming-metadata
+  * probe logs a stack trace per read. A glob that matches nothing stays
+  * literal, so the read still fails with PATH_NOT_FOUND. */
+private[io] object Globs {
+  def expand(spark: SparkSession, paths: Seq[String]): Seq[String] = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val files = paths.flatMap { p =>
+    paths.flatMap { p =>
       val glob = new Path(p)
       val hits = Option(glob.getFileSystem(conf).globStatus(glob)).getOrElse(Array.empty)
       if (hits.isEmpty) Seq(p) else hits.map(_.getPath.toString).sorted.toSeq
     }
-    spark.read.option("multiLine", multiLine.toString).schema(schema).json(files: _*)
   }
 }
 
@@ -165,7 +171,7 @@ final case class MongoExtJsonSource(paths: Seq[String], schema: StructType)
     val cs = wrapperType(schema, canonicalDates = true).asInstanceOf[StructType]
     val ws = wrapperType(schema, canonicalDates = false).asInstanceOf[StructType]
     val ps = plainType(schema).asInstanceOf[StructType]
-    spark.read.text(paths: _*)
+    spark.read.text(Globs.expand(spark, paths): _*)
       .filter(trim(col("value")) =!= "")
       .select(from_json(col("value"), cs).as("__c"),
         from_json(col("value"), ws).as("__w"),

@@ -318,10 +318,11 @@ object Dedup {
     * sort-merge path, since no join key prunes buckets): a persisted
     * index saves the kernel work over the scope's text, not its scan.
     * An in-plan scope (`indexCorpus` over a frame) also re-runs the
-    * kernels over its whole text per call. Candidate pairs, verified
-    * losers and the loser union are not de-duplicated: the final
-    * `left_anti` join ignores duplicate keys, and every verdict is per
-    * pair. */
+    * kernels over its whole text per call. Candidate pairs are
+    * de-duplicated before verification (a pair colliding in k bands
+    * would otherwise be joined and intersected k times); verified
+    * losers and the loser union are not, since the final `left_anti`
+    * join ignores duplicate keys. */
   def incremental(scopes: Seq[CorpusIndex], batch: DataFrame, text: Column,
                   id: Column, n: Int, threshold: Double): DataFrame = {
     require(scopes.nonEmpty, "incremental dedup needs at least one scope")
@@ -340,10 +341,12 @@ object Dedup {
       bkB.as("b").join(buckets.as("c"),
           col("b.band") === col("c.band") && col("b.bucket") === col("c.bucket"))
         .select(col("b.doc_id").as("batch_id"), col("c.doc_id").as("other_id"))
+        .distinct()
     val candInBatch = bkB.as("b").join(bkB.as("o"),
         col("b.band") === col("o.band") && col("b.bucket") === col("o.bucket")
           && col("b.doc_id") > col("o.doc_id"))
       .select(col("b.doc_id").as("batch_id"), col("o.doc_id").as("other_id"))
+      .distinct()
 
     // Verification runs per candidate SOURCE (each scope / earlier-
     // batch), so a scope's half joins its shingle-set index directly
