@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.queries.Registry
+import org.apache.spark.sql.DataFrame
 
 /** Benchmark main: runs every registered query against
   * SPARK_GRAFT_SF_DIR and prints one JSON line
@@ -14,7 +15,9 @@ import org.apache.spark.sql.SparkSession
   * A short warmup (schema reads + one full query) runs untimed first
   * so codegen/JIT startup isn't charged to whichever query happens to
   * run first; queries then execute in name order for run-to-run
-  * comparability.
+  * comparability, through [[Registry.sweep]] (which also reads the
+  * `SPARK_GRAFT_ONLY` filter for focused A/B timing). Each timing
+  * covers building the query and [[timedAction]].
   *
   * Artifacts: the stdout line must survive the driver's bounded
   * 2000-char tail capture WITH sbt's ~76-char "[success]" trailer
@@ -102,6 +105,13 @@ object Bench {
         s"""{"metric":"total","value":${fp(total, 2)},"unit":"sec","nqueries":${results.size}$errField,"sf":"$sfName"}""")
   }
 
+  /** The timed action: a `noop` write runs the whole plan and reads
+    * every column, at no output cost. A `count()` would let Catalyst
+    * prune whatever it never reads — a window, a join, a kernel call —
+    * and time less than the query computes. */
+  private[graft] def timedAction(df: DataFrame): Unit =
+    df.write.format("noop").mode("overwrite").save()
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val mult = sys.env.get("SPARK_GRAFT_MULT").flatMap(_.toIntOption).getOrElse(1)
@@ -112,11 +122,9 @@ object Bench {
     Tables.names.foreach { t =>
       try Tables(spark, tablesDir, t).schema catch { case _: Throwable => }
     }
-    try SparkEntry.queries("q5_pricing_summary")(spark, tablesDir).count()
+    try timedAction(SparkEntry.queries("q5_pricing_summary")(spark, tablesDir))
     catch { case _: Throwable => }
 
-    // optional comma-separated filter for focused A/B timing
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
     // Runs per query: the reported number is the MIN across runs, so a
     // background-load spike doesn't masquerade as a regression. Min,
     // not mean: the minimum is the best estimate of the plan's
@@ -132,25 +140,22 @@ object Bench {
     val runs = sys.env.get("SPARK_GRAFT_RUNS").flatMap(_.toIntOption).getOrElse(2).max(1)
     val classMx = java.lang.management.ManagementFactory.getClassLoadingMXBean
     val rt = Runtime.getRuntime
-    val names = SparkEntry.queries.filter { case (n, _) => only.forall(_.contains(n)) }
-      .toSeq.sortBy(_._1)
     val runTimes = scala.collection.mutable.Map.empty[String, Vector[Double]]
     val diags = scala.collection.mutable.Map.empty[String, Map[String, Long]]
     // box-state samples: before the sweep and after each pass
     val boxSamples = scala.collection.mutable.ListBuffer(loadavg)
     (1 to runs).foreach { _ =>
-      names.foreach { case (name, fn) =>
+      Registry.sweep { d =>
         val t0 = System.nanoTime()
-        val ok = try { fn(spark, tablesDir).count(); true }
-                 catch { case e: Throwable =>
-                   System.err.println(s"BENCH FAIL $name: ${e.getMessage}"); false }
+        timedAction(d.build(spark, tablesDir))
+        (System.nanoTime() - t0) / 1e9
+      }.foreach { case (name, outcome) =>
         // A failed query is recorded as -1.0 so crashes are visibly distinct
         // from fast successes in the JSON line.
-        val t = if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
-        // consume boundary: the query's result is materialized, so any
-        // checkpoint blocks stageLocal pinned for its staged frames are
-        // dead weight for every later query — release them now
-        org.apache.spark.sql.GraftBridge.releaseStaged()
+        val t = outcome match {
+          case Right(secs) => secs
+          case Left(e) => System.err.println(s"BENCH FAIL $name: ${e.getMessage}"); -1.0
+        }
         runTimes(name) = runTimes.getOrElse(name, Vector.empty) :+ t
         // Session-state snapshot AFTER this query: what accumulates
         // across the sweep shows up as a trend in these columns.
@@ -162,7 +167,7 @@ object Bench {
       }
       boxSamples += loadavg
     }
-    val results = names.map { case (name, _) =>
+    val results = runTimes.keys.toSeq.sorted.map { name =>
       val times = runTimes(name)
       (name, if (times.exists(_ < 0)) -1.0 else times.min, times, diags(name))
     }

@@ -1,14 +1,17 @@
 package graft
 
+import graft.queries.{QueryDef, Registry, Sql}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** The query contract — see SURVEY.md §7.
   *
   * `queries` is the full operator inventory (SURVEY §2 + the
   * large-scale training-data operators); `oracleSql` carries the
   * DuckDB-equivalent SQL for every query whose semantics are
-  * SQL-expressible. Column names are aliased identically on both
-  * sides — the driver sorts columns by name before hashing.
+  * SQL-expressible. Both are read off one table, [[Registry.all]],
+  * where each query's oracle sits beside its builder. Column names
+  * are aliased identically on both sides — the correctness gate sorts
+  * columns by name before hashing.
   */
 object SparkEntry {
 
@@ -18,17 +21,11 @@ object SparkEntry {
 
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    graft.queries.Relational.queries ++
-      graft.queries.DataOps.queries ++
-      graft.queries.Crawl.queries ++
-      graft.queries.Events.queries
+    Registry.all.map(d => d.name -> d.build).toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omitted keys → driver records a weaker
-    * rows-only check (non-SQL-expressible ops). */
+    * the same parquet tables. A `RowsOnly` query has no key here, and
+    * the correctness gate checks only that it returns rows. */
   def oracleSql: Map[String, String] =
-    graft.queries.Relational.oracleSql ++
-      graft.queries.DataOps.oracleSql ++
-      graft.queries.Crawl.oracleSql ++
-      graft.queries.Events.oracleSql
+    Registry.all.collect { case QueryDef(name, _, Sql(text)) => name -> text }.toMap
 }

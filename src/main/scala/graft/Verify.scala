@@ -1,27 +1,21 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.queries.Registry
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the DuckDB compare (scripts/local_verify.py).
+  * `SPARK_GRAFT_ONLY` narrows the dump to a comma-separated name list
+  * (see [[Registry.sweep]]); the oracle file always lists every query. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val spark = GraftSession.create("graft-verify")
     new java.io.File(outDir).mkdirs()
-    // comma-separated name filter for focused oracle checks (same
-    // contract as Bench); unset = the full sweep the driver runs
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
-    SparkEntry.queries.filter { case (n, _) => only.forall(_.contains(n)) }
-      .foreach { case (name, fn) =>
-      System.err.println(s"[verify] running $name")
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
-      // consume boundary: the dump materialized the frame — release any
-      // checkpoint blocks its staged lineage pinned (stageLocal contract)
-      org.apache.spark.sql.GraftBridge.releaseStaged()
+    Registry.sweep { d =>
+      System.err.println(s"[verify] running ${d.name}")
+      d.build(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/${d.name}")
+    }.foreach {
+      case (name, Left(e)) => System.err.println(s"[verify] $name failed: ${e.getMessage}")
+      case _ =>
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

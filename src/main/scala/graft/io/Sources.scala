@@ -315,21 +315,4 @@ object Sinks {
     * `date=YYYYMMDD/` layout Catalyst prunes natively. */
   def partitionedParquet(df: DataFrame, path: String, partitionCols: Seq[String]): Unit =
     df.write.mode("overwrite").partitionBy(partitionCols: _*).parquet(path)
-
-  /** Bucketed parquet table: pays the shuffle ONCE at write time.
-    * The bucket spec lives in the catalog, so every later join or
-    * aggregation on the bucket keys reads `HashPartitioning(keys,
-    * buckets)` straight off the scan and plans with ZERO exchanges —
-    * the difference between re-shuffling a 100 TB fact table per
-    * query and never shuffling it again. Co-bucket both sides of a
-    * recurring join (same keys, same bucket count); `sortBy` layers
-    * in-file ordering on top so single-file buckets also skip the
-    * sort of a sort-merge join. Bucket count is a layout decision:
-    * size buckets toward `targetFileBytes`-scale files, not toward
-    * the cluster's core count (BucketingSpec proves the plan shape). */
-  def bucketedTable(df: DataFrame, table: String, buckets: Int, keys: Seq[String]): Unit =
-    df.write.mode("overwrite").format("parquet")
-      .bucketBy(buckets, keys.head, keys.tail: _*)
-      .sortBy(keys.head, keys.tail: _*)
-      .saveAsTable(table)
 }

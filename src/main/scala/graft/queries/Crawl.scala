@@ -2202,20 +2202,20 @@ object Crawl {
                     GROUP BY d.host)"""
 
 
-  val oracleSql: Map[String, String] = Map(
+  val registry: Seq[QueryDef] = Seq(
     // recrawl scheduling: change evidence per canonical URL (each
     // engine md5s its OWN payload bytes — only the distinct COUNT
     // crosses engines) -> integer interval ladder -> staggered due wave
-    "ds_recrawl" ->
+    QueryDef("ds_recrawl", dsRecrawl, Sql(
       s"""WITH $recrawlLadderCtes
           SELECT canon_url, n_fetches, n_variants, keeper_id,
                  interval_waves,
                  CAST(1 + keeper_id % interval_waves AS BIGINT) AS due_wave
-          FROM iv""",
+          FROM iv""")),
     // redirect aliasing: planted /old/ 301 chains follow to their
     // final canonical URL; a final already crawled is dup_fetched,
     // an uncrawled final admits exactly once (min requested wins)
-    "ds_crawl_redirects" -> {
+    QueryDef("ds_crawl_redirects", dsCrawlRedirects, Sql {
       def hopLevel(prev: String, cur: String): String =
         redirectHopLevelSql(prev, cur, "requested_canon")
       s"""WITH t0 AS (SELECT source, min(doc_id) AS doc_id FROM documents
@@ -2263,11 +2263,11 @@ object Crawl {
                       WHEN requested_canon = minreq THEN 'admitted'
                       ELSE 'dup_alias' END AS verdict
           FROM m"""
-    },
+    }),
     // the alias gate composed into the frontier: candidates whose
     // followed FINAL canonical URL is already crawled are dropped;
     // redirects onto fresh content stay schedulable
-    "ds_frontier_redirects" ->
+    QueryDef("ds_frontier_redirects", dsFrontierRedirects, Sql(
       s"""WITH fr0 AS ($crawlFrontierSql),
           t0 AS (SELECT source, min(doc_id) AS doc_id FROM documents
                  GROUP BY source),
@@ -2308,18 +2308,18 @@ object Crawl {
                    ${sortParamsSqlExpr("cu")} AS url FROM cw8)
           SELECT url, n_refs, final_canon FROM ff
           WHERE final_canon = url
-             OR final_canon NOT IN (SELECT url FROM cwx)""",
+             OR final_canon NOT IN (SELECT url FROM cwx)""")),
     // rel=canonical extraction: the planted link's decoded href per
     // page (rel-first wins, entities decode, relative kept as
     // written; NULL when the page declares none)
-    "tx_extract_canonical" ->
+    QueryDef("tx_extract_canonical", txExtractCanonical, Sql(
       s"""WITH $canonicalPageCtes
           SELECT doc_id, ${canonicalHrefSqlExpr("html")} AS canonical_href
-          FROM pc""",
+          FROM pc""")),
     // in-document canonical aliasing: declared finals resolve +
     // canonicalize; a final already crawled is dup_fetched, an
     // uncrawled final admits exactly once (min requested wins)
-    "ds_crawl_canonical" ->
+    QueryDef("ds_crawl_canonical", dsCrawlCanonical, Sql(
       s"""WITH $canonicalPageCtes,
           rq0 AS (SELECT doc_id, html, $urlSynthSqlExpr AS url FROM pc),
           rq8 AS (SELECT html, ${urlCanonSqlExpr("url")} AS cu FROM rq0),
@@ -2354,10 +2354,10 @@ object Crawl {
                  CASE WHEN f THEN 'dup_fetched'
                       WHEN requested_canon = minreq THEN 'admitted'
                       ELSE 'dup_alias' END AS verdict
-          FROM m""",
+          FROM m""")),
     // meta-robots extraction: directive value per page (NULL when
     // undeclared) + the noindex/nofollow token flags
-    "tx_meta_robots" ->
+    QueryDef("tx_meta_robots", txMetaRobots, Sql(
       s"""WITH mh AS (SELECT doc_id,
                  replace($pageSynthSqlExpr, '</head>',
                    $metaRobotsHeadSqlCase || '</head>') AS html
@@ -2367,11 +2367,11 @@ object Crawl {
           SELECT doc_id, robots_content,
                  ${robotsTokenSqlExpr("robots_content", "noindex")} AS noindex,
                  ${robotsTokenSqlExpr("robots_content", "nofollow")} AS nofollow
-          FROM mrx""",
+          FROM mrx""")),
     // the noindex gate composed into the crawl front door: a noindex
     // page is excluded from survivors as its own verdict, its links
     // still feed discovery unless nofollow zeroes them
-    "ds_crawl_noindex" -> {
+    QueryDef("ds_crawl_noindex", dsCrawlNoindex, Sql {
       val ntok = "CASE WHEN e.main_text = '' THEN 0 " +
         "ELSE len(string_split_regex(e.main_text, '[ \\n]')) END"
       s"""WITH $urlSynthCte,
@@ -2406,18 +2406,14 @@ object Crawl {
                    AS followed_links
           FROM ${htmlExtractOverHtmlSql("wh")} e
           JOIN fl ON e.doc_id = fl.doc_id"""
-    },
+    }),
     // the sitemap <lastmod> signal consumed: a fresh lastmod makes
     // the URL due at the NEXT wave regardless of its ladder rung;
     // absent/stale lastmod falls back to the observed-change ladder
-    "ds_recrawl_lastmod" -> recrawlLastmodSql,
-    // validator demotion: each consecutive unchanged observation
-    // (HTTP 304 / identical payload) doubles the recrawl interval —
-    // min(64, rung * 2^min(streak, 6)); corpus rows at streak 0 keep
-    // their rung, planted streaks exercise the decay and both caps
+    QueryDef("ds_recrawl_lastmod", dsRecrawlLastmod, Sql(recrawlLastmodSql)),
     // transient-failure retry ladder (r20): planted n_fail/b evidence,
     // the shared exponential-backoff arithmetic, attempt-cap drops
-    "ds_retry_ladder" ->
+    QueryDef("ds_retry_ladder", dsRetryLadder, Sql(
       """WITH d AS (SELECT doc_id, doc_id % 6 AS n_fail, doc_id % 9 AS b
                     FROM documents WHERE doc_id % 6 <> 0),
           w AS (SELECT doc_id, n_fail, b,
@@ -2428,8 +2424,12 @@ object Crawl {
                  CAST(b AS BIGINT) AS b, backoff_waves,
                  n_fail > 4 AS dropped,
                  n_fail <= 4 AND 16 - b >= backoff_waves AS due
-          FROM w""",
-    "ds_recrawl_validators" ->
+          FROM w""")),
+    // validator demotion: each consecutive unchanged observation
+    // (HTTP 304 / identical payload) doubles the recrawl interval —
+    // min(64, rung * 2^min(streak, 6)); corpus rows at streak 0 keep
+    // their rung, planted streaks exercise the decay and both caps
+    QueryDef("ds_recrawl_validators", dsRecrawlValidators, Sql(
       s"""WITH $recrawlLadderCtes,
           vb AS (SELECT canon_url, n_fetches, n_variants, interval_waves,
                    CAST(0 AS BIGINT) AS n_unmod FROM iv),
@@ -2450,24 +2450,24 @@ object Crawl {
           SELECT canon_url, n_fetches, n_variants, n_unmod, interval_waves,
                  least(64, interval_waves *
                    CAST(pow(2, least(n_unmod, 6)) AS BIGINT)) AS interval_eff
-          FROM va""",
+          FROM va""")),
     // link discovery: synth page → anchor hrefs (document order) →
     // RFC 3986 reference resolution against the page's canonical base
-    "tx_extract_links" ->
+    QueryDef("tx_extract_links", txExtractLinks, Sql(
       s"""WITH $linkCtes
           SELECT doc_id, CAST(pos AS INT) AS pos, href,
                  ${resolveHrefSqlExpr("base", "href")} AS abs_url
-          FROM lk""",
+          FROM lk""")),
     // the crawl frontier: winners' outbound links resolved +
     // canonicalized, blocklisted, anti-joined against the crawled
     // set, grouped with their in-link evidence
-    "ds_crawl_frontier" -> crawlFrontierSql,
+    QueryDef("ds_crawl_frontier", dsCrawlFrontier, Sql(crawlFrontierSql)),
     // OPIC one-round frontier priority: integer floor-divided cash
     // shares per referrer, receipts summed per uncrawled candidate
-    "ds_frontier_opic" -> frontierOpicSql,
+    QueryDef("ds_frontier_opic", dsFrontierOpic, Sql(frontierOpicSql)),
     // crawl-trap detection: URL-template (digit runs -> N) fan-out
     // per host over frontier + planted calendar candidates
-    "ds_crawl_traps" ->
+    QueryDef("ds_crawl_traps", dsCrawlTraps, Sql(
       s"""WITH f AS ($crawlFrontierSql),
           th AS (SELECT DISTINCT lower(source) || '.example.com' AS host,
                         (length(source) % 4) * 20 AS tn,
@@ -2496,11 +2496,11 @@ object Crawl {
                  (count(*) >= ${trapMinUrls} AND
                   sum(n_refs) >= count(*) * ${trapWhitelistRefs})
                    AS whitelisted
-          FROM t GROUP BY host, template""",
+          FROM t GROUP BY host, template""")),
     // the trap gate composed: candidates minus flagged templates —
     // flagged = high fan-out AND evidence-per-URL under the
     // whitelist bar (a heavily-linked archive pagination survives)
-    "ds_frontier_gated" ->
+    QueryDef("ds_frontier_gated", dsFrontierGated, Sql(
       s"""WITH f AS ($crawlFrontierSql),
           th AS (SELECT DISTINCT lower(source) || '.example.com' AS host,
                         (length(source) % 4) * 20 AS tn,
@@ -2530,17 +2530,17 @@ object Crawl {
           SELECT url, n_refs, host FROM t
           WHERE NOT EXISTS (SELECT 1 FROM tr
                             WHERE tr.host = t.host
-                              AND tr.template = t.template)""",
+                              AND tr.template = t.template)""")),
     // robots parsing: the wildcard-agent Disallow AND Allow rule
     // table (RFC 9309 §2.2.2 — shared agent groups, case-varied
     // directives, inline comments, an Allow carve-out)
-    "tx_robots_rules" ->
+    QueryDef("tx_robots_rules", txRobotsRules, Sql(
       s"""WITH $robotsRulesCtes
-          SELECT host, prefix, allow FROM rules""",
+          SELECT host, prefix, allow FROM rules""")),
     // RFC 9309 robots fetch-status semantics (r20): 200 hosts replay
     // the parse, 404 hosts vanish (no restrictions), 503 hosts
     // collapse to the complete-disallow rule
-    "tx_robots_status" ->
+    QueryDef("tx_robots_status", txRobotsStatus, Sql(
       s"""WITH $robotsRulesCtes,
           hs AS (SELECT DISTINCT lower(source) || '.example.com' AS host,
                    CAST(regexp_extract(source, '(\\d+)', 1) AS BIGINT) % 4
@@ -2550,30 +2550,30 @@ object Crawl {
           FROM rules r JOIN hs ON r.host = hs.host
           WHERE hs.m = 0 OR hs.m = 3
           UNION ALL
-          SELECT host, '/' AS prefix, FALSE AS allow FROM hs WHERE m = 2""",
+          SELECT host, '/' AS prefix, FALSE AS allow FROM hs WHERE m = 2""")),
     // wildcard-agent Crawl-delay per host (numeric values only, max
     // across groups; other agents' delays must not leak in)
-    "tx_robots_delays" ->
+    QueryDef("tx_robots_delays", txRobotsDelays, Sql(
       s"""WITH $robotsRulesCtes
-          SELECT host, delay_s FROM delays""",
+          SELECT host, delay_s FROM delays""")),
     // Sitemap references: group-UNscoped (RFC 9309 §2.3), comment-
     // stripped, case-insensitive directive, value kept verbatim
-    "tx_robots_sitemaps" ->
+    QueryDef("tx_robots_sitemaps", txRobotsSitemaps, Sql(
       s"""WITH $robotsRulesCtes
-          SELECT host, sitemap_url FROM sitemaps""",
+          SELECT host, sitemap_url FROM sitemaps""")),
     // RFC 9309 §2.2.1 product-token group choice: longest matching
     // token-prefix wins and REPLACES the wildcard group; substring
     // non-matches and no-match hosts fall back to '*'
-    "tx_robots_agent_rules" ->
+    QueryDef("tx_robots_agent_rules", txRobotsAgentRules, Sql(
       s"""WITH $robotsRulesCtes, $robotsAgentCtes
-          SELECT host, prefix, allow FROM arules""",
-    "tx_robots_agent_delays" ->
+          SELECT host, prefix, allow FROM arules""")),
+    QueryDef("tx_robots_agent_delays", txRobotsAgentDelays, Sql(
       s"""WITH $robotsRulesCtes, $robotsAgentCtes
-          SELECT host, delay_s FROM adelays""",
+          SELECT host, delay_s FROM adelays""")),
     // sitemap CONTENT: <loc> extraction (whitespace-insensitive,
     // document order) + one-pass XML predefined-entity decode, &amp;
     // last so &amp;amp; yields a literal &amp;
-    "tx_sitemap_locs" ->
+    QueryDef("tx_sitemap_locs", txSitemapLocs, Sql(
       s"""WITH rh AS (SELECT DISTINCT lower(source) || '.example.com' AS host,
                              source FROM documents),
           sb AS (SELECT host, $sitemapBodySqlExpr AS xml FROM rh),
@@ -2587,12 +2587,12 @@ object Crawl {
                  replace(replace(replace(replace(replace(raw,
                    '&lt;', '<'), '&gt;', '>'), '&quot;', '"'),
                    '&apos;', ''''), '&amp;', '&') AS loc_url
-          FROM lx""",
+          FROM lx""")),
     // sitemap-index routing: even-length sources serve the flat
     // <urlset> fixture, odd-length the <sitemapindex> fixture; kind is
     // a FILE-level property (the protocol forbids mixing entry kinds)
     // inherited by every <loc>
-    "tx_sitemap_index" ->
+    QueryDef("tx_sitemap_index", txSitemapIndex, Sql(
       s"""WITH $sitemapAltBodiesCtes,
           lx AS (SELECT host,
                    CASE WHEN regexp_matches(xml, '<sitemapindex[\\s>]')
@@ -2606,11 +2606,11 @@ object Crawl {
                  replace(replace(replace(replace(replace(raw,
                    '&lt;', '<'), '&gt;', '>'), '&quot;', '"'),
                    '&apos;', ''''), '&amp;', '&') AS loc_url
-          FROM lx""",
+          FROM lx""")),
     // per-entry sitemap metadata: whole <url>/<sitemap> blocks so
     // each <lastmod> binds to ITS OWN entry's <loc>; entries without
     // one yield NULL (every child element but loc is optional)
-    "tx_sitemap_meta" ->
+    QueryDef("tx_sitemap_meta", txSitemapMeta, Sql(
       s"""WITH $sitemapAltBodiesCtes,
           bx AS (SELECT host,
                    CASE WHEN regexp_matches(xml, '<sitemapindex[\\s>]')
@@ -2628,11 +2628,11 @@ object Crawl {
                    '&apos;', ''''), '&amp;', '&') AS loc_url,
                  nullif(regexp_extract(blk,
                    '<lastmod>\\s*([^<]*?)\\s*</lastmod>', 1), '') AS lastmod
-          FROM bx""",
+          FROM bx""")),
     // batch sitemap seeding with index recursion: urlset locs seed
     // directly; an index body's locs are CHILD sitemaps whose fetched
     // bodies' locs seed instead — an XML child URL never seeds
-    "tx_sitemap_seeds_recursive" ->
+    QueryDef("tx_sitemap_seeds_recursive", txSitemapSeedsRecursive, Sql(
       s"""WITH $sitemapAltBodiesCtes,
           fl AS (SELECT host, 'urlset' AS via,
                    unnest(regexp_extract_all(xml,
@@ -2655,11 +2655,11 @@ object Crawl {
                      '&apos;', ''''), '&amp;', '&') AS loc FROM al),
           sc8 AS (SELECT host, via, ${urlCanonSqlExpr("loc")} AS cu FROM dl)
           SELECT DISTINCT host, via, ${sortParamsSqlExpr("cu")} AS url
-          FROM sc8""",
+          FROM sc8""")),
     // the frontier under robots with LONGEST-MATCH precedence: among
     // the matching prefixes the longest wins, Allow winning length
     // ties — encoded as max(length*2 + allow_bit) per candidate path
-    "ds_crawl_robots" ->
+    QueryDef("ds_crawl_robots", dsCrawlRobots, Sql(
       s"""WITH f AS ($crawlFrontierSql), $robotsRulesCtes,
           fp AS (SELECT f.*,
                    regexp_extract(url, '^[a-z][a-z0-9+.-]*://([^/?#:]+)', 1)
@@ -2678,24 +2678,24 @@ object Crawl {
           SELECT url, n_refs, n_referrers, first_referrer FROM fp
           WHERE NOT EXISTS (SELECT 1 FROM blk
                             WHERE blk.fhost = fp.fhost
-                              AND blk.fpath = fp.fpath)""",
+                              AND blk.fpath = fp.fpath)""")),
     // Crawl-delay-aware scheduling: per-host wave caps derived from
     // the delay table (cap = max(1, wavePeriod / delay), default
     // crawlPerHostPerWave when a host publishes no delay)
-    "ds_crawl_delay" -> crawlDelaySql,
+    QueryDef("ds_crawl_delay", dsCrawlDelay, Sql(crawlDelaySql)),
     // the r19 wide (mega-host) schedule replays the SAME oracle text:
     // the rank decomposition is a plan-shape choice, never a result
     // change — the driver hash-checks that claim every round
-    "ds_crawl_delay_wide" -> crawlDelaySql,
+    QueryDef("ds_crawl_delay_wide", dsCrawlDelayWide, Sql(crawlDelaySql)),
     // IP/server-level politeness (r20): grouped hosts share one wave
     // budget under the strictest member cap; ungrouped hosts replay
     // ds_crawl_delay exactly
-    "ds_crawl_delay_ip" -> crawlDelayIpSql,
+    QueryDef("ds_crawl_delay_ip", dsCrawlDelayIp, Sql(crawlDelayIpSql)),
     // the composed politeness front door: frontier → robots access
     // filter (most-specific-match, wildcards) → delay-derived wave
     // caps — ONE replay of the chain the three sibling rows price
     // stage by stage
-    "ds_crawl_polite" ->
+    QueryDef("ds_crawl_polite", dsCrawlPolite, Sql(
       s"""WITH f AS ($crawlFrontierSql), $robotsRulesCtes,
           fp AS (SELECT f.*,
                    regexp_extract(url, '^[a-z][a-z0-9+.-]*://([^/?#:]+)', 1)
@@ -2725,12 +2725,12 @@ object Crawl {
                  CAST((row_number() OVER (PARTITION BY host
                         ORDER BY priority DESC, url) - 1) // cap AS BIGINT)
                    AS wave
-          FROM j""",
+          FROM j""")),
     // the seeded politeness composite: sitemap locs (canonicalized) +
     // one planted already-fetched URL per host join the frontier at
     // evidence 0, fetched seeds excluded, then the same robots + caps
     // tail as ds_crawl_polite over the merged candidate pool
-    "ds_crawl_polite_seeded" ->
+    QueryDef("ds_crawl_polite_seeded", dsCrawlPoliteSeeded, Sql(
       s"""WITH f AS ($crawlFrontierSql), $robotsRulesCtes,
           sdb AS (SELECT host, $sitemapBodySqlExpr AS xml FROM rh),
           sdl AS (SELECT unnest(regexp_extract_all(xml,
@@ -2783,19 +2783,19 @@ object Crawl {
                  CAST((row_number() OVER (PARTITION BY host
                         ORDER BY priority DESC, url) - 1) // cap AS BIGINT)
                    AS wave
-          FROM j""",
+          FROM j""")),
     // THE production wave: discovery + seeds + trap bait -> trap gate
     // -> fetch-ledger domain gate -> agent-scoped robots -> agent
     // Crawl-delay wave caps, one plan (w-prefixed CTEs are
     // collision-free vs the shared robots/frontier names)
-    "ds_crawl_wave" -> crawlWaveSqlText(withDue = false),
+    QueryDef("ds_crawl_wave", dsCrawlWave, Sql(crawlWaveSqlText(withDue = false))),
     // the wave plus the freshness half: recrawl-due refetches at
     // evidence 0 through every gate (batch twin of nextWave(recrawl))
-    "ds_crawl_wave_fresh" -> crawlWaveSqlText(withDue = true),
+    QueryDef("ds_crawl_wave_fresh", dsCrawlWaveFresh, Sql(crawlWaveSqlText(withDue = true))),
     // wave-density invariant twin: per (host, cap) histogram of the
     // delay schedule + the dense/capped invariants, derived by each
     // engine from its OWN schedule replay
-    "ds_crawl_waves" ->
+    QueryDef("ds_crawl_waves", dsCrawlWaves, Sql(
       s"""WITH f AS ($crawlFrontierSql), $robotsRulesCtes,
           caps AS (SELECT host,
                      greatest(1, $crawlWavePeriodSec // delay_s) AS cap
@@ -2819,10 +2819,10 @@ object Crawl {
                  max(wave) AS max_wave, CAST(max(n) AS BIGINT) AS max_per_wave,
                  (max(wave) = count(*) - 1) AS dense,
                  (max(n) <= cap) AS capped
-          FROM pw GROUP BY host, cap""",
+          FROM pw GROUP BY host, cap""")),
     // politeness scheduling: frontier → per-host fetch waves capped
     // at crawlPerHostPerWave, priority = in-link count
-    "ds_crawl_schedule" ->
+    QueryDef("ds_crawl_schedule", dsCrawlSchedule, Sql(
       s"""WITH f AS ($crawlFrontierSql)
           SELECT url, regexp_extract(url, '^[a-z][a-z0-9+.-]*://([^/?#:]+)', 1)
                    AS host,
@@ -2831,22 +2831,22 @@ object Crawl {
                     regexp_extract(url, '^[a-z][a-z0-9+.-]*://([^/?#:]+)', 1)
                     ORDER BY n_refs DESC, url) - 1) // $crawlPerHostPerWave
                    AS wave
-          FROM f""",
+          FROM f""")),
     // the crawl front door COMPOSED in one plan: URL canon →
     // blocklist → keep-first (payload rides the min-struct through
     // the one shuffle — no corpus join-back) → HTML extraction over
     // the winners → thin-content verdict (shared with the host-stats
     // twin below)
-    "ds_crawl" -> crawlCompositeSql,
+    QueryDef("ds_crawl", dsCrawl, Sql(crawlCompositeSql)),
     // the byte-fed front door (r20): WARC → HTTP → charset → the same
     // cascade — the oracle is ds_crawl's SQL text VERBATIM, so the
     // byte chain must compute exactly the fixture-frame answer
-    "ds_crawl_warc" -> crawlCompositeSql,
+    QueryDef("ds_crawl_warc", dsCrawlFromWarc, Sql(crawlCompositeSql)),
     // charset decision replay (r20): the mixed-encoding fixture's
     // arithmetic — variant from doc_id % 5, declaration + marker per
     // variant, the decoded text reconstructed as the SAME Unicode
     // string (chr(233) = é, chr(8220/8221) = the cp1252 curly quotes)
-    "tx_charset" ->
+    QueryDef("tx_charset", txCharset, Sql(
       """WITH v AS (SELECT doc_id, CAST(doc_id % 5 AS INT) AS v, text
                     FROM documents),
           pg AS (SELECT doc_id, v,
@@ -2867,11 +2867,11 @@ object Crawl {
                  v <> 0 AS was_transcoded,
                  CAST(length(page) AS BIGINT) AS n_chars,
                  page AS text
-          FROM pg""",
+          FROM pg""")),
     // WARC layout replay (r20): record order (warcinfo, then
     // request/response pairs in doc_id order), ids, target URIs and
     // Content-Lengths from the same envelope literals the builder uses
-    "tx_warc_records" ->
+    QueryDef("tx_warc_records", txWarcRecords, Sql(
       s"""WITH d AS (SELECT doc_id, doc_id // 10 AS warc_id,
                        CAST(row_number() OVER (PARTITION BY doc_id // 10
                          ORDER BY doc_id) - 1 AS INT) AS j,
@@ -2903,11 +2903,11 @@ object Crawl {
                     FROM d)
           SELECT * FROM info UNION ALL
           SELECT * FROM reqs UNION ALL
-          SELECT * FROM resps""",
+          SELECT * FROM resps""")),
     // domain-level quality gate (the C4/RefinedWeb "domain filtering"
     // step): per-host crawl verdict stats + an INTEGER-exact keep-rate
     // gate (2·kept >= pages ⇔ rate >= 50% — no float boundary to flip)
-    "ds_host_quality" ->
+    QueryDef("ds_host_quality", dsHostQuality, Sql(
       s"""WITH c AS ($crawlCompositeSql),
           h AS (SELECT regexp_extract(canon_url,
                   '^[a-z][a-z0-9+.-]*://([^/?#:]+)', 1) AS host,
@@ -2919,12 +2919,12 @@ object Crawl {
                  CAST(sum(n_fetches) AS BIGINT) AS n_fetches,
                  CAST(sum(n_tokens) AS BIGINT) AS sum_tokens,
                  (2 * sum(k) >= count(*)) AS quality_ok
-          FROM h GROUP BY host""",
+          FROM h GROUP BY host""")),
     // the C4 gate-first curation composite: crawl front door →
     // per-host integer keep-rate gate → repetition/LM/dedup audit over
     // the SURVIVORS only (dedup competes inside the gated set);
     // verdicts: domain | thin | repetition | lm | duplicate | kept
-    "ds_curate_domain" ->
+    QueryDef("ds_curate_domain", dsCurateDomain, Sql(
       // outer CTE names are deliberately collision-free vs the names
       // NESTED inside the spliced curation SQL (d/s/g/rep/…): DuckDB
       // 1.0's binder mis-resolves a same-name CTE across nesting
@@ -2949,48 +2949,5 @@ object Crawl {
                  CASE WHEN NOT cdg.domain_ok THEN 'domain'
                       WHEN cdg.page_verdict = 'thin' THEN 'thin'
                       ELSE cdcur.verdict END AS verdict
-          FROM cdg LEFT JOIN cdcur ON cdg.doc_id = cdcur.doc_id""")
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "tx_extract_links" -> txExtractLinks _,
-    "ds_crawl_frontier" -> dsCrawlFrontier _,
-    "ds_crawl_schedule" -> dsCrawlSchedule _,
-    "tx_robots_rules" -> txRobotsRules _,
-    "tx_robots_status" -> txRobotsStatus _, // RFC 9309 §2.3.1 (r20)
-    "tx_robots_delays" -> txRobotsDelays _,
-    "tx_robots_sitemaps" -> txRobotsSitemaps _, // group-UNscoped refs
-    "tx_robots_agent_rules" -> txRobotsAgentRules _, // §2.2.1 group choice
-    "tx_robots_agent_delays" -> txRobotsAgentDelays _, // delay per chosen group
-    "tx_sitemap_locs" -> txSitemapLocs _, // <loc> + XML entity decode
-    "tx_sitemap_index" -> txSitemapIndex _, // urlset/index kind routing
-    "tx_sitemap_meta" -> txSitemapMeta _, // per-entry lastmod recrawl signal
-    "tx_sitemap_seeds_recursive" -> txSitemapSeedsRecursive _, // batch index routing
-    "ds_frontier_opic" -> dsFrontierOpic _, // OPIC cash frontier priority
-    "ds_crawl_traps" -> dsCrawlTraps _, // URL-template fan-out trap audit
-    "ds_frontier_gated" -> dsFrontierGated _, // trap audit -> gate composed
-    "ds_recrawl" -> dsRecrawl _, // change-rate recrawl interval ladder
-    "ds_recrawl_lastmod" -> dsRecrawlLastmod _, // sitemap lastmod override
-    "ds_recrawl_validators" -> dsRecrawlValidators _, // 304-streak demotion
-    "ds_retry_ladder" -> dsRetryLadder _, // transient-failure backoff (r20)
-    "ds_crawl_redirects" -> dsCrawlRedirects _, // 301 alias ledger, admit-once
-    "ds_frontier_redirects" -> dsFrontierRedirects _, // alias-aware frontier gate
-    "tx_extract_canonical" -> txExtractCanonical _, // rel=canonical href extraction
-    "ds_crawl_canonical" -> dsCrawlCanonical _, // in-document alias ledger
-    "tx_meta_robots" -> txMetaRobots _, // meta-robots directive + token flags
-    "ds_crawl_noindex" -> dsCrawlNoindex _, // noindex retention gate, nofollow links
-    "ds_crawl_robots" -> dsCrawlRobots _,
-    "ds_crawl_delay" -> dsCrawlDelay _,
-    "ds_crawl_delay_wide" -> dsCrawlDelayWide _, // mega-host rank decomposition
-    "ds_crawl_delay_ip" -> dsCrawlDelayIp _, // server-level shared budgets
-    "ds_crawl_polite" -> dsCrawlPolite _, // frontier→robots→caps, ONE plan
-    "ds_crawl_polite_seeded" -> dsCrawlPoliteSeeded _, // + sitemap seeds at evidence 0
-    "ds_crawl_wave" -> dsCrawlWave _, // THE production wave: every gate, one plan
-    "ds_crawl_wave_fresh" -> dsCrawlWaveFresh _, // + recrawl-due refetches
-    "ds_crawl_waves" -> dsCrawlWaves _, // wave-density invariant twin
-    "ds_host_quality" -> dsHostQuality _, // domain-level keep-rate gate
-    "ds_curate_domain" -> dsCurateDomain _, // gate-first curation composite
-    "ds_crawl" -> dsCrawl _,
-    "ds_crawl_warc" -> dsCrawlFromWarc _, // byte-fed front door ≡ ds_crawl
-    "tx_charset" -> txCharset _,
-    "tx_warc_records" -> txWarcRecords _)
+          FROM cdg LEFT JOIN cdcur ON cdg.doc_id = cdcur.doc_id""")))
 }

@@ -3168,8 +3168,8 @@ object DataOps {
         sel AS (SELECT DISTINCT doc_id, p, h FROM cand WHERE rk = 1)"""
   }
 
-  val oracleSql: Map[String, String] = Map(
-    "ds_length_quantiles" -> {
+  val registry: Seq[QueryDef] = Seq(
+    QueryDef("ds_length_quantiles", dsLengthQuantiles, Sql {
       val sel = quantileQs.map { case (name, q) =>
         s"CAST(min(CASE WHEN cum*100 >= n*$q THEN len END) AS BIGINT) AS $name"
       }.mkString(", ")
@@ -3182,8 +3182,8 @@ object DataOps {
                     sum(c) OVER (PARTITION BY lang) AS n
                   FROM c)
           SELECT lang, $sel FROM cum GROUP BY lang"""
-    },
-    "ds_group_sample" ->
+    }),
+    QueryDef("ds_group_sample", dsGroupSample, Sql(
       s"""WITH h AS (SELECT source, doc_id,
                   CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))
                        AS BIGINT) AS hv
@@ -3193,8 +3193,8 @@ object DataOps {
                     ORDER BY hv, doc_id) AS rk
                 FROM h)
           SELECT source, CAST(rk AS BIGINT) AS rk, doc_id
-          FROM r WHERE rk <= $samplePerKey""",
-    "ds_kmv_distinct" ->
+          FROM r WHERE rk <= $samplePerKey""")),
+    QueryDef("ds_kmv_distinct", dsKmvDistinct, Sql(
       s"""WITH h AS (SELECT DISTINCT lang,
                   CAST(('0x' || substr(md5(text), 1, 8)) AS BIGINT) AS hv
                 FROM documents),
@@ -3209,11 +3209,11 @@ object DataOps {
                  CAST(CASE WHEN nd < $kmvK THEN nd
                       ELSE (${kmvK - 1} * 4294967296) // hk END AS BIGINT)
                    AS kmv_distinct
-          FROM g""",
-    "tx_winnow" ->
+          FROM g""")),
+    QueryDef("tx_winnow", txWinnow, Sql(
       s"""WITH $winnowSelCtes
-          SELECT doc_id, CAST(p AS BIGINT) AS pos, h AS fp FROM sel""",
-    "dd_winnow_pairs" ->
+          SELECT doc_id, CAST(p AS BIGINT) AS pos, h AS fp FROM sel""")),
+    QueryDef("dd_winnow_pairs", ddWinnowPairs, Sql(
       s"""WITH $winnowSelCtes,
           sets AS (SELECT DISTINCT doc_id, h AS fp FROM sel),
           hot AS (SELECT fp FROM sets GROUP BY fp
@@ -3223,8 +3223,8 @@ object DataOps {
           SELECT a.doc_id AS a_id, b.doc_id AS b_id,
                  CAST(count(*) AS BIGINT) AS shared
           FROM kept a JOIN kept b ON a.fp = b.fp AND a.doc_id < b.doc_id
-          GROUP BY 1, 2 HAVING count(*) >= $winnowMinShared""",
-    "dd_winnow_spans" ->
+          GROUP BY 1, 2 HAVING count(*) >= $winnowMinShared""")),
+    QueryDef("dd_winnow_spans", ddWinnowSpans, Sql(
       s"""WITH $winnowSelCtes,
           hot AS (SELECT h FROM (SELECT DISTINCT doc_id, h FROM sel)
                   GROUP BY h HAVING count(*) > $winnowCap),
@@ -3236,18 +3236,18 @@ object DataOps {
                  CAST(min(a.p) AS BIGINT) AS a_start,
                  CAST(max(a.p) AS BIGINT) AS a_end
           FROM kept a JOIN kept b ON a.h = b.h AND a.doc_id < b.doc_id
-          GROUP BY 1, 2, 3 HAVING count(*) >= $winnowMinShared""",
-    "ds_dsir_weights" ->
-      s"WITH $dsirCtes SELECT doc_id, weight_micro FROM w",
+          GROUP BY 1, 2, 3 HAVING count(*) >= $winnowMinShared""")),
+    QueryDef("ds_dsir_weights", dsDsirWeights, Sql(
+      s"WITH $dsirCtes SELECT doc_id, weight_micro FROM w")),
     // persisted twin: identical algebra against the stored model table
-    "ds_dsir_persisted" ->
-      s"WITH $dsirCtes SELECT doc_id, weight_micro FROM w",
-    "ds_dsir_select" ->
+    QueryDef("ds_dsir_persisted", dsDsirPersisted, Sql(
+      s"WITH $dsirCtes SELECT doc_id, weight_micro FROM w")),
+    QueryDef("ds_dsir_select", dsDsirSelect, Sql(
       s"""WITH $dsirCtes
           SELECT CAST(row_number() OVER (ORDER BY weight_micro DESC, doc_id)
                       AS BIGINT) AS rk, doc_id, weight_micro
-          FROM w ORDER BY weight_micro DESC, doc_id LIMIT $dsirK""",
-    "ds_dsir_stratified" ->
+          FROM w ORDER BY weight_micro DESC, doc_id LIMIT $dsirK""")),
+    QueryDef("ds_dsir_stratified", dsDsirStratified, Sql(
       s"""WITH $dsirCtes,
           ws AS (SELECT w.doc_id, w.weight_micro, d.source
                  FROM w JOIN documents d ON d.doc_id = w.doc_id),
@@ -3256,35 +3256,35 @@ object DataOps {
                     ORDER BY weight_micro DESC, doc_id) AS rk
                 FROM ws)
           SELECT source, CAST(rk AS BIGINT) AS rk, doc_id, weight_micro
-          FROM r WHERE rk <= $samplePerKey""",
-    "ds_contamination" ->
-      s"WITH $contaminationCtes SELECT train_id, eval_id, shared_ngrams FROM cpairs",
-    "ds_decontaminate" ->
+          FROM r WHERE rk <= $samplePerKey""")),
+    QueryDef("ds_contamination", dsContamination, Sql(
+      s"WITH $contaminationCtes SELECT train_id, eval_id, shared_ngrams FROM cpairs")),
+    QueryDef("ds_decontaminate", dsDecontaminate, Sql(
       s"""WITH $contaminationCtes
           SELECT d.doc_id, d.lang, d.source, d.n_chars
           FROM documents d JOIN sp ON sp.doc_id = d.doc_id
           WHERE sp.split = 'train'
-            AND d.doc_id NOT IN (SELECT train_id FROM cpairs)""",
-    "sim_ivf_kmeans" -> lloydOracle,
-    "sim_pq_codes" -> pqCodesOracle,
-    "sim_pq_adc" -> pqAdcOracle,
-    "sim_pq_recall" -> pqRecallOracle,
-    "sim_ivfpq_codes" -> ivfPqCodesOracle,
-    "sim_ivfpq_adc" -> ivfPqAdcOracle,
-    "sim_ivfpq_recall" -> ivfPqRecallOracle,
+            AND d.doc_id NOT IN (SELECT train_id FROM cpairs)""")),
+    QueryDef("sim_ivf_kmeans", simIvfKmeans, Sql(lloydOracle)),
+    QueryDef("sim_pq_codes", simPqCodes, Sql(pqCodesOracle)),
+    QueryDef("sim_pq_adc", simPqAdc, Sql(pqAdcOracle)),
+    QueryDef("sim_pq_recall", simPqRecall, Sql(pqRecallOracle)),
+    QueryDef("sim_ivfpq_codes", simIvfPqCodes, Sql(ivfPqCodesOracle)),
+    QueryDef("sim_ivfpq_adc", simIvfPqAdc, Sql(ivfPqAdcOracle)),
+    QueryDef("sim_ivfpq_recall", simIvfPqRecall, Sql(ivfPqRecallOracle)),
     // persisted twin: identical algebra over stored model tables
-    "sim_ivfpq_persisted" -> ivfPqAdcOracle,
-    "ds_rag" -> ragOracle,
-    "ds_bm25" -> bm25Oracle,
-    "ds_hybrid_rrf" -> hybridRrfOracle,
-    "ds_rag_recall" -> ragRecallOracle,
-    "ds_source_cap" ->
+    QueryDef("sim_ivfpq_persisted", simIvfPqPersisted, Sql(ivfPqAdcOracle)),
+    QueryDef("ds_rag", dsRag, Sql(ragOracle)),
+    QueryDef("ds_bm25", dsBm25, Sql(bm25Oracle)),
+    QueryDef("ds_hybrid_rrf", dsHybridRrf, Sql(hybridRrfOracle)),
+    QueryDef("ds_rag_recall", dsRagRecall, Sql(ragRecallOracle)),
+    QueryDef("ds_source_cap", dsSourceCap, Sql(
       s"""WITH r AS (SELECT source, n_chars, doc_id,
                             row_number() OVER (PARTITION BY source
                               ORDER BY n_chars DESC, doc_id) AS rk
                      FROM documents)
-          SELECT source, rk, n_chars, doc_id FROM r WHERE rk <= $capPerSource""",
-    "ds_curriculum" ->
+          SELECT source, rk, n_chars, doc_id FROM r WHERE rk <= $capPerSource""")),
+    QueryDef("ds_curriculum", dsCurriculum, Sql(
       s"""WITH d AS (SELECT doc_id,
                        CAST(len(string_split(text, ' ')) AS BIGINT) AS difficulty
                      FROM documents),
@@ -3294,22 +3294,23 @@ object DataOps {
           n AS (SELECT count(*) AS n FROM d)
           SELECT doc_id, difficulty, rank,
                  (rank - 1) * $curriculumStageCount // n AS stage
-          FROM r, n""",
-    "dd_embed_ivf" -> embedIvfOracle,
-    "dd_semdedup" -> semdedupOracle,
-    "sim_embed_outliers" -> embedOutliersOracle,
-    "dd_semdedup_capped" -> semdedupCappedOracle,
-    "p_alloc_greedy" -> allocOracle,
-    "p_alloc_plan" -> allocOracle,
-    "sim_mutual_match" -> mutualMatchOracle,
-    "sim_margin_match" -> marginMatchOracle,
-    "sim_lsh_ann" -> lshRerankSql(
+          FROM r, n""")),
+    QueryDef("dd_embed_ivf", ddEmbedIvf, Sql(embedIvfOracle)),
+    QueryDef("dd_semdedup", ddSemdedup, Sql(semdedupOracle)),
+    QueryDef("sim_embed_outliers", simEmbedOutliers, Sql(embedOutliersOracle)),
+    QueryDef("dd_semdedup_capped", ddSemdedupCapped, Sql(semdedupCappedOracle)),
+    // the typed mapPartitions form; one allocation replay for both
+    QueryDef("p_alloc_greedy", allocGreedy, Sql(allocOracle)),
+    QueryDef("p_alloc_plan", allocGreedyPlan, Sql(allocOracle)),
+    QueryDef("sim_mutual_match", simMutualMatch, Sql(mutualMatchOracle)),
+    QueryDef("sim_margin_match", simMarginMatch, Sql(marginMatchOracle)),
+    QueryDef("sim_lsh_ann", simLshAnn, Sql(lshRerankSql(
       """cand AS (SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
                          qe.embedding AS ea, ce.embedding AS eb
                   FROM bk q JOIN bk c ON q.bucket = c.bucket AND q.vec_id <> c.vec_id
                   JOIN embeddings qe ON qe.vec_id = q.vec_id
-                  JOIN embeddings ce ON ce.vec_id = c.vec_id)"""),
-    "sim_lsh_multiprobe" -> lshRerankSql(
+                  JOIN embeddings ce ON ce.vec_id = c.vec_id)"""))),
+    QueryDef("sim_lsh_multiprobe", simLshMultiProbe, Sql(lshRerankSql(
       // probe buckets from the SAME mask enumeration the Spark side
       // uses (Similarity.probeMasks — home bucket + every flip within
       // the probe radius); masks are pairwise distinct, so probe
@@ -3323,8 +3324,8 @@ object DataOps {
                           qe.embedding AS ea, ce.embedding AS eb
                    FROM probes q JOIN bk c ON q.probe = c.bucket AND q.vec_id <> c.vec_id
                    JOIN embeddings qe ON qe.vec_id = q.vec_id
-                   JOIN embeddings ce ON ce.vec_id = c.vec_id)"""),
-    "sim_lsh_multiprobe_r2" -> lshRerankSql(
+                   JOIN embeddings ce ON ce.vec_id = c.vec_id)"""))),
+    QueryDef("sim_lsh_multiprobe_r2", simLshMultiProbeR2, Sql(lshRerankSql(
       // radius-2 probe expansion over the same shared mask source
       s"""probes AS (SELECT vec_id,
                             unnest(list_transform([$multiProbeMaskListR2],
@@ -3334,8 +3335,8 @@ object DataOps {
                           qe.embedding AS ea, ce.embedding AS eb
                    FROM probes q JOIN bk c ON q.probe = c.bucket AND q.vec_id <> c.vec_id
                    JOIN embeddings qe ON qe.vec_id = q.vec_id
-                   JOIN embeddings ce ON ce.vec_id = c.vec_id)"""),
-    "sim_lsh_multiprobe_for" -> lshRerankSql(
+                   JOIN embeddings ce ON ce.vec_id = c.vec_id)"""))),
+    QueryDef("sim_lsh_multiprobe_for", simLshMultiProbeFor, Sql(lshRerankSql(
       // same probe expansion, restricted to the query set — only the
       // probing vectors fan out into their probe lists
       s"""probes AS (SELECT vec_id,
@@ -3346,8 +3347,8 @@ object DataOps {
                           qe.embedding AS ea, ce.embedding AS eb
                    FROM probes q JOIN bk c ON q.probe = c.bucket AND q.vec_id <> c.vec_id
                    JOIN embeddings qe ON qe.vec_id = q.vec_id
-                   JOIN embeddings ce ON ce.vec_id = c.vec_id)"""),
-    "sim_index_drift" -> {
+                   JOIN embeddings ce ON ce.vec_id = c.vec_id)"""))),
+    QueryDef("sim_index_drift", simIndexDrift, Sql {
       import graft.operators.Similarity.lshDims
       s"""WITH ${lloydCtesFrom("vec_id % 10 <> 7")},
           wd AS (SELECT a.vec_id, a.cid, d.dist
@@ -3385,8 +3386,8 @@ object DataOps {
                  corpus_mean_dist, batch_mean_dist,
                  round(abs(corpus_n*1.0/ct - batch_n*1.0/bt), 6) AS share_gap
           FROM j, tot"""
-    },
-    "sim_hard_negatives" ->
+    }),
+    QueryDef("sim_hard_negatives", simHardNegatives, Sql(
       s"""WITH nrm AS (SELECT vec_id, sqrt(sum(x*x)) AS nrm FROM
                  (SELECT vec_id, CAST(unnest(embedding) AS DOUBLE) AS x FROM embeddings)
                GROUP BY vec_id),
@@ -3407,8 +3408,8 @@ object DataOps {
                             row_number() OVER (PARTITION BY query_id
                               ORDER BY cos DESC, negative_id) AS rk
                      FROM scored)
-          SELECT query_id, negative_id, cos, rk FROM ranked WHERE rk <= $annK""",
-    "sim_hard_negatives_ann" ->
+          SELECT query_id, negative_id, cos, rk FROM ranked WHERE rk <= $annK""")),
+    QueryDef("sim_hard_negatives_ann", simHardNegativesAnn, Sql(
       s"""WITH $lshBucketCte,
           cand AS (SELECT q.vec_id AS query_id, c.vec_id AS negative_id,
                           qe.embedding AS ea, ce.embedding AS eb
@@ -3427,12 +3428,12 @@ object DataOps {
                             row_number() OVER (PARTITION BY query_id
                               ORDER BY cos DESC, negative_id) AS rk
                      FROM scored)
-          SELECT query_id, negative_id, cos, rk FROM ranked WHERE rk <= $annK""",
-    "sim_ann_recall" -> annRecallSql(lshBucketCte),
+          SELECT query_id, negative_id, cos, rk FROM ranked WHERE rk <= $annK""")),
+    QueryDef("sim_ann_recall", simAnnRecall, Sql(annRecallSql(lshBucketCte))),
     // planted twin: prepend the deterministic near-dup corpus, run
     // the identical bucket/rerank/recall replay over it, and also
     // count how many planted twins the ANN retrieved
-    "sim_ann_recall_planted" -> {
+    QueryDef("sim_ann_recall_planted", simAnnRecallPlanted, Sql {
       import graft.operators.Similarity.lshDims
       val pembCte =
         s"""pemb AS (SELECT vec_id, embedding FROM embeddings
@@ -3447,18 +3448,18 @@ object DataOps {
         extraSelect = s""",
                (SELECT count(*) FROM ann_rk
                 WHERE neighbor_id = query_id + $plantedIdBase) AS planted_found""")
-    },
-    "sim_rp_ann" -> annRecallSql(rpBucketCte),
+    }),
+    QueryDef("sim_rp_ann", simRpAnn, Sql(annRecallSql(rpBucketCte))),
     // identical semantics to lshAnnFor over the live corpus — the
     // index's storage is invisible to the result
-    "sim_ann_persisted" -> lshRerankSql(
+    QueryDef("sim_ann_persisted", simAnnPersisted, Sql(lshRerankSql(
       s"""cand AS (SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
                           qe.embedding AS ea, ce.embedding AS eb
                    FROM bk q JOIN bk c ON q.bucket = c.bucket AND q.vec_id <> c.vec_id
                    JOIN embeddings qe ON qe.vec_id = q.vec_id
                    JOIN embeddings ce ON ce.vec_id = c.vec_id
-                   WHERE q.vec_id < $annQueries)"""),
-    "sim_ivf_persisted" ->
+                   WHERE q.vec_id < $annQueries)"""))),
+    QueryDef("sim_ivf_persisted", simIvfPersisted, Sql(
       s"""WITH cents AS (SELECT vec_id AS centroid_id, embedding AS ce
                          FROM embeddings WHERE vec_id < 4),
           p AS (SELECT v.vec_id, c.centroid_id, v.embedding AS ve, c.ce
@@ -3493,8 +3494,8 @@ object DataOps {
                             row_number() OVER (PARTITION BY query_id
                               ORDER BY cos DESC, neighbor_id) AS rk
                      FROM scored)
-          SELECT query_id, neighbor_id, cos, rk FROM ranked WHERE rk <= $annK""",
-    "sim_ivf" ->
+          SELECT query_id, neighbor_id, cos, rk FROM ranked WHERE rk <= $annK""")),
+    QueryDef("sim_ivf", simIvf, Sql(
       """WITH cents AS (SELECT vec_id AS centroid_id, embedding AS ce
                         FROM embeddings WHERE vec_id < 4),
           p AS (SELECT v.vec_id, c.centroid_id, v.embedding AS ve, c.ce
@@ -3508,11 +3509,11 @@ object DataOps {
                        row_number() OVER (PARTITION BY vec_id
                          ORDER BY dist ASC, centroid_id) AS rk FROM d)
           SELECT centroid_id, count(*) AS n_vectors
-          FROM r WHERE rk = 1 GROUP BY centroid_id""",
-    "dd_exact" ->
+          FROM r WHERE rk = 1 GROUP BY centroid_id""")),
+    QueryDef("dd_exact", ddExact, Sql(
       """SELECT md5(text) AS content_md5, min(doc_id) AS keep_id, count(*) AS dup_cnt
-         FROM documents GROUP BY md5(text)""",
-    "dd_jaccard" ->
+         FROM documents GROUP BY md5(text)""")),
+    QueryDef("dd_jaccard", ddJaccard, Sql(
       s"""WITH $shingleCte,
           sz AS (SELECT doc_id, count(*) AS n FROM s GROUP BY doc_id),
           c AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS common
@@ -3521,9 +3522,9 @@ object DataOps {
           SELECT id_a, id_b, common,
                  round(common * 1.0 / (x.n + y.n - common), 6) AS jaccard
           FROM c JOIN sz x ON id_a = x.doc_id JOIN sz y ON id_b = y.doc_id
-          WHERE round(common * 1.0 / (x.n + y.n - common), 6) >= $jaccardThreshold""",
-    "dd_minhash_sig" -> s"WITH $minhashSigCte SELECT * FROM sig",
-    "dd_corpus" ->
+          WHERE round(common * 1.0 / (x.n + y.n - common), 6) >= $jaccardThreshold""")),
+    QueryDef("dd_minhash_sig", ddMinhashSig, Sql(s"WITH $minhashSigCte SELECT * FROM sig")),
+    QueryDef("dd_corpus", ddCorpus, Sql(
       // LSH candidates verified with the exact Jaccard — mirrors
       // Dedup.lshVerifiedPairs (the scale-safe corpus-dedup policy)
       s"""WITH $lshPairsCte,
@@ -3539,9 +3540,9 @@ object DataOps {
           keepers AS (SELECT min(doc_id) AS doc_id FROM documents GROUP BY text)
           SELECT doc_id, lang, source, n_chars FROM documents
           WHERE doc_id IN (SELECT doc_id FROM keepers)
-            AND doc_id NOT IN (SELECT doc_id FROM losers)""",
-    "dd_lsh_pairs" -> s"WITH $lshPairsCte SELECT id_a, id_b FROM pairs",
-    "dd_containment" ->
+            AND doc_id NOT IN (SELECT doc_id FROM losers)""")),
+    QueryDef("dd_lsh_pairs", ddLshPairs, Sql(s"WITH $lshPairsCte SELECT id_a, id_b FROM pairs")),
+    QueryDef("dd_containment", ddContainment, Sql(
       // mirrors containmentPairs' DEFAULT capped posture: shingles
       // hotter than containmentDefaultCap docs carry no blocking
       // information and are excluded from the pair generator
@@ -3559,8 +3560,8 @@ object DataOps {
                  round(common * 1.0 / y.n, 6) AS c_b
           FROM c JOIN sz x ON id_a = x.doc_id JOIN sz y ON id_b = y.doc_id
           WHERE greatest(round(common * 1.0 / x.n, 6),
-                         round(common * 1.0 / y.n, 6)) >= $containmentThreshold""",
-    "dd_repeated_spans" ->
+                         round(common * 1.0 / y.n, 6)) >= $containmentThreshold""")),
+    QueryDef("dd_repeated_spans", ddRepeatedSpans, Sql(
       // Dedup.repeatedSpans: duplicated k-gram windows -> maximal spans
       s"""WITH d AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
           g0 AS (SELECT doc_id,
@@ -3582,8 +3583,8 @@ object DataOps {
                  CAST(max(pos) + ${spanK - 1} AS BIGINT) AS span_end,
                  CAST(max(pos) + ${spanK - 1} - min(pos) + 1 AS BIGINT) AS span_len,
                  count(*) AS n_windows
-          FROM isl GROUP BY doc_id, island""",
-    "dd_trim_spans" ->
+          FROM isl GROUP BY doc_id, island""")),
+    QueryDef("dd_trim_spans", ddTrimSpans, Sql(
       // Dedup.trimRepeatedSpans: drop every word inside a dup window
       s"""WITH d AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
           g0 AS (SELECT doc_id,
@@ -3608,17 +3609,19 @@ object DataOps {
                  FROM kept GROUP BY doc_id)
           SELECT d.doc_id, coalesce(k2.clean_text, '') AS clean_text,
                  CAST(len(d.toks) - coalesce(k2.n_kept, 0) AS BIGINT) AS n_dropped
-          FROM d LEFT JOIN k2 ON d.doc_id = k2.doc_id""",
-    "dd_incremental" -> incrementalOracle,
+          FROM d LEFT JOIN k2 ON d.doc_id = k2.doc_id""")),
+    QueryDef("dd_incremental", ddIncremental, Sql(incrementalOracle)),
     // identical semantics — only the index's storage differs
-    "dd_incremental_persisted" -> incrementalOracle,
-    "dd_incremental_simhash" -> incrementalSimhashOracle,
-    "dd_incremental_embed" -> incrementalEmbedOracle,
+    QueryDef("dd_incremental_persisted", ddIncrementalPersisted, Sql(incrementalOracle)),
+    QueryDef("dd_incremental_simhash", ddIncrementalSimhash, Sql(incrementalSimhashOracle)),
+    QueryDef("dd_incremental_embed", ddIncrementalEmbed, Sql(incrementalEmbedOracle)),
     // persisted twins: identical algebra over stored index tables
-    "dd_incremental_simhash_persisted" -> incrementalSimhashOracle,
-    "dd_incremental_embed_persisted" -> incrementalEmbedOracle,
-    "dd_incremental_semdedup" -> incrementalSemdedupOracle,
-    "ds_pack_sequences" ->
+    QueryDef("dd_incremental_simhash_persisted", ddIncrementalSimhashPersisted,
+      Sql(incrementalSimhashOracle)),
+    QueryDef("dd_incremental_embed_persisted", ddIncrementalEmbedPersisted,
+      Sql(incrementalEmbedOracle)),
+    QueryDef("dd_incremental_semdedup", ddIncrementalSemdedup, Sql(incrementalSemdedupOracle)),
+    QueryDef("ds_pack_sequences", dsPackSequences, Sql(
       s"""WITH d AS (SELECT doc_id, text,
                  CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens
                FROM documents),
@@ -3632,8 +3635,8 @@ object DataOps {
           SELECT shard_id, count(*) AS n_docs,
                  CAST(sum(n_tokens) AS BIGINT) AS shard_tokens,
                  string_agg(text, ' <eos> ' ORDER BY doc_id) AS sequence
-          FROM sh GROUP BY shard_id""",
-    "ds_pack_fixed" ->
+          FROM sh GROUP BY shard_id""")),
+    QueryDef("ds_pack_fixed", dsPackFixed, Sql(
       s"""WITH d AS (SELECT doc_id,
                  CAST(len(string_split(text, ' ')) + 1 AS BIGINT) AS n
                FROM documents),
@@ -3647,8 +3650,8 @@ object DataOps {
                  CAST(greatest(st - k*$seqLen, 0) AS BIGINT) AS seq_off,
                  CAST(least(cum, (k+1)*$seqLen)
                       - greatest(st, k*$seqLen) AS BIGINT) AS n_tokens
-          FROM sp, unnest(range(st // $seqLen, (cum - 1) // $seqLen + 1)) t(k)""",
-    "ds_length_buckets" ->
+          FROM sp, unnest(range(st // $seqLen, (cum - 1) // $seqLen + 1)) t(k)""")),
+    QueryDef("ds_length_buckets", dsLengthBuckets, Sql(
       s"""WITH d AS (SELECT doc_id,
                  CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens
                FROM documents),
@@ -3662,8 +3665,8 @@ object DataOps {
           SELECT doc_id, n_tokens, bucket,
                  CAST((rk - 1) // $lenBatchSize AS BIGINT) AS batch_id,
                  (CAST(1 AS BIGINT) << bucket) - n_tokens AS pad_tokens
-          FROM r""",
-    "ds_mix" ->
+          FROM r""")),
+    QueryDef("ds_mix", dsMix, Sql(
       s"""WITH d AS (SELECT doc_id, source,
                  CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens
                FROM documents),
@@ -3674,8 +3677,8 @@ object DataOps {
                          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
                 FROM b)
           SELECT doc_id, source, n_tokens, CAST(cum AS BIGINT) AS cum_tokens
-          FROM c WHERE cum <= budget""",
-    "ds_mix_temperature" ->
+          FROM c WHERE cum <= budget""")),
+    QueryDef("ds_mix_temperature", dsMixTemperature, Sql(
       s"""WITH d AS (SELECT doc_id, source,
                  CAST(len(string_split(text, ' ')) AS BIGINT) AS n
                FROM documents),
@@ -3692,8 +3695,8 @@ object DataOps {
                       % 1000000 < rate_ppm)
           SELECT source, c_tokens, rate_ppm, count(*) AS n_kept,
                  CAST(sum(n) AS BIGINT) AS kept_tokens
-          FROM k GROUP BY source, c_tokens, rate_ppm""",
-    "ds_pack_shards" ->
+          FROM k GROUP BY source, c_tokens, rate_ppm""")),
+    QueryDef("ds_pack_shards", dsPackShards, Sql(
       s"""WITH d AS (SELECT doc_id,
                  CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens
                FROM documents),
@@ -3703,8 +3706,8 @@ object DataOps {
                 FROM d)
           SELECT doc_id, n_tokens, CAST(cum AS BIGINT) AS cum_tokens,
                  CAST((cum - n_tokens) // $shardBudget AS BIGINT) AS shard_id
-          FROM c""",
-    "ds_shuffle" ->
+          FROM c""")),
+    QueryDef("ds_shuffle", dsShuffle, Sql(
       s"""WITH e AS (SELECT doc_id, CAST(t.e AS INTEGER) AS epoch
                      FROM documents, unnest(range(0, $shuffleEpochs)) t(e)),
           k AS (SELECT doc_id, epoch,
@@ -3716,16 +3719,16 @@ object DataOps {
                 FROM k)
           SELECT doc_id, epoch, pos,
                  CAST((pos - 1) % $shuffleShards AS BIGINT) AS shard
-          FROM p""",
-    "ds_bucketed_join" ->
+          FROM p""")),
+    QueryDef("ds_bucketed_join", dsBucketedJoin, Sql(
       // layout-independent semantics: the oracle is the plain join —
       // the bucketed tables' zero-exchange plan is BucketingSpec's job
       """SELECT o_orderpriority, count(*) AS n_lines,
                 sum(CAST(round(l_extendedprice * (1 - l_discount) * 100, 0) AS BIGINT))
                   / 100.0 AS revenue
          FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-         GROUP BY o_orderpriority""",
-    "dd_cc" ->
+         GROUP BY o_orderpriority""")),
+    QueryDef("dd_cc", ddCc, Sql(
       // transitive closure of the LSH pair graph: reachability pairs by
       // a recursive CTE, component = min reachable id, singletons kept
       s"""WITH RECURSIVE $lshPairsCte,
@@ -3738,8 +3741,8 @@ object DataOps {
           comp AS (SELECT node AS doc_id, min(r) AS component
                    FROM reach GROUP BY node)
           SELECT d.doc_id, coalesce(c.component, d.doc_id) AS component
-          FROM documents d LEFT JOIN comp c ON d.doc_id = c.doc_id""",
-    "ds_split_safe" ->
+          FROM documents d LEFT JOIN comp c ON d.doc_id = c.doc_id""")),
+    QueryDef("ds_split_safe", dsSplitSafe, Sql(
       // dd_cc's component chain + ds_split's md5 bucket applied to the
       // COMPONENT id — one verdict per near-dup cluster
       s"""WITH RECURSIVE $lshPairsCte,
@@ -3759,8 +3762,8 @@ object DataOps {
                  WHEN CAST(('0x' || substr(md5(CAST(component AS VARCHAR)), 1, 8)) AS BIGINT)
                    % 100 < 90 THEN 'val'
                  ELSE 'test' END AS split
-          FROM allc""",
-    "dd_cluster_sizes" ->
+          FROM allc""")),
+    QueryDef("dd_cluster_sizes", ddClusterSizes, Sql(
       s"""WITH RECURSIVE $lshPairsCte,
           sym AS (SELECT id_a AS u, id_b AS v FROM pairs
                   UNION SELECT id_b, id_a FROM pairs),
@@ -3775,8 +3778,8 @@ object DataOps {
           cs AS (SELECT component, count(*) AS csize FROM allc GROUP BY component)
           SELECT csize, count(*) AS n_clusters,
                  (csize - 1) * count(*) AS dup_docs
-          FROM cs GROUP BY csize""",
-    "dd_corpus_cc" ->
+          FROM cs GROUP BY csize""")),
+    QueryDef("dd_corpus_cc", ddCorpusCc, Sql(
       s"""WITH RECURSIVE $lshPairsCte,
           sym AS (SELECT id_a AS u, id_b AS v FROM pairs
                   UNION SELECT id_b, id_a FROM pairs),
@@ -3790,8 +3793,8 @@ object DataOps {
                    FROM documents d LEFT JOIN comp c ON d.doc_id = c.doc_id),
           reps AS (SELECT min(doc_id) AS doc_id FROM allc GROUP BY component)
           SELECT doc_id, lang, source, n_chars FROM documents
-          WHERE doc_id IN (SELECT doc_id FROM reps)""",
-    "dd_corpus_cc_best" ->
+          WHERE doc_id IN (SELECT doc_id FROM reps)""")),
+    QueryDef("dd_corpus_cc_best", ddCorpusCcBest, Sql(
       // same transitive clusters, longest member kept (ties → min id)
       s"""WITH RECURSIVE $lshPairsCte,
           sym AS (SELECT id_a AS u, id_b AS v FROM pairs
@@ -3810,8 +3813,8 @@ object DataOps {
                        ORDER BY n_chars DESC, doc_id) AS rk FROM allc)
                    WHERE rk = 1)
           SELECT doc_id, lang, source, n_chars FROM documents
-          WHERE doc_id IN (SELECT doc_id FROM reps)""",
-    "ds_sample" ->
+          WHERE doc_id IN (SELECT doc_id FROM reps)""")),
+    QueryDef("ds_sample", dsSample, Sql(
       // TRY_CAST: the Spark side's substring().cast("int") yields null
       // (→ the 20% bucket) for non-numeric source suffixes; a plain
       // CAST would error instead of matching that null-safe fall-through
@@ -3819,15 +3822,15 @@ object DataOps {
            WHERE CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT) % 100
                < CASE WHEN TRY_CAST(substr(source, 4) AS INT) < 10 THEN 50 ELSE 20 END)
          SELECT source, count(*) AS n_sampled, min(doc_id) AS min_id, max(doc_id) AS max_id
-         FROM s GROUP BY source""",
-    "tx_idf" ->
+         FROM s GROUP BY source""")),
+    QueryDef("tx_idf", txIdf, Sql(
       """WITH d AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
          t AS (SELECT DISTINCT doc_id, unnest(toks) AS token FROM d),
          f AS (SELECT token, count(*) AS df FROM t GROUP BY token),
          n AS (SELECT count(*) AS n_docs FROM documents)
          SELECT token, df, round(ln((n_docs + 1.0) / (df + 1.0)) + 1.0, 6) AS idf
-         FROM f, n""",
-    "tx_redact" ->
+         FROM f, n""")),
+    QueryDef("tx_redact", txRedact, Sql(
       s"""SELECT doc_id,
                  regexp_replace(regexp_replace(
                    text || ' contact: user' || CAST(doc_id AS VARCHAR)
@@ -3835,8 +3838,8 @@ object DataOps {
                         || lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0'),
                    '${TextAnalysis.emailRegex}', '[EMAIL]', 'g'),
                    '${TextAnalysis.phoneRegex}', '[PHONE]', 'g') AS redacted
-          FROM documents""",
-    "sim_rp" -> {
+          FROM documents""")),
+    QueryDef("sim_rp", simRandomProject, Sql {
       // the RP plane matrix embedded literally — the same determinism
       // contract as the LSH bucket replay (identical weights, 6dp pin)
       import graft.operators.Similarity.{lshDims, planeWeight, rpSeedOffset}
@@ -3851,8 +3854,8 @@ object DataOps {
                  round(list_sum(list_transform(range(1, ${lshDims + 1}),
                    i -> CAST(e.embedding[i] AS DOUBLE) * pl.wl[i])) * 0.25, 6) AS v
           FROM embeddings e CROSS JOIN planes pl"""
-    },
-    "ds_zorder" ->
+    }),
+    QueryDef("ds_zorder", dsZorder, Sql(
       // the Morton interleave replayed term for term (10 bits per
       // dimension; x even positions, y odd)
       """WITH z AS (SELECT
@@ -3863,8 +3866,8 @@ object DataOps {
          FROM lineitem)
          SELECT zkey >> 10 AS zblock, count(*) AS n,
                 CAST(min(zkey) AS BIGINT) AS zmin, CAST(max(zkey) AS BIGINT) AS zmax
-         FROM z GROUP BY 1""",
-    "sim_quantize" ->
+         FROM z GROUP BY 1""")),
+    QueryDef("sim_quantize", simQuantize, Sql(
       """WITH u AS (SELECT vec_id, CAST(unnest(embedding) AS DOUBLE) AS x FROM embeddings),
          a AS (SELECT vec_id, max(abs(x)) AS amax FROM u GROUP BY vec_id),
          q AS (SELECT u.vec_id, CAST(round(x * 127.0 / amax) AS BIGINT) AS q
@@ -3872,17 +3875,17 @@ object DataOps {
          SELECT q.vec_id, round(127.0 / a.amax, 6) AS scale,
                 CAST(sum(q.q) AS BIGINT) AS qsum, min(q.q) AS qmin, max(q.q) AS qmax
          FROM q JOIN a ON q.vec_id = a.vec_id
-         GROUP BY q.vec_id, a.amax""",
-    "dd_minhash_est" -> {
+         GROUP BY q.vec_id, a.amax""")),
+    QueryDef("dd_minhash_est", ddMinhashEst, Sql {
       val eq = Dedup.minhashAB.indices
         .map(i => s"(CASE WHEN sa.m$i = sb.m$i THEN 1 ELSE 0 END)").mkString(" + ")
       s"""WITH $lshPairsCte
           SELECT id_a, id_b,
                  round(CAST($eq AS DOUBLE) / ${Dedup.minhashAB.size}, 6) AS est_jaccard
           FROM pairs JOIN sig sa ON id_a = sa.doc_id JOIN sig sb ON id_b = sb.doc_id"""
-    },
-    "dd_simhash" -> s"WITH $simhashCte SELECT doc_id, simhash FROM sim",
-    "dd_simhash_pairs" -> {
+    }),
+    QueryDef("dd_simhash", ddSimhash, Sql(s"WITH $simhashCte SELECT doc_id, simhash FROM sim")),
+    QueryDef("dd_simhash_pairs", ddSimhashPairs, Sql {
       val bandSelects = (0 until 4).map { b =>
         s"SELECT doc_id, simhash, $b AS band, (simhash >> ${b * 8}) & 255 AS bkey FROM sim"
       }.mkString(" UNION ALL ")
@@ -3894,8 +3897,8 @@ object DataOps {
                     AND a.doc_id < b.doc_id)
           SELECT id_a, id_b, CAST(bit_count(xor(sa, sb)) AS BIGINT) AS hamming
           FROM cand WHERE bit_count(xor(sa, sb)) <= ${Dedup.simhashMaxHamming}"""
-    },
-    "dd_embed_neardups" ->
+    }),
+    QueryDef("dd_embed_neardups", ddEmbedNearDups, Sql(
       s"""WITH nrm AS (SELECT vec_id, sqrt(sum(x*x)) AS nrm FROM
                  (SELECT vec_id, CAST(unnest(embedding) AS DOUBLE) AS x FROM embeddings)
                GROUP BY vec_id),
@@ -3908,8 +3911,8 @@ object DataOps {
           d AS (SELECT id_a, id_b, sum(x*y) AS dp FROM u GROUP BY id_a, id_b)
           SELECT id_a, id_b, round(dp / (na.nrm * nb.nrm), 6) AS cos
           FROM d JOIN nrm na ON id_a = na.vec_id JOIN nrm nb ON id_b = nb.vec_id
-          WHERE round(dp / (na.nrm * nb.nrm), 6) >= $cosineThreshold""",
-    "sim_topk" ->
+          WHERE round(dp / (na.nrm * nb.nrm), 6) >= $cosineThreshold""")),
+    QueryDef("sim_topk", simTopK, Sql(
       s"""WITH nrm AS (SELECT vec_id, sqrt(sum(x*x)) AS nrm FROM
                  (SELECT vec_id, CAST(unnest(embedding) AS DOUBLE) AS x FROM embeddings)
                GROUP BY vec_id),
@@ -3929,12 +3932,12 @@ object DataOps {
                             row_number() OVER (PARTITION BY query_id
                               ORDER BY cos DESC, neighbor_id) AS rk
                      FROM scored)
-          SELECT query_id, neighbor_id, cos, rk FROM ranked WHERE rk <= $annK""",
-    "tx_tokens" ->
+          SELECT query_id, neighbor_id, cos, rk FROM ranked WHERE rk <= $annK""")),
+    QueryDef("tx_tokens", txTokens, Sql(
       s"""SELECT doc_id, len(string_split(text, ' ')) AS ws_tokens,
                  len(regexp_extract_all(text, '${TextAnalysis.bpeTokenRegex}')) AS bpe_tokens
-         FROM documents""",
-    "tx_entropy" ->
+         FROM documents""")),
+    QueryDef("tx_entropy", txEntropy, Sql(
       // the micro-nat term replay: unnest → GROUP BY → per-symbol
       // round(−p·ln(p)·10⁶) summed as integers — order-invariant, so
       // the single-pass kernel and this explode land on one value
@@ -3960,8 +3963,8 @@ object DataOps {
                 CAST(te.dst AS BIGINT) AS distinct_tokens,
                 round(te.eu / 1000000.0, 6) AS token_entropy
          FROM documents d JOIN ce ON ce.doc_id = d.doc_id
-                          JOIN te ON te.doc_id = d.doc_id""",
-    "tx_quality" -> {
+                          JOIN te ON te.doc_id = d.doc_id""")),
+    QueryDef("tx_quality", txQuality, Sql {
       val sw = TextAnalysis.langProfiles.flatMap(_._2).distinct
         .map(w => s"'$w'").mkString("[", ", ", "]")
       s"""WITH d AS (SELECT doc_id, text, string_split(text, ' ') AS toks FROM documents)
@@ -3974,16 +3977,17 @@ object DataOps {
                    / len(toks) AS alpha_ratio,
                  len(regexp_extract_all(text, '[^a-zA-Z0-9\\s]')) AS punct_chars
           FROM d"""
-    },
-    "tx_hashvec" -> {
+    }),
+    QueryDef("tx_hashvec", txHashVec, Sql {
       val cols = (0 until TextAnalysis.hashVecDims)
         .map(j => s"CAST(sum(CASE WHEN (h % ${TextAnalysis.hashVecDims}) = $j THEN 1 ELSE 0 END) AS BIGINT) AS c$j")
         .mkString(", ")
       s"""WITH t AS (SELECT doc_id, unnest(string_split(text, ' ')) AS token FROM documents),
           hh AS (SELECT doc_id, CAST(('0x' || substr(md5(token), 1, 8)) AS BIGINT) AS h FROM t)
           SELECT doc_id, $cols FROM hh GROUP BY doc_id"""
-    },
-    "tx_langid" -> {
+    }),
+    QueryDef("tx_compress", txCompress, RowsOnly("zlib bitstream length has no SQL replay")),
+    QueryDef("tx_langid", txLangid, Sql {
       val hits = langHitsSql.map { case (l, e) => s"$e AS h_$l" }.mkString(", ")
       val langs = TextAnalysis.langProfiles.map(_._1)
       val best = s"greatest(${langs.map(l => s"h_$l").mkString(", ")})"
@@ -3992,8 +3996,8 @@ object DataOps {
           h AS (SELECT doc_id, $hits FROM d),
           b AS (SELECT doc_id, *, $best AS best FROM h)
           SELECT doc_id, CASE $cases ELSE 'und' END AS lang_pred FROM b"""
-    },
-    "tx_novelty" -> {
+    }),
+    QueryDef("tx_novelty", txNovelty, Sql {
       val n = noveltyN
       s"""WITH dt AS (SELECT doc_id, string_split(text, ' ') AS toks
                       FROM documents),
@@ -4008,8 +4012,8 @@ object DataOps {
                  CAST(sum(CASE WHEN fr.gdf = 1 THEN 1 ELSE 0 END) * 1000000
                       // count(*) AS BIGINT) AS novelty_ppm
           FROM sh JOIN fr USING (g) GROUP BY sh.doc_id"""
-    },
-    "tx_lang_confusion" -> {
+    }),
+    QueryDef("tx_lang_confusion", txLangConfusion, Sql {
       val hits = langHitsSql.map { case (l, e) => s"$e AS h_$l" }.mkString(", ")
       val langs = TextAnalysis.langProfiles.map(_._1)
       val best = s"greatest(${langs.map(l => s"h_$l").mkString(", ")})"
@@ -4021,8 +4025,8 @@ object DataOps {
           SELECT lang AS labeled, CASE $cases ELSE 'und' END AS predicted,
                  CAST(count(*) AS BIGINT) AS n
           FROM b GROUP BY 1, 2"""
-    },
-    "tx_fingerprint" -> {
+    }),
+    QueryDef("tx_fingerprint", txFingerprint, Sql {
       val p = TextAnalysis.fpPrime
       s"""WITH d AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
           pos AS (SELECT doc_id, unnest(list_transform(range(1, len(toks) + 1),
@@ -4033,22 +4037,22 @@ object DataOps {
                  md5(array_to_string(list_sort(list_distinct(toks)), ' ')) AS content_fp,
                  pfp.positional_fp
           FROM d JOIN pfp ON d.doc_id = pfp.doc_id"""
-    },
-    "tx_levenshtein" ->
+    }),
+    QueryDef("tx_levenshtein", txLevenshtein, Sql(
       s"""WITH $lshPairsCte
           SELECT id_a, id_b, levenshtein(ta.text, tb.text) AS edit_dist
           FROM pairs JOIN documents ta ON id_a = ta.doc_id
-                     JOIN documents tb ON id_b = tb.doc_id""",
-    "tx_clean" ->
+                     JOIN documents tb ON id_b = tb.doc_id""")),
+    QueryDef("tx_clean", txClean, Sql(
       """SELECT doc_id,
                 trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9\s]', ' ', 'g'),
                      '\s+', ' ', 'g')) AS clean_text
-         FROM documents""",
-    "tx_url_canon" ->
+         FROM documents""")),
+    QueryDef("tx_url_canon", txUrlCanon, Sql(
       s"""WITH $urlSynthCte,
           c8 AS (SELECT doc_id, url, ${urlCanonSqlExpr("url")} AS cu FROM u)
-          SELECT doc_id, url, ${sortParamsSqlExpr("cu")} AS canon_url FROM c8""",
-    "dd_url_dedup" -> {
+          SELECT doc_id, url, ${sortParamsSqlExpr("cu")} AS canon_url FROM c8""")),
+    QueryDef("dd_url_dedup", ddUrlDedup, Sql {
       val notBlocked = blockedDomains.map(d =>
         s"NOT (host = '$d' OR host LIKE '%.$d')").mkString(" AND ")
       s"""WITH $urlSynthCte,
@@ -4062,15 +4066,15 @@ object DataOps {
                  CAST(count(*) AS BIGINT) AS n_fetches
           FROM h WHERE $notBlocked
           GROUP BY canon_url"""
-    },
+    }),
     // the full extraction cascade replayed stage by stage (see
     // plans.HtmlExtract scaladoc): synth page → strip invisible
     // regions → block segmentation → per-block tag strip + link
     // count → entity decode → collapse → keep rule → ordered rejoin
-    "tx_extract_html" ->
+    QueryDef("tx_extract_html", txExtractHtml, Sql(
       s"""SELECT doc_id, main_text, n_blocks, kept_blocks, n_links
-          FROM ${htmlExtractSql("documents")} e""",
-    "ds_split" ->
+          FROM ${htmlExtractSql("documents")} e""")),
+    QueryDef("ds_split", dsSplit, Sql(
       """WITH s AS (SELECT doc_id,
                  CASE WHEN CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT)
                         % 100 < 80 THEN 'train'
@@ -4078,8 +4082,8 @@ object DataOps {
                         % 100 < 90 THEN 'val'
                       ELSE 'test' END AS split
           FROM documents)
-          SELECT split, count(*) AS n_docs, min(doc_id) AS min_id FROM s GROUP BY split""",
-    "dq_ref_integrity" ->
+          SELECT split, count(*) AS n_docs, min(doc_id) AS min_id FROM s GROUP BY split""")),
+    QueryDef("dq_ref_integrity", dqRefIntegrity, Sql(
       """WITH d AS (SELECT doc_id AS id FROM documents),
           e AS (SELECT vec_id AS id FROM embeddings),
           j AS (SELECT CASE WHEN d.id IS NOT NULL AND e.id IS NOT NULL
@@ -4088,8 +4092,8 @@ object DataOps {
                             ELSE 'vec_only' END AS status
                 FROM d FULL OUTER JOIN e ON d.id = e.id)
           SELECT status, CAST(count(*) AS BIGINT) AS n
-          FROM j GROUP BY status""",
-    "dq_profile" -> {
+          FROM j GROUP BY status""")),
+    QueryDef("dq_profile", dqProfile, Sql {
       val cols = Seq("l_quantity", "l_extendedprice", "l_discount", "l_partkey")
       cols.map { c =>
         s"""SELECT '$c' AS col_name, count($c) AS nonnull_cnt,
@@ -4098,21 +4102,17 @@ object DataOps {
                    count(DISTINCT $c) AS distinct_cnt
             FROM lineitem"""
       }.mkString(" UNION ALL ")
-    },
-    // Replays the container-building arithmetic (documentsAsImages) and
-    // the header parse together: dims from payload length, n_bytes =
-    // payload + fixed container overhead (PNG 57 B, JPEG 23 B), 8-bit
-    // RGB in both formats.
+    }),
     // gzip unpack replay (r20): inflate(deflate(text)) must be the
     // identity — the oracle emits the text directly, the engine earns
     // it through real gzip bytes; flags from the variant arithmetic
-    "mm_gunzip" ->
+    QueryDef("mm_gunzip", mmGunzip, Sql(
       """SELECT doc_id, doc_id % 2 = 0 AS was_gzip, TRUE AS ok, text
-         FROM documents""",
+         FROM documents""")),
     // MIME routing replay (r20): variant arithmetic + the planted
     // 4-byte head per posture (jpeg's SOI+SOF0, java gzip's fixed
     // 1f8b0800 header, the html doctype, the text's own first bytes)
-    "mm_sniff" ->
+    QueryDef("mm_sniff", mmSniff, Sql(
       """WITH d AS (SELECT doc_id, text, CAST(doc_id % 7 AS INT) AS v
                     FROM documents)
          SELECT doc_id,
@@ -4126,8 +4126,12 @@ object DataOps {
                      WHEN 4 THEN lower(hex(encode(substr(text, 1, 4))))
                      WHEN 5 THEN '1f8b0800'
                      ELSE '25504446' END AS head_hex
-         FROM d""",
-    "mm_decode" ->
+         FROM d""")),
+    // Replays the container-building arithmetic (documentsAsImages) and
+    // the header parse together: dims from payload length, n_bytes =
+    // payload + fixed container overhead (PNG 57 B, JPEG 23 B), 8-bit
+    // RGB in both formats.
+    QueryDef("mm_decode", mmDecode, Sql(
       """WITH d AS (SELECT doc_id, octet_length(encode(text)) AS len FROM documents)
          SELECT doc_id AS media_id,
                 CAST(len + CASE WHEN doc_id % 2 = 0 THEN 57 ELSE 23 END AS BIGINT) AS n_bytes,
@@ -4135,8 +4139,8 @@ object DataOps {
                 CAST((len * 7) % 480 + 1 AS INT) AS height,
                 3 AS channels, 8 AS bit_depth,
                 CASE WHEN doc_id % 2 = 0 THEN 'png' ELSE 'jpeg' END AS format
-         FROM d""",
-    "mm_audio" ->
+         FROM d""")),
+    QueryDef("mm_audio", mmAudio, Sql(
       """WITH d AS (SELECT doc_id, octet_length(encode(text)) AS len FROM documents),
           p AS (SELECT doc_id, len,
                        CAST(1 + doc_id % 2 AS INT) AS channels,
@@ -4149,12 +4153,12 @@ object DataOps {
                  channels, sample_rate, 16 AS bits_per_sample,
                  CAST(padded // block AS BIGINT) AS n_samples,
                  CAST((padded // block) * 1000 // sample_rate AS BIGINT) AS duration_ms
-          FROM q""",
+          FROM q""")),
     // PCM replay: ASCII corpus ⇒ byte values == char codes; samples =
     // little-endian byte pairs of the padded data chunk (hi byte <
     // 128, so s16 sign extension is the identity); Σv² stays integral,
     // the sqrt divides exact integers — IEEE-identical in both engines
-    "mm_audio_features" ->
+    QueryDef("mm_audio_features", mmAudioFeatures, Sql(
       """WITH d AS (SELECT doc_id, string_split(text, '') AS cs,
                     octet_length(encode(text)) AS len,
                     (1 + doc_id % 2) * 2 AS block FROM documents),
@@ -4187,14 +4191,14 @@ object DataOps {
                  COALESCE(f.rms_milli, 0) AS rms_milli,
                  COALESCE(f.peak, 0) AS peak,
                  COALESCE(f.mean_crossings, 0) AS mean_crossings
-          FROM p LEFT JOIN f ON f.doc_id = p.doc_id""",
-    "mm_frames" ->
+          FROM p LEFT JOIN f ON f.doc_id = p.doc_id""")),
+    QueryDef("mm_frames", mmFrames, Sql(
       s"""WITH d AS (SELECT doc_id, octet_length(encode(text)) AS n FROM documents)
           SELECT doc_id AS media_id,
                  unnest(range(0, n, ${Multimodal.batchSize})) AS frame_offset,
                  CAST(n AS BIGINT) AS n_bytes
-          FROM d""",
-    "mm_features" -> {
+          FROM d""")),
+    QueryDef("mm_features", mmFeatures, Sql {
       // corpus text is pure ASCII, so UTF-8 byte values == char codes
       val cols = (0 until 8)
         .map(j => s"CAST(sum(CASE WHEN b = $j THEN 1 ELSE 0 END) AS BIGINT) AS c$j")
@@ -4202,9 +4206,9 @@ object DataOps {
       s"""WITH ch AS (SELECT doc_id, unnest(string_split(text, '')) AS c FROM documents),
           h AS (SELECT doc_id, ord(c) % 8 AS b FROM ch)
           SELECT doc_id AS media_id, $cols FROM h GROUP BY doc_id"""
-    },
-    "mm_phash" -> s"WITH $phashCte SELECT media_id, dhash FROM ph",
-    "mm_image_neardups" ->
+    }),
+    QueryDef("mm_phash", mmPhash, Sql(s"WITH $phashCte SELECT media_id, dhash FROM ph")),
+    QueryDef("mm_image_neardups", mmImageNearDups, Sql(
       // deliberately the BRUTE-FORCE all-pairs form: oracle agreement
       // proves the 64/16 banding loses nothing at the Hamming-3 cutoff
       // on the live corpus, not just on spec fixtures
@@ -4212,8 +4216,8 @@ object DataOps {
           SELECT a.media_id AS id_a, b.media_id AS id_b,
                  CAST(bit_count(xor(a.dhash, b.dhash)) AS BIGINT) AS hamming
           FROM ph a JOIN ph b ON a.media_id < b.media_id
-          WHERE bit_count(xor(a.dhash, b.dhash)) <= ${Dedup.simhashMaxHamming}""",
-    "mm_resize" ->
+          WHERE bit_count(xor(a.dhash, b.dhash)) <= ${Dedup.simhashMaxHamming}""")),
+    QueryDef("mm_resize", mmResize, Sql(
       // NN gather replayed literally: source pixel index for output
       // (y, x, c) over a 16x12x3 buffer resized to 8x6 is
       // ((y*12//6)*16 + (x*16//8))*3 + c, and the buffer tiles the
@@ -4229,8 +4233,8 @@ object DataOps {
          SELECT doc_id AS media_id, 8 AS out_w, 6 AS out_h,
                 CAST(144 AS BIGINT) AS n_bytes,
                 CAST(sum(b) AS BIGINT) AS pix_sum
-         FROM v GROUP BY doc_id""",
-    "tx_pmi" -> s"""
+         FROM v GROUP BY doc_id""")),
+    QueryDef("tx_pmi", txPmi, Sql(s"""
       WITH t AS (SELECT string_split(text, ' ') AS toks FROM documents),
       uni AS (SELECT unnest(toks) AS w FROM t),
       uc AS (SELECT w, count(*) AS c FROM uni GROUP BY w),
@@ -4246,15 +4250,15 @@ object DataOps {
                   - ln(u1.c) - ln(u2.c)
                   + 2 * ln(tot.t_tokens)) * 1e6) AS BIGINT) AS pmi_micro
       FROM pc JOIN uc u1 ON u1.w = pc.w1
-              JOIN uc u2 ON u2.w = pc.w2, tot, pt""",
-    "tx_top_bigrams" ->
+              JOIN uc u2 ON u2.w = pc.w2, tot, pt""")),
+    QueryDef("tx_top_bigrams", txTopBigrams, Sql(
       """WITH d AS (SELECT string_split(text, ' ') AS toks FROM documents),
          b AS (SELECT unnest(list_transform(range(1, len(toks)),
                  i -> array_to_string(toks[i:i+1], ' '))) AS bigram FROM d),
          c AS (SELECT bigram, count(*) AS cnt FROM b GROUP BY bigram)
-         SELECT bigram, cnt FROM c ORDER BY cnt DESC, bigram LIMIT 20""",
-    "tx_rep_ngrams" -> repNgramsSql,
-    "tx_nb_quality" ->
+         SELECT bigram, cnt FROM c ORDER BY cnt DESC, bigram LIMIT 20""")),
+    QueryDef("tx_rep_ngrams", txRepNgrams, Sql(repNgramsSql)),
+    QueryDef("tx_nb_quality", txNbQuality, Sql(
       s"""WITH lbl AS (SELECT doc_id, text,
                  source IN ($lmRefSourcesSql) AS pos FROM documents),
           tok AS (SELECT doc_id, pos, unnest(string_split(text, ' ')) AS token
@@ -4279,18 +4283,18 @@ object DataOps {
                    AS nb_llr,
                  (coalesce(a.sum_llr, 0) + ln(p.p_docs) - ln(p.n_docs)) > 0
                    AS nb_label
-          FROM lbl l LEFT JOIN agg a USING (doc_id), pri p""",
-    "tx_bpe_merges" -> {
+          FROM lbl l LEFT JOIN agg a USING (doc_id), pri p""")),
+    QueryDef("tx_bpe_merges", txBpeMerges, Sql {
       val sel = (1 to bpeMerges)
         .map(r => s"SELECT $r AS merge_rank, l AS lhs, rr AS rhs, cnt AS freq FROM b$r")
         .mkString(" UNION ALL ")
       s"WITH $bpeRoundCtes $sel"
-    },
-    "tx_bpe_vocab" ->
+    }),
+    QueryDef("tx_bpe_vocab", txBpeVocab, Sql(
       s"""WITH $bpeRoundCtes
           SELECT word, freq, string_agg(sym, ' ' ORDER BY pos) AS encoding
-          FROM s$bpeMerges GROUP BY word, freq""",
-    "tx_bpe_encode" ->
+          FROM s$bpeMerges GROUP BY word, freq""")),
+    QueryDef("tx_bpe_encode", txBpeEncode, Sql(
       s"""WITH $bpeRoundCtes,
           vocab AS (SELECT word, string_agg(sym, ' ' ORDER BY pos) AS encoding
                     FROM s$bpeMerges GROUP BY word),
@@ -4299,9 +4303,9 @@ object DataOps {
                       unnest(range(1, len(toks) + 1)) t(i)),
           enc AS (SELECT doc_id, string_agg(encoding, ' ' ORDER BY wpos) AS tokens
                   FROM dw JOIN vocab USING (word) GROUP BY doc_id)
-          SELECT doc_id, len(string_split(tokens, ' ')) AS n_tokens, tokens FROM enc""",
+          SELECT doc_id, len(string_split(tokens, ' ')) AS n_tokens, tokens FROM enc""")),
     // the persisted-serving twin must produce the identical encoding
-    "tx_bpe_encode_persisted" ->
+    QueryDef("tx_bpe_encode_persisted", txBpeEncode, Sql(
       s"""WITH $bpeRoundCtes,
           vocab AS (SELECT word, string_agg(sym, ' ' ORDER BY pos) AS encoding
                     FROM s$bpeMerges GROUP BY word),
@@ -4310,8 +4314,8 @@ object DataOps {
                       unnest(range(1, len(toks) + 1)) t(i)),
           enc AS (SELECT doc_id, string_agg(encoding, ' ' ORDER BY wpos) AS tokens
                   FROM dw JOIN vocab USING (word) GROUP BY doc_id)
-          SELECT doc_id, len(string_split(tokens, ' ')) AS n_tokens, tokens FROM enc""",
-    "tx_bpe_coverage" ->
+          SELECT doc_id, len(string_split(tokens, ' ')) AS n_tokens, tokens FROM enc""")),
+    QueryDef("tx_bpe_coverage", txBpeCoverage, Sql(
       s"""WITH $bpeRoundCtes,
           vocab AS (SELECT word, string_agg(sym, ' ' ORDER BY pos) AS encoding
                     FROM s$bpeMerges GROUP BY word),
@@ -4332,8 +4336,8 @@ object DataOps {
                        / CAST(count(*) AS DOUBLE), 6) AS oov_distinct_rate,
                  round(sum(coalesce(n_sub, 1) * occ)
                        / CAST(sum(occ) AS DOUBLE), 6) AS tokens_per_word
-          FROM j""",
-    "dq_datacard" ->
+          FROM j""")),
+    QueryDef("dq_datacard", dqDatacard, Sql(
       s"""WITH rep AS ($repNgramsSql),
           lmsc AS ($lmScoreSql),
           dd AS (SELECT doc_id, source, lang, text,
@@ -4354,8 +4358,8 @@ object DataOps {
                   GROUP BY dd.source)
           SELECT a.source, a.n_docs, a.n_tokens, a.avg_doc_tokens,
                  a.exact_dup_rate, a.avg_top2_frac, a.avg_nll, t.top_lang
-          FROM agg a JOIN topl t ON a.source = t.source""",
-    "ds_chunk" -> {
+          FROM agg a JOIN topl t ON a.source = t.source""")),
+    QueryDef("ds_chunk", dsChunk, Sql {
       val c = chunkTokens; val st = chunkTokens - chunkOverlap
       s"""WITH d AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
           n AS (SELECT doc_id, toks,
@@ -4365,8 +4369,8 @@ object DataOps {
                  len(toks[k*$st+1 : k*$st+$c]) AS n_tokens,
                  array_to_string(toks[k*$st+1 : k*$st+$c], ' ') AS chunk_text
           FROM n, unnest(range(0, nc)) t(k)"""
-    },
-    "dd_snapshot_diff" ->
+    }),
+    QueryDef("dd_snapshot_diff", ddSnapshotDiff, Sql(
       """WITH prev AS (SELECT doc_id, text FROM documents),
           nxt AS (SELECT doc_id,
                     CASE WHEN doc_id % 10 = 1 THEN text || ' rev2' ELSE text END AS text
@@ -4381,8 +4385,8 @@ object DataOps {
                       WHEN mb IS NULL THEN 'removed'
                       WHEN ma <> mb THEN 'modified' END AS status
           FROM j
-          WHERE ma IS NULL OR mb IS NULL OR ma <> mb""",
-    "dd_paragraph" -> {
+          WHERE ma IS NULL OR mb IS NULL OR ma <> mb""")),
+    QueryDef("dd_paragraph", ddParagraph, Sql {
       val c = paraTokens
       s"""WITH d AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
           n AS (SELECT doc_id, toks, (len(toks) - 1) // $c + 1 AS np FROM d),
@@ -4403,8 +4407,8 @@ object DataOps {
                  coalesce(k.n_kept, 0) AS n_kept,
                  coalesce(k.clean_text, '') AS clean_text
           FROM n LEFT JOIN kept k ON n.doc_id = k.doc_id"""
-    },
-    "dd_paragraph_lines" ->
+    }),
+    QueryDef("dd_paragraph_lines", ddParagraphLines, Sql(
       s"""WITH d AS (SELECT doc_id, string_split(text, ' ') AS toks,
                             CAST(doc_id % 7 + 1 AS INT) AS k
                      FROM documents),
@@ -4434,9 +4438,9 @@ object DataOps {
           SELECT np.doc_id, np.n_paras,
                  coalesce(k.n_kept, 0) AS n_kept,
                  coalesce(k.clean_text, '') AS clean_text
-          FROM np LEFT JOIN kept k ON np.doc_id = k.doc_id""",
-    "ds_curate" -> curateVerdictSql,
-    "ds_pipeline" ->
+          FROM np LEFT JOIN kept k ON np.doc_id = k.doc_id""")),
+    QueryDef("ds_curate", dsCurate, Sql(curateVerdictSql)),
+    QueryDef("ds_pipeline", dsPipeline, Sql(
       s"""WITH cur AS ($curateVerdictSql),
           surv AS (SELECT dd.doc_id,
                      CAST(len(string_split(dd.text, ' ')) AS BIGINT) AS n_tokens
@@ -4451,15 +4455,15 @@ object DataOps {
                  count(*) AS n_docs,
                  CAST(sum(n_tokens) AS BIGINT) AS shard_tokens,
                  min(doc_id) AS first_doc, max(doc_id) AS last_doc
-          FROM c GROUP BY 1""",
-    "tx_lm_bigrams" ->
+          FROM c GROUP BY 1""")),
+    QueryDef("tx_lm_bigrams", txLmBigrams, Sql(
       s"""WITH r AS (SELECT string_split(text, ' ') AS toks FROM documents
                      WHERE source IN ($lmRefSourcesSql)),
           b AS (SELECT toks[i] AS ctx, toks[i+1] AS nxt
                 FROM r, unnest(range(1, greatest(len(toks), 1))) t(i))
-          SELECT ctx, nxt, count(*) AS c2 FROM b GROUP BY ctx, nxt""",
-    "tx_lm_score" -> lmScoreSql,
-    "tx_lm_contrast" ->
+          SELECT ctx, nxt, count(*) AS c2 FROM b GROUP BY ctx, nxt""")),
+    QueryDef("tx_lm_score", txLmScore, Sql(lmScoreSql)),
+    QueryDef("tx_lm_contrast", txLmContrast, Sql(
       s"""WITH d AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
           r AS (SELECT string_split(text, ' ') AS toks FROM documents
                 WHERE source IN ($lmRefSourcesSql)),
@@ -4488,139 +4492,5 @@ object DataOps {
                 FROM s GROUP BY doc_id)
           SELECT d.doc_id, coalesce(g.n_bigrams, 0) AS n_bigrams,
                  g.avg_nll_target, g.avg_nll_ref, g.log_importance
-          FROM d LEFT JOIN g ON d.doc_id = g.doc_id""")
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "dd_exact" -> ddExact _,
-    "dd_jaccard" -> ddJaccard _,
-    "dd_containment" -> ddContainment _,
-    "dd_repeated_spans" -> ddRepeatedSpans _,
-    "dd_trim_spans" -> ddTrimSpans _,
-    "dd_minhash_sig" -> ddMinhashSig _,
-    "dd_lsh_pairs" -> ddLshPairs _,
-    "dd_minhash_est" -> ddMinhashEst _,
-    "dd_simhash" -> ddSimhash _,
-    "dd_simhash_pairs" -> ddSimhashPairs _,
-    "sim_ivf_kmeans" -> simIvfKmeans _,
-    "sim_pq_codes" -> simPqCodes _,
-    "sim_pq_adc" -> simPqAdc _,
-    "sim_pq_recall" -> simPqRecall _, // Lloyd loop → oracle replays training
-    "sim_ivfpq_codes" -> simIvfPqCodes _,
-    "sim_ivfpq_adc" -> simIvfPqAdc _,
-    "sim_ivfpq_recall" -> simIvfPqRecall _, // IVFADC: coarse + residual-PQ replay
-    "sim_ivfpq_persisted" -> simIvfPqPersisted _, // serve from the stored model
-    "ds_rag" -> dsRag _, // chunk → hash-embed → LSH index → probe, one replayable chain
-    "ds_bm25" -> dsBm25 _,
-    "ds_dsir_weights" -> dsDsirWeights _, // DSIR importance weights (Xie 2023)
-    "ds_dsir_persisted" -> dsDsirPersisted _, // serving twin vs the stored model
-    "ds_dsir_stratified" -> dsDsirStratified _, // per-source quota selection
-    "ds_dsir_select" -> dsDsirSelect _, // DSIR top-k budget selection
-    "ds_hybrid_rrf" -> dsHybridRrf _,
-    "ds_rag_recall" -> dsRagRecall _, // retrieval quality vs exact full scan
-    "ds_source_cap" -> dsSourceCap _, // domain cap via the bounded O(k) aggregate
-    "ds_curriculum" -> dsCurriculum _, // ntile stages via the prefix-sum rank
-    "dd_embed_neardups" -> ddEmbedNearDups _,
-    "dd_embed_ivf" -> ddEmbedIvf _,
-    "dd_semdedup" -> ddSemdedup _,
-    "sim_embed_outliers" -> simEmbedOutliers _, // 3-sigma off-manifold gate
-    "dd_semdedup_capped" -> ddSemdedupCapped _, // skew-guarded cell sub-split
-    "sim_rp_ann" -> simRpAnn _,
-    "dd_corpus" -> ddCorpus _,
-    "dd_incremental" -> ddIncremental _,
-    "dd_incremental_persisted" -> ddIncrementalPersisted _,
-    "dd_incremental_simhash" -> ddIncrementalSimhash _,
-    "dd_incremental_embed" -> ddIncrementalEmbed _,
-    "dd_incremental_simhash_persisted" -> ddIncrementalSimhashPersisted _,
-    "dd_incremental_embed_persisted" -> ddIncrementalEmbedPersisted _,
-    "dd_incremental_semdedup" -> ddIncrementalSemdedup _, // dominance verdicts vs stored index
-    "ds_pack_shards" -> dsPackShards _,
-    "ds_shuffle" -> dsShuffle _,
-    "ds_pack_sequences" -> dsPackSequences _,
-    "ds_pack_fixed" -> dsPackFixed _,
-    "ds_length_buckets" -> dsLengthBuckets _,
-    "ds_mix" -> dsMix _,
-    "ds_mix_temperature" -> dsMixTemperature _,
-    "ds_bucketed_join" -> dsBucketedJoin _,
-    "sim_topk" -> simTopK _,
-    "sim_lsh_ann" -> simLshAnn _, // deterministic hyperplanes → DuckDB replays exactly
-    "sim_mutual_match" -> simMutualMatch _, // cross-corpus mutual-best alignment
-    "sim_margin_match" -> simMarginMatch _, // ratio-margin alignment (Artetxe 2019)
-    "sim_index_drift" -> simIndexDrift _,
-    "sim_hard_negatives" -> simHardNegatives _,
-    "sim_hard_negatives_ann" -> simHardNegativesAnn _,
-    "sim_lsh_multiprobe" -> simLshMultiProbe _,
-    "sim_lsh_multiprobe_for" -> simLshMultiProbeFor _,
-    "sim_lsh_multiprobe_r2" -> simLshMultiProbeR2 _,
-    "sim_ivf" -> simIvf _,
-    "sim_ann_persisted" -> simAnnPersisted _,
-    "sim_ivf_persisted" -> simIvfPersisted _,
-    "sim_ann_recall" -> simAnnRecall _,
-    "sim_ann_recall_planted" -> simAnnRecallPlanted _,
-    "tx_tokens" -> txTokens _,
-    "dq_profile" -> dqProfile _,
-    "dq_ref_integrity" -> dqRefIntegrity _, // corpus-vs-embeddings id audit
-    "tx_clean" -> txClean _,
-    "tx_extract_html" -> txExtractHtml _,
-    "tx_url_canon" -> txUrlCanon _,
-    "dd_url_dedup" -> ddUrlDedup _,
-    "ds_split" -> dsSplit _,
-    "ds_split_safe" -> dsSplitSafe _,
-    "dd_cluster_sizes" -> ddClusterSizes _,
-    "tx_levenshtein" -> txLevenshtein _,
-    "tx_hashvec" -> txHashVec _,
-    "tx_quality" -> txQuality _,
-    "tx_entropy" -> txEntropy _,
-    "tx_compress" -> txCompress _, // rows-only: zlib length has no SQL replay
-    "tx_langid" -> txLangid _,
-    "tx_novelty" -> txNovelty _, // n-gram uniqueness (diversity/memorization)
-    "tx_lang_confusion" -> txLangConfusion _, // classifier QA matrix
-    "tx_fingerprint" -> txFingerprint _,
-    "dd_cc" -> ddCc _,
-    "dd_corpus_cc" -> ddCorpusCc _,
-    "dd_corpus_cc_best" -> ddCorpusCcBest _,
-    "ds_sample" -> dsSample _,
-    "ds_contamination" -> dsContamination _,
-    "ds_decontaminate" -> dsDecontaminate _,
-    "ds_zorder" -> dsZorder _,
-    "tx_idf" -> txIdf _,
-    "tx_redact" -> txRedact _,
-    "sim_quantize" -> simQuantize _,
-    "sim_rp" -> simRandomProject _,
-    "mm_decode" -> mmDecode _,
-    "mm_sniff" -> mmSniff _, // fetch-boundary MIME routing (r20)
-    "mm_gunzip" -> mmGunzip _, // gzip unpack inverts the real deflate (r20)
-    "mm_audio" -> mmAudio _, // RIFF/WAVE chunk-walk metadata extraction
-    "mm_audio_features" -> mmAudioFeatures _, // PCM RMS/peak/mean-crossing
-    "tx_winnow" -> txWinnow _, // MOSS winnowing fingerprints (local coverage)
-    "ds_group_sample" -> dsGroupSample _, // RNG-free per-key uniform sample (KMV)
-    "ds_length_quantiles" -> dsLengthQuantiles _, // exact quantiles via counting sort
-    "ds_kmv_distinct" -> dsKmvDistinct _, // KMV distinct estimate, bounded state
-    "dd_winnow_pairs" -> ddWinnowPairs _, // copy detection via shared fingerprints
-    "dd_winnow_spans" -> ddWinnowSpans _, // offset-consistent copied regions
-    "mm_frames" -> mmFrames _,
-    "mm_features" -> mmFeatures _,
-    "mm_resize" -> mmResize _,
-    "mm_phash" -> mmPhash _,
-    "mm_image_neardups" -> mmImageNearDups _,
-    "tx_top_bigrams" -> txTopBigrams _,
-    "tx_pmi" -> txPmi _, // PMI phrase mining over adjacent token pairs
-    "tx_rep_ngrams" -> txRepNgrams _,
-    "tx_nb_quality" -> txNbQuality _,
-    "ds_curate" -> dsCurate _,
-    "ds_pipeline" -> dsPipeline _,
-    "ds_chunk" -> dsChunk _,
-    "dd_paragraph" -> ddParagraph _,
-    "dd_paragraph_lines" -> ddParagraphLines _,
-    "dd_snapshot_diff" -> ddSnapshotDiff _,
-    "dq_datacard" -> dqDatacard _,
-    "tx_bpe_merges" -> txBpeMerges _,
-    "tx_bpe_vocab" -> txBpeVocab _,
-    "tx_bpe_encode" -> txBpeEncode _,
-    "tx_bpe_encode_persisted" -> txBpeEncode _,
-    "tx_bpe_coverage" -> txBpeCoverage _,
-    "tx_lm_bigrams" -> txLmBigrams _,
-    "tx_lm_score" -> txLmScore _,
-    "tx_lm_contrast" -> txLmContrast _,
-    "p_alloc_greedy" -> allocGreedy _, // sequential-state op → rows-only check
-    "p_alloc_plan" -> allocGreedyPlan _) // custom Catalyst operator form
+          FROM d LEFT JOIN g ON d.doc_id = g.doc_id""")))
 }

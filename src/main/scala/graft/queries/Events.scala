@@ -594,25 +594,6 @@ object Events {
       .agg(countDistinct(col("user_id")).as("n_users"))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "ev_retention" -> evRetention _,
-    "ev_seq_examples" -> evSeqExamples _,
-    "ev_temporal_split" -> evTemporalSplit _,
-    "ev_window_agg" -> evWindowAgg _,
-    "ev_latest" -> evLatest _,
-    "ev_sessions" -> evSessions _,
-    "ev_asof" -> evAsof _,
-    "ev_range_join" -> evRangeJoin _,
-    "ev_funnel" -> evFunnel _,
-    "ev_pivot" -> evPivot _,
-    "ev_resample" -> evResample _,
-    "ev_scd2" -> evScd2 _,
-    "fc_linear_sales" -> fcLinearSales _,
-    "fc_seasonal_sales" -> fcSeasonalSales _,
-    "fc_anomaly_days" -> fcAnomalyDays _,
-    "fc_prophetlike_sales" -> fcProphetSales _,
-    "fc_prophetlike_multi" -> fcProphetMulti _)
-
   /** The ProphetLike oracle SQL: shared daily-series + solve CTEs,
     * then [[ProphetRel.predictLevels]] at future index `predictTi`
     * reading from a `solved` CTE (`solvedCte` lets the multi-step
@@ -671,8 +652,8 @@ object Events {
                             min(tsu) AS start_us, max(tsu) AS end_us
                      FROM sess GROUP BY user_id, session_id)"""
 
-  val oracleSql: Map[String, String] = Map(
-    "ev_retention" ->
+  val registry: Seq[QueryDef] = Seq(
+    QueryDef("ev_retention", evRetention, Sql(
       s"""WITH e AS (SELECT user_id, epoch_us(ts) // $weekUs AS week FROM events),
           cohort AS (SELECT user_id, min(week) AS cohort_week
                      FROM e GROUP BY user_id),
@@ -680,8 +661,8 @@ object Events {
           SELECT c.cohort_week, a.week,
                  CAST(count(DISTINCT a.user_id) AS BIGINT) AS n_users
           FROM active a JOIN cohort c ON c.user_id = a.user_id
-          GROUP BY 1, 2""",
-    "ev_temporal_split" ->
+          GROUP BY 1, 2""")),
+    QueryDef("ev_temporal_split", evTemporalSplit, Sql(
       """WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS tsu FROM events),
          r AS (SELECT user_id, event_id,
                  row_number() OVER (PARTITION BY user_id
@@ -691,8 +672,8 @@ object Events {
                 CASE WHEN rev = 1 THEN 'test'
                      WHEN rev = 2 THEN 'val'
                      ELSE 'train' END AS split
-         FROM r""",
-    "ev_seq_examples" -> {
+         FROM r""")),
+    QueryDef("ev_seq_examples", evSeqExamples, Sql {
       val lagCols = (seqCtx to 1 by -1)
         .map(i => s"lag(event_type, $i) OVER w AS l$i").mkString(", ")
       val joined = (seqCtx to 1 by -1).map(i => s"l$i").mkString(" || ' ' || ")
@@ -704,8 +685,8 @@ object Events {
           SELECT user_id, event_id, $joined AS input_seq,
                  event_type AS label
           FROM lagged WHERE l$seqCtx IS NOT NULL"""
-    },
-    "ev_scd2" ->
+    }),
+    QueryDef("ev_scd2", evScd2, Sql(
       // lead() closes each interval; the current row is the one with
       // no successor — same (tsu, event_id) tie order as the Spark side
       """WITH log AS (SELECT user_id, epoch_us(ts) AS tsu, event_id, event_type FROM events),
@@ -716,18 +697,18 @@ object Events {
                  max(CASE WHEN valid_to IS NULL THEN event_type END) AS current_state,
                  CAST(min(tsu) AS BIGINT) AS first_seen_us,
                  CAST(max(CASE WHEN valid_to IS NULL THEN tsu END) AS BIGINT) AS current_since_us
-          FROM d GROUP BY user_id""",
-    "ev_range_join" ->
+          FROM d GROUP BY user_id""")),
+    QueryDef("ev_range_join", evRangeJoin, Sql(
       s"""WITH $sessionsCte
           SELECT p.event_id, p.user_id, s.session_id, epoch_us(p.ts) AS tsu
           FROM events p JOIN sessions s
             ON p.user_id = s.user_id
-           AND epoch_us(p.ts) BETWEEN s.start_us AND s.end_us""",
-    "ev_window_agg" ->
+           AND epoch_us(p.ts) BETWEEN s.start_us AND s.end_us""")),
+    QueryDef("ev_window_agg", evWindowAgg, Sql(
       """SELECT CAST(time_bucket(INTERVAL '5 minutes', ts) AS TIMESTAMP) AS window_start,
                 event_type, count(*) AS n_events, round(sum(value), 2) AS sum_value
-         FROM events GROUP BY 1, 2""",
-    "ev_sessions" ->
+         FROM events GROUP BY 1, 2""")),
+    QueryDef("ev_sessions", evSessions, Sql(
       s"""WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS tsu FROM events),
           flagged AS (SELECT user_id, event_id, tsu,
                  CASE WHEN tsu - lag(tsu) OVER w > ${sessionGapUs}
@@ -739,8 +720,8 @@ object Events {
                  FROM flagged)
           SELECT user_id, session_id, count(*) AS n_events,
                  min(tsu) AS start_us, max(tsu) AS end_us
-          FROM sess GROUP BY user_id, session_id""",
-    "ev_funnel" ->
+          FROM sess GROUP BY user_id, session_id""")),
+    QueryDef("ev_funnel", evFunnel, Sql(
       """WITH e AS (SELECT user_id, event_type, epoch_us(ts) AS tsu FROM events),
           v AS (SELECT user_id, min(tsu) AS t_view FROM e
                 WHERE event_type = 'view' GROUP BY user_id),
@@ -750,22 +731,22 @@ object Events {
                 WHERE event_type = 'purchase' AND tsu > t_click GROUP BY e.user_id)
           SELECT '1_view' AS stage, count(*) AS n_users FROM v
           UNION ALL SELECT '2_click', count(*) FROM c
-          UNION ALL SELECT '3_purchase', count(*) FROM p""",
-    "ev_pivot" -> {
+          UNION ALL SELECT '3_purchase', count(*) FROM p""")),
+    QueryDef("ev_pivot", evPivot, Sql {
       val cols = eventTypes.map(t =>
         s"CAST(sum(CASE WHEN event_type = '$t' THEN 1 ELSE 0 END) AS BIGINT) AS $t")
         .mkString(", ")
       s"""SELECT CAST(date_trunc('day', ts) AS DATE) AS day, $cols
           FROM events GROUP BY 1"""
-    },
-    "ev_latest" ->
+    }),
+    QueryDef("ev_latest", evLatest, Sql(
       """SELECT user_id, tsu AS last_tsu, event_id AS last_event_id,
                 event_type AS last_type, value AS last_value
          FROM (SELECT user_id, epoch_us(ts) AS tsu, event_id, event_type, value,
                       row_number() OVER (PARTITION BY user_id
                         ORDER BY epoch_us(ts) DESC, event_id DESC) AS rn
-               FROM events) WHERE rn = 1""",
-    "ev_resample" ->
+               FROM events) WHERE rn = 1""")),
+    QueryDef("ev_resample", evResample, Sql(
       s"""WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS tsu, value,
                  epoch_us(ts) // $resampleBucketUs AS bucket FROM events),
           lastobs AS (SELECT user_id, bucket, value AS obs FROM (
@@ -781,14 +762,14 @@ object Events {
                    ORDER BY s.bucket ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
                    AS value_ffill
           FROM spine s LEFT JOIN lastobs l
-            ON s.user_id = l.user_id AND s.bucket = l.bucket""",
-    "ev_asof" ->
+            ON s.user_id = l.user_id AND s.bucket = l.bucket""")),
+    QueryDef("ev_asof", evAsof, Sql(
       """SELECT l.event_id, l.user_id, epoch_us(l.ts) AS tsu,
                 epoch_us(r.ts) AS last_err_ts
          FROM events l ASOF LEFT JOIN
               (SELECT user_id, ts FROM events WHERE event_type = 'error') r
-           ON l.user_id = r.user_id AND l.ts >= r.ts""",
-    "fc_linear_sales" ->
+           ON l.user_id = r.user_id AND l.ts >= r.ts""")),
+    QueryDef("fc_linear_sales", fcLinearSales, Sql(
       """WITH daily AS (SELECT CAST(o_orderdate AS DATE) AS day, sum(o_totalprice) AS y
                         FROM orders GROUP BY 1),
           d2 AS (SELECT CAST(date_diff('day', DATE '1970-01-01', day) AS DOUBLE) AS x, y, day
@@ -797,19 +778,19 @@ object Events {
                        max(x) AS mx, max(day) AS last_day FROM d2)
           SELECT CAST(last_day + INTERVAL 1 DAY AS DATE) AS forecast_date,
                  round(ic + slope * (mx + 1), 2) AS forecasted_sales
-          FROM f""",
-    "fc_prophetlike_sales" -> prophetSql(
+          FROM f""")),
+    QueryDef("fc_prophetlike_sales", fcProphetSales, Sql(prophetSql(
       predictTi = "n_days", solvedCte = "solved",
       finalSelect = """SELECT CAST(last_day + INTERVAL 1 DAY AS DATE)
-                         AS forecast_date, forecast_micro"""),
-    "fc_prophetlike_multi" -> prophetSql(
+                         AS forecast_date, forecast_micro"""))),
+    QueryDef("fc_prophetlike_multi", fcProphetMulti, Sql(prophetSql(
       predictTi = "(n_days + j - 1)",
       solvedCte = s"""spine AS (SELECT CAST(range AS BIGINT) AS j
                                 FROM range(1, ${prophetHorizon + 1})),
           solved AS (SELECT * FROM solved0 CROSS JOIN spine)""",
       finalSelect = """SELECT CAST(last_day + CAST(j AS INT) AS DATE)
-                         AS forecast_date, j AS step, forecast_micro"""),
-    "fc_seasonal_sales" ->
+                         AS forecast_date, j AS step, forecast_micro"""))),
+    QueryDef("fc_seasonal_sales", fcSeasonalSales, Sql(
       s"""WITH daily AS (SELECT CAST(o_orderdate AS DATE) AS day,
                                 sum(o_totalprice) AS y
                          FROM orders GROUP BY 1),
@@ -820,8 +801,8 @@ object Events {
                  round(coalesce(max(CASE WHEN rn = $seasonalPeriod THEN y END),
                                 max(CASE WHEN rn = 1 THEN y END)), 2)
                    AS forecasted_sales
-          FROM r""",
-    "fc_anomaly_days" ->
+          FROM r""")),
+    QueryDef("fc_anomaly_days", fcAnomalyDays, Sql(
       s"""WITH daily AS (SELECT CAST(o_orderdate AS DATE) AS day,
                   CAST(round(sum(o_totalprice) * 100) AS BIGINT) // 100 AS y
                   FROM orders GROUP BY 1),
@@ -836,5 +817,5 @@ object Events {
                   ($anomalyWindowDays*y - s)*($anomalyWindowDays*y - s)
                     > ${anomalySigma * anomalySigma}*($anomalyWindowDays*q - s*s))
                    AS is_anomaly
-          FROM w""")
+          FROM w""")))
 }

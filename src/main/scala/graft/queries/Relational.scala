@@ -423,47 +423,8 @@ object Relational {
       .orderBy(col("revenue").desc, col("c_custkey"))
       .limit(20)
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q26_shipping_priority" -> q26ShippingPriority _,
-    "q27_returned_items" -> q27ReturnedItems _,
-    "q19_salted_join" -> q19SaltedJoin _,
-    "q20_approx_distinct" -> q20ApproxDistinct _,
-    "q25_percentile" -> q25Percentile _,
-    "q21_stats" -> q21Stats _,
-    "q22_lead_lag" -> q22LeadLag _,
-    "q23_range_frame" -> q23RangeFrame _,
-    "q24_cube" -> q24Cube _,
-    "q1_filter_project" -> q1FilterProject _,
-    "q2_join" -> q2Join _,
-    "q3_left_join_count" -> q3LeftJoinCount _,
-    "q4_star_join" -> q4StarJoin _,
-    "q5_pricing_summary" -> q5PricingSummary _,
-    "q6_count_distinct" -> q6CountDistinct _,
-    "q7_global_agg" -> q7GlobalAgg _,
-    "q8_derived_round" -> q8DerivedRound _,
-    "q9_date_bucket" -> q9DateBucket _,
-    "q10_union" -> q10Union _,
-    "q11_sort" -> q11Sort _,
-    "q12_explode" -> q12Explode _,
-    "q13_json" -> q13Json _,
-    "q14_window_running" -> q14WindowRunning _,
-    "q15_window_rank" -> q15WindowRank _,
-    "q16_semi" -> q16Semi _,
-    "q17_anti" -> q17Anti _,
-    "q18_rollup" -> q18Rollup _,
-    "q28_grouping_sets" -> q28GroupingSets _,
-    "q29_weighted_avg" -> q29WeightedAvg _,
-    "q30_exists" -> q30Exists _,
-    "q31_full_outer" -> q31FullOuter _,
-    "q32_setops" -> q32SetOps _,
-    "q33_window_family" -> q33WindowFamily _,
-    "q34_approx_percentile" -> q34ApproxPercentile _,
-    "q35_unpivot" -> q35Unpivot _,
-    "q36_bloom_prune" -> q36BloomPrune _,
-    "q37_topk_agg" -> q37TopKAgg _)
-
-  val oracleSql: Map[String, String] = Map(
-    "q26_shipping_priority" ->
+  val registry: Seq[QueryDef] = Seq(
+    QueryDef("q26_shipping_priority", q26ShippingPriority, Sql(
       """SELECT l_orderkey, o_orderdate, o_orderpriority,
                 sum(CAST(round(l_extendedprice * (1 - l_discount) * 100, 0) AS BIGINT)) / 100.0
                   AS revenue
@@ -474,8 +435,8 @@ object Relational {
            AND o_orderdate < TIMESTAMP '1996-07-01 00:00:00'
            AND c_mktsegment = 'BUILDING'
          GROUP BY l_orderkey, o_orderdate, o_orderpriority
-         ORDER BY revenue DESC, l_orderkey LIMIT 10""",
-    "q27_returned_items" ->
+         ORDER BY revenue DESC, l_orderkey LIMIT 10""")),
+    QueryDef("q27_returned_items", q27ReturnedItems, Sql(
       """SELECT c_custkey, c_name, c_mktsegment,
                 sum(CAST(round(l_extendedprice * (1 - l_discount) * 100, 0) AS BIGINT)) / 100.0
                   AS revenue,
@@ -485,96 +446,96 @@ object Relational {
          JOIN customer ON o_custkey = c_custkey
          WHERE l_returnflag = 'R'
          GROUP BY c_custkey, c_name, c_mktsegment
-         ORDER BY revenue DESC, c_custkey LIMIT 20""",
-    "q19_salted_join" ->
+         ORDER BY revenue DESC, c_custkey LIMIT 20""")),
+    QueryDef("q19_salted_join", q19SaltedJoin, Sql(
       """SELECT o_orderpriority, count(*) AS line_cnt,
                 round(sum(l_extendedprice), 2) AS sum_price
          FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-         GROUP BY o_orderpriority""",
+         GROUP BY o_orderpriority""")),
     // the HLL estimate is engine-specific; the contract is the
     // in-plan exact-twin bound, which the oracle asserts always holds
-    "q20_approx_distinct" ->
+    QueryDef("q20_approx_distinct", q20ApproxDistinct, Sql(
       """SELECT o_orderpriority,
                 CAST(count(DISTINCT o_custkey) AS BIGINT) AS exact_custs,
                 CAST(1 AS BIGINT) AS approx_ok
-         FROM orders GROUP BY o_orderpriority""",
+         FROM orders GROUP BY o_orderpriority""")),
     // same contract for the quantile sketch: both rank brackets hold
-    "q34_approx_percentile" ->
+    QueryDef("q34_approx_percentile", q34ApproxPercentile, Sql(
       """SELECT l_returnflag, CAST(count(*) AS BIGINT) AS n_rows,
                 CAST(1 AS BIGINT) AS p50_in_bracket,
                 CAST(1 AS BIGINT) AS p95_in_bracket
-         FROM lineitem GROUP BY l_returnflag""",
-    "q25_percentile" ->
+         FROM lineitem GROUP BY l_returnflag""")),
+    QueryDef("q25_percentile", q25Percentile, Sql(
       """SELECT o_orderpriority,
                 round(percentile_cont(0.5) WITHIN GROUP (ORDER BY o_totalprice), 4)
                   AS p50_price,
                 round(percentile_cont(0.9) WITHIN GROUP (ORDER BY o_totalprice), 4)
                   AS p90_price
-         FROM orders GROUP BY o_orderpriority""",
-    "q21_stats" ->
+         FROM orders GROUP BY o_orderpriority""")),
+    QueryDef("q21_stats", q21Stats, Sql(
       """SELECT l_returnflag, round(stddev_pop(l_quantity), 6) AS sd_qty,
                 round(var_pop(l_discount), 6) AS var_disc,
                 round(corr(l_quantity, l_extendedprice), 6) AS qty_price_corr
-         FROM lineitem GROUP BY l_returnflag""",
-    "q22_lead_lag" ->
+         FROM lineitem GROUP BY l_returnflag""")),
+    QueryDef("q22_lead_lag", q22LeadLag, Sql(
       """SELECT o_custkey, o_orderkey,
                 date_diff('day', lag(CAST(o_orderdate AS DATE)) OVER w,
                           CAST(o_orderdate AS DATE)) AS days_since_prev,
                 lead(o_orderkey) OVER w AS next_orderkey
          FROM orders WINDOW w AS (PARTITION BY o_custkey
-                                  ORDER BY o_orderdate, o_orderkey)""",
-    "q23_range_frame" ->
+                                  ORDER BY o_orderdate, o_orderkey)""")),
+    QueryDef("q23_range_frame", q23RangeFrame, Sql(
       """SELECT o_custkey, o_orderkey,
                 date_diff('day', DATE '1970-01-01', CAST(o_orderdate AS DATE)) AS day_idx,
                 round(sum(o_totalprice) OVER (
                   PARTITION BY o_custkey
                   ORDER BY date_diff('day', DATE '1970-01-01', CAST(o_orderdate AS DATE))
                   RANGE BETWEEN 6 PRECEDING AND CURRENT ROW), 2) AS trailing_7d_spend
-         FROM orders""",
-    "q24_cube" ->
+         FROM orders""")),
+    QueryDef("q24_cube", q24Cube, Sql(
       """SELECT l_returnflag, l_linestatus, round(sum(l_quantity), 2) AS sum_qty,
                 count(*) AS cnt
-         FROM lineitem GROUP BY CUBE (l_returnflag, l_linestatus)""",
-    "q1_filter_project" ->
+         FROM lineitem GROUP BY CUBE (l_returnflag, l_linestatus)""")),
+    QueryDef("q1_filter_project", q1FilterProject, Sql(
       """SELECT l_orderkey, l_partkey, l_linenumber, l_quantity
-         FROM lineitem WHERE l_quantity > 25""",
-    "q2_join" ->
+         FROM lineitem WHERE l_quantity > 25""")),
+    QueryDef("q2_join", q2Join, Sql(
       """SELECT o_orderkey, c_name, o_totalprice
-         FROM orders JOIN customer ON o_custkey = c_custkey""",
-    "q3_left_join_count" ->
+         FROM orders JOIN customer ON o_custkey = c_custkey""")),
+    QueryDef("q3_left_join_count", q3LeftJoinCount, Sql(
       """SELECT c_custkey, count(o_orderkey) AS order_cnt
          FROM customer LEFT JOIN orders ON c_custkey = o_custkey
-         GROUP BY c_custkey""",
-    "q4_star_join" ->
+         GROUP BY c_custkey""")),
+    QueryDef("q4_star_join", q4StarJoin, Sql(
       """SELECT p_brand, s_name, round(sum(l_extendedprice), 2) AS sum_price,
                 count(*) AS line_cnt
          FROM lineitem
          JOIN part ON l_partkey = p_partkey
          JOIN supplier ON l_suppkey = s_suppkey
-         GROUP BY p_brand, s_name""",
-    "q5_pricing_summary" ->
+         GROUP BY p_brand, s_name""")),
+    QueryDef("q5_pricing_summary", q5PricingSummary, Sql(
       """SELECT l_returnflag, l_linestatus,
                 round(sum(l_quantity), 2) AS sum_qty,
                 round(sum(l_extendedprice), 2) AS sum_base_price,
                 round(avg(l_discount), 6) AS avg_disc,
                 count(*) AS count_order
-         FROM lineitem GROUP BY l_returnflag, l_linestatus""",
-    "q6_count_distinct" ->
+         FROM lineitem GROUP BY l_returnflag, l_linestatus""")),
+    QueryDef("q6_count_distinct", q6CountDistinct, Sql(
       """SELECT o_orderpriority, count(DISTINCT o_custkey) AS distinct_custs
-         FROM orders GROUP BY o_orderpriority""",
-    "q7_global_agg" ->
+         FROM orders GROUP BY o_orderpriority""")),
+    QueryDef("q7_global_agg", q7GlobalAgg, Sql(
       """SELECT round(sum(o_totalprice), 2) AS total_price, count(*) AS order_cnt
-         FROM orders""",
-    "q8_derived_round" ->
+         FROM orders""")),
+    QueryDef("q8_derived_round", q8DerivedRound, Sql(
       """SELECT l_orderkey,
                 sum(CAST(round(l_extendedprice * (1 - l_discount) * 100, 0) AS BIGINT)) / 100.0
                   AS revenue
-         FROM lineitem GROUP BY l_orderkey""",
-    "q9_date_bucket" ->
+         FROM lineitem GROUP BY l_orderkey""")),
+    QueryDef("q9_date_bucket", q9DateBucket, Sql(
       """SELECT CAST(o_orderdate AS DATE) AS order_day, count(*) AS order_cnt,
                 round(sum(o_totalprice), 2) AS day_sales
-         FROM orders GROUP BY CAST(o_orderdate AS DATE)""",
-    "q10_union" ->
+         FROM orders GROUP BY CAST(o_orderdate AS DATE)""")),
+    QueryDef("q10_union", q10Union, Sql(
       """SELECT l_returnflag, l_linestatus, round(sum(l_quantity), 2) AS sum_qty,
                 count(*) AS count_order
          FROM lineitem WHERE l_linestatus = 'F'
@@ -583,62 +544,62 @@ object Relational {
          SELECT l_returnflag, l_linestatus, round(sum(l_quantity), 2) AS sum_qty,
                 count(*) AS count_order
          FROM lineitem WHERE l_linestatus <> 'F'
-         GROUP BY l_returnflag, l_linestatus""",
-    "q11_sort" ->
+         GROUP BY l_returnflag, l_linestatus""")),
+    QueryDef("q11_sort", q11Sort, Sql(
       """SELECT l_orderkey, l_linenumber, l_partkey, l_quantity, l_shipdate
-         FROM lineitem ORDER BY l_orderkey, l_linenumber""",
-    "q12_explode" ->
+         FROM lineitem ORDER BY l_orderkey, l_linenumber""")),
+    QueryDef("q12_explode", q12Explode, Sql(
       """SELECT t.token, count(*) AS cnt
          FROM (SELECT unnest(string_split(text, ' ')) AS token FROM documents) t
-         GROUP BY t.token""",
-    "q13_json" ->
-      """SELECT event_id, CAST(props->>'k' AS BIGINT) AS k_val FROM events""",
-    "q14_window_running" ->
+         GROUP BY t.token""")),
+    QueryDef("q13_json", q13Json, Sql(
+      """SELECT event_id, CAST(props->>'k' AS BIGINT) AS k_val FROM events""")),
+    QueryDef("q14_window_running", q14WindowRunning, Sql(
       """SELECT o_custkey, o_orderkey,
                 round(sum(o_totalprice) OVER (
                   PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey), 2)
                 AS running_spend
-         FROM orders""",
-    "q15_window_rank" ->
+         FROM orders""")),
+    QueryDef("q15_window_rank", q15WindowRank, Sql(
       """SELECT o_custkey, o_orderkey, o_totalprice, rk FROM (
            SELECT o_custkey, o_orderkey, o_totalprice,
                   rank() OVER (PARTITION BY o_custkey
                                ORDER BY o_totalprice DESC, o_orderkey) AS rk
-           FROM orders) WHERE rk <= 3""",
-    "q16_semi" ->
+           FROM orders) WHERE rk <= 3""")),
+    QueryDef("q16_semi", q16Semi, Sql(
       """SELECT c_custkey, c_name FROM customer c
-         WHERE EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)""",
-    "q17_anti" ->
+         WHERE EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)""")),
+    QueryDef("q17_anti", q17Anti, Sql(
       """SELECT c_custkey, c_name FROM customer c
-         WHERE NOT EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)""",
-    "q18_rollup" ->
+         WHERE NOT EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)""")),
+    QueryDef("q18_rollup", q18Rollup, Sql(
       """SELECT l_returnflag, l_linestatus, round(sum(l_quantity), 2) AS sum_qty,
                 count(*) AS cnt
-         FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)""",
-    "q28_grouping_sets" ->
+         FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)""")),
+    QueryDef("q28_grouping_sets", q28GroupingSets, Sql(
       """SELECT l_returnflag, l_linestatus, round(sum(l_quantity), 2) AS sum_qty,
                 count(*) AS cnt
          FROM lineitem
          GROUP BY GROUPING SETS ((l_returnflag, l_linestatus),
-                                 (l_returnflag), (l_linestatus))""",
-    "q29_weighted_avg" ->
+                                 (l_returnflag), (l_linestatus))""")),
+    QueryDef("q29_weighted_avg", q29WeightedAvg, Sql(
       """SELECT l_returnflag,
                 round(sum(CAST(round(l_extendedprice * 100, 0) AS BIGINT)
                           * CAST(l_quantity AS BIGINT))
                       / (100.0 * sum(CAST(l_quantity AS BIGINT))), 6) AS w_avg_price
-         FROM lineitem GROUP BY l_returnflag""",
-    "q30_exists" ->
+         FROM lineitem GROUP BY l_returnflag""")),
+    QueryDef("q30_exists", q30Exists, Sql(
       """SELECT o_orderpriority, count(*) AS order_count
          FROM orders
          WHERE EXISTS (SELECT 1 FROM lineitem
                        WHERE l_orderkey = o_orderkey AND l_shipdate > o_orderdate)
-         GROUP BY o_orderpriority""",
-    "q31_full_outer" ->
+         GROUP BY o_orderpriority""")),
+    QueryDef("q31_full_outer", q31FullOuter, Sql(
       """SELECT coalesce(c.c_custkey, og.o_custkey) AS custkey, c.c_name, og.n_orders
          FROM customer c FULL OUTER JOIN
               (SELECT o_custkey, count(*) AS n_orders FROM orders GROUP BY o_custkey) og
-           ON c.c_custkey = og.o_custkey""",
-    "q32_setops" ->
+           ON c.c_custkey = og.o_custkey""")),
+    QueryDef("q32_setops", q32SetOps, Sql(
       """SELECT 'intersect' AS op, l_partkey FROM
            (SELECT l_partkey FROM lineitem WHERE l_returnflag = 'A'
             INTERSECT
@@ -647,33 +608,33 @@ object Relational {
          SELECT 'except', l_partkey FROM
            (SELECT l_partkey FROM lineitem WHERE l_returnflag = 'A'
             EXCEPT
-            SELECT l_partkey FROM lineitem WHERE l_returnflag = 'R')""",
-    "q33_window_family" ->
+            SELECT l_partkey FROM lineitem WHERE l_returnflag = 'R')""")),
+    QueryDef("q33_window_family", q33WindowFamily, Sql(
       """SELECT l_returnflag, l_orderkey, l_partkey, l_linenumber,
                 CAST(ntile(4) OVER w AS BIGINT) AS nt,
                 round(cume_dist() OVER w, 6) AS cd,
                 round(percent_rank() OVER w, 6) AS pr
          FROM lineitem
          WINDOW w AS (PARTITION BY l_returnflag
-                      ORDER BY l_orderkey, l_partkey, l_linenumber)""",
-    "q35_unpivot" ->
+                      ORDER BY l_orderkey, l_partkey, l_linenumber)""")),
+    QueryDef("q35_unpivot", q35Unpivot, Sql(
       """WITH w AS (SELECT l_returnflag, round(sum(l_quantity), 2) AS sum_qty,
                            round(sum(l_extendedprice), 2) AS sum_price
                     FROM lineitem GROUP BY l_returnflag)
          SELECT l_returnflag, 'sum_qty' AS metric, sum_qty AS value FROM w
          UNION ALL
-         SELECT l_returnflag, 'sum_price', sum_price FROM w""",
+         SELECT l_returnflag, 'sum_price', sum_price FROM w""")),
     // the bloom prune is row-invisible (no false negatives; false
     // positives die in the join) — the oracle is the plain join
-    "q36_bloom_prune" ->
+    QueryDef("q36_bloom_prune", q36BloomPrune, Sql(
       """SELECT o_orderpriority, count(*) AS n_lines,
                 sum(CAST(round(l_extendedprice * 100, 0) AS BIGINT)) / 100.0 AS revenue
          FROM lineitem JOIN orders ON l_orderkey = o_orderkey
          WHERE o_totalprice > 400000
-         GROUP BY o_orderpriority""",
+         GROUP BY o_orderpriority""")),
     // the bounded-buffer aggregate is row_number-exact by construction
     // ((cents DESC, o_orderkey ASC), deterministic ties)
-    "q37_topk_agg" ->
+    QueryDef("q37_topk_agg", q37TopKAgg, Sql(
       """WITH r AS (SELECT o_custkey, o_orderkey,
                            CAST(round(o_totalprice * 100, 0) AS BIGINT) AS cents,
                            row_number() OVER (PARTITION BY o_custkey
@@ -681,5 +642,5 @@ object Relational {
                                       o_orderkey) AS rk
                     FROM orders)
          SELECT o_custkey, rk, cents / 100.0 AS totalprice, o_orderkey
-         FROM r WHERE rk <= 3""")
+         FROM r WHERE rk <= 3""")))
 }

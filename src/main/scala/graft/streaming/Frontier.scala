@@ -26,7 +26,7 @@ import org.apache.spark.sql.functions.{coalesce, col, lit, row_number}
   *  - the fold NEVER includes the in-flight batch (only ids strictly
   *    below it), so a foreachBatch retry across the settle boundary
   *    sees exactly the admitted state the first attempt saw — the
-  *    frontier must not eat its own producer (BatchLayout's replay
+  *    frontier must not eat its own producer ([[scopePaths]]' replay
   *    rule, lifted to the settled layout);
   *  - the dir NAME carries the folded-through id, so readers ignore
   *    any batch dir with id ≤ m even before it is garbage-collected —
@@ -142,8 +142,23 @@ object Frontier {
       l.deltas.collect { case (id, p) if id != batchId => p.toString })
   }
 
-  /** [[scopeParts]] flattened to one path list (frontier first).
-    * None ⇒ nothing admitted yet. */
+  /** [[scopeParts]] flattened to one path list (frontier first): the
+    * admitted-state paths every foreachBatch pipeline here reads for
+    * batch `batchId`. None ⇒ nothing admitted yet (first batch of the
+    * run).
+    *
+    * Why not a bare `batch_*` glob: foreachBatch is at-least-once, and
+    * a RETRY of batch N re-runs after batch N's (possibly partial)
+    * output already landed. A glob that includes `batch_N` feeds the
+    * batch's own previous output into its "already admitted / already
+    * settled" scope — a keep-first anti-join then empties the batch on
+    * replay (the admitted state eats its own producer), and a monotone
+    * boundary probe rejects its own keys. Excluding the CURRENT batch
+    * id restores true replay idempotence: the retry sees exactly the
+    * state the first attempt saw, and the overwrite lands the identical
+    * result. Once a stream settles, the scope is the latest
+    * `frontier_<m>` dir plus the live tail deltas — O(settleEvery)
+    * paths however long the stream has run. */
   def scopePaths(spark: SparkSession, dir: String,
                  batchId: Long): Option[Seq[String]] = {
     val (front, deltas) = scopeParts(spark, dir, batchId)

@@ -592,7 +592,7 @@ object IngestCrawl {
               .distinct())
           // admitted frontier: settled run artifact + this run's EARLIER
           // batches (the current id excluded — a retry must not
-          // anti-join its own partial output, see BatchLayout / Frontier)
+          // anti-join its own partial output, see Frontier.scopePaths)
           val afterOwn = antiAdmitted(spark, firstInBatch, "canon_url",
             survivorDir, batchId)
           val fresh = settledUrls match {

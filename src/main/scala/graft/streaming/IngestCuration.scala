@@ -58,8 +58,8 @@ object IngestCuration {
         val quality = flagged.filter(!col("rep_fail") && !col("lm_fail"))
           .select(col("doc_id"), col("__text").as("text"))
         // scope (c) is earlier batches only (current id excluded —
-        // replay-safe, see BatchLayout), probed with the corpus in one
-        // flat call
+        // replay-safe, see Frontier.scopePaths), probed with the
+        // corpus in one flat call
         val accepted = Dedup.incremental(
           index +: IngestDedup.acceptedScope(spark, s"$outDir/accepted", batchId,
             text, id, n).toSeq,

@@ -47,7 +47,7 @@ object IngestDedup {
         val id = col("doc_id")
         // scope (c) is earlier survivors only: the CURRENT batch id is
         // excluded, since an at-least-once retry must not dedup the
-        // batch against its own partial output (see BatchLayout)
+        // batch against its own partial output (see Frontier.scopePaths)
         val out = Dedup.incremental(
           index +: acceptedScope(spark, survivorDir, batchId, text, id, n).toSeq,
           batch.toDF(), text, id, n, threshold)
@@ -61,11 +61,11 @@ object IngestDedup {
 
   /** Scope (c) for batch `batchId`: everything the stream under `dir`
     * accepted before it (settled frontier plus tail deltas, the current
-    * batch excluded — [[BatchLayout.earlierBatches]]), indexed in the
+    * batch excluded — [[Frontier.scopePaths]]), indexed in the
     * probe plan. None before anything has landed. */
   private[streaming] def acceptedScope(spark: SparkSession, dir: String, batchId: Long,
                                        text: Column, id: Column,
                                        n: Int): Option[Dedup.CorpusIndex] =
-    BatchLayout.earlierBatches(spark, dir, batchId).map(paths =>
+    Frontier.scopePaths(spark, dir, batchId).map(paths =>
       Dedup.indexCorpus(spark.read.parquet(paths: _*), text, id, n))
 }

@@ -39,9 +39,8 @@ object IngestPack {
           // earlier batches only: a retry of batch N must see the
           // boundary the FIRST attempt saw — N's own partial assign
           // would inflate the offset and trip the monotone-key
-          // require against its own keys (see BatchLayout)
-          val settled = BatchLayout.earlierBatches(spark,
-              s"$shardDir/_assign", batchId)
+          // require against its own keys (see Frontier.scopePaths)
+          val settled = Frontier.scopePaths(spark, s"$shardDir/_assign", batchId)
             .map(paths => spark.read.parquet(paths: _*))
           // 1-row boundary probe, the same legitimacy class as the
           // JDBC bounds probe: (settled token total, highest key)

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.SparkSpec
+import graft.{SparkSpec, Tables}
 import graft.queries.DataOps
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -9,7 +9,12 @@ import org.apache.spark.sql.functions._
   * join over two tables bucketed+sorted on the key must run with no
   * exchange and no sort, and an equality predicate on the bucket key
   * must prune to a single bucket at the scan. Results must be
-  * layout-independent (equal to the plain join).
+  * layout-independent (equal to the plain join). The write-once-
+  * shuffle-never contract holds for any table [[Bucketing.writeBucketed]]
+  * lays out: joins and aggregations on the bucket keys plan with zero
+  * exchanges (broadcast is disabled for that assertion — at test
+  * scale AQE would otherwise broadcast the small side and hide the
+  * bucketing).
   */
 class BucketingSpec extends SparkSpec {
 
@@ -67,5 +72,51 @@ class BucketingSpec extends SparkSpec {
       .agg(count(lit(1)).as("n_lines"), (sum(col("cents")) / 100.0).as("revenue"))
       .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSet
     assert(bucketed == plain)
+  }
+
+  private def withNoBroadcast[A](body: => A): A = {
+    val keys = Seq("spark.sql.autoBroadcastJoinThreshold",
+      "spark.sql.adaptive.autoBroadcastJoinThreshold")
+    val saved = keys.map(k => k -> spark.conf.getOption(k))
+    keys.foreach(k => spark.conf.set(k, "-1"))
+    try body
+    finally saved.foreach { case (k, v) =>
+      v.fold(spark.conf.unset(k))(spark.conf.set(k, _))
+    }
+  }
+
+  test("co-bucketed join and bucket-key aggregation plan with zero exchanges") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_bucketed").toString
+    Bucketing.writeBucketed(Tables(spark, sf, "orders"), "b_orders", s"$dir/b_orders",
+      "o_orderkey", 8)
+    Bucketing.writeBucketed(Tables(spark, sf, "lineitem"), "b_lineitem", s"$dir/b_lineitem",
+      "l_orderkey", 8)
+
+    withNoBroadcast {
+      val joined = spark.table("b_lineitem").join(spark.table("b_orders"),
+        col("l_orderkey") === col("o_orderkey"))
+      val expected = Tables(spark, sf, "lineitem").join(Tables(spark, sf, "orders"),
+        col("l_orderkey") === col("o_orderkey")).count()
+      assert(joined.count() == expected)
+      val joinPlan = joined.queryExecution.executedPlan.toString
+      assert(!joinPlan.contains("Exchange"),
+        s"co-bucketed join must not shuffle:\n$joinPlan")
+
+      val agg = spark.table("b_lineitem")
+        .groupBy("l_orderkey").agg(sum("l_quantity").as("q"))
+      agg.count()
+      val aggPlan = agg.queryExecution.executedPlan.toString
+      assert(!aggPlan.contains("Exchange"),
+        s"bucket-key aggregation must not shuffle:\n$aggPlan")
+    }
+  }
+
+  test("a join on NON-bucket keys still shuffles (the layout is no magic)") {
+    withNoBroadcast {
+      val crossKey = spark.table("b_lineitem").join(spark.table("b_orders"),
+        col("l_partkey") === col("o_custkey"))
+      crossKey.count()
+      assert(crossKey.queryExecution.executedPlan.toString.contains("Exchange"))
+    }
   }
 }

@@ -2,6 +2,7 @@ package graft.streaming
 
 import java.sql.Timestamp
 import graft.SparkSpec
+import graft.io.GlobRead
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.OutputMode
 import EventStream.Event
@@ -110,7 +111,7 @@ class EventStreamSpec extends SparkSpec {
     input.addData(Event(2, ts(2), 2, "view", 2.0))
     q.processAllAvailable()
     q.stop()
-    val ids = spark.read.parquet(s"$dir/batch_*").collect()
+    val ids = GlobRead.parquet(spark, s"$dir/batch_*").collect()
       .map(_.getAs[Long]("event_id")).toSeq.sorted
     assert(ids == Seq(1L, 2L), s"expected deduped ids in the sink, got $ids")
   }

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.SparkSpec
+import graft.io.GlobRead
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
@@ -49,7 +50,7 @@ class IngestCrawlSpec extends SparkSpec {
       q.processAllAvailable()
     } finally q.stop()
 
-    val out = spark.read.parquet(s"$dir/batch_*")
+    val out = GlobRead.parquet(spark, s"$dir/batch_*")
     val rows = out.collect().map(r =>
       r.getLong(0) -> (r.getString(1), r.getString(2), r.getLong(4))).toMap
     assert(rows.keySet == Set(2L, 21L),
@@ -213,7 +214,7 @@ class IngestCrawlSpec extends SparkSpec {
       q.processAllAvailable()
     } finally q.stop()
     // the ledger recorded BOTH fetches with their verdicts
-    val ledger = spark.read.parquet(s"$fetched/batch_*")
+    val ledger = GlobRead.parquet(spark, s"$fetched/batch_*")
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
     assert(ledger == Map("http://a.com/thin" -> "thin",
       "http://a.com/p" -> "kept"), s"ledger: $ledger")
@@ -735,14 +736,14 @@ class IngestCrawlSpec extends SparkSpec {
         (10L, "http://h.com/old/dest", "http://h.com/dest", pageWith("d", "")))
       q.processAllAvailable()
     } finally q.stop()
-    val admitted = spark.read.parquet(s"$surv/batch_*")
+    val admitted = GlobRead.parquet(spark, s"$surv/batch_*")
       .select("canon_url", "doc_id").collect()
       .map(r => (r.getString(0), r.getLong(1))).toSet
     // /dest admitted ONCE under the FINAL url (min doc_id 2 wins);
     // the requested /old/ keys never become corpus keys
     assert(admitted == Set(("http://h.com/p1", 1L), ("http://h.com/dest", 2L)),
       s"admitted: $admitted")
-    val ledger = spark.read.parquet(s"$fetched/batch_*")
+    val ledger = GlobRead.parquet(spark, s"$fetched/batch_*")
       .groupBy("canon_url")
       .agg(max(struct(col("b"), col("verdict"), col("n_fetches"),
         col("n_changes"))).as("w"))
@@ -757,7 +758,7 @@ class IngestCrawlSpec extends SparkSpec {
     assert(ledger("http://h.com/dest")._1 == "kept", s"ledger: $ledger")
     // discovery emitted ONLY the novel link: the fetched target and
     // the alias source are both excluded
-    val discovered = spark.read.parquet(s"$disc/batch_*")
+    val discovered = GlobRead.parquet(spark, s"$disc/batch_*")
       .select("url").collect().map(_.getString(0)).toSet
     assert(discovered == Set("http://h.com/new"), s"discovered: $discovered")
     // and the next wave schedules only it — an aliased target never
@@ -1050,7 +1051,7 @@ class IngestCrawlSpec extends SparkSpec {
       input.addData((10L, x, "", pageWith("a")))
       q.processAllAvailable()
     } finally q.stop()
-    val ledger = spark.read.parquet(s"$fetched/batch_*")
+    val ledger = GlobRead.parquet(spark, s"$fetched/batch_*")
       .groupBy("canon_url")
       .agg(max(struct(col("b"), col("verdict"), col("n_fetches"),
         col("n_changes"))).as("w"))
@@ -1300,7 +1301,7 @@ class IngestCrawlSpec extends SparkSpec {
     } finally q2.stop()
     // ledger: flip's NEWEST verdict is noindex (it flipped), and the
     // refetch still counted as change evidence
-    val ledger = spark.read.parquet(s"$fetched/frontier_*", s"$fetched/batch_*")
+    val ledger = GlobRead.parquet(spark, s"$fetched/frontier_*", s"$fetched/batch_*")
       .groupBy("canon_url")
       .agg(max(struct(col("b"), col("verdict"))).as("w"))
       .select(col("canon_url"), col("w.verdict"))
@@ -1309,7 +1310,7 @@ class IngestCrawlSpec extends SparkSpec {
     assert(ledger(keep) == "kept", s"ledger: $ledger")
     // survivors: the settled frontier no longer carries flip at all —
     // not the old copy (erased by the tombstone), not the marker
-    val settled = spark.read.parquet(s"$surv/frontier_*")
+    val settled = GlobRead.parquet(spark, s"$surv/frontier_*")
       .select("canon_url").collect().map(_.getString(0))
     assert(!settled.contains(flip),
       s"flip's retained copy must drop at the settle: ${settled.toSet}")
@@ -1381,7 +1382,7 @@ class IngestCrawlSpec extends SparkSpec {
       (v.toLong, page, bytes, s"http://enc.com/p$v")
     }
     def admitted(dir: String): Map[String, String] =
-      spark.read.parquet(s"$dir/batch_*")
+      GlobRead.parquet(spark, s"$dir/batch_*")
         .select("canon_url", "main_text").collect()
         .map(r => r.getString(0) -> r.getString(1)).toMap
     // string stream: the pages as already-decoded html
@@ -1440,7 +1441,7 @@ class IngestCrawlSpec extends SparkSpec {
         (2L, err, "", 500), (3L, gone, "", 404))
       q.processAllAvailable() // batch 0
       // only the 200 admits; the failures land evidence, not content
-      val admitted0 = spark.read.parquet(s"$surv/batch_*")
+      val admitted0 = GlobRead.parquet(spark, s"$surv/batch_*")
         .filter(!col("tombstone"))
         .select("canon_url").collect().map(_.getString(0)).toSet
       assert(admitted0 == Set(ok), s"$admitted0")
@@ -1591,11 +1592,11 @@ class IngestCrawlSpec extends SparkSpec {
     }
     input.addData((1L, "http://a.com/x", page("a", 25)))
     run()
-    val first = spark.read.parquet(s"$dir/batch_*").collect().toSeq
+    val first = GlobRead.parquet(spark, s"$dir/batch_*").collect().toSeq
     // a retry of the same offsets replays batch 0: the overwrite
     // layout must land the identical state, not a duplicate
     run()
-    val second = spark.read.parquet(s"$dir/batch_*").collect().toSeq
+    val second = GlobRead.parquet(spark, s"$dir/batch_*").collect().toSeq
     assert(first.map(_.getLong(0)) == second.map(_.getLong(0)))
     assert(second.size == 1)
   }

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.SparkSpec
+import graft.io.GlobRead
 import graft.operators.{Dedup, LanguageModel}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -43,11 +44,11 @@ class IngestCurationSpec extends SparkSpec {
       q.processAllAvailable()
     } finally q.stop()
 
-    val accepted = spark.read.parquet(s"$dir/accepted/batch_*")
+    val accepted = GlobRead.parquet(spark, s"$dir/accepted/batch_*")
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(accepted == Set(10L, 22L))
 
-    val audit = spark.read.parquet(s"$dir/audit/batch_*")
+    val audit = GlobRead.parquet(spark, s"$dir/audit/batch_*")
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     assert(audit == Map(
       10L -> "kept", 11L -> "repetition", 12L -> "lm",

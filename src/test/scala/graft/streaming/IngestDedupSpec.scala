@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.SparkSpec
+import graft.io.GlobRead
 import graft.operators.Dedup
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -39,7 +40,7 @@ class IngestDedupSpec extends SparkSpec {
       q.processAllAvailable()
     } finally q.stop()
 
-    val survivors = spark.read.parquet(s"$dir/batch_*")
+    val survivors = GlobRead.parquet(spark, s"$dir/batch_*")
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(survivors == Set(11L, 22L))
   }
@@ -123,7 +124,7 @@ class IngestDedupSpec extends SparkSpec {
       q.processAllAvailable()
     } finally q.stop()
 
-    val survivors = spark.read.parquet(s"$dir/batch_*")
+    val survivors = GlobRead.parquet(spark, s"$dir/batch_*")
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(survivors == Set(1L))
   }

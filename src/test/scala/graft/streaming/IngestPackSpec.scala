@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.SparkSpec
+import graft.io.GlobRead
 import graft.operators.Sharding
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -40,7 +41,7 @@ class IngestPackSpec extends SparkSpec {
       assert(b1Again == afterB1)
     } finally q.stop()
 
-    val streamed = spark.read.parquet(s"$dir/_assign/batch_*")
+    val streamed = GlobRead.parquet(spark, s"$dir/_assign/batch_*")
       .select("doc_id", "cum", "shard_id").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     val all = (b1 ++ b2 ++ b3).toDF("doc_id", "text")

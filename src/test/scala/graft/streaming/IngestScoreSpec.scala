@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.SparkSpec
+import graft.io.GlobRead
 import graft.operators.Dsir
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -44,7 +45,7 @@ class IngestScoreSpec extends SparkSpec {
         "batch-0's fragment is immutable under later batches")
     } finally q.stop()
 
-    val streamed = spark.read.parquet(s"$dir/batch_*")
+    val streamed = GlobRead.parquet(spark, s"$dir/batch_*")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val batch = Dsir.weightsPersisted(spark, "stream_spec",
         (b1 ++ b2).toDF("doc_id", "text"), col("text"), col("doc_id"))
