@@ -85,11 +85,11 @@ object CandyMain {
       case "report" =>
         graft.pipeline.CandyStages.report(spark, ckpt, cfg.outDir,
           cfg.horizon, model, stageLog)
-      case "staged" => // all three stages, checkpointed (DAG contract)
-        graft.pipeline.CandyStages.ingest(spark, cfg.dataDir, ckpt, cfg.days)
-        graft.pipeline.CandyStages.process(spark, ckpt, cfg.reloadDaily, stageLog)
-        graft.pipeline.CandyStages.report(spark, ckpt, cfg.outDir,
-          cfg.horizon, model, stageLog)
+      case "staged" => // all three stages, checkpointed, with the DAG's
+        // retries; each CLI run is a new DAG run, so no stage is skipped
+        graft.pipeline.Orchestrate.reset(spark, ckpt)
+        graft.pipeline.Orchestrate.staged(spark, cfg.dataDir, ckpt, cfg.outDir,
+          cfg.reloadDaily, cfg.horizon, model, log = stageLog, days = cfg.days)
       case _ =>
         val r = CandyPipeline.run(spark, cfg.dataDir, Some(cfg.outDir),
           cfg.reloadDaily, cfg.horizon, model, cfg.days)

@@ -41,7 +41,7 @@ object GraftSession {
     // Trust the sortBy order of bucketed tables at read time (off by
     // default since Spark 3.0). Safe engine-wide: Spark only reports
     // the ordering when every bucket is a single file — the layout
-    // Bucketing.writeBucketed guarantees — and it's what removes the
+    // Bucketing.buildOnce writes — and it's what removes the
     // per-bucket re-sort from co-located sort-merge joins.
     "spark.sql.legacy.bucketedTableScan.outputOrdering" -> "true",
     // Fuse only what the JVM will actually JIT: HotSpot never

@@ -99,8 +99,7 @@ object Tables {
     * types (the events timestamp) stay exactly as in `dir`. */
   def replica(spark: SparkSession, dir: String, mult: Int): String = {
     if (mult <= 1) return dir
-    val out = s"${graft.queries.DataOps.tableRoot}/x${mult}_${
-      dir.replaceAll("[^A-Za-z0-9]", "_")}"
+    val (_, out) = graft.queries.DataOps.artifact(dir, prefix = s"x${mult}_")
     val done = Paths.get(out, "_SUCCESS")
     if (!Files.exists(done)) {
       val rules = salted(mult)

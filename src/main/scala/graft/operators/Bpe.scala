@@ -172,29 +172,23 @@ object Bpe {
   def modelTables(tag: String): (String, String) =
     (s"bpe_vocab_$tag", s"bpe_merges_$tag")
 
-  /** Persist a trained tokenizer: the per-word vocabulary bucketed on
-    * `word` — the serving join key — plus the k-row merge table (the
-    * auditable model artifact). Mirrors `Dedup.saveIndex`: at 100 TB
-    * the vocabulary is the distinct-word frame, so the serving join
-    * shuffles only the document side against the stored bucket
-    * layout; training never re-runs in the serving session. */
-  def saveModel(t: Trained, root: String, tag: String,
-                nBuckets: Int = 8): Unit = {
-    val (tv, tm) = modelTables(tag)
-    Bucketing.writeBucketed(vocabOf(t), tv, s"$root/vocab",
-      Seq("word"), nBuckets)
-    mergesOf(t).coalesce(1).write.mode("overwrite")
-      .option("path", s"$root/merges").format("parquet").saveAsTable(tm)
-  }
-
-  /** Idempotent persisted-model materialization (the
-    * `ensurePersistedIndex` pattern): first call trains and writes,
-    * later calls reuse the stored artifact. */
+  /** Idempotent persisted-model materialization ([[Bucketing.buildOnce]]):
+    * the first call trains and writes, later calls reuse the stored
+    * artifact — the per-word vocabulary bucketed on `word` (the
+    * serving join key) plus the k-row merge table as one plain file
+    * (the auditable model artifact). At 100 TB the vocabulary is the
+    * distinct-word frame, so the serving join shuffles only the
+    * document side against the stored bucket layout; training never
+    * re-runs in the serving session. */
   def ensureModel(spark: org.apache.spark.sql.SparkSession, root: String,
                   tag: String, nBuckets: Int = 8)(build: => Trained): Unit = {
     val (tv, tm) = modelTables(tag)
-    if (!(spark.catalog.tableExists(tv) && spark.catalog.tableExists(tm)))
-      saveModel(build, root, tag, nBuckets)
+    Bucketing.buildOnce(spark, root, Seq(
+      Bucketing.Table(tv, "vocab", Some(Seq("word") -> nBuckets)),
+      Bucketing.Table(tm, "merges"))) {
+      val t = build
+      Seq(vocabOf(t), mergesOf(t))
+    }
   }
 
   /** Document encode against the PERSISTED vocabulary: zero training

@@ -24,7 +24,7 @@ import org.apache.spark.sql.functions._
   */
 object Bucketing {
 
-  /** Write `df` as a parquet table bucketed+sorted on `key`.
+  /** Write `df` as a parquet table bucketed+sorted on `keys`.
     *
     * The frame is repartitioned on the bucketing expression first so
     * each write task holds exactly the rows of its buckets — one file
@@ -34,14 +34,10 @@ object Bucketing {
     * would re-sort); it is also the small-file guard: bucketed writes
     * without it emit task-count× the file count. Spark's repartition
     * hash and its bucket-file assignment are the same
-    * murmur3-pmod(n), so the alignment is exact, not heuristic. */
-  def writeBucketed(df: DataFrame, table: String, path: String,
-                    key: String, nBuckets: Int): Unit =
-    writeBucketed(df, table, path, Seq(key), nBuckets)
-
-  /** Multi-column form: buckets hash over ALL `keys` (murmur3 over the
-    * tuple, same as `repartition(n, keys…)`), so an equi-join on the
-    * full key set reads both sides co-partitioned. */
+    * murmur3-pmod(n), so the alignment is exact, not heuristic.
+    * Buckets hash over ALL `keys` (murmur3 over the tuple, same as
+    * `repartition(n, keys…)`), so an equi-join on the full key set
+    * reads both sides co-partitioned. */
   def writeBucketed(df: DataFrame, table: String, path: String,
                     keys: Seq[String], nBuckets: Int): Unit =
     df.repartition(nBuckets, keys.map(col): _*)
@@ -52,18 +48,36 @@ object Bucketing {
       .format("parquet")
       .saveAsTable(table)
 
-  /** Idempotent per-session materialization: first call writes the
-    * bucketed table, later calls reuse the catalog entry (the bench
-    * harness calls each query repeatedly; the layout write is the
-    * amortized-once cost by design, so re-runs must not pay it). */
-  def ensureBucketed(spark: SparkSession, table: String, path: String,
-                     key: String, nBuckets: Int)(load: => DataFrame): DataFrame =
-    ensureBucketed(spark, table, path, Seq(key), nBuckets)(load)
+  /** One table of a persisted artifact: its catalog name, its dir
+    * under the artifact root, and its layout — bucketed+sorted on
+    * `bucketBy`'s keys into its bucket count ([[writeBucketed]]), or,
+    * when `None`, one plain parquet file (a model-sized table that is
+    * collected or broadcast, never joined on a layout). */
+  final case class Table(name: String, dir: String,
+                         bucketBy: Option[(Seq[String], Int)] = None)
 
-  def ensureBucketed(spark: SparkSession, table: String, path: String,
-                     keys: Seq[String], nBuckets: Int)(load: => DataFrame): DataFrame = {
-    if (!spark.catalog.tableExists(table))
-      writeBucketed(load, table, path, keys, nBuckets)
-    spark.table(table)
+  /** The one build-once rule for a persisted artifact: a set of index
+    * or model tables built once, then probed (the reference DAG's
+    * Parquet hand-off; the layout write is the amortized-once cost).
+    * When every table of the set is in the catalog, `build` is never
+    * evaluated; when any is missing, `build` runs ONCE and its frames
+    * (one per table) are written as the whole set, in order, so a set
+    * never mixes tables of two builds. Returns each table as read from
+    * the catalog. */
+  def buildOnce(spark: SparkSession, root: String, tables: Seq[Table])
+               (build: => Seq[DataFrame]): Seq[DataFrame] = {
+    if (!tables.forall(t => spark.catalog.tableExists(t.name))) {
+      val frames = build
+      require(frames.size == tables.size,
+        s"build gave ${frames.size} frames for ${tables.size} tables")
+      tables.zip(frames).foreach {
+        case (Table(name, dir, Some((keys, n))), df) =>
+          writeBucketed(df, name, s"$root/$dir", keys, n)
+        case (Table(name, dir, None), df) =>
+          df.coalesce(1).write.mode("overwrite")
+            .option("path", s"$root/$dir").format("parquet").saveAsTable(name)
+      }
+    }
+    tables.map(t => spark.table(t.name))
   }
 }

@@ -221,7 +221,7 @@ object Dedup {
   /** The corpus-side dedup state incremental ingestion probes against.
     * In production these three frames are PERSISTED artifacts of the
     * previous pipeline run (parquet tables, bucketed on their keys —
-    * `saveIndex`/`loadIndex` below) — the whole point of the
+    * `ensurePersistedIndex` below) — the whole point of the
     * incremental form is that a new batch never re-scans the corpus
     * text, only joins against this index. The index stores the LSH
     * BUCKET rows (band, bucket, doc_id), not raw signatures: the
@@ -238,44 +238,28 @@ object Dedup {
       lshBuckets(minhashSignatures(corpus, text, id, n)),
       shingleSets(corpus, text, id, n))
 
-  private def indexTables(tag: String): (String, String, String) =
-    (s"ci_md5_$tag", s"ci_bkt_$tag", s"ci_sh_$tag")
-
-  /** Persist the index as three bucketed+sorted parquet tables, each
-    * clustered on its probe key — md5s on content_md5 (the exact-dup
-    * semi-join), buckets on (band, bucket) (the LSH candidate join),
-    * shingle sets on doc_id (the verification join). With this layout
-    * every probe join reads the corpus side co-partitioned: only the
-    * |batch|-sided frames shuffle (asserted in DedupIndexSpec). */
-  def saveIndex(index: CorpusIndex, root: String, tag: String,
-                nBuckets: Int = 8): Unit = {
-    val (tm, tb, ts) = indexTables(tag)
-    Bucketing.writeBucketed(index.md5s, tm, s"$root/md5s",
-      Seq("content_md5"), nBuckets)
-    Bucketing.writeBucketed(index.buckets, tb, s"$root/buckets",
-      Seq("band", "bucket"), nBuckets)
-    Bucketing.writeBucketed(index.shingleSets, ts, s"$root/shingles",
-      Seq("doc_id"), nBuckets)
-  }
-
-  def loadIndex(spark: org.apache.spark.sql.SparkSession, tag: String): CorpusIndex = {
-    val (tm, tb, ts) = indexTables(tag)
-    CorpusIndex(spark.table(tm), spark.table(tb), spark.table(ts))
-  }
-
-  /** Idempotent persisted-index materialization (same pattern as
-    * Bucketing.ensureBucketed): first call builds and writes the three
-    * tables, later calls load the stored layout — the steady-state
-    * ingestion shape, where the index is an artifact of the previous
-    * run and the corpus text is never rescanned. */
+  /** Idempotent persisted-index materialization ([[Bucketing.buildOnce]]):
+    * the first call builds the index and writes it as three
+    * bucketed+sorted parquet tables, each clustered on its probe key —
+    * md5s on content_md5 (the exact-dup semi-join), buckets on
+    * (band, bucket) (the LSH candidate join), shingle sets on doc_id
+    * (the verification join). With this layout every probe join reads
+    * the corpus side co-partitioned: only the |batch|-sided frames
+    * shuffle (asserted in DedupIndexSpec). Later calls load the stored
+    * layout — the steady-state ingestion shape, where the index is an
+    * artifact of the previous run and the corpus text is never
+    * rescanned. */
   def ensurePersistedIndex(spark: org.apache.spark.sql.SparkSession, root: String,
                            tag: String, nBuckets: Int = 8)
                           (build: => CorpusIndex): CorpusIndex = {
-    val (tm, tb, ts) = indexTables(tag)
-    if (!(spark.catalog.tableExists(tm) && spark.catalog.tableExists(tb)
-        && spark.catalog.tableExists(ts)))
-      saveIndex(build, root, tag, nBuckets)
-    loadIndex(spark, tag)
+    val Seq(md5s, buckets, shingles) = Bucketing.buildOnce(spark, root, Seq(
+      Bucketing.Table(s"ci_md5_$tag", "md5s", Some(Seq("content_md5") -> nBuckets)),
+      Bucketing.Table(s"ci_bkt_$tag", "buckets", Some(Seq("band", "bucket") -> nBuckets)),
+      Bucketing.Table(s"ci_sh_$tag", "shingles", Some(Seq("doc_id") -> nBuckets)))) {
+      val i = build
+      Seq(i.md5s, i.buckets, i.shingleSets)
+    }
+    CorpusIndex(md5s, buckets, shingles)
   }
 
   /** Incremental dedup: the rows of `batch` that survive against
@@ -905,37 +889,32 @@ object Dedup {
     batch.join(losers, Seq("doc_id"), "left_anti")
   }
 
-  /** Persist / load the SimHash corpus state: the banded fingerprint
-    * rows stored bucketed+sorted on (band, bkey) — the probe's join
-    * key, same layout contract as the MinHash bucket table. */
+  /** Persist / load the SimHash corpus state ([[Bucketing.buildOnce]]):
+    * the banded fingerprint rows stored bucketed+sorted on
+    * (band, bkey) — the probe's join key, same layout contract as the
+    * MinHash bucket table. */
   def ensurePersistedSimhashIndex(spark: org.apache.spark.sql.SparkSession,
                                   root: String, tag: String, nBuckets: Int = 8)
-                                 (build: => DataFrame): DataFrame = {
-    val table = s"ci_sim_$tag"
-    if (!spark.catalog.tableExists(table))
-      Bucketing.writeBucketed(build, table, s"$root/simhash_bands",
-        Seq("band", "bkey"), nBuckets)
-    spark.table(table)
-  }
+                                 (build: => DataFrame): DataFrame =
+    Bucketing.buildOnce(spark, root, Seq(Bucketing.Table(s"ci_sim_$tag",
+      "simhash_bands", Some(Seq("band", "bkey") -> nBuckets))))(Seq(build)).head
 
-  /** Persist / load the embedding corpus state: the cell assignment
-    * bucketed+sorted on centroid_id (the per-cell probe key) plus the
-    * tiny centroid table the assignment was trained with — centroids
-    * are PART of the index; probing with different centroids would
-    * change the blocking. */
+  /** Persist / load the embedding corpus state ([[Bucketing.buildOnce]]):
+    * the cell assignment bucketed+sorted on centroid_id (the per-cell
+    * probe key) plus the k-row centroid table the assignment was
+    * trained with, as one plain file — centroids are PART of the
+    * index; probing with different centroids would change the
+    * blocking. */
   def ensurePersistedEmbeddingIndex(spark: org.apache.spark.sql.SparkSession,
                                     root: String, tag: String, nBuckets: Int = 8)
                                    (build: => (DataFrame, DataFrame)): (DataFrame, DataFrame) = {
-    val (ta, tc) = (s"ci_emb_$tag", s"ci_cent_$tag")
-    if (!(spark.catalog.tableExists(ta) && spark.catalog.tableExists(tc))) {
-      val (assigned, centroids) = build
-      Bucketing.writeBucketed(assigned, ta, s"$root/embed_assign",
-        Seq("centroid_id"), nBuckets)
-      centroids.write.mode("overwrite")
-        .option("path", s"$root/embed_centroids")
-        .format("parquet").saveAsTable(tc)
+    val Seq(assigned, centroids) = Bucketing.buildOnce(spark, root, Seq(
+      Bucketing.Table(s"ci_emb_$tag", "embed_assign", Some(Seq("centroid_id") -> nBuckets)),
+      Bucketing.Table(s"ci_cent_$tag", "embed_centroids"))) {
+      val (a, c) = build
+      Seq(a, c)
     }
-    (spark.table(ta), spark.table(tc))
+    (assigned, centroids)
   }
 
   /** Incremental embedding dedup: the rows of `batch` with no cosine

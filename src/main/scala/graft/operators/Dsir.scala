@@ -158,7 +158,7 @@ object Dsir {
   /** Collect a full-spine (bucket, llr_micro) model into the flat
     * `long[B]` the scoring kernel indexes. A fitted model is exactly
     * B broadcast-tiny rows by construction ([[ratiosFromCounts]] /
-    * the persisted tables [[saveModel]] writes); anything else is a
+    * the persisted table [[ensureModel]] writes); anything else is a
     * corrupted artifact, failed loudly. */
   private def llrArrayOf(model: DataFrame): Array[Long] = {
     val llr = new Array[Long](buckets)
@@ -214,22 +214,15 @@ object Dsir {
 
   private def modelTable(tag: String): String = s"dsir_model_$tag"
 
-  /** Persist a fitted bucket model — the B-row table IS the selector
-    * artifact (train-once/serve-many, the same contract as the BPE
-    * vocab and IVFADC codebooks; the frame is broadcast-sized, so a
-    * plain single-file table is the right layout, no bucketing
-    * needed). */
-  def saveModel(ratios: DataFrame, root: String, tag: String): Unit =
-    ratios.coalesce(1).write.mode("overwrite")
-      .option("path", s"$root/model").format("parquet")
-      .saveAsTable(modelTable(tag))
-
-  /** Idempotent materialization (the ensurePersistedIndex pattern):
-    * first call fits and writes, later calls reuse the artifact. */
+  /** Idempotent materialization ([[Bucketing.buildOnce]]): the first
+    * call fits and writes, later calls reuse the artifact. The B-row
+    * table IS the selector artifact (train-once/serve-many, the same
+    * contract as the BPE vocab and IVFADC codebooks); the frame is
+    * broadcast-sized, so it is one plain file, no bucketing. */
   def ensureModel(spark: org.apache.spark.sql.SparkSession, root: String,
                   tag: String)(build: => DataFrame): Unit =
-    if (!spark.catalog.tableExists(modelTable(tag)))
-      saveModel(build, root, tag)
+    Bucketing.buildOnce(spark, root,
+      Seq(Bucketing.Table(modelTable(tag), "model")))(Seq(build))
 
   /** Score a pool against the STORED model: zero fitting jobs, zero
     * target-corpus access — the serving posture for scoring fresh

@@ -78,7 +78,7 @@ object Rag {
 
   /** The retrieval index: overlapping chunks, embedded and laid out
     * as the sign-LSH serving frame (persist bucketed on `bucket` via
-    * Bucketing.writeBucketed — same contract as annIndexFrame). */
+    * Bucketing.buildOnce — same contract as annIndexFrame). */
   def chunkIndex(docs: DataFrame, text: Column, id: Column,
                  chunkTokens: Int, overlapTokens: Int): DataFrame =
     Similarity.annIndexFrame(

@@ -125,7 +125,7 @@ object Similarity {
   /** The serving-index frame — (vec_id, embedding, bucket, nrm), the
     * one pass of hyperplane math a corpus pays at index-build time.
     * Persist it as a parquet table bucketed on `bucket`
-    * (Bucketing.writeBucketed) and every probe reads the corpus side
+    * (Bucketing.buildOnce) and every probe reads the corpus side
     * co-partitioned on the join key with ZERO per-query index work:
     * no hyperplane dots, no norm pass, no exchange. That is the ANN
     * serving posture at 100 TB — the index is storage layout, not a
@@ -1040,36 +1040,31 @@ object Similarity {
         col("rk").cast("long").as("rk"))
   }
 
-  /** Persist-or-load the IVFADC model: the coarse centroid and
-    * residual-codebook tables (k and m·k rows — the model artifact),
-    * plus the code frame bucketed on the probe's full
-    * (centroid_id, subspace, code) equi-join key. A serving session
-    * calls this and ivfPqProbe — the train→encode pipeline runs only
-    * when the tables don't exist yet (the amortized-once index build;
-    * same contract as Dedup.ensurePersistedIndex / Bpe.ensureModel). */
+  /** Persist-or-load the IVFADC model ([[Bucketing.buildOnce]]): the
+    * coarse centroid and residual-codebook tables (k and m·k rows —
+    * the model artifact, each one bucket), plus the code frame
+    * bucketed on the probe's full (centroid_id, subspace, code)
+    * equi-join key. A serving session calls this and ivfPqProbe — the
+    * train→encode pipeline runs only when a table of the set doesn't
+    * exist yet (the amortized-once index build), and then rewrites all
+    * three from one training run. */
   def ensureIvfPqModel(spark: org.apache.spark.sql.SparkSession, root: String,
                        tag: String, corpus: => DataFrame, kc: Int,
                        coarseIters: Int, m: Int, k: Int, iters: Int,
                        nBuckets: Int = 8): (DataFrame, DataFrame, DataFrame) = {
     import spark.implicits._
-    lazy val trained = {
+    val Seq(cents, books, codes) = Bucketing.buildOnce(spark, root, Seq(
+      Bucketing.Table(s"ivfpq_cents_$tag", "cents", Some(Seq("centroid_id") -> 1)),
+      Bucketing.Table(s"ivfpq_books_$tag", "books", Some(Seq("subspace", "code") -> 1)),
+      Bucketing.Table(s"ivfpq_codes_$tag", "codes",
+        Some(Seq("centroid_id", "subspace", "code") -> nBuckets)))) {
       val c = corpus
-      val (coarse, books) = ivfPqTrain(c, kc, coarseIters, m, k, iters)
-      (coarse, books, ivfPqEncodeWith(c, coarse, books))
-    }
-    val cents = Bucketing.ensureBucketed(spark, s"ivfpq_cents_$tag",
-      s"$root/cents", Seq("centroid_id"), 1) {
-      trained._1.toDF("centroid_id", "cent")
-    }
-    val books = Bucketing.ensureBucketed(spark, s"ivfpq_books_$tag",
-      s"$root/books", Seq("subspace", "code"), 1) {
-      trained._2.flatMap { case (s, cs) =>
-        cs.map { case (cid, cent) => (s.toLong, cid, cent) }
-      }.toDF("subspace", "code", "cent")
-    }
-    val codes = Bucketing.ensureBucketed(spark, s"ivfpq_codes_$tag",
-      s"$root/codes", Seq("centroid_id", "subspace", "code"), nBuckets) {
-      trained._3
+      val (coarse, codebooks) = ivfPqTrain(c, kc, coarseIters, m, k, iters)
+      Seq(coarse.toDF("centroid_id", "cent"),
+        codebooks.flatMap { case (s, cs) =>
+          cs.map { case (cid, cent) => (s.toLong, cid, cent) }
+        }.toDF("subspace", "code", "cent"),
+        ivfPqEncodeWith(c, coarse, codebooks))
     }
     (codes, cents, books)
   }

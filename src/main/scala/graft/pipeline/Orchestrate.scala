@@ -75,15 +75,18 @@ object Orchestrate {
     * DAG run `load_data >> batch_processing >> forecasting_and_output`
     * with `retries=3`. A rerun over the same checkpoint dir resumes
     * after the last completed stage; pass a fresh `ckpt` (or call
-    * `reset`) for a new logical run. */
+    * `reset`) for a new logical run. `days` narrows ingestion to those
+    * days' transaction files (the MONGO_START_DATE/MONGO_END_DATE
+    * window); `None` ingests every day file. */
   def staged(spark: SparkSession, dataDir: String, ckpt: String, outDir: String,
              reloadDaily: Boolean = false, horizon: Int = 1,
              model: () => graft.forecast.Forecaster =
                () => new graft.forecast.LinearTrendForecaster(),
              attempts: Int = 3, backoffMs: Long = 0L,
-             log: Option[String => Unit] = None): Seq[StageResult] = Seq(
+             log: Option[String => Unit] = None,
+             days: Option[Seq[String]] = None): Seq[StageResult] = Seq(
     runStage(spark, ckpt, "ingest", attempts, backoffMs) {
-      CandyStages.ingest(spark, dataDir, ckpt)
+      CandyStages.ingest(spark, dataDir, ckpt, days)
     },
     runStage(spark, ckpt, "process", attempts, backoffMs) {
       CandyStages.process(spark, ckpt, reloadDaily, log)

@@ -161,8 +161,8 @@ object DataOps {
     * identical weights to the live fit (same oracle SQL), zero
     * fitting jobs on later calls. */
   def dsDsirPersisted(s: SparkSession, d: String): DataFrame = {
-    val tag = d.replaceAll("[^A-Za-z0-9]", "_") + "_dsir"
-    graft.operators.Dsir.ensureModel(s, s"$tableRoot/$tag", tag) {
+    val (tag, root) = artifact(d, suffix = "_dsir")
+    graft.operators.Dsir.ensureModel(s, root, tag) {
       graft.operators.Dsir.ratiosFromCounts(graft.operators.Dsir.bucketCounts(
         docs(s, d), col("text"), col("lang") === "en"))
     }
@@ -576,9 +576,9 @@ object DataOps {
     * or re-encodes (IvfPqModelSpec asserts the bucketed scan and
     * child-session serving). Same answer as the live path. */
   def simIvfPqPersisted(s: SparkSession, d: String): DataFrame = {
-    val tag = d.replaceAll("[^A-Za-z0-9]", "_")
+    val (tag, root) = artifact(d)
     val (codes, cents, books) = Similarity.ensureIvfPqModel(s,
-      s"$tableRoot/$tag/ivfpq", tag, emb(s, d),
+      s"$root/ivfpq", tag, emb(s, d),
       lloydK, lloydIters, pqM, pqK, pqIters, bucketCount)
     Similarity.ivfPqProbe(codes, cents, books,
       emb(s, d).filter(col("vec_id") < annQueries),
@@ -703,11 +703,11 @@ object DataOps {
     * live corpus; AnnIndexSpec asserts the index is scanned, not
     * rebuilt. */
   def simAnnPersisted(s: SparkSession, d: String): DataFrame = {
-    val tag = d.replaceAll("[^A-Za-z0-9]", "_")
-    val index = Bucketing.ensureBucketed(s, s"ann_idx_$tag",
-        s"$tableRoot/$tag/ann_index", Seq("bucket"), bucketCount) {
-      Similarity.annIndexFrame(emb(s, d))
-    }
+    val (tag, root) = artifact(d)
+    val index = Bucketing.buildOnce(s, root, Seq(Bucketing.Table(s"ann_idx_$tag",
+        "ann_index", Some(Seq("bucket") -> bucketCount)))) {
+      Seq(Similarity.annIndexFrame(emb(s, d)))
+    }.head
     Similarity.lshAnnProbe(index, emb(s, d).filter(col("vec_id") < annQueries), annK)
   }
 
@@ -715,14 +715,14 @@ object DataOps {
     * id; probing pays one broadcast-centroid assignment for the query
     * set and an in-cell exact rerank. */
   def simIvfPersisted(s: SparkSession, d: String): DataFrame = {
-    val tag = d.replaceAll("[^A-Za-z0-9]", "_")
+    val (tag, root) = artifact(d)
     val e = emb(s, d)
     val centroids = e.filter(col("vec_id") < 4)
       .select(col("vec_id").as("centroid_id"), col("embedding"))
-    val index = Bucketing.ensureBucketed(s, s"ivf_idx_$tag",
-        s"$tableRoot/$tag/ivf_index", Seq("bucket"), bucketCount) {
-      Similarity.ivfIndexFrame(e, centroids)
-    }
+    val index = Bucketing.buildOnce(s, root, Seq(Bucketing.Table(s"ivf_idx_$tag",
+        "ivf_index", Some(Seq("bucket") -> bucketCount)))) {
+      Seq(Similarity.ivfIndexFrame(e, centroids))
+    }.head
     Similarity.ivfProbe(index, centroids, e.filter(col("vec_id") < annQueries), annK)
   }
 
@@ -1235,8 +1235,8 @@ object DataOps {
   def ddIncrementalPersisted(s: SparkSession, d: String): DataFrame = {
     val all = docs(s, d)
     val isBatch = pmod(col("doc_id"), lit(10L)) === 7
-    val tag = d.replaceAll("[^A-Za-z0-9]", "_")
-    val index = Dedup.ensurePersistedIndex(s, s"$tableRoot/$tag/corpus_index",
+    val (tag, root) = artifact(d)
+    val index = Dedup.ensurePersistedIndex(s, s"$root/corpus_index",
         tag, bucketCount) {
       Dedup.indexCorpus(all.filter(!isBatch), col("text"), col("doc_id"), 3)
     }
@@ -1308,9 +1308,9 @@ object DataOps {
   def ddIncrementalSimhashPersisted(s: SparkSession, d: String): DataFrame = {
     val all = docs(s, d)
     val isBatch = pmod(col("doc_id"), lit(10L)) === 7
-    val tag = d.replaceAll("[^A-Za-z0-9]", "_")
+    val (tag, root) = artifact(d)
     val bands = Dedup.ensurePersistedSimhashIndex(s,
-        s"$tableRoot/$tag/corpus_index", tag, bucketCount) {
+        s"$root/corpus_index", tag, bucketCount) {
       Dedup.simhashBands(
         Dedup.simhash(all.filter(!isBatch), col("text"), col("doc_id")), 32, 8)
     }
@@ -1328,9 +1328,9 @@ object DataOps {
     import spark.implicits._
     val e = emb(s, d)
     val isBatch = pmod(col("vec_id"), lit(10L)) === 7
-    val tag = d.replaceAll("[^A-Za-z0-9]", "_")
+    val (tag, root) = artifact(d)
     val (assigned, cents) = Dedup.ensurePersistedEmbeddingIndex(s,
-        s"$tableRoot/$tag/corpus_index", tag, bucketCount) {
+        s"$root/corpus_index", tag, bucketCount) {
       val corpus = e.filter(!isBatch)
       val c = Similarity.lloydTrain(corpus, lloydK, lloydIters)
         .toDF("centroid_id", "cent")
@@ -1352,9 +1352,9 @@ object DataOps {
     import spark.implicits._
     val e = emb(s, d)
     val isBatch = pmod(col("vec_id"), lit(10L)) === 7
-    val tag = d.replaceAll("[^A-Za-z0-9]", "_")
+    val (tag, root) = artifact(d)
     val (assigned, cents) = Dedup.ensurePersistedEmbeddingIndex(s,
-        s"$tableRoot/$tag/corpus_index", tag, bucketCount) {
+        s"$root/corpus_index", tag, bucketCount) {
       val corpus = e.filter(!isBatch)
       val c = Similarity.lloydTrain(corpus, lloydK, lloydIters)
         .toDF("centroid_id", "cent")
@@ -1456,22 +1456,29 @@ object DataOps {
   val tableRoot: String = sys.env.getOrElse("SPARK_GRAFT_TABLE_ROOT",
     s"${System.getProperty("java.io.tmpdir")}/graft-bucketed")
 
+  /** A persisted artifact of sf dir `d`: its catalog tag — `d` made
+    * catalog-safe, between `prefix` and `suffix` — and the root its
+    * tables are written under ([[Bucketing.buildOnce]]),
+    * `$tableRoot/$dirPrefix$tag`. */
+  private[graft] def artifact(d: String, prefix: String = "", suffix: String = "",
+                              dirPrefix: String = ""): (String, String) = {
+    val tag = prefix + d.replaceAll("[^A-Za-z0-9]", "_") + suffix
+    (tag, s"$tableRoot/$dirPrefix$tag")
+  }
+
   /** Fact-to-fact join on bucketed, sorted tables: both sides are
-    * laid out on the join key (Bucketing.writeBucketed — one shuffle,
+    * laid out on the join key (Bucketing.buildOnce — one shuffle,
     * paid once at write), so the sort-merge join runs with NO
     * exchange and NO sort (asserted in BucketingSpec); the only
     * shuffle left in the query is the 5-row priority rollup. The
     * result is layout-independent — the oracle is the plain join. */
   def dsBucketedJoin(s: SparkSession, d: String): DataFrame = {
-    val tag = d.replaceAll("[^A-Za-z0-9]", "_")
-    val li = Bucketing.ensureBucketed(s, s"li_bkt_$tag",
-        s"$tableRoot/$tag/lineitem", "l_orderkey", bucketCount) {
-      Tables(s, d, "lineitem")
-        .select("l_orderkey", "l_extendedprice", "l_discount")
-    }
-    val ord = Bucketing.ensureBucketed(s, s"ord_bkt_$tag",
-        s"$tableRoot/$tag/orders", "o_orderkey", bucketCount) {
-      Tables(s, d, "orders").select("o_orderkey", "o_orderpriority")
+    val (tag, root) = artifact(d)
+    val Seq(li, ord) = Bucketing.buildOnce(s, root, Seq(
+      Bucketing.Table(s"li_bkt_$tag", "lineitem", Some(Seq("l_orderkey") -> bucketCount)),
+      Bucketing.Table(s"ord_bkt_$tag", "orders", Some(Seq("o_orderkey") -> bucketCount)))) {
+      Seq(Tables(s, d, "lineitem").select("l_orderkey", "l_extendedprice", "l_discount"),
+        Tables(s, d, "orders").select("o_orderkey", "o_orderpriority"))
     }
     li.hint("merge").join(ord, col("l_orderkey") === col("o_orderkey"))
       .withColumn("cents",
@@ -2944,8 +2951,8 @@ object DataOps {
     * train-once/serve-many shape of a production tokenizer. Returns
     * the model's tag. */
   private def bpeTag(s: SparkSession, d: String): String = {
-    val tag = s"m${bpeMerges}_${d.replaceAll("[^A-Za-z0-9]", "_")}"
-    graft.operators.Bpe.ensureModel(s, s"$tableRoot/bpe_$tag", tag,
+    val (tag, root) = artifact(d, prefix = s"m${bpeMerges}_", dirPrefix = "bpe_")
+    graft.operators.Bpe.ensureModel(s, root, tag,
       bucketCount) {
       graft.operators.Bpe.train(docs(s, d), col("text"), bpeMerges)
     }

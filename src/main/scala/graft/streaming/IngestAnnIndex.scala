@@ -18,7 +18,7 @@ import graft.operators.Similarity
   * same idempotence contract as IngestDedup / IngestPack).
   *
   * Serving unions the SETTLED base index (the bucketed table a
-  * nightly build writes via Bucketing.writeBucketed) with this run's
+  * nightly build writes via Bucketing.buildOnce) with this run's
   * delta fragments: probes answer from base+delta immediately, and
   * the nightly rebuild folds the delta back into the bucketed base —
   * the standard base+delta index posture. A probe still pays

@@ -47,25 +47,27 @@ object GraftBridge {
     val qe = ds.queryExecution
     val rdd = qe.toRdd.map(_.copy())
     rdd.localCheckpoint()
-    stagedRdds.synchronized {
-      stagedRdds.filterInPlace(_.get != null) // prune GC-cleared slots
-      stagedRdds += new java.lang.ref.WeakReference(rdd)
-    }
+    staged.synchronized(staged.put(rdd, qe))
     ofRows(df.sparkSession, org.apache.spark.sql.execution.LogicalRDD(
       qe.analyzed.output, rdd)(ds.sparkSession))
   }
 
-  /** RDDs checkpointed by [[stageLocal]] since the last release,
-    * held WEAKLY — the explicit-cleanup half of the staging contract.
-    * Weak references matter for library callers that never reach a
+  /** Each RDD checkpointed by [[stageLocal]] since the last release,
+    * mapped to the QueryExecution it was cut from; keys are WEAK — the
+    * explicit-cleanup half of the staging contract. The checkpoint job
+    * is deferred to the frame's first consumer, and its tasks report to
+    * the plan's SQL-metric accumulators, which Spark registers weakly:
+    * keyed on the RDD, the plan stays reachable exactly as long as the
+    * staged RDD, so no metric update is lost to a collected plan.
+    * Weak keys matter for library callers that never reach a
     * [[releaseStaged]] boundary (Dedup.semDedup, Similarity et al. in
     * a user's long-lived session): the returned LogicalRDD is the only
     * strong reference, so once the caller drops the frame the
-    * ContextCleaner reclaims the checkpoint blocks as usual. A strong
-    * registry here would pin every staged block for the JVM lifetime
-    * and defeat that fallback. */
-  private val stagedRdds = scala.collection.mutable.ArrayBuffer
-    .empty[java.lang.ref.WeakReference[org.apache.spark.rdd.RDD[_]]]
+    * ContextCleaner reclaims the checkpoint blocks as usual, and the
+    * entry goes with them. A strong registry here would pin every
+    * staged block for the JVM lifetime and defeat that fallback. */
+  private val staged = new java.util.WeakHashMap[org.apache.spark.rdd.RDD[_],
+    org.apache.spark.sql.execution.QueryExecution]()
 
   /** Unpersist every staged checkpoint block still reachable. Call at
     * a CONSUME boundary — after the frames built on staged lineage
@@ -82,11 +84,8 @@ object GraftBridge {
     * thread B's boundary would unpersist thread A's still-in-flight
     * staged blocks and fail A's query; concurrent callers should skip
     * the hook and rely on the weak-registry + ContextCleaner path. */
-  def releaseStaged(): Unit = stagedRdds.synchronized {
-    stagedRdds.foreach { ref =>
-      val rdd = ref.get
-      if (rdd != null) rdd.unpersist(blocking = false)
-    }
-    stagedRdds.clear()
+  def releaseStaged(): Unit = staged.synchronized {
+    staged.keySet.forEach(_.unpersist(blocking = false))
+    staged.clear()
   }
 }

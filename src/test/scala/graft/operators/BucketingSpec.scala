@@ -14,7 +14,9 @@ import org.apache.spark.sql.functions._
   * lays out: joins and aggregations on the bucket keys plan with zero
   * exchanges (broadcast is disabled for that assertion — at test
   * scale AQE would otherwise broadcast the small side and hide the
-  * bucketing).
+  * bucketing). [[Bucketing.buildOnce]], the one build-once rule for
+  * persisted artifacts, writes a table set once, rebuilds it whole when
+  * any table is missing, and lays each table out as declared.
   */
 class BucketingSpec extends SparkSpec {
 
@@ -88,9 +90,9 @@ class BucketingSpec extends SparkSpec {
   test("co-bucketed join and bucket-key aggregation plan with zero exchanges") {
     val dir = java.nio.file.Files.createTempDirectory("graft_bucketed").toString
     Bucketing.writeBucketed(Tables(spark, sf, "orders"), "b_orders", s"$dir/b_orders",
-      "o_orderkey", 8)
+      Seq("o_orderkey"), 8)
     Bucketing.writeBucketed(Tables(spark, sf, "lineitem"), "b_lineitem", s"$dir/b_lineitem",
-      "l_orderkey", 8)
+      Seq("l_orderkey"), 8)
 
     withNoBroadcast {
       val joined = spark.table("b_lineitem").join(spark.table("b_orders"),
@@ -118,5 +120,61 @@ class BucketingSpec extends SparkSpec {
       crossKey.count()
       assert(crossKey.queryExecution.executedPlan.toString.contains("Exchange"))
     }
+  }
+
+  private def freshRoot(): String =
+    java.nio.file.Files.createTempDirectory("graft_build_once").toString
+
+  private def frame(v: Long): DataFrame =
+    spark.range(0, 40).select(col("id").as("k"), lit(v).as("v"))
+
+  private def values(df: DataFrame): Seq[Long] =
+    df.select("v").distinct().collect().map(_.getLong(0)).toSeq
+
+  test("buildOnce: a second call over a written set never evaluates build") {
+    val root = freshRoot()
+    val set = Seq(Bucketing.Table("bo_once_keyed", "keyed", Some(Seq("k") -> 4)),
+      Bucketing.Table("bo_once_plain", "plain"))
+    var builds = 0
+    Bucketing.buildOnce(spark, root, set) { builds += 1; Seq(frame(1), frame(1)) }
+    val again = Bucketing.buildOnce(spark, root, set)(
+      sys.error("build evaluated although every table of the set exists"))
+    assert(builds == 1)
+    assert(again.map(_.count()) == Seq(40L, 40L))
+  }
+
+  test("buildOnce: a set with one table dropped is rebuilt whole from one build") {
+    val root = freshRoot()
+    val set = Seq(Bucketing.Table("bo_drop_keyed", "keyed", Some(Seq("k") -> 4)),
+      Bucketing.Table("bo_drop_plain", "plain"))
+    Bucketing.buildOnce(spark, root, set)(Seq(frame(1), frame(1)))
+    spark.sql("DROP TABLE bo_drop_plain")
+    var builds = 0
+    val Seq(keyed, plain) = Bucketing.buildOnce(spark, root, set) {
+      builds += 1; Seq(frame(2), frame(2))
+    }
+    assert(builds == 1)
+    assert(values(keyed) == Seq(2L) && values(plain) == Seq(2L),
+      "every table of the set must come from the one rebuild")
+  }
+
+  test("buildOnce: a bucketed table's scan reports its bucketing; a plain table is one file") {
+    val root = freshRoot()
+    val Seq(keyed, _) = Bucketing.buildOnce(spark, root, Seq(
+        Bucketing.Table("bo_layout_keyed", "keyed", Some(Seq("k") -> 4)),
+        Bucketing.Table("bo_layout_plain", "plain"))) {
+      Seq(frame(1), frame(1).repartition(3))
+    }
+    val agg = keyed.groupBy("k").count()
+    assert(agg.count() == 40L)
+    val p = agg.queryExecution.executedPlan.toString
+    assert(!p.contains("Exchange"), s"the bucketed scan must satisfy the key distribution:\n$p")
+    val spec = spark.sessionState.catalog.getTableMetadata(
+      org.apache.spark.sql.catalyst.TableIdentifier("bo_layout_keyed")).bucketSpec
+    assert(spec.map(b => (b.numBuckets, b.bucketColumnNames, b.sortColumnNames))
+      .contains((4, Seq("k"), Seq("k"))))
+    val files = new java.io.File(s"$root/plain").listFiles().map(_.getName)
+      .filter(_.endsWith(".parquet"))
+    assert(files.length == 1, s"plain table files: ${files.toSeq}")
   }
 }

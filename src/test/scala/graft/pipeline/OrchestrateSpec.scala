@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import graft.SparkSpec
+import org.apache.spark.sql.functions.{col, date_format}
 
 /** Retry + resume semantics of the stage orchestrator. */
 class OrchestrateSpec extends SparkSpec {
@@ -69,5 +70,17 @@ class OrchestrateSpec extends SparkSpec {
     val r1 = Orchestrate.runStage(spark, ckpt, "ingest") { ingests += 1 }
     val r2 = Orchestrate.runStage(spark, ckpt, "process", attempts = 1) {}
     assert(ingests == 1 && r1.skipped && !r2.skipped)
+  }
+
+  test("the staged DAG ingests only its days window") {
+    val tmp = freshCkpt()
+    val window = Seq("20240202", "20240203")
+    val r = Orchestrate.staged(spark, CandyData.inputDir, s"$tmp/_stages", tmp,
+      days = Some(window))
+    assert(r.map(_.name) == Seq("ingest", "process", "report") && !r.exists(_.skipped))
+    val dates = spark.read.parquet(s"$tmp/_stages/daily_summary")
+      .select(date_format(col("date"), "yyyyMMdd"))
+      .collect().map(_.getString(0)).sorted.toSeq
+    assert(dates == window, s"daily_summary dates: $dates")
   }
 }
