@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.VectorFunctions.{fastCosine, fastDot, fastNormSq}
@@ -367,10 +367,6 @@ object Similarity {
     rerankByBucket(qb, b, k)
   }
 
-  /** IVF-style coarse index: assign each vector to its nearest of
-    * `centroids` (a tiny broadcast table of (centroid_id, embedding));
-    * queries search only their own cell. Centroids would come from a
-    * sampled k-means at scale; any deterministic seed set works. */
   /** Train IVF centroids with MLlib k-means (seeded → deterministic).
     * At scale this runs on a sample — centroid quality needs only a
     * sketch of the distribution, not the full corpus. Returns the
@@ -389,27 +385,20 @@ object Similarity {
       .toDF("centroid_id", "embedding")
   }
 
-  /** Oracle-replayable Lloyd training. Deterministic by construction:
-    * init = the k lowest-vec_id vectors, cosine distance rounded to
-    * 6dp (ties → lower centroid_id), per-dimension means rounded to
-    * 6dp. The rounding pins every iteration to values both engines
-    * reproduce despite different float summation orders — the same
-    * cross-engine parity trick as the pinned LSH planes above.
-    * Centroid state (k × dims doubles) lives on the driver between
-    * passes — the model-state shape MLlib itself keeps — so each
-    * iteration is exactly one broadcast assignment pass over the
-    * corpus plus a k×dims-row mean. At 100 TB: train on a sample,
-    * assign on the full corpus (same posture as trainCentroids). */
-  /** Session-level training memo: lloydTrain is a PURE function of
+  /** Codebooks as (subspace → k centroids of (centroid_id, doubles)),
+    * the state and the result of the Lloyd loop. */
+  type Codebooks = Seq[(Int, Seq[(Long, Seq[Double])])]
+
+  /** Session-level training memo: the Lloyd loop is a PURE function of
     * its input (closed-form init, 6dp-pinned iterations), so an
-    * identical (canonical input plan, k, iters) triple always yields
-    * the same centroids — queries sharing a training corpus (the IVF
-    * family: cell-size summary, IVF-blocked dedup, incremental
-    * embedding dedup) pay the driver-driven Lloyd loop once per JVM
-    * instead of once per query. Keying on the CANONICALIZED analyzed
-    * plan (not a caller-supplied tag) makes a wrong-key hit
-    * impossible: different sources, filters, or scale dirs canonicalize
-    * differently.
+    * identical (metric, canonical input plan, m, k, iters) key always
+    * yields the same codebooks — queries sharing a training corpus (the
+    * IVF family: cell-size summary, IVF-blocked dedup, incremental
+    * embedding dedup; the PQ family: codes, ADC, recall) pay the
+    * driver-driven loop once per JVM instead of once per query. Keying
+    * on the CANONICALIZED analyzed plan (not a caller-supplied tag)
+    * makes a wrong-key hit impossible: different sources, filters, or
+    * scale dirs canonicalize differently.
     *
     * Two key regimes, both bounded by a 32-entry LRU (an unbounded
     * plan-object map pins every in-memory training corpus in the
@@ -433,14 +422,13 @@ object Similarity {
     *    test). */
   private val lloydMemoMax = 32
   private val lloydMemo =
-    new java.util.LinkedHashMap[AnyRef, Seq[(Long, Seq[Double])]](16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[AnyRef, Seq[(Long, Seq[Double])]]): Boolean =
+    new java.util.LinkedHashMap[AnyRef, Codebooks](16, 0.75f, true) {
+      override def removeEldestEntry(e: java.util.Map.Entry[AnyRef, Codebooks]): Boolean =
         size() > lloydMemoMax
     }
 
   private def lloydMemoKey(metric: String, emb: DataFrame,
-                           k: Int, iters: Int): AnyRef = {
+                           m: Int, k: Int, iters: Int): AnyRef = {
     import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
     val c = emb.queryExecution.analyzed.canonicalized
     val fileKeys = c.collectLeaves().map {
@@ -463,13 +451,13 @@ object Similarity {
       case _ => None
     }
     if (fileKeys.nonEmpty && fileKeys.forall(_.isDefined))
-      (s"$metric-files", c.treeString + fileKeys.flatten.mkString(";"), k, iters)
-    else (s"$metric-plan", c, k, iters)
+      (s"$metric-files", c.treeString + fileKeys.flatten.mkString(";"), m, k, iters)
+    else (s"$metric-plan", c, m, k, iters)
   }
 
-  private def lloydMemoized(metric: String, emb: DataFrame, k: Int, iters: Int)
-                           (train: => Seq[(Long, Seq[Double])]): Seq[(Long, Seq[Double])] = {
-    val key = lloydMemoKey(metric, emb, k, iters)
+  private def lloydMemoized(metric: String, emb: DataFrame, m: Int, k: Int, iters: Int)
+                           (train: => Codebooks): Codebooks = {
+    val key = lloydMemoKey(metric, emb, m, k, iters)
     lloydMemo.synchronized(Option(lloydMemo.get(key))).getOrElse {
       // train OUTSIDE the lock (it drives Spark jobs); a concurrent
       // duplicate train is benign — pure function, identical result
@@ -479,8 +467,25 @@ object Similarity {
     }
   }
 
+  /** A pinned Lloyd metric: its memo name and its 6dp distance. */
+  private[operators] final case class LloydMetric(name: String, dist: (Column, Column) => Column)
+  private[operators] val cosineMetric = LloydMetric("cos", lloydDist)
+  private[operators] val l2Metric = LloydMetric("l2", lloydDistL2)
+
+  /** Oracle-replayable Lloyd training. Deterministic by construction:
+    * init = the k lowest-vec_id vectors, cosine distance rounded to
+    * 6dp (ties → lower centroid_id), per-dimension means rounded to
+    * 6dp. The rounding pins every iteration to values both engines
+    * reproduce despite different float summation orders — the same
+    * cross-engine parity trick as the pinned LSH planes above.
+    * Centroid state (k × dims doubles) lives on the driver between
+    * passes — the model-state shape MLlib itself keeps — so each
+    * iteration is exactly one broadcast assignment pass over the
+    * corpus plus a k×dims-row mean. At 100 TB: train on a sample,
+    * assign on the full corpus (same posture as trainCentroids). It is
+    * the one-key case of [[lloydCodebooks]]. */
   def lloydTrain(emb: DataFrame, k: Int, iters: Int = 4): Seq[(Long, Seq[Double])] =
-    lloydMemoized("cos", emb, k, iters)(lloydTrainImpl(emb, k, iters))
+    lloydCodebooks(cosineMetric, emb, k, iters).head._2
 
   /** Deterministic hash slice of a vector corpus: vectors whose
     * md5-id hash lands in residue 0 of `mod` — a ~1/mod sample that
@@ -510,45 +515,85 @@ object Similarity {
                         sampleMod: Long): Seq[(Long, Seq[Double])] =
     lloydTrain(hashSample(emb, sampleMod), k, iters)
 
-  private def lloydTrainImpl(emb: DataFrame, k: Int, iters: Int): Seq[(Long, Seq[Double])] = {
-    val spark = emb.sparkSession
-    import spark.implicits._
-    // The loop drives iters+1 jobs over the same vectors; pin them in
-    // memory for the duration instead of re-scanning the source (and
-    // re-deriving the projection) every assignment pass.
-    val src = emb.select("vec_id", "embedding").persist()
-    try {
-      var cents: Seq[(Long, Seq[Double])] =
-        src.orderBy("vec_id").limit(k).collect()
-          .zipWithIndex.map { case (r, i) =>
-            (i.toLong, r.getSeq[Float](1).map(_.toDouble)) }.toSeq
-      (1 to iters).foreach { _ =>
-        val assigned = lloydAssign(src, cents.toDF("centroid_id", "cent"))
-        val means = assigned
-          .select(col("centroid_id"), posexplode(col("embedding")))
-          .groupBy(col("centroid_id"), col("pos"))
-          // order-independent mean: per-value integer micros, an exact
-          // integer sum, one rounded division — round(avg(), 6) sits at
-          // a grid boundary whenever the true mean does, and parallel
-          // summation order then flips the 6th decimal run-to-run
-          .agg((round(sum(round(col("col").cast("double") * 1e6).cast("long"))
-              / count(lit(1))).cast("long") / 1e6).as("v"))
-          .collect()
-        val byCid = means.groupBy(_.getLong(0)).map { case (cid, rows) =>
-          cid -> rows.sortBy(_.getInt(1)).map(_.getDouble(2)).toSeq
+  /** The one Lloyd loop, memoized: m codebooks of k centroids, one per
+    * contiguous `sub`-wide subspace of `emb`'s vectors (m = 1: the
+    * whole vector), trained together under `metric`. The points are
+    * keyed by subspace ([[subspaces]]) and every pass is ONE keyed
+    * [[argmin]] plus ONE (subspace, centroid_id, pos)-keyed mean, so
+    * the loop fires iters + 1 driver collects whatever m is. Per key it
+    * is exactly the single-key loop: init = the k lowest vec_ids, ties
+    * → lower centroid_id, means = exact integer-micro sums with one
+    * rounded division, and a cluster that loses all members keeps its
+    * previous centroid. Both metrics and the recenter cast the point to
+    * double inside, so float and double inputs need no cast up front. */
+  private[operators] def lloydCodebooks(metric: LloydMetric, emb: DataFrame, k: Int,
+                                        iters: Int, m: Int = 1, sub: Int = 0): Codebooks =
+    lloydMemoized(metric.name, emb, m, k, iters) {
+      // The loop drives iters+1 jobs over the same points; pin them in
+      // memory for the duration instead of re-scanning the source (and
+      // re-deriving the slices) every assignment pass.
+      val src = subspaces(emb.select("vec_id", "embedding"), m, sub).persist()
+      try {
+        val init = src
+          .withColumn("rn", row_number().over(
+            Window.partitionBy("subspace").orderBy("vec_id")))
+          .filter(col("rn") <= k)
+          .select(col("subspace"), col("rn"), col("embedding").cast("array<double>"))
+          .collect().groupBy(_.getLong(0))
+        val initBooks: Codebooks = (0 until m).map { s =>
+          s -> init.getOrElse(s.toLong, Array.empty).sortBy(_.getInt(1))
+            .map(r => (r.getInt(1) - 1L, r.getSeq[Double](2))).toSeq
         }
-        // a cluster that lost all members keeps its previous centroid
-        cents = cents.map { case (cid, old) => (cid, byCid.getOrElse(cid, old)) }
-      }
-      cents
-    } finally src.unpersist(blocking = false)
+        (1 to iters).foldLeft(initBooks) { (books, _) =>
+          val means = nearestCode(src, books, metric.dist, "centroid_id", "embedding")
+            .select(col("subspace"), col("centroid_id"), posexplode(col("embedding")))
+            .groupBy(col("subspace"), col("centroid_id"), col("pos"))
+            // order-independent mean: per-value integer micros, an exact
+            // integer sum, one rounded division — round(avg(), 6) sits at
+            // a grid boundary whenever the true mean does, and parallel
+            // summation order then flips the 6th decimal run-to-run
+            .agg((round(sum(round(col("col").cast("double") * 1e6).cast("long"))
+              / count(lit(1))).cast("long") / 1e6).as("v"))
+            .collect()
+          val byCell = means.groupBy(r => (r.getLong(0).toInt, r.getLong(1)))
+            .map { case (cell, rows) => cell -> rows.sortBy(_.getInt(2)).map(_.getDouble(3)).toSeq }
+          // a cluster that lost all members keeps its previous centroid
+          books.map { case (s, cents) =>
+            s -> cents.map { case (cid, old) => (cid, byCell.getOrElse((s, cid), old)) }
+          }
+        }
+      } finally src.unpersist(blocking = false)
+    }
+
+  /** Keyed points: each row of `df` once per subspace s < m, with
+    * `subspace` = s and `embedding` cut to its s-th contiguous
+    * `sub`-wide slice; m = 1 keys the whole vector as subspace 0. */
+  private def subspaces(df: DataFrame, m: Int, sub: Int): DataFrame =
+    if (m == 1) df.withColumn("subspace", lit(0L))
+    else df.withColumn("subspace", explode(sequence(lit(0L), lit(m - 1L))))
+      .withColumn("embedding",
+        slice(col("embedding"), col("subspace").cast("int") * sub + 1, lit(sub)))
+
+  /** Codebooks as one frame (subspace, code, cent): the ADC tables'
+    * input and the persisted IVFADC books table. */
+  private def bookFrame(spark: org.apache.spark.sql.SparkSession, books: Codebooks): DataFrame = {
+    import spark.implicits._
+    books.flatMap { case (s, cents) =>
+      cents.map { case (cid, cent) => (s.toLong, cid, cent) }
+    }.toDF("subspace", "code", "cent")
+  }
+
+  /** Subspace width dims / m: the one dims job a PQ entry point fires. */
+  private def subWidth(emb: DataFrame, m: Int): Int = {
+    val dims = emb.select(size(col("embedding"))).first().getInt(0)
+    require(dims % m == 0, s"dims $dims not divisible by m=$m")
+    dims / m
   }
 
   /** 6dp-rounded cosine distance between a float-array vector column
     * and a double-array centroid column — the pinned metric every
     * lloydTrain iteration (and its DuckDB replay) agrees on. */
-  def lloydDist(v: org.apache.spark.sql.Column,
-                cent: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
+  def lloydDist(v: Column, cent: Column): Column = {
     val vd = v.cast("array<double>")
     val dp = aggregate(zip_with(vd, cent, (x, y) => x * y), lit(0.0), _ + _)
     val nv = sqrt(aggregate(transform(vd, x => x * x), lit(0.0), _ + _))
@@ -556,64 +601,75 @@ object Similarity {
     round(lit(1.0) - dp / (nv * nc), 6)
   }
 
+  /** The one centroid argmin every assigner, encoder and Lloyd pass
+    * runs: broadcast the centroids (centroid_id, cent) — joined on
+    * `subspace` when `keyed`, crossed with every point otherwise —
+    * score each pair with `dist(point embedding, cent)`, and keep
+    * min(struct(dist, centroid_id, …)) per point. Lexicographic struct
+    * ordering reproduces (dist ASC, centroid_id ASC) tie-breaking, but
+    * unlike a row_number window it's a partial-aggregatable hash agg:
+    * map-side combine collapses each point's centroid rows before any
+    * exchange, and nothing is globally sorted. `out` names the columns
+    * after the point key (`subspace`, `vec_id`): `dist`, `centroid_id`,
+    * or a point column, which rides along inside the min-struct so no
+    * second join is needed. */
+  private def argmin(points: DataFrame, cents: DataFrame, keyed: Boolean,
+                     dist: (Column, Column) => Column, out: String*): DataFrame = {
+    val by = if (keyed) Seq("subspace", "vec_id") else Seq("vec_id")
+    val pairs =
+      if (keyed) points.as("v").join(broadcast(cents.as("c")),
+        col("v.subspace") === col("c.subspace"))
+      else points.as("v").crossJoin(broadcast(cents.as("c")))
+    val carried = out.filterNot(Set("dist", "centroid_id")).map(c => col(s"v.$c").as(c))
+    pairs.withColumn("dist", dist(col("v.embedding"), col("c.cent")))
+      .groupBy(by.map(c => col(s"v.$c").as(c)): _*)
+      .agg(min(struct(col("dist") +: col("c.centroid_id").as("centroid_id") +: carried: _*))
+        .as("m"))
+      .select(by.map(col) ++ out.map(c => col(s"m.$c").as(c)): _*)
+  }
+
   /** One assignment pass against double-precision centroids with the
     * 6dp-rounded cosine distance lloydTrain fixes (ties → lower
-    * centroid_id). Same partial-aggregatable min(struct) argmin as
-    * ivfAssign. */
-  def lloydAssign(emb: DataFrame, centroids: DataFrame): DataFrame = {
-    emb.as("v").crossJoin(broadcast(centroids.as("cent")))
-      .withColumn("dist", lloydDist(col("v.embedding"), col("cent.cent")))
-      .groupBy(col("v.vec_id").as("vec_id"))
-      .agg(min(struct(col("dist"), col("cent.centroid_id").as("centroid_id"),
-        col("v.embedding").as("embedding"))).as("m"))
-      .select(col("vec_id"), col("m.centroid_id").as("centroid_id"),
-        col("m.embedding").as("embedding"))
-  }
+    * centroid_id). */
+  def lloydAssign(emb: DataFrame, centroids: DataFrame): DataFrame =
+    argmin(emb, centroids, keyed = false, lloydDist, "centroid_id", "embedding")
 
   /** Product quantization (Jégou, Douze & Schmid, "Product
     * Quantization for Nearest Neighbor Search", TPAMI 2011): the
     * vector splits into `m` contiguous subvectors, each quantized by
     * its own small codebook — m·log2(k) bits per vector instead of
     * dims·32, the compression leg the IVF family serves against at
-    * scale. Codebooks train through the same 6dp-pinned Lloyd loop as
-    * the coarse quantizer (one loop per subspace, memoized on the
-    * sliced plan), so the whole train→encode pipeline replays exactly
-    * in the DuckDB oracle. Sub-distance is the engine's pinned cosine
-    * metric, applied per subspace.
+    * scale. The m codebooks train together in the same 6dp-pinned
+    * Lloyd loop as the coarse quantizer, keyed by subspace and
+    * memoized on the unsliced input plan ([[lloydCodebooks]]), so the
+    * whole train→encode pipeline replays exactly in the DuckDB oracle.
+    * Sub-distance is the engine's pinned cosine metric, applied per
+    * subspace.
     *
     * Returns per subspace the trained codebook. Encode/ADC below are
-    * the serving halves: encoding is m broadcast-argmin passes
-    * (union of m keyed plans — no shuffle grows with m beyond the
-    * output itself). */
-  def pqTrain(emb: DataFrame, m: Int, k: Int, iters: Int)
-      : Seq[(Int, Seq[(Long, Seq[Double])])] = {
-    val dims = emb.select(size(col("embedding"))).first().getInt(0)
-    require(dims % m == 0, s"dims $dims not divisible by m=$m")
-    val sub = dims / m
-    (0 until m).map { s =>
-      s -> lloydTrain(
-        emb.select(col("vec_id"),
-          slice(col("embedding"), s * sub + 1, sub).as("embedding")),
-        k, iters)
-    }
+    * the serving halves: encoding is one keyed broadcast-argmin pass
+    * over the m slices of every vector. */
+  def pqTrain(emb: DataFrame, m: Int, k: Int, iters: Int): Codebooks =
+    lloydCodebooks(cosineMetric, emb, k, iters, m, subWidth(emb, m))
+
+  /** One keyed argmin of subspace-keyed points against their
+    * codebooks; `out` as in [[argmin]], the code named `centroid_id`. */
+  private def nearestCode(points: DataFrame, books: Codebooks,
+                          dist: (Column, Column) => Column, out: String*): DataFrame =
+    argmin(points, bookFrame(points.sparkSession, books).withColumnRenamed("code", "centroid_id"),
+      keyed = true, dist, out: _*)
+
+  /** PQ codes: `(vec_id, subspace, code)` — one keyed argmin pass over
+    * the m slices against the broadcast codebooks. */
+  def pqEncode(emb: DataFrame, m: Int, k: Int, iters: Int): DataFrame = {
+    val sub = subWidth(emb, m)
+    pqCodes(emb, lloydCodebooks(cosineMetric, emb, k, iters, m, sub), sub)
   }
 
-  /** PQ codes: `(vec_id, subspace, code)` — one argmin assignment per
-    * subspace against its broadcast codebook. */
-  def pqEncode(emb: DataFrame, m: Int, k: Int, iters: Int): DataFrame = {
-    val spark = emb.sparkSession
-    import spark.implicits._
-    val dims = emb.select(size(col("embedding"))).first().getInt(0)
-    val sub = dims / m
-    pqTrain(emb, m, k, iters).map { case (s, cents) =>
-      lloydAssign(
-        emb.select(col("vec_id"),
-          slice(col("embedding"), s * sub + 1, sub).as("embedding")),
-        cents.toDF("centroid_id", "cent"))
-        .select(col("vec_id"), lit(s.toLong).as("subspace"),
-          col("centroid_id").as("code"))
-    }.reduce(_ unionByName _)
-  }
+  private def pqCodes(emb: DataFrame, books: Codebooks, sub: Int): DataFrame =
+    nearestCode(subspaces(emb.select("vec_id", "embedding"), books.length, sub), books,
+      lloydDist, "centroid_id")
+      .select(col("vec_id"), col("subspace"), col("centroid_id").as("code"))
 
   /** Asymmetric-distance top-k: queries stay full precision, the
     * corpus is its PQ codes — per query the m×k sub-distance table is
@@ -623,35 +679,34 @@ object Similarity {
     * keys — the point of PQ serving at 100 TB. */
   def pqAdcTopK(emb: DataFrame, queries: DataFrame, m: Int, k: Int,
                 iters: Int, topK: Int): DataFrame = {
-    val spark = emb.sparkSession
-    import spark.implicits._
-    val dims = emb.select(size(col("embedding"))).first().getInt(0)
-    val sub = dims / m
-    val codes = pqEncode(emb, m, k, iters)
-    val cbooks = pqTrain(emb, m, k, iters).flatMap { case (s, cents) =>
-      cents.map { case (cid, cent) => (s.toLong, cid, cent) }
-    }.toDF("subspace", "code", "cent")
+    val sub = subWidth(emb, m)
+    val books = lloydCodebooks(cosineMetric, emb, k, iters, m, sub)
     val qsub = queries.select(col("vec_id").as("query_id"), col("embedding"))
-      .crossJoin(broadcast(cbooks))
+      .crossJoin(broadcast(bookFrame(emb.sparkSession, books)))
       .withColumn("qs",
         slice(col("embedding"), col("subspace").cast("int") * sub + 1, lit(sub)))
       .select(col("query_id"), col("subspace"), col("code"),
         lloydDist(col("qs"), col("cent")).as("sd"))
-    // sum EXACT integer micros, not the 6dp doubles: the sub-distances
-    // are already on the rounding grid, so a float sum lands exactly ON
-    // a round(_, 6) boundary and the result flips with summation order
-    // (parallel aggregation order is nondeterministic in any engine)
-    codes.join(qsub, Seq("subspace", "code"))
-      .groupBy(col("query_id"), col("vec_id").as("neighbor_id"))
+    adcTopK(pqCodes(emb, books, sub).join(qsub, Seq("subspace", "code")), topK)
+  }
+
+  /** The ADC ranking tail pqAdcTopK and ivfPqProbe share: over the
+    * (query_id, vec_id, sd) code matches, sum each (query, vector)'s
+    * sub-distances, drop the query itself, keep the topK nearest. The
+    * sum is over EXACT integer micros, not the 6dp doubles: the
+    * sub-distances are already on the rounding grid, so a float sum
+    * lands exactly ON a round(_, 6) boundary and the result flips with
+    * summation order (parallel aggregation order is nondeterministic
+    * in any engine). */
+  private def adcTopK(matches: DataFrame, topK: Int): DataFrame =
+    matches.groupBy(col("query_id"), col("vec_id").as("neighbor_id"))
       .agg((sum(round(col("sd") * 1e6).cast("long")) / 1e6).as("adc_dist"))
       .filter(col("query_id") =!= col("neighbor_id"))
       .withColumn("rk", row_number().over(
-        org.apache.spark.sql.expressions.Window.partitionBy("query_id")
-          .orderBy(col("adc_dist"), col("neighbor_id"))))
+        Window.partitionBy("query_id").orderBy(col("adc_dist"), col("neighbor_id"))))
       .filter(col("rk") <= topK)
       .select(col("query_id"), col("neighbor_id"), col("adc_dist"),
         col("rk").cast("long").as("rk"))
-  }
 
   /** The IVF serving index: the cell assignment plus the rerank norm,
     * with the cell id exposed as `bucket` so the probe shares
@@ -680,26 +735,8 @@ object Similarity {
     * monitor needs how far each vector sits from its centroid, not
     * just which cell it landed in. */
   def lloydAssignDist(emb: DataFrame, centroids: DataFrame): DataFrame =
-    emb.as("v").crossJoin(broadcast(centroids.as("cent")))
-      .withColumn("dist", lloydDist(col("v.embedding"), col("cent.cent")))
-      .groupBy(col("v.vec_id").as("vec_id"))
-      .agg(min(struct(col("dist"), col("cent.centroid_id").as("centroid_id"))).as("m"))
-      .select(col("vec_id"), col("m.centroid_id").as("centroid_id"),
-        col("m.dist").as("dist"))
+    argmin(emb, centroids, keyed = false, lloydDist, "centroid_id", "dist")
 
-  /** Index staleness / distribution-drift monitor — the vector-index
-    * twin of Bpe.coverage: the serving-side QA that decides when the
-    * quantizer retrains. Both sides assign under the SAME stored
-    * centroids (in production the corpus numbers come off the
-    * persisted assignment table; the batch pays |B|·k broadcast
-    * dots — the corpus never rescans). Per cell: occupancy share and
-    * mean assignment distance on each side. Diverging shares mean the
-    * index no longer balances the load (hot cells → skewed probes);
-    * a rising batch-side mean distance means the centroids no longer
-    * describe the incoming data. Mean distances aggregate as integer
-    * micro-units (the Lloyd-recenter trick), so the result is
-    * partial-order invariant and the DuckDB oracle replays it
-    * exactly. */
   /** Embedding outlier gate: flag vectors whose assignment distance
     * sits more than 3σ ABOVE their cell's mean — the corrupt-vector /
     * off-manifold filter a corpus runs before trusting its embedding
@@ -745,6 +782,19 @@ object Similarity {
         col("is_outlier"))
   }
 
+  /** Index staleness / distribution-drift monitor — the vector-index
+    * twin of Bpe.coverage: the serving-side QA that decides when the
+    * quantizer retrains. Both sides assign under the SAME stored
+    * centroids (in production the corpus numbers come off the
+    * persisted assignment table; the batch pays |B|·k broadcast
+    * dots — the corpus never rescans). Per cell: occupancy share and
+    * mean assignment distance on each side. Diverging shares mean the
+    * index no longer balances the load (hot cells → skewed probes);
+    * a rising batch-side mean distance means the centroids no longer
+    * describe the incoming data. Mean distances aggregate as integer
+    * micro-units (the Lloyd-recenter trick), so the result is
+    * partial-order invariant and the DuckDB oracle replays it
+    * exactly. */
   def indexDrift(centroids: DataFrame, corpus: DataFrame,
                  batch: DataFrame): DataFrame = {
     def cellStats(df: DataFrame, n: String, md: String): DataFrame =
@@ -822,22 +872,15 @@ object Similarity {
         col("cos"), col("rk"))
   }
 
-  def ivfAssign(emb: DataFrame, centroids: DataFrame): DataFrame = {
-    // argmin as min(struct(dist, id)) — lexicographic struct ordering
-    // reproduces (dist ASC, centroid_id ASC) tie-breaking, but unlike a
-    // row_number window it's a partial-aggregatable hash agg: map-side
-    // combine collapses each vector's |centroids| rows before any
-    // exchange, and nothing is globally sorted. The embedding rides
-    // along inside the min-struct so no second join is needed.
-    emb.as("v")
-      .crossJoin(broadcast(centroids.as("cent")))
-      .withColumn("d", lit(1.0) - fastCosine(col("v.embedding"), col("cent.embedding")))
-      .groupBy(col("v.vec_id").as("vec_id"))
-      .agg(min(struct(col("d"), col("cent.centroid_id").as("centroid_id"),
-        col("v.embedding").as("embedding"))).as("m"))
-      .select(col("vec_id"), col("m.embedding").as("embedding"),
-        col("m.centroid_id").as("centroid_id"))
-  }
+  /** IVF-style coarse index: assign each vector to its nearest of
+    * `centroids` (a tiny broadcast table of (centroid_id, embedding));
+    * queries search only their own cell. Centroids would come from a
+    * sampled k-means at scale; any deterministic seed set works. The
+    * distance is the unrounded `fastCosine` one, not the pinned Lloyd
+    * metric. */
+  def ivfAssign(emb: DataFrame, centroids: DataFrame): DataFrame =
+    argmin(emb, centroids.select(col("centroid_id"), col("embedding").as("cent")),
+      keyed = false, (v, c) => lit(1.0) - fastCosine(v, c), "embedding", "centroid_id")
 
   // ------------------------------------------------------------------
   // IVF-PQ (IVFADC — Jégou, Douze & Schmid 2011 §IV): the coarse
@@ -845,70 +888,20 @@ object Similarity {
   // (vector − cell centroid), and a query probes only its nprobe
   // nearest cells with per-cell ADC tables. Residuals cluster around
   // the origin, where the cosine metric degenerates (norms → 0 make
-  // the ratio unstable), so the residual codebooks train under a
-  // squared-L2 twin of the pinned Lloyd loop — division-free, same
-  // 6dp rounding contract, so the whole composed train→encode→search
-  // path still replays exactly in the DuckDB oracle.
+  // the ratio unstable), so the m residual codebooks train in the
+  // same keyed Lloyd loop under the pinned squared-L2 metric —
+  // division-free, same 6dp rounding contract, so the whole composed
+  // train→encode→search path still replays exactly in the DuckDB
+  // oracle.
   // ------------------------------------------------------------------
 
   /** 6dp-rounded squared-L2 distance between a (float or double)
     * array column and a double-array centroid column — the pinned
     * metric of the residual Lloyd loop. No sqrt: squared L2 ranks
     * identically and keeps the replay to one rounding site. */
-  def lloydDistL2(v: org.apache.spark.sql.Column,
-                  cent: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+  def lloydDistL2(v: Column, cent: Column): Column =
     round(aggregate(zip_with(v.cast("array<double>"), cent,
       (x, y) => (x - y) * (x - y)), lit(0.0), _ + _), 6)
-
-  /** Argmin assignment under the pinned squared-L2 metric (ties →
-    * lower centroid_id) — same partial-aggregatable min-struct shape
-    * as lloydAssign. */
-  def lloydAssignL2(emb: DataFrame, centroids: DataFrame): DataFrame = {
-    emb.as("v").crossJoin(broadcast(centroids.as("cent")))
-      .withColumn("dist", lloydDistL2(col("v.embedding"), col("cent.cent")))
-      .groupBy(col("v.vec_id").as("vec_id"))
-      .agg(min(struct(col("dist"), col("cent.centroid_id").as("centroid_id"),
-        col("v.embedding").as("embedding"))).as("m"))
-      .select(col("vec_id"), col("m.centroid_id").as("centroid_id"),
-        col("m.embedding").as("embedding"))
-  }
-
-  /** Squared-L2 Lloyd training over a double-array embedding column —
-    * same closed-form init (k lowest vec_ids), 6dp-pinned iterations,
-    * empty-cluster carry-forward, and session memo as the cosine
-    * loop. Input arrays may be float or double; state is doubles. */
-  def lloydTrainL2(emb: DataFrame, k: Int, iters: Int): Seq[(Long, Seq[Double])] =
-    lloydMemoized("l2", emb, k, iters)(lloydTrainL2Impl(emb, k, iters))
-
-  private def lloydTrainL2Impl(emb: DataFrame, k: Int, iters: Int): Seq[(Long, Seq[Double])] = {
-    val spark = emb.sparkSession
-    import spark.implicits._
-    val src = emb.select(col("vec_id"),
-      col("embedding").cast("array<double>").as("embedding")).persist()
-    try {
-      var cents: Seq[(Long, Seq[Double])] =
-        src.orderBy("vec_id").limit(k).collect()
-          .zipWithIndex.map { case (r, i) => (i.toLong, r.getSeq[Double](1)) }.toSeq
-      (1 to iters).foreach { _ =>
-        val assigned = lloydAssignL2(src, cents.toDF("centroid_id", "cent"))
-        val means = assigned
-          .select(col("centroid_id"), posexplode(col("embedding")))
-          .groupBy(col("centroid_id"), col("pos"))
-          // order-independent mean: per-value integer micros, an exact
-          // integer sum, one rounded division — round(avg(), 6) sits at
-          // a grid boundary whenever the true mean does, and parallel
-          // summation order then flips the 6th decimal run-to-run
-          .agg((round(sum(round(col("col").cast("double") * 1e6).cast("long"))
-              / count(lit(1))).cast("long") / 1e6).as("v"))
-          .collect()
-        val byCid = means.groupBy(_.getLong(0)).map { case (cid, rows) =>
-          cid -> rows.sortBy(_.getInt(1)).map(_.getDouble(2)).toSeq
-        }
-        cents = cents.map { case (cid, old) => (cid, byCid.getOrElse(cid, old)) }
-      }
-      cents
-    } finally src.unpersist(blocking = false)
-  }
 
   /** Coarse assignment + 6dp-pinned residuals: (vec_id, centroid_id,
     * embedding = v − cell centroid, as doubles). The IVFADC encode
@@ -928,26 +921,20 @@ object Similarity {
   /** IVF-PQ codebooks: the coarse quantizer is the engine's shared
     * cosine Lloyd loop (memoized — the IVF serving family and IVFADC
     * quantize with the SAME cells), the m residual codebooks train
-    * under the squared-L2 loop on contiguous residual slices. */
+    * together under the squared-L2 metric, keyed by subspace. */
   def ivfPqTrain(emb: DataFrame, kc: Int, coarseIters: Int, m: Int, k: Int,
-                 iters: Int): (Seq[(Long, Seq[Double])], Seq[(Int, Seq[(Long, Seq[Double])])]) = {
+                 iters: Int): (Seq[(Long, Seq[Double])], Codebooks) =
+    ivfPqBooks(emb, kc, coarseIters, m, k, iters, subWidth(emb, m))
+
+  private def ivfPqBooks(emb: DataFrame, kc: Int, coarseIters: Int, m: Int, k: Int,
+                         iters: Int, sub: Int): (Seq[(Long, Seq[Double])], Codebooks) = {
     val coarse = lloydTrain(emb, kc, coarseIters)
     // NOT staged (r21 A/B): the residual frame is a broadcast-argmin
-    // projection — recomputing it per sub-codebook is cheaper than a
-    // localCheckpoint round-trip (measured: staging regressed
-    // sim_ivfpq_recall 1.9 s → 3.2 s). The guide §5 caching rule:
-    // materialize only when recompute beats the memory traffic.
-    val res = ivfResiduals(emb, coarse)
-    val dims = emb.select(size(col("embedding"))).first().getInt(0)
-    require(dims % m == 0, s"dims $dims not divisible by m=$m")
-    val sub = dims / m
-    val books = (0 until m).map { s =>
-      s -> lloydTrainL2(
-        res.select(col("vec_id"),
-          slice(col("embedding"), s * sub + 1, sub).as("embedding")),
-        k, iters)
-    }
-    (coarse, books)
+    // projection — recomputing it is cheaper than a localCheckpoint
+    // round-trip (measured: staging regressed sim_ivfpq_recall
+    // 1.9 s → 3.2 s). The guide §5 caching rule: materialize only
+    // when recompute beats the memory traffic.
+    (coarse, lloydCodebooks(l2Metric, ivfResiduals(emb, coarse), k, iters, m, sub))
   }
 
   /** The composed index content: (vec_id, centroid_id, subspace,
@@ -956,30 +943,22 @@ object Similarity {
     * this frame (persisted bucketed on centroid_id) IS the index. */
   def ivfPqEncode(emb: DataFrame, kc: Int, coarseIters: Int, m: Int, k: Int,
                   iters: Int): DataFrame = {
-    val (coarse, books) = ivfPqTrain(emb, kc, coarseIters, m, k, iters)
-    ivfPqEncodeWith(emb, coarse, books)
+    val sub = subWidth(emb, m)
+    val (coarse, books) = ivfPqBooks(emb, kc, coarseIters, m, k, iters, sub)
+    ivfPqEncodeWith(emb, coarse, books, sub)
   }
 
+  /** One keyed argmin pass over the m residual slices; the cell id
+    * rides along in the min-struct. NOT staged — same A/B as
+    * ivfPqBooks: the projection is cheaper recomputed than
+    * checkpointed. */
   private def ivfPqEncodeWith(emb: DataFrame, coarse: Seq[(Long, Seq[Double])],
-                              books: Seq[(Int, Seq[(Long, Seq[Double])])]): DataFrame = {
-    val spark = emb.sparkSession
-    import spark.implicits._
-    // NOT staged — same A/B as ivfPqTrain: the projection is cheaper
-    // recomputed than checkpointed.
-    val res = ivfResiduals(emb, coarse)
-    val dims = emb.select(size(col("embedding"))).first().getInt(0)
-    val sub = dims / books.length
-    val codes = books.map { case (s, cents) =>
-      lloydAssignL2(
-        res.select(col("vec_id"),
-          slice(col("embedding"), s * sub + 1, sub).as("embedding")),
-        cents.toDF("centroid_id", "cent"))
-        .select(col("vec_id"), lit(s.toLong).as("subspace"),
-          col("centroid_id").as("code"))
-    }.reduce(_ unionByName _)
-    codes.join(res.select(col("vec_id"), col("centroid_id")), "vec_id")
-      .select(col("vec_id"), col("centroid_id"), col("subspace"), col("code"))
-  }
+                              books: Codebooks, sub: Int): DataFrame =
+    nearestCode(subspaces(ivfResiduals(emb, coarse)
+        .select(col("vec_id"), col("centroid_id").as("cell"), col("embedding")),
+        books.length, sub), books, lloydDistL2, "centroid_id", "cell")
+      .select(col("vec_id"), col("cell").as("centroid_id"), col("subspace"),
+        col("centroid_id").as("code"))
 
   /** IVFADC search: each query routes to its nprobe nearest coarse
     * cells, computes ONE residual + m×k sub-distance table per probed
@@ -992,14 +971,10 @@ object Similarity {
                    m: Int, k: Int, iters: Int, nprobe: Int, topK: Int): DataFrame = {
     val spark = emb.sparkSession
     import spark.implicits._
-    val (coarse, books) = ivfPqTrain(emb, kc, coarseIters, m, k, iters)
-    val codes = ivfPqEncodeWith(emb, coarse, books)
-    val dims = emb.select(size(col("embedding"))).first().getInt(0)
-    val cents = coarse.toDF("centroid_id", "cent")
-    val bookDf = books.flatMap { case (s, cs) =>
-      cs.map { case (cid, cent) => (s.toLong, cid, cent) }
-    }.toDF("subspace", "code", "cent")
-    ivfPqProbe(codes, cents, bookDf, queries, dims / m, nprobe, topK)
+    val sub = subWidth(emb, m)
+    val (coarse, books) = ivfPqBooks(emb, kc, coarseIters, m, k, iters, sub)
+    ivfPqProbe(ivfPqEncodeWith(emb, coarse, books, sub), coarse.toDF("centroid_id", "cent"),
+      bookFrame(spark, books), queries, sub, nprobe, topK)
   }
 
   /** IVFADC search against MODEL FRAMES — the serving half, shared by
@@ -1026,18 +1001,10 @@ object Similarity {
         lloydDistL2(
           slice(col("qres"), col("subspace").cast("int") * sub + 1, lit(sub)),
           col("cent")).as("sd"))
-    // exact integer micros — same order-independence fix as pqAdcTopK
-    codes.as("c")
+    adcTopK(codes.as("c")
       .join(qs.as("q"), col("c.centroid_id") === col("q.cell")
-        && col("c.subspace") === col("q.subspace") && col("c.code") === col("q.code"))
-      .groupBy(col("q.query_id").as("query_id"), col("c.vec_id").as("neighbor_id"))
-      .agg((sum(round(col("q.sd") * 1e6).cast("long")) / 1e6).as("adc_dist"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("rk", row_number().over(
-        Window.partitionBy("query_id").orderBy(col("adc_dist"), col("neighbor_id"))))
-      .filter(col("rk") <= topK)
-      .select(col("query_id"), col("neighbor_id"), col("adc_dist"),
-        col("rk").cast("long").as("rk"))
+        && col("c.subspace") === col("q.subspace") && col("c.code") === col("q.code")),
+      topK)
   }
 
   /** Persist-or-load the IVFADC model ([[Bucketing.buildOnce]]): the
@@ -1059,51 +1026,14 @@ object Similarity {
       Bucketing.Table(s"ivfpq_codes_$tag", "codes",
         Some(Seq("centroid_id", "subspace", "code") -> nBuckets)))) {
       val c = corpus
-      val (coarse, codebooks) = ivfPqTrain(c, kc, coarseIters, m, k, iters)
-      Seq(coarse.toDF("centroid_id", "cent"),
-        codebooks.flatMap { case (s, cs) =>
-          cs.map { case (cid, cent) => (s.toLong, cid, cent) }
-        }.toDF("subspace", "code", "cent"),
-        ivfPqEncodeWith(c, coarse, codebooks))
+      val sub = subWidth(c, m)
+      val (coarse, codebooks) = ivfPqBooks(c, kc, coarseIters, m, k, iters, sub)
+      Seq(coarse.toDF("centroid_id", "cent"), bookFrame(spark, codebooks),
+        ivfPqEncodeWith(c, coarse, codebooks, sub))
     }
     (codes, cents, books)
   }
 
-  /** The serving loop's hinge between the drift monitor and the model
-    * artifact: probe the PERSISTED IVFADC model's drift against an
-    * incoming batch and retrain only when the per-cell occupancy shift
-    * exceeds `maxShareGap` (max per-cell |corpus_frac − batch_frac|,
-    * [[indexDrift]]'s share_gap). Below the threshold the call is
-    * TRAINING-FREE and idempotent — the corpus thunk is never
-    * evaluated (IndexLifecycleSpec passes a throwing thunk) and the
-    * stored tables are returned as-is; above it the replacement model
-    * is built FIRST under temp table names in the non-serving
-    * generation directory, and only after the full rebuild succeeds
-    * does each serving table swap by rename-aside → rename-in →
-    * drop-aside — a failure anywhere inside training/encoding leaves
-    * the stored model intact and serving (the drop-then-rebuild form
-    * had no model registered for the whole retrain window, and a
-    * crash stranded the store empty), and a crash INSIDE the swap
-    * itself leaves every table registered under some name (final,
-    * `__old` aside, or `__new` temp) with both generations' files on
-    * disk — recovery is a catalog rename, never a retrain, and the
-    * next call performs it AUTOMATICALLY on entry, generation-aware
-    * ([[recoverInterruptedSwap]]: the whole table SET rolls forward
-    * to the fully-built new generation or back to the old one —
-    * never a per-table rename that could serve PQ codes against the
-    * wrong generation's centroids); the only residual window is a final name being
-    * briefly unbound between its two renames, during which concurrent
-    * readers of that one table see transient table-not-found. Generations ping-pong between
-    * `$root/gen_a` and `$root/gen_b` so the overwrite never touches
-    * files the current model serves from.
-    *
-    * Monitoring cost: corpus-side occupancy is an aggregate of the
-    * stored CODE frame itself (every vector carries its cell id m
-    * times, and shares are ratios, so the m factor cancels — the
-    * corpus is never rescanned to monitor the index); the batch pays
-    * one |B|·kc broadcast-centroid assignment. The per-cell frame is
-    * kc rows — model-sized driver state, the same boundary the
-    * centroid tables already cross. */
   /** GENERATION-AWARE recovery from a crash inside the per-table swap
     * loop, run on entry to every refresh. The naive per-table form —
     * "an unbound final with a live `__old` aside is renamed back in" —
@@ -1184,6 +1114,41 @@ object Similarity {
     }
   }
 
+  /** The serving loop's hinge between the drift monitor and the model
+    * artifact: probe the PERSISTED IVFADC model's drift against an
+    * incoming batch and retrain only when the per-cell occupancy shift
+    * exceeds `maxShareGap` (max per-cell |corpus_frac − batch_frac|,
+    * [[indexDrift]]'s share_gap). Below the threshold the call is
+    * TRAINING-FREE and idempotent — the corpus thunk is never
+    * evaluated (IndexLifecycleSpec passes a throwing thunk) and the
+    * stored tables are returned as-is; above it the replacement model
+    * is built FIRST under temp table names in the non-serving
+    * generation directory, and only after the full rebuild succeeds
+    * does each serving table swap by rename-aside → rename-in →
+    * drop-aside — a failure anywhere inside training/encoding leaves
+    * the stored model intact and serving (the drop-then-rebuild form
+    * had no model registered for the whole retrain window, and a
+    * crash stranded the store empty), and a crash INSIDE the swap
+    * itself leaves every table registered under some name (final,
+    * `__old` aside, or `__new` temp) with both generations' files on
+    * disk — recovery is a catalog rename, never a retrain, and the
+    * next call performs it AUTOMATICALLY on entry, generation-aware
+    * ([[recoverInterruptedSwap]]: the whole table SET rolls forward
+    * to the fully-built new generation or back to the old one —
+    * never a per-table rename that could serve PQ codes against the
+    * wrong generation's centroids); the only residual window is a final name being
+    * briefly unbound between its two renames, during which concurrent
+    * readers of that one table see transient table-not-found. Generations ping-pong between
+    * `$root/gen_a` and `$root/gen_b` so the overwrite never touches
+    * files the current model serves from.
+    *
+    * Monitoring cost: corpus-side occupancy is an aggregate of the
+    * stored CODE frame itself (every vector carries its cell id m
+    * times, and shares are ratios, so the m factor cancels — the
+    * corpus is never rescanned to monitor the index); the batch pays
+    * one |B|·kc broadcast-centroid assignment. The per-cell frame is
+    * kc rows — model-sized driver state, the same boundary the
+    * centroid tables already cross. */
   def refreshIvfPqIfDrifted(spark: org.apache.spark.sql.SparkSession, root: String,
                             tag: String, corpus: => DataFrame, batch: DataFrame,
                             maxShareGap: Double, kc: Int, coarseIters: Int,

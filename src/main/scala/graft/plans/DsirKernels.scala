@@ -233,4 +233,19 @@ case class DsirScore(child: Expression, llr: Array[Long]) extends UnaryExpressio
     copy(child = newChild)
 
   override def prettyName: String = "graft_dsir_score"
+
+  // The model is compared, hashed and printed by content: an array
+  // field would make two equal models unequal and print as its
+  // identity hash (`[J@…`), which differs between any two plans.
+  private def llrDigest: String =
+    f"llr[${llr.length}]#${java.util.Arrays.hashCode(llr)}%08x"
+
+  override protected def stringArgs: Iterator[Any] = Iterator(child, llrDigest)
+
+  override def equals(other: Any): Boolean = other match {
+    case o: DsirScore => child == o.child && java.util.Arrays.equals(llr, o.llr)
+    case _ => false
+  }
+
+  override def hashCode(): Int = 31 * child.hashCode() + java.util.Arrays.hashCode(llr)
 }

@@ -225,6 +225,17 @@ object DataOps {
     graft.operators.Sharding.curriculumStages(docs(s, d), col("doc_id"),
       size(split(col("text"), " ")), curriculumStageCount)
 
+  /** Recall@annK of an approximate (query_id, neighbor_id) answer
+    * against the exact one over `nQueries` queries: the exact pairs
+    * the approximate side also found, counted per query, as
+    * round(Σhits / (annK·nQueries), 4) plus `queries_with_hits`. The
+    * one closure behind every *_recall row. */
+  private def recallAtK(exact: DataFrame, approx: DataFrame, nQueries: Int): DataFrame =
+    exact.join(approx, Seq("query_id", "neighbor_id"), "left_semi")
+      .groupBy("query_id").agg(count(lit(1)).as("hits"))
+      .agg(round(sum(col("hits")) / (lit(annK) * nQueries), 4).as("recall_at_k"),
+        count(lit(1)).as("queries_with_hits"))
+
   /** Recall of the bucketed retrieval against the exact full-scan
     * rank over the same chunk embeddings — closes the quality loop
     * for ds_rag (same contract as sim_ann_recall / sim_pq_recall). */
@@ -241,10 +252,7 @@ object DataOps {
       (-col("query_doc") - 1).as("query_id"),
       (col("src_doc") * graft.operators.Rag.chunkKeyBase + col("chunk_id"))
         .as("neighbor_id"))
-    exact.join(ann, Seq("query_id", "neighbor_id"), "left_semi")
-      .groupBy("query_id").agg(count(lit(1)).as("hits"))
-      .agg(round(sum(col("hits")) / (lit(annK) * ragQueries), 4).as("recall_at_k"),
-        count(lit(1)).as("queries_with_hits"))
+    recallAtK(exact, ann, ragQueries)
   }
 
   /** Per-source document cap (the C4/RefinedWeb domain-cap policy:
@@ -548,10 +556,7 @@ object DataOps {
   def simPqRecall(s: SparkSession, d: String): DataFrame = {
     val exact = simTopK(s, d).select(col("query_id"), col("neighbor_id"))
     val adc = simPqAdc(s, d).select(col("query_id"), col("neighbor_id"))
-    exact.join(adc, Seq("query_id", "neighbor_id"), "left_semi")
-      .groupBy("query_id").agg(count(lit(1)).as("hits"))
-      .agg(round(sum(col("hits")) / (lit(annK) * annQueries), 4).as("recall_at_k"),
-        count(lit(1)).as("queries_with_hits"))
+    recallAtK(exact, adc, annQueries)
   }
 
   /** IVF-PQ (IVFADC) layout: the coarse quantizer is the SAME
@@ -592,10 +597,7 @@ object DataOps {
   def simIvfPqRecall(s: SparkSession, d: String): DataFrame = {
     val exact = simTopK(s, d).select(col("query_id"), col("neighbor_id"))
     val adc = simIvfPqAdc(s, d).select(col("query_id"), col("neighbor_id"))
-    exact.join(adc, Seq("query_id", "neighbor_id"), "left_semi")
-      .groupBy("query_id").agg(count(lit(1)).as("hits"))
-      .agg(round(sum(col("hits")) / (lit(annK) * annQueries), 4).as("recall_at_k"),
-        count(lit(1)).as("queries_with_hits"))
+    recallAtK(exact, adc, annQueries)
   }
 
   /** IVF-blocked embedding dedup — the unlabeled-corpus form of
@@ -663,10 +665,7 @@ object DataOps {
     val e = emb(s, d)
     val ann = Similarity.rpAnnFor(e, e.filter(col("vec_id") < annQueries), annK)
       .select(col("query_id"), col("neighbor_id"))
-    exact.join(ann, Seq("query_id", "neighbor_id"), "left_semi")
-      .groupBy("query_id").agg(count(lit(1)).as("hits"))
-      .agg(round(sum(col("hits")) / (lit(annK) * annQueries), 4).as("recall_at_k"),
-           count(lit(1)).as("queries_with_hits"))
+    recallAtK(exact, ann, annQueries)
   }
 
   /** JL random projection 64 → 16 dims (scale 1/√16 = 0.25 exactly,
@@ -742,10 +741,7 @@ object DataOps {
     // 10 queries must not cost the all-pairs self-join sim_lsh_ann runs
     val ann = Similarity.lshAnnFor(e, e.filter(col("vec_id") < annQueries), annK)
       .select(col("query_id"), col("neighbor_id"))
-    exact.join(ann, Seq("query_id", "neighbor_id"), "left_semi")
-      .groupBy("query_id").agg(count(lit(1)).as("hits"))
-      .agg(round(sum(col("hits")) / (lit(annK) * annQueries), 4).as("recall_at_k"),
-           count(lit(1)).as("queries_with_hits"))
+    recallAtK(exact, ann, annQueries)
   }
 
   /** Id offset for deterministically planted near-dup twins — far
@@ -786,10 +782,7 @@ object DataOps {
     val plantedFound = ann
       .filter(col("neighbor_id") === col("query_id") + plantedIdBase)
       .agg(count(lit(1)).as("planted_found"))
-    exact.join(ann, Seq("query_id", "neighbor_id"), "left_semi")
-      .groupBy("query_id").agg(count(lit(1)).as("hits"))
-      .agg(round(sum(col("hits")) / (lit(annK) * annQueries), 4).as("recall_at_k"),
-           count(lit(1)).as("queries_with_hits"))
+    recallAtK(exact, ann, annQueries)
       .crossJoin(plantedFound)
   }
 

@@ -1,6 +1,9 @@
 package graft.operators
 
 import graft.SparkSpec
+import graft.plans.DsirScore
+import graft.queries.DataOps
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.functions._
 
 /** Persisted DSIR model: train-once/serve-many semantics. */
@@ -75,5 +78,29 @@ class DsirModelSpec extends SparkSpec {
       .select("llr_micro").distinct().collect()
     assert(default.length == 1, "every untouched bucket shares one default")
     assert(w(11L) == 9L * default(0).getLong(0))
+  }
+
+  test("the scoring kernel prints and compares its model by content") {
+    // two builds of ds_dsir_persisted load the same stored model into
+    // two arrays; with exprIds renumbered in order of appearance their
+    // optimized plans must print identically
+    val sf = java.nio.file.Files.createTempDirectory("dsir_plan").toString
+    pool.withColumn("lang", when(col("is_target"), "en").otherwise("de"))
+      .drop("is_target").write.parquet(s"$sf/documents.parquet")
+    def plan(): String = {
+      val ids = scala.collection.mutable.Map.empty[String, Int]
+      "#(\\d+)".r.replaceAllIn(
+        DataOps.dsDsirPersisted(spark, sf).queryExecution.optimizedPlan.toString,
+        m => "#" + ids.getOrElseUpdate(m.group(1), ids.size))
+    }
+    val first = plan()
+    assert(first.contains("graft_dsir_score"), first)
+    assert(plan() == first)
+
+    val llr = Array.tabulate(16)(i => i * 7L - 3L)
+    val text = Literal("alpha beta")
+    assert(DsirScore(text, llr) == DsirScore(text, llr.clone))
+    assert(DsirScore(text, llr).hashCode == DsirScore(text, llr.clone).hashCode)
+    assert(DsirScore(text, llr) != DsirScore(text, llr.map(_ + 1)))
   }
 }

@@ -81,4 +81,16 @@ class IvfPqSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
     assert(run() == run())
   }
+
+  test("residual codebooks equal the one-key squared-L2 loop on each residual slice") {
+    val (coarse, books) = Similarity.ivfPqTrain(corpus(), kc = 2, coarseIters = 2,
+      m = 4, k = 2, iters = 2)
+    val res = Similarity.ivfResiduals(corpus(), coarse)
+    assert(books.map(_._1) == (0 until 4))
+    books.foreach { case (s, book) =>
+      val part = res.select(col("vec_id"), slice(col("embedding"), s * 2 + 1, 2).as("embedding"))
+      assert(Similarity.lloydCodebooks(Similarity.l2Metric, part, 2, 2) == Seq(0 -> book),
+        s"subspace $s")
+    }
+  }
 }
