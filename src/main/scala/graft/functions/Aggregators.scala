@@ -15,6 +15,10 @@ import org.apache.spark.sql.expressions.Aggregator
   * cents × integer weight), so the partial/merge order that differs
   * run-to-run on a cluster can never change the result — the
   * float division happens once, in `finish`.
+  *
+  * Each aggregator prints its content (`toString`), not an object
+  * identity, so an optimized plan that carries one prints the same
+  * text in every JVM.
   */
 object Aggregators {
 
@@ -30,6 +34,7 @@ object Aggregators {
     override def bufferEncoder: Encoder[(Long, Long)] =
       Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong)
     override def outputEncoder: Encoder[Double] = Encoders.scalaDouble
+    override def toString: String = "WeightedMeanCents"
   }
 
   /** Top-k per group as a PARTIAL-AGGREGATING bounded buffer — the
@@ -72,5 +77,6 @@ object Aggregators {
       org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[(Long, Long)]]()
     override def outputEncoder: Encoder[Seq[(Long, Long)]] =
       org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[(Long, Long)]]()
+    override def toString: String = s"TopKByValue($k)"
   }
 }

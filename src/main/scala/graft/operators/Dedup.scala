@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType, StringType, StructType}
 import graft.functions.VectorFunctions.tokenHash
 
 /** Deduplication family for a training-data pipeline: exact,
@@ -238,6 +239,67 @@ object Dedup {
       lshBuckets(minhashSignatures(corpus, text, id, n)),
       shingleSets(corpus, text, id, n))
 
+  /** The per-document index columns [[withIndexColumns]] appends and a
+    * stream stores next to each accepted document: the content md5,
+    * the hashed shingle set `sh` and the LSH `bands` as (band, bucket)
+    * structs. Below n tokens `sh` and `bands` are empty arrays, so a
+    * null marks a row written without its index. */
+  val indexSchema: StructType = new StructType()
+    .add("content_md5", StringType)
+    .add("sh", ArrayType(LongType))
+    .add("bands", ArrayType(new StructType().add("band", IntegerType).add("bucket", StringType)))
+
+  val indexColumns: Seq[String] = indexSchema.fieldNames.toSeq
+
+  /** `df` with the [[indexSchema]] columns appended (recomputed where
+    * `df` already has them), both kernels called in one projection:
+    * the same md5, shingle set and bucket keys as [[indexCorpus]]. */
+  def withIndexColumns(df: DataFrame, text: Column, n: Int): DataFrame = {
+    def empty(c: String): Column = array().cast(indexSchema(c).dataType)
+    val rest = df.columns.filterNot(indexColumns.contains).map(c => col(s"`$c`")).toSeq
+    // the same short-doc gate as minhashSignatures / shingleSets
+    val long = text.isNotNull && size(split(text, " ")) >= n
+    df.select(rest ++ Seq(
+        md5(text.cast("binary")).as("content_md5"),
+        when(long, array_distinct(graft.plans.GraftFunctions.grams(split(text, " "), n)))
+          .otherwise(empty("sh")).as("sh"),
+        when(long, graft.plans.GraftFunctions.minhash(text, n)).as("__sig")): _*)
+      .select(rest ++ Seq(col("content_md5"), col("sh"),
+        when(col("__sig").isNull, empty("bands"))
+          .otherwise(bands(i => col("__sig")(i), 4)).as("bands")): _*)
+  }
+
+  /** The index of rows that carry their [[indexColumns]] (a stream's
+    * accepted output): plain projections, no kernel call. Equal to
+    * [[indexCorpus]] of the same text, the md5s without its `distinct`,
+    * which a set of accepted survivors never needs. A row without its
+    * stored index (written before a stream stored one) fails the probe
+    * loudly rather than being missed. */
+  def storedIndex(stored: DataFrame, id: Column): CorpusIndex = {
+    val unindexed = raise_error(concat(lit("stored row "), id.cast("string"),
+      lit(" has no index columns (written before its stream stored them): " +
+        "re-ingest that output into a fresh dir")))
+    val ix = stored.select(id.as("doc_id"),
+      when(col("bands").isNull, unindexed).otherwise(col("content_md5")).as("content_md5"),
+      coalesce(col("sh"), unindexed).as("sh"),
+      coalesce(col("bands"), unindexed).as("bands"))
+    CorpusIndex(
+      ix.select(col("content_md5")),
+      bandRows(ix, col("doc_id")),
+      ix.where(size(col("sh")) > 0).select(col("doc_id"), col("sh")))
+  }
+
+  /** One (doc_id, carry…, band, bucket) row per struct of `ix`'s
+    * `bands`. `explode_outer` and a null filter rather than `explode`:
+    * ahead of a plain explode of a column Spark infers `size(bands) >
+    * 0` and pushes it below the projection that computes `bands`,
+    * where it would call the MinHash kernel once per band component. */
+  private def bandRows(ix: DataFrame, id: Column, carry: String*): DataFrame =
+    ix.select((id.as("doc_id") +: carry.map(col)) :+ explode_outer(col("bands")).as("bb"): _*)
+      .where(col("bb").isNotNull)
+      .select((col("doc_id") +: carry.map(col))
+        :+ col("bb.band").as("band") :+ col("bb.bucket").as("bucket"): _*)
+
   /** Idempotent persisted-index materialization ([[Bucketing.buildOnce]]):
     * the first call builds the index and writes it as three
     * bucketed+sorted parquet tables, each clustered on its probe key —
@@ -266,6 +328,8 @@ object Dedup {
     * already-deduped scopes — the shape a continuously-ingested
     * training corpus actually runs (the full-corpus rebuild
     * `dedupedCorpus` is the bootstrap; this is every day after).
+    * Returns the batch's own columns; [[incrementalIndexed]] is the
+    * same survivors with their [[indexColumns]] kept.
     *
     * A batch doc is dropped when (a) its exact content exists in any
     * scope or earlier in the batch (min doc_id wins, matching
@@ -275,14 +339,14 @@ object Dedup {
     * a scope always wins regardless of id.
     *
     * `scopes` is a flat list: a streaming twin passes the settled
-    * corpus index and an in-plan index of its own accepted output
-    * together. The batch-side frames (md5s, bucket rows,
-    * shingle sets) are built once; each scope is probed on its own
-    * stored layout (no union of scopes, which would discard the
-    * bucketed clustering and re-shuffle every index); all losers meet
-    * in one anti-join. The plan thus references the batch O(scopes)
-    * times, where chaining one call per scope multiplied the
-    * references (~10^k subplans for k scopes).
+    * corpus index and the [[storedIndex]] of its own accepted output
+    * together. The batch side is one projection ([[withIndexColumns]]:
+    * md5, shingle set and bands, each kernel called once); each scope
+    * is probed on its own stored layout (no union of scopes, which
+    * would discard the bucketed clustering and re-shuffle every
+    * index); all losers meet in one anti-join. The plan thus
+    * references the batch O(scopes) times, where chaining one call per
+    * scope multiplied the references (~10^k subplans for k scopes).
     *
     * Flat equals chained: batch and scope ids are disjoint and every
     * verdict is per pair, so a doc's scope hits do not depend on which
@@ -294,23 +358,35 @@ object Dedup {
     * composed (IncrementalDedupSpec asserts both).
     *
     * Scale shape: every join is keyed by the batch side. Batch bucket
-    * rows probe each scope's bucket table, verification joins only the
-    * candidate pairs against that scope's shingle-set table, and a
-    * persisted scope's text is never re-indexed. Each scope's md5,
-    * bucket and shingle-set tables are still read in full per call (as
-    * a broadcast build side, or as a full bucketed scan on the
-    * sort-merge path, since no join key prunes buckets): a persisted
-    * index saves the kernel work over the scope's text, not its scan.
-    * An in-plan scope (`indexCorpus` over a frame) also re-runs the
-    * kernels over its whole text per call. Candidate pairs are
-    * de-duplicated before verification (a pair colliding in k bands
-    * would otherwise be joined and intersected k times); verified
-    * losers and the loser union are not, since the final `left_anti`
-    * join ignores duplicate keys. */
+    * rows carry their doc's shingle set, so verification joins only
+    * the candidate pairs against each scope's shingle-set table, and
+    * the in-batch pairs, which carry both sets, join nothing. A
+    * persisted scope's text is never re-indexed, and neither is a
+    * stored one's. Each scope's md5, bucket and shingle-set tables are
+    * still read in full per call (as a broadcast build side, or as a
+    * full bucketed scan on the sort-merge path, since no join key
+    * prunes buckets): a persisted index saves the kernel work over the
+    * scope's text, not its scan. An in-plan scope (`indexCorpus` over
+    * a frame) re-runs the kernels over its whole text per call.
+    * Candidate pairs are de-duplicated before verification (a pair
+    * colliding in k bands would otherwise be joined and intersected k
+    * times; a shingle set is a function of its doc id, so carrying it
+    * leaves the pair set unchanged); verified losers and the loser
+    * union are not, since the final `left_anti` join ignores
+    * duplicate keys. */
   def incremental(scopes: Seq[CorpusIndex], batch: DataFrame, text: Column,
-                  id: Column, n: Int, threshold: Double): DataFrame = {
+                  id: Column, n: Int, threshold: Double): DataFrame =
+    incrementalIndexed(scopes, batch, text, id, n, threshold)
+      .select(batch.columns.map(c => col(s"`$c`")).toSeq: _*)
+
+  /** [[incremental]]'s survivors with their [[indexColumns]]
+    * appended: what a stream writes, so that a later batch probes the
+    * survivors through [[storedIndex]] without re-running a kernel. */
+  def incrementalIndexed(scopes: Seq[CorpusIndex], batch: DataFrame, text: Column,
+                         id: Column, n: Int, threshold: Double): DataFrame = {
     require(scopes.nonEmpty, "incremental dedup needs at least one scope")
-    val bMd5 = batch.select(id.as("doc_id"), md5(text.cast("binary")).as("content_md5"))
+    val bx = withIndexColumns(batch, text, n)
+    val bMd5 = bx.select(id.as("doc_id"), col("content_md5"))
     val exactVsScopes = scopes.map(s =>
         bMd5.join(s.md5s, Seq("content_md5"), "left_semi").select("doc_id"))
       .reduce(_ unionByName _)
@@ -319,17 +395,18 @@ object Dedup {
         Seq("content_md5"))
       .filter(col("doc_id") =!= col("keep_id")).select("doc_id")
 
-    val sigB = minhashSignatures(batch, text, id, n)
-    val bkB = lshBuckets(sigB)
+    val bkB = bandRows(bx, id, "sh")
     def candVs(buckets: DataFrame): DataFrame =
       bkB.as("b").join(buckets.as("c"),
           col("b.band") === col("c.band") && col("b.bucket") === col("c.bucket"))
-        .select(col("b.doc_id").as("batch_id"), col("c.doc_id").as("other_id"))
+        .select(col("b.doc_id").as("batch_id"), col("b.sh").as("sha"),
+          col("c.doc_id").as("other_id"))
         .distinct()
     val candInBatch = bkB.as("b").join(bkB.as("o"),
         col("b.band") === col("o.band") && col("b.bucket") === col("o.bucket")
           && col("b.doc_id") > col("o.doc_id"))
-      .select(col("b.doc_id").as("batch_id"), col("o.doc_id").as("other_id"))
+      .select(col("b.doc_id").as("batch_id"), col("b.sh").as("sha"),
+        col("o.doc_id").as("other_id"), col("o.sh").as("shb"))
       .distinct()
 
     // Verification runs per candidate SOURCE (each scope / earlier-
@@ -338,24 +415,21 @@ object Dedup {
     // the batch frame (a union would discard the persisted layout and
     // re-shuffle the scope side). Scope and batch ids are disjoint by
     // contract, so the split is the same pair set.
-    val setsB = shingleSets(batch, text, id, n)
-    def verifiedLosers(cand: DataFrame, otherSets: DataFrame): DataFrame =
-      cand
-        .join(setsB.select(col("doc_id").as("batch_id"), col("sh").as("sha")),
-          Seq("batch_id"))
-        .join(otherSets.select(col("doc_id").as("other_id"), col("sh").as("shb")),
-          Seq("other_id"))
+    def verified(pairs: DataFrame): DataFrame =
+      pairs
         .withColumn("common", size(array_intersect(col("sha"), col("shb"))).cast("long"))
         .withColumn("jaccard",
           round(col("common").cast("double")
             / (size(col("sha")) + size(col("shb")) - col("common")), 6))
         .filter(col("jaccard") >= threshold)
         .select(col("batch_id").as("doc_id"))
-    val nearLosers = scopes.map(s => verifiedLosers(candVs(s.buckets), s.shingleSets))
+    val nearLosers = scopes.map(s => verified(candVs(s.buckets)
+        .join(s.shingleSets.select(col("doc_id").as("other_id"), col("sh").as("shb")),
+          Seq("other_id"))))
       .reduce(_ unionByName _)
-      .unionByName(verifiedLosers(candInBatch, setsB))
+      .unionByName(verified(candInBatch))
 
-    batch.join(exactVsScopes.unionByName(exactInBatch).unionByName(nearLosers),
+    bx.join(exactVsScopes.unionByName(exactInBatch).unionByName(nearLosers),
       Seq("doc_id"), "left_anti")
   }
 
@@ -422,18 +496,19 @@ object Dedup {
     * signature array in minhashEstimates) carry it here instead of
     * re-joining the signature frame downstream. */
   def lshBuckets(signatures: DataFrame, rowsPerBand: Int = 4,
-                 carry: Seq[String] = Nil): DataFrame = {
-    val nBands = minhashAB.size / rowsPerBand
-    val bands = (0 until nBands).map { b =>
-      val cols = (b * rowsPerBand until (b + 1) * rowsPerBand).map(i => col(s"m$i"))
+                 carry: Seq[String] = Nil): DataFrame =
+    bandRows(signatures.select(col("doc_id") +: carry.map(col)
+        :+ bands(i => col(s"m$i"), rowsPerBand).as("bands"): _*),
+      col("doc_id"), carry: _*)
+
+  /** The (band, bucket) structs of one signature, component `i` read
+    * by `m(i)`: each bucket is the md5 over its band's components. */
+  private def bands(m: Int => Column, rowsPerBand: Int): Column =
+    array((0 until minhashAB.size / rowsPerBand).map { b =>
+      val cols = (b * rowsPerBand until (b + 1) * rowsPerBand).map(m)
       struct(lit(b).as("band"),
         md5(concat_ws(":", cols: _*).cast("binary")).as("bucket"))
-    }
-    signatures
-      .select(col("doc_id") +: carry.map(col) :+ explode(array(bands: _*)).as("bb"): _*)
-      .select(col("doc_id") +: carry.map(col)
-        :+ col("bb.band").as("band") :+ col("bb.bucket").as("bucket"): _*)
-  }
+    }: _*)
 
   /** Bucket self-join half of the candidate generator, factored over
     * a precomputed signature frame so callers that already hold

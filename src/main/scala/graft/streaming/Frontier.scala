@@ -1,9 +1,13 @@
 package graft.streaming
 
+import java.util.concurrent.{ExecutionException, Executors}
+
+import scala.util.{Failure, Try}
+
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions.{coalesce, col, lit, row_number}
+import org.apache.spark.sql.functions.{coalesce, col, lit, regexp_extract, row_number}
 
 /** Settled-frontier layout for the per-batch-overwrite streams: the
   * base+delta posture the persisted dedup index already uses, applied
@@ -37,7 +41,7 @@ import org.apache.spark.sql.functions.{coalesce, col, lit, row_number}
   *  - a batch id AT OR BELOW the settled frontier id is a protocol
   *    violation (a stream restarted with a wiped checkpoint over an
   *    existing output dir restarts ids at 0): [[scopeParts]] and
-  *    [[maybeSettle]] fail loudly instead of letting the next settle
+  *    [[settling]] fail loudly instead of letting the next settle
   *    silently GC the new run's freshly-admitted batch dirs.
   *
   * The fold is DETERMINISTIC latest-wins: every input dir is tagged
@@ -63,8 +67,12 @@ import org.apache.spark.sql.functions.{coalesce, col, lit, row_number}
   * re-shuffles the whole admitted corpus every micro-batch — the one
   * per-batch cost term that grows without bound over a long crawl.
   *
+  * A batch's settle is off its critical path: [[settling]] folds the
+  * deltas below the in-flight batch on a pool thread while the batch
+  * body runs, and deletes the folded inputs only after both finish.
+  *
   * Public surface: [[readLayered]] is the consumer entry (the
-  * stream's full admitted output), [[scopeParts]]/[[maybeSettle]]
+  * stream's full admitted output), [[scopeParts]]/[[settling]]
   * the per-batch protocol the Ingest* twins run, [[frontierFrame]]
   * the probe-side read. */
 object Frontier {
@@ -101,7 +109,7 @@ object Frontier {
     val kids = fs.listStatus(root).filter(_.isDirectory).map(_.getPath).toSeq
     val frontiers = kids.flatMap(numbered(_, "frontier_"))
     val complete = frontiers.filter { case (_, p) =>
-      fs.exists(new Path(p, "_SUCCESS"))
+      fs.exists(new Path(p, "_SUCCESS")) && !folding.contains(p.toString)
     }
     val latest = complete.sortBy(_._1).lastOption
     val m = latest.map(_._1).getOrElse(Long.MinValue)
@@ -184,7 +192,9 @@ object Frontier {
     * dirs after its frontier commit, and the dir-name rule already
     * guarantees a re-list never duplicates rows — so a serving reader
     * racing a settle skips the vanished files instead of dying
-    * mid-scan on FileNotFoundException. */
+    * mid-scan on FileNotFoundException. The dedup streams' stored
+    * index columns ([[graft.operators.Dedup.indexColumns]]) are probe
+    * state, not content: the read drops them. */
   def readLayered(spark: SparkSession, dir: String): DataFrame = {
     val l = scan(spark, dir)
     val paths = l.frontier.map(_._2.toString).toSeq ++ l.deltas.map(_._2.toString)
@@ -198,59 +208,136 @@ object Frontier {
       .option("ignoreMissingFiles", "true")
       .option("mergeSchema", "true")
       .parquet(paths: _*)
-    // tombstone rows (r20 — the erase markers [[maybeSettle]]
+    // tombstone rows (r20 — the erase markers [[settling]]
     // compacts away) are markers, not content: hide them. Erasure of
     // the key's OLDER layers takes effect at the next settle (the
     // fold has the generation order this flat union deliberately does
     // not reconstruct — consumers of a pre-settle layered read see
     // every live version, per this function's contract).
-    if (!raw.columns.contains("tombstone")) raw
-    else raw.filter(!coalesce(col("tombstone"), lit(false)))
+    val content = raw.drop(graft.operators.Dedup.indexColumns: _*)
+    if (!raw.columns.contains("tombstone")) content
+    else content.filter(!coalesce(col("tombstone"), lit(false)))
       .drop("tombstone")
   }
 
-  /** Settle check, called at the end of each foreachBatch body: GC
-    * stale dirs, and when ≥ `every` deltas with id < `batchId` have
+  /** One output dir a foreachBatch body settles: its row identity
+    * `key` and, with `buckets > 0`, the bucket count of its settled
+    * frontier table (see the object scaladoc). */
+  final case class Settle(dir: String, key: Seq[String], buckets: Int = 0)
+
+  /** Settled-frontier generations whose fold is still running
+    * (qualified `frontier_<m>` paths): [[scan]] does not serve them, so
+    * a batch body reads the layout its batch began with even after the
+    * fold beside it commits. */
+  private val folding = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+
+  private def frontierKey(spark: SparkSession, dir: String, m: Long): String =
+    fsOf(spark, dir).makeQualified(new Path(dir, s"frontier_$m")).toString
+
+  /** A foreachBatch body wrapped in the settle protocol for `dirs`.
+    * For batch `b` and each dir: fail loudly on a restart below the
+    * settled frontier; when ≥ `every` deltas with id < `b` have
     * accumulated, fold frontier + those deltas into `frontier_<m>`
-    * (m = highest folded id — strictly below the in-flight batch) and
-    * delete them. `key` names the row identity; the fold keeps the
-    * row from the HIGHEST generation per key (deterministic
-    * latest-wins — see the object scaladoc), riding the fold's own
-    * key shuffle: for key-disjoint deltas (the anti-joined streams)
-    * this never changes a healthy fold's content. With `buckets > 0`
-    * the frontier lands as a bucketed+sorted catalog table (see the
-    * object scaladoc) with exactly `buckets` files; otherwise file
-    * count is sized by bytes toward [[targetFileBytes]]. Returns
-    * whether it settled. */
-  def maybeSettle(spark: SparkSession, dir: String, batchId: Long,
-                  key: Seq[String], every: Int, buckets: Int = 0): Boolean = {
+    * (m = the highest folded id, strictly below the in-flight batch)
+    * on a pool thread WHILE `body` runs; once both have finished,
+    * delete the stale dirs (the folded inputs, superseded frontiers,
+    * any dir a crash left behind) and drop the superseded catalog
+    * tables.
+    *
+    * The overlap changes no batch's view: nothing the body reads is
+    * deleted before it ends, the fold never includes the in-flight
+    * batch, and the new frontier stays hidden from [[scan]] until the
+    * body is done, so the body reads exactly the layout the sequential
+    * settle at the end of the previous batch left it.
+    *
+    * Errors: a failed body still waits for the fold, then rethrows
+    * (any fold failure added as suppressed); a failed fold is rethrown
+    * once the body has finished. Nothing is deleted after a failure:
+    * the next batch's check collects it.
+    *
+    * The fold is DETERMINISTIC latest-wins (see the object scaladoc):
+    * every row is tagged with its dir's generation id and the row from
+    * the highest generation wins per `key`, riding the fold's own key
+    * shuffle; for key-disjoint deltas (the anti-joined streams) this
+    * never changes a healthy fold's content. With `buckets > 0` the
+    * frontier lands as a bucketed+sorted catalog table with exactly
+    * `buckets` files; otherwise file count is sized by bytes toward
+    * [[targetFileBytes]]. */
+  def settling(every: Int, dirs: Settle*)
+              (body: (Dataset[Row], Long) => Unit): (Dataset[Row], Long) => Unit = {
     require(every >= 1, s"settleEvery must be >= 1, got $every")
-    val l = scan(spark, dir)
-    guardRestart(l, dir, batchId)
-    val fs = fsOf(spark, dir)
-    l.stale.foreach(p => fs.delete(p, true))
-    val foldable = l.deltas.filter(_._1 < batchId)
-    if (foldable.size < every) return false
-    val m = foldable.map(_._1).max
-    val in = l.frontier.toSeq ++ foldable
+    (batch, batchId) => {
+      val spark = batch.sparkSession
+      val folds = dirs.flatMap { s =>
+        val l = scan(spark, s.dir)
+        guardRestart(l, s.dir, batchId)
+        val foldable = l.deltas.filter(_._1 < batchId)
+        if (foldable.size < every) None
+        else Some(s -> (l.frontier.toSeq ++ foldable))
+      }
+      if (folds.isEmpty) body(batch, batchId)
+      else overlapped(spark, folds, body(batch, batchId))
+      dirs.foreach { s =>
+        val l = scan(spark, s.dir)
+        val fs = fsOf(spark, s.dir)
+        l.stale.foreach(p => fs.delete(p, true))
+        if (folds.exists(_._1 == s))
+          l.frontier.foreach { case (m, _) => dropSupersededTables(spark, s.dir, m) }
+      }
+    }
+  }
+
+  /** Run each fold on its own pool thread while `body` runs on the
+    * caller's, with [[settling]]'s error order. */
+  private def overlapped(spark: SparkSession, folds: Seq[(Settle, Seq[(Long, Path)])],
+                         body: => Unit): Unit = {
+    val targets = folds.map { case (s, in) => frontierKey(spark, s.dir, in.map(_._1).max) }
+    targets.foreach(folding.add)
+    val pool = Executors.newFixedThreadPool(folds.size, (r: Runnable) => {
+      val t = new Thread(r, "graft-frontier-settle")
+      t.setDaemon(true)
+      t
+    })
+    try {
+      val pending = folds.map { case (s, in) => pool.submit[Unit](() => fold(spark, s, in)) }
+      val ran = Try(body)
+      val failed = pending.flatMap(p => Try(p.get()).recoverWith {
+        case e: ExecutionException => Failure(e.getCause)
+      }.failed.toOption)
+      ran.failed.foreach { e => failed.foreach(e.addSuppressed); throw e }
+      failed.headOption.foreach(e => throw e)
+    } finally {
+      pool.shutdown()
+      targets.foreach(folding.remove)
+    }
+  }
+
+  /** Fold `in` (the live frontier, if any, then the foldable deltas)
+    * into `frontier_<m>`, m = the highest input id. Deletes nothing. */
+  private def fold(spark: SparkSession, s: Settle, in: Seq[(Long, Path)]): Unit = {
+    val fs = fsOf(spark, s.dir)
+    val m = in.map(_._1).max
     val bytes = in.map { case (_, p) => fs.getContentSummary(p).getLength }.sum
-    val nFiles = if (buckets > 0) buckets
+    val nFiles = if (s.buckets > 0) s.buckets
       else math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes).toInt
-    // deterministic latest-wins: tag each input dir with its
-    // generation id, keep the max-generation row per key. One
-    // exchange (reused by the window) + one sort — the same shuffle
-    // the old dropDuplicates paid, now with a pinned winner.
-    // allowMissingColumns: a producer may upgrade its delta schema
+    val key = s.key.map(col)
+    // deterministic latest-wins: tag each row with its dir's
+    // generation id (the frontier's folded-through id, a delta's batch
+    // id, read off the file path), keep the max-generation row per
+    // key. One scan over every input, so one schema job rather than
+    // one per dir. One exchange (reused by the window) + one sort —
+    // the same shuffle the old dropDuplicates paid, now with a pinned
+    // winner. mergeSchema: a producer may upgrade its delta schema
     // mid-run (r20: the crawl survivor sink added `tombstone`); dirs
-    // written before the upgrade union in with NULL for the new
-    // column, which every consumer of an optional column already
-    // coalesces over.
-    val tagged = in.map { case (gen, p) =>
-      spark.read.parquet(p.toString).withColumn("__gen", lit(gen))
-    }.reduce(_.unionByName(_, allowMissingColumns = true))
-    val w = Window.partitionBy(key.map(col): _*).orderBy(col("__gen").desc)
+    // written before the upgrade read NULL for the new column, which
+    // every consumer of an optional column already coalesces over.
+    val tagged = spark.read.option("mergeSchema", "true")
+      .parquet(in.map(_._2.toString): _*)
+      .withColumn("__gen", regexp_extract(col("_metadata.file_path"),
+        "/(?:frontier|batch)_(\\d+)/[^/]*$", 1).cast("long"))
+    val w = Window.partitionBy(key: _*).orderBy(col("__gen").desc)
     val folded0 = tagged
-      .repartition(nFiles, key.map(col): _*)
+      .repartition(nFiles, key: _*)
       .withColumn("__rk", row_number().over(w))
       .filter(col("__rk") === 1)
       .drop("__gen", "__rk")
@@ -264,23 +351,19 @@ object Frontier {
     val folded =
       if (!folded0.columns.contains("tombstone")) folded0
       else folded0.filter(!coalesce(col("tombstone"), lit(false)))
-    if (buckets > 0)
+    if (s.buckets > 0)
       // repartition(buckets, key) aligns task ↔ bucket (same
       // murmur3-pmod), so each bucket is ONE file and the scan
       // reports its sort order — the Bucketing.writeBucketed layout,
       // inlined here to share the fold's single exchange
       folded.write.mode("overwrite")
-        .option("path", s"$dir/frontier_$m")
-        .bucketBy(buckets, key.head, key.tail: _*)
-        .sortBy(key.head, key.tail: _*)
+        .option("path", s"${s.dir}/frontier_$m")
+        .bucketBy(s.buckets, s.key.head, s.key.tail: _*)
+        .sortBy(s.key.head, s.key.tail: _*)
         .format("parquet")
-        .saveAsTable(tableName(dir, m))
+        .saveAsTable(tableName(s.dir, m))
     else
-      folded.write.mode("overwrite").parquet(s"$dir/frontier_$m")
-    foldable.foreach { case (_, p) => fs.delete(p, true) }
-    l.frontier.foreach { case (_, p) => fs.delete(p, true) }
-    dropSupersededTables(spark, dir, m)
-    true
+      folded.write.mode("overwrite").parquet(s"${s.dir}/frontier_$m")
   }
 
   /** GC catalog entries of superseded frontier generations (their

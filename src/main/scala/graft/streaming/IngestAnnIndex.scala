@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
 
 import graft.operators.Similarity
@@ -30,7 +30,7 @@ object IngestAnnIndex {
   /** Start the maintenance stream: vectors (vec_id, embedding) →
     * per-batch index fragments under `indexDir/batch_<id>`, with the
     * fragments periodically folded into one compacted frontier
-    * ([[Frontier.maybeSettle]]) so a long-running stream's serving
+    * ([[Frontier.settling]]) so a long-running stream's serving
     * read opens O(settleEvery) dirs, not one per batch ever written —
     * and the nightly base rebuild folds ONE compacted delta, not a
     * pile of small files. */
@@ -38,13 +38,11 @@ object IngestAnnIndex {
                     nPlanes: Int = Similarity.lshPlanes,
                     settleEvery: Int = 16): StreamingQuery =
     vectors.writeStream
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
+      .foreachBatch(Frontier.settling(settleEvery,
+          Frontier.Settle(indexDir, Seq("vec_id"))) { (batch, batchId) =>
         Similarity.annIndexFrame(batch.toDF(), nPlanes)
           .write.mode("overwrite").parquet(s"$indexDir/batch_$batchId")
-        Frontier.maybeSettle(batch.sparkSession, indexDir, batchId,
-          Seq("vec_id"), settleEvery)
-        ()
-      }
+      })
       .outputMode(OutputMode.Append())
       .start()
 

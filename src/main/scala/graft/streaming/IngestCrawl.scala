@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
 
@@ -433,8 +433,14 @@ object IngestCrawl {
           urls.toDF("canon_url")
       }
     }
+    // fold accumulated deltas into the settled frontiers (never the
+    // in-flight batch — replay safety, see Frontier); the survivor +
+    // ledger frontiers land bucketed on the probe key
+    val settles = Frontier.Settle(survivorDir, Seq("canon_url"), frontierBuckets) +:
+      (fetchedDir.map(Frontier.Settle(_, Seq("canon_url"), frontierBuckets)) ++
+        cashDir.map(Frontier.Settle(_, Seq("url"), frontierBuckets))).toSeq
     fetches.writeStream
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
+      .foreachBatch(Frontier.settling(settleEvery, settles: _*) { (batch, batchId) =>
         val spark = batch.sparkSession
         // batch-bounded caches (keyed/staged/links below) register
         // here and unpersist in the `finally`: a mid-batch exception
@@ -649,7 +655,7 @@ object IngestCrawl {
           // stop updating. The survivor delta lands a TOMBSTONE row
           // (content nulled — retaining the text on the erase marker
           // would defeat the directive) that the settle's latest-wins
-          // fold compacts into a deletion (Frontier.maybeSettle) and
+          // fold compacts into a deletion (Frontier.settling) and
           // layered reads hide. Scoped to the due set: a FIRST-fetch
           // noindex page never wrote a survivor row, so it needs no
           // erase marker — and ledger-less admission scope semantics
@@ -933,20 +939,10 @@ object IngestCrawl {
             row.withColumn("b", lit(batchId))
               .write.mode("overwrite").parquet(s"$cd/batch_$batchId")
           }
-          // fold accumulated deltas into the settled frontiers (never
-          // the in-flight batch — replay safety, see Frontier); the
-          // survivor + ledger frontiers land bucketed on the probe key
-          Frontier.maybeSettle(spark, survivorDir, batchId,
-            Seq("canon_url"), settleEvery, frontierBuckets)
-          fetchedDir.foreach(fd => Frontier.maybeSettle(spark, fd, batchId,
-            Seq("canon_url"), settleEvery, frontierBuckets))
-          cashDir.foreach(cd => Frontier.maybeSettle(spark, cd, batchId,
-            Seq("url"), settleEvery, frontierBuckets))
         } finally {
           batchCaches.foreach(_.unpersist())
         }
-        ()
-      }
+      })
       .outputMode(OutputMode.Append())
       .start()
   }

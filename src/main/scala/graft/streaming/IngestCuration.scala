@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
 
@@ -14,13 +14,17 @@ import graft.operators.{Dedup, LanguageModel, TextAnalysis}
   * (stateless per-document work, so they cost nothing across batch
   * boundaries), then the survivors dedup against (a) the settled
   * corpus index, (b) themselves, and (c) every earlier batch this
-  * stream accepted — the same three scopes as [[IngestDedup]], with
-  * scope (c) indexed in the probe plan from the accepted output
-  * ([[IngestDedup.acceptedScope]]). Corpus and accepted scope go to
-  * ONE `Dedup.incremental` call as a flat scope list: the batch-side
-  * frames are built once and one anti-join drops every scope's
-  * losers, with the same survivors as a call per scope (see its
-  * scaladoc for why flat equals chained).
+  * stream accepted — the same three scopes as [[IngestDedup]]. Each
+  * accepted document is written with its index columns, so scope (c)
+  * is plain projections of the accepted output
+  * ([[IngestDedup.acceptedScope]]) and no kernel re-runs over it.
+  * Corpus and accepted scope go to ONE `Dedup.incrementalIndexed`
+  * call as a flat scope list: the batch side is one projection and
+  * one anti-join drops every scope's losers, with the same survivors
+  * as a call per scope (see its scaladoc for why flat equals
+  * chained). The accepted corpus settles on a pool thread beside the
+  * next batch ([[Frontier.settling]]); consumers read it through
+  * [[Frontier.readLayered]], which hides the index columns.
   * The LM rides along as its single count table (`bigramLm`'s
   * "persisting the model is persisting this one frame"), loaded once
   * outside the stream — scoring inside the batch is two equi-keyed
@@ -40,7 +44,10 @@ object IngestCuration {
                     maxAvgNll: Double = 3.65,
                     settleEvery: Int = 16): StreamingQuery =
     docs.writeStream
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
+      .foreachBatch(Frontier.settling(settleEvery,
+          // settle the ACCEPTED corpus (the per-batch probe scope); the
+          // audit trail is an append-only log nothing reads per batch
+          Frontier.Settle(s"$outDir/accepted", Seq("doc_id"))) { (batch, batchId) =>
         val spark = batch.sparkSession
         val text = col("text")
         val id = col("doc_id")
@@ -59,15 +66,16 @@ object IngestCuration {
           .select(col("doc_id"), col("__text").as("text"))
         // scope (c) is earlier batches only (current id excluded —
         // replay-safe, see Frontier.scopePaths), probed with the
-        // corpus in one flat call
-        val accepted = Dedup.incremental(
+        // corpus in one flat call; survivors keep their index columns
+        val accepted = Dedup.incrementalIndexed(
           index +: IngestDedup.acceptedScope(spark, s"$outDir/accepted", batchId,
-            text, id, n).toSeq,
+            quality.schema, id).toSeq,
           quality, text, id, n, threshold)
         accepted.write.mode("overwrite")
           .parquet(s"$outDir/accepted/batch_$batchId")
         flagged
-          .join(spark.read.parquet(s"$outDir/accepted/batch_$batchId")
+          .join(spark.read.schema(accepted.schema)
+            .parquet(s"$outDir/accepted/batch_$batchId")
             .select(col("doc_id"), lit(true).as("__ok")), Seq("doc_id"), "left")
           .select(col("doc_id"),
             when(col("rep_fail"), lit("repetition"))
@@ -75,12 +83,7 @@ object IngestCuration {
               .when(col("__ok").isNull, lit("duplicate"))
               .otherwise(lit("kept")).as("verdict"))
           .write.mode("overwrite").parquet(s"$outDir/audit/batch_$batchId")
-        // settle the ACCEPTED corpus (the per-batch probe scope); the
-        // audit trail is an append-only log nothing reads per batch
-        Frontier.maybeSettle(spark, s"$outDir/accepted", batchId,
-          Seq("doc_id"), settleEvery)
-        ()
-      }
+      })
       .outputMode(OutputMode.Append())
       .start()
 }

@@ -1,8 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
+import org.apache.spark.sql.types.StructType
 
 import graft.operators.Dedup
 
@@ -21,18 +22,21 @@ import graft.operators.Dedup
   * IS the sink, no side ledger to reconcile.
   *
   * Scale shape: scopes (a) and (c) are one flat scope list handed to
-  * a single `Dedup.incremental` call, which builds the batch-side
-  * frames once, probes each scope on its own layout and drops every
-  * scope's losers in one anti-join (the same survivors as chaining a
-  * call per scope — see its scaladoc — without the multiplied batch
-  * subplans). Scope (a) is the persisted corpus index, read in full by
-  * each probe but never re-indexed; scope (c) is indexed in the probe
-  * plan from the stream's own output ([[acceptedScope]]), so each
-  * batch re-runs the shingle and MinHash kernels over everything the
-  * stream has accepted. Every `settleEvery` batches the accepted
-  * deltas fold into one compacted `frontier_<m>` dir, so that read
-  * opens O(settleEvery) sources however long the stream has run.
-  * Consumers read the accepted corpus via [[Frontier.readLayered]].
+  * a single `Dedup.incrementalIndexed` call, which builds the batch
+  * side as one projection, probes each scope on its own layout and
+  * drops every scope's losers in one anti-join (the same survivors as
+  * chaining a call per scope — see its scaladoc — without the
+  * multiplied batch subplans). Scope (a) is the persisted corpus
+  * index, read in full by each probe but never re-indexed. Each
+  * survivor is written with its index columns (`content_md5`, `sh`,
+  * `bands`), so scope (c) is plain projections of the stream's own
+  * output ([[acceptedScope]]): no kernel runs over an accepted
+  * document again, and a batch's kernel work is O(batch). Every
+  * `settleEvery` batches the accepted deltas fold into one compacted
+  * `frontier_<m>` dir, on a pool thread beside the next batch's probe
+  * ([[Frontier.settling]]), so that read opens O(settleEvery) sources
+  * however long the stream has run. Consumers read the accepted
+  * corpus via [[Frontier.readLayered]], which hides the index columns.
   */
 object IngestDedup {
 
@@ -41,31 +45,36 @@ object IngestDedup {
                     threshold: Double = 0.3,
                     settleEvery: Int = 16): StreamingQuery =
     docs.writeStream
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
+      .foreachBatch(Frontier.settling(settleEvery,
+          Frontier.Settle(survivorDir, Seq("doc_id"))) { (batch, batchId) =>
         val spark = batch.sparkSession
         val text = col("text")
         val id = col("doc_id")
         // scope (c) is earlier survivors only: the CURRENT batch id is
         // excluded, since an at-least-once retry must not dedup the
         // batch against its own partial output (see Frontier.scopePaths)
-        val out = Dedup.incremental(
-          index +: acceptedScope(spark, survivorDir, batchId, text, id, n).toSeq,
-          batch.toDF(), text, id, n, threshold)
-        out.write.mode("overwrite").parquet(s"$survivorDir/batch_$batchId")
-        Frontier.maybeSettle(spark, survivorDir, batchId,
-          Seq("doc_id"), settleEvery)
-        ()
-      }
+        Dedup.incrementalIndexed(
+            index +: acceptedScope(spark, survivorDir, batchId, batch.schema, id).toSeq,
+            batch.toDF(), text, id, n, threshold)
+          .write.mode("overwrite").parquet(s"$survivorDir/batch_$batchId")
+      })
       .outputMode(OutputMode.Append())
       .start()
 
   /** Scope (c) for batch `batchId`: everything the stream under `dir`
     * accepted before it (settled frontier plus tail deltas, the current
-    * batch excluded — [[Frontier.scopePaths]]), indexed in the
-    * probe plan. None before anything has landed. */
+    * batch excluded — [[Frontier.scopePaths]]), written as `docs` rows
+    * plus their index columns and read as projections of those
+    * ([[Dedup.storedIndex]]). The read names its schema, so no
+    * schema-inference job runs. A row written before its stream stored
+    * index columns reads them as null and fails the probe loudly.
+    * None before anything has landed. */
   private[streaming] def acceptedScope(spark: SparkSession, dir: String, batchId: Long,
-                                       text: Column, id: Column,
-                                       n: Int): Option[Dedup.CorpusIndex] =
+                                       docs: StructType, id: Column): Option[Dedup.CorpusIndex] =
     Frontier.scopePaths(spark, dir, batchId).map(paths =>
-      Dedup.indexCorpus(spark.read.parquet(paths: _*), text, id, n))
+      Dedup.storedIndex(
+        spark.read.schema(StructType(
+            docs.filterNot(f => Dedup.indexColumns.contains(f.name)) ++ Dedup.indexSchema))
+          .parquet(paths: _*),
+        id))
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Row}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
 
@@ -33,7 +33,11 @@ object IngestPack {
                    shardDir: String, budget: Long,
                    blockSize: Long, settleEvery: Int = 16): StreamingQuery =
     docs.writeStream
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
+      .foreachBatch(Frontier.settling(settleEvery,
+          // fold settled assignment deltas — the boundary probe then
+          // aggregates one compacted frontier + a short delta tail
+          // instead of every batch dir ever written
+          Frontier.Settle(s"$shardDir/_assign", Seq(orderKey))) { (batch, batchId) =>
         val spark = batch.sparkSession
         if (!batch.isEmpty) {
           // earlier batches only: a retry of batch N must see the
@@ -61,14 +65,8 @@ object IngestPack {
             .withColumn("shard_id", expr(s"(cum - n_tokens) div $budget"))
             .write.mode("overwrite")
             .parquet(s"$shardDir/_assign/batch_$batchId")
-          // fold settled assignment deltas — the boundary probe then
-          // aggregates one compacted frontier + a short delta tail
-          // instead of every batch dir ever written
-          Frontier.maybeSettle(spark, s"$shardDir/_assign", batchId,
-            Seq(orderKey), settleEvery)
-          ()
         }
-      }
+      })
       .outputMode(OutputMode.Append())
       .start()
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
 
@@ -31,20 +31,18 @@ object IngestScore {
     * (doc_id, weight_micro) fragments under `scoreDir/batch_<id>`,
     * scored against the stored model `tag`. Fragments fold into one
     * compacted frontier every `settleEvery` batches
-    * ([[Frontier.maybeSettle]]) so the downstream selection job reads
+    * ([[Frontier.settling]]) so the downstream selection job reads
     * O(settleEvery) dirs via [[Frontier.readLayered]], not one per
     * batch ever written. */
   def scoredIngest(docs: DataFrame, tag: String, scoreDir: String,
                    settleEvery: Int = 16): StreamingQuery = {
     docs.writeStream
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
+      .foreachBatch(Frontier.settling(settleEvery,
+          Frontier.Settle(scoreDir, Seq("doc_id"))) { (batch, batchId) =>
         Dsir.weightsPersisted(batch.sparkSession, tag, batch.toDF(),
             col("text"), col("doc_id"))
           .write.mode("overwrite").parquet(s"$scoreDir/batch_$batchId")
-        Frontier.maybeSettle(batch.sparkSession, scoreDir, batchId,
-          Seq("doc_id"), settleEvery)
-        ()
-      }
+      })
       .outputMode(OutputMode.Append())
       .start()
   }

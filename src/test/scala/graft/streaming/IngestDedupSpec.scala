@@ -128,6 +128,84 @@ class IngestDedupSpec extends SparkSpec {
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(survivors == Set(1L))
   }
+
+  test("a batch probing survivors stored without index columns fails loudly") {
+    import spark.implicits._
+    // output written before survivors carried their index columns:
+    // batch_0 holds (doc_id, text) only, and the next batch's probe
+    // must not treat its rows as unbanded, unshingled documents
+    val dir = java.nio.file.Files.createTempDirectory("ingest_dedup_old_layout").toString
+    Seq((1L, text("b"))).toDF("doc_id", "text")
+      .write.mode("overwrite").parquet(s"$dir/batch_0")
+    val corpus = Seq((100L, text("z"))).toDF("doc_id", "text")
+    val index = Dedup.indexCorpus(corpus, col("text"), col("doc_id"), 3)
+    val batch = Seq((10L, text("b")), (11L, text("e"))).toDF("doc_id", "text")
+    def probe(batchId: Long) = Dedup.incrementalIndexed(
+      index +: IngestDedup.acceptedScope(spark, dir, batchId, batch.schema, col("doc_id")).toSeq,
+      batch, col("text"), col("doc_id"), 3, 0.3)
+    def failsLoudly(batchId: Long): Unit = {
+      val e = intercept[Exception](probe(batchId).collect())
+      val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      assert(chain.exists(t => String.valueOf(t.getMessage).contains("has no index columns")), e)
+    }
+    failsLoudly(1L)
+    // and once a settle folds the old rows in with new-layout ones
+    Frontier.settling(1, Frontier.Settle(dir, Seq("doc_id"))) { (_, _) =>
+      Dedup.withIndexColumns(Seq((2L, text("c"))).toDF("doc_id", "text"), col("text"), 3)
+        .write.mode("overwrite").parquet(s"$dir/batch_1")
+    }(spark.emptyDataFrame, 1L)
+    Frontier.settling(1, Frontier.Settle(dir, Seq("doc_id"))) { (_, _) => () }(
+      spark.emptyDataFrame, 2L)
+    assert(Frontier.scopeParts(spark, dir, 3L)._1.map(_._1).contains(1L))
+    failsLoudly(3L)
+  }
+
+  test("settling every batch, a micro-batch runs a bounded number of Spark jobs") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val dir = java.nio.file.Files.createTempDirectory("ingest_dedup_jobs").toString
+    val corpus = Seq((100L, text("z"))).toDF("doc_id", "text")
+    val index = Dedup.indexCorpus(corpus, col("text"), col("doc_id"), 3)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    val input = MemoryStream[(Long, String)]
+    val q = IngestDedup.dedupedIngest(
+      input.toDF().toDF("doc_id", "text"), index, dir, settleEvery = 1)
+    org.apache.spark.ListenerBusDrain.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    val perBatch = try {
+      Seq(
+        Seq((1L, text("b")), (2L, text("b"))),
+        Seq((10L, text("c")), (11L, text("b").replace("b40", "qq"))),
+        Seq((20L, text("z")), (21L, text("c")), (22L, text("d"))),
+        Seq((30L, text("e")), (31L, text("d")))).map { rows =>
+        org.apache.spark.ListenerBusDrain.drain(spark.sparkContext)
+        val before = jobs.get()
+        input.addData(rows: _*)
+        q.processAllAvailable()
+        org.apache.spark.ListenerBusDrain.drain(spark.sparkContext)
+        jobs.get() - before
+      }
+    } finally {
+      q.stop()
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    val survivors = Frontier.readLayered(spark, dir)
+      .select("doc_id").collect().map(_.getLong(0)).toSet
+    assert(survivors == Set(1L, 10L, 22L, 30L), s"survivors: $survivors")
+    info(s"jobs per batch: ${perBatch.mkString(", ")}")
+    assert(perBatch.forall(_ <= JobCeiling), s"jobs per batch: $perBatch")
+  }
+
+  /** Jobs one micro-batch may run at `settleEvery = 1`: the probe's
+    * query stages and survivor write, and the settle's fold beside it
+    * (one schema job for all its inputs, its shuffle and its write).
+    * Stored index columns and the one batch projection brought this
+    * from 26. */
+  private val JobCeiling = 22
 }
 
 object IngestDedupSpec {
