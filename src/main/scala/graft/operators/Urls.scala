@@ -50,7 +50,7 @@ object Urls {
   val trackingParamsRe = "utm_[a-z0-9_]*|gclid|fbclid|ref"
 
   /** Step 2: percent-escape normalization — the `graft_url_pct`
-    * byte-walk kernel ([[graft.plans.UrlPercentNorm]]). The first r14
+    * byte-walk kernel ([[graft.plans.UrlNorm.percentNorm]]). The first r14
     * form was a split + higher-order `transform` — interpreted
     * (CodegenFallback), and because the cascade is INLINED several
     * times in the dedup plan (see [[dedupByUrl]]'s plan-shape note)
@@ -64,7 +64,7 @@ object Urls {
     graft.plans.GraftFunctions.urlPct(u)
 
   /** Step 9: byte-lexicographic query-parameter sort; `…?` → no '?'
-    * (`graft_url_qsort`, [[graft.plans.UrlQuerySort]] — kernel for
+    * (`graft_url_qsort`, [[graft.plans.UrlNorm.querySort]] — kernel for
     * the same CSE reason as step 2). */
   private def sortQueryParams(u: Column): Column =
     graft.plans.GraftFunctions.urlQsort(u)
@@ -101,7 +101,7 @@ object Urls {
   }
 
   /** Step 8.5: RFC 3986 remove_dot_segments over the PATH portion
-    * only (`graft_url_dotfold`, [[graft.plans.UrlDotFold]] — a
+    * only (`graft_url_dotfold`, [[graft.plans.UrlNorm.dotFold]] — a
     * segment-stack byte walk; kernel for the same CSE reason as
     * steps 2 and 9, and because a fixpoint fold has no closed
     * regex form). `/./` collapses, `/seg/../` pops, `..` above the
@@ -114,7 +114,7 @@ object Urls {
     graft.plans.GraftFunctions.urlDotfold(u)
 
   /** The whole cascade as ONE codegen'd byte-walk kernel
-    * (`graft_url_canon`, [[graft.plans.UrlCanon]]). Why not the staged
+    * (`graft_url_canon`, [[graft.plans.UrlNorm.canon]]). Why not the staged
     * regex cascade: it is INLINED per reference in the crawl family's
     * hottest stages (filter + group key both cite the canon alias),
     * and at the r15 cascade width whole-stage codegen either exceeded

@@ -1,7 +1,6 @@
 package graft.pipeline
 
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.functions.col
 import Model.{AllocatedLine, DemandLine}
 
 /** A1/B1 — greedy sequential inventory allocation
@@ -28,11 +27,11 @@ import Model.{AllocatedLine, DemandLine}
   */
 object Allocate {
 
-  /** The engine-integrated form: plans A1 through the custom Catalyst
-    * operator (plans.GreedyAllocationNode / GreedyAllocationExec),
-    * letting Catalyst insert and co-plan the exchange + sort from the
-    * operator's declared requirements. Semantics identical to
-    * `apply`; demand must carry the DemandLine column shape. */
+  /** Plans A1 through the custom Catalyst operator
+    * (plans.GreedyAllocationNode / GreedyAllocationExec), letting
+    * Catalyst insert and co-plan the exchange + sort from the
+    * operator's declared requirements; demand must carry the
+    * DemandLine column shape. */
   def viaPlan(demand: org.apache.spark.sql.DataFrame, reloadDaily: Boolean = false)
       : org.apache.spark.sql.DataFrame = {
     val spark = demand.sparkSession
@@ -44,37 +43,10 @@ object Allocate {
   /** `reloadDaily` — B2 config: start every calendar day from the
     * product's original opening stock instead of carrying depletion
     * over (the reference parses the flag at src/main.py:84-86; in the
-    * golden run it is off and stock always carries over). */
+    * golden run it is off and stock always carries over). The typed
+    * view of [[viaPlan]]: one scan, one operator. */
   def apply(demand: Dataset[DemandLine], reloadDaily: Boolean = false): Dataset[AllocatedLine] = {
     import demand.sparkSession.implicits._
-    demand
-      .repartition(col("product_id"))
-      .sortWithinPartitions(col("product_id"), col("day"), col("seq"), col("pos"))
-      .mapPartitions { it =>
-        var pid = Long.MinValue
-        var first = true
-        var remaining = 0L
-        var opening = 0L
-        var curDay = Int.MinValue
-        it.map { d =>
-          // Reset key is d.day — the same sequence-key day the sort above and
-          // GreedyAllocationExec use. Using the timestamp's date here would
-          // diverge from the exec when a transaction's datetime-date differs
-          // from its source-file day (cross-midnight rows), and datetime-day
-          // groups aren't even contiguous under the (day, seq, pos) sort.
-          if (first || d.product_id != pid) {
-            pid = d.product_id; first = false
-            remaining = d.opening_stock; opening = d.opening_stock; curDay = d.day
-          } else if (reloadDaily && d.day != curDay) {
-            remaining = opening; curDay = d.day
-          } else {
-            curDay = d.day
-          }
-          val filled = if (remaining >= d.qty) { remaining -= d.qty; d.qty } else 0L
-          AllocatedLine(
-            d.order_id, d.customer_id, d.order_datetime, d.product_id,
-            filled, d.unit_price, (d.unit_price * BigDecimal(filled)).setScale(2))
-        }
-      }
+    viaPlan(demand.toDF(), reloadDaily).as[AllocatedLine]
   }
 }

@@ -4,9 +4,7 @@ import java.security.MessageDigest
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.trees.BinaryLike
 import org.apache.spark.sql.catalyst.util.GenericArrayData
@@ -202,50 +200,4 @@ case class DsirBucketCounts(
     copy(text = newLeft, isTarget = newRight)
 
   override def prettyName: String = "graft_dsir_counts"
-}
-
-/** Codegen'd scoring projection: `graft_dsir_score(text, llr)` where
-  * `llr` is the fitted B-long model riding as a plan literal (~32 KB
-  * — the BloomSemiJoin bounded-artifact pattern). The whole scoring
-  * pass is this one expression inside whole-stage codegen: no gram
-  * explode, no model join, no doc-keyed sum — a projection over the
-  * corpus scan. */
-case class DsirScore(child: Expression, llr: Array[Long]) extends UnaryExpression {
-
-  override def dataType: DataType = LongType
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"graft_dsir_score expects a string column, got ${other.simpleString}")
-  }
-
-  override protected def nullSafeEval(in: Any): Any =
-    DsirKernels.score(in.asInstanceOf[UTF8String], llr)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val arr = ctx.addReferenceObj("llr", llr, "long[]")
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.plans.DsirKernels.score($a, $arr);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-
-  override def prettyName: String = "graft_dsir_score"
-
-  // The model is compared, hashed and printed by content: an array
-  // field would make two equal models unequal and print as its
-  // identity hash (`[J@…`), which differs between any two plans.
-  private def llrDigest: String =
-    f"llr[${llr.length}]#${java.util.Arrays.hashCode(llr)}%08x"
-
-  override protected def stringArgs: Iterator[Any] = Iterator(child, llrDigest)
-
-  override def equals(other: Any): Boolean = other match {
-    case o: DsirScore => child == o.child && java.util.Arrays.equals(llr, o.llr)
-    case _ => false
-  }
-
-  override def hashCode(): Int = 31 * child.hashCode() + java.util.Arrays.hashCode(llr)
 }

@@ -17,10 +17,9 @@ import org.apache.spark.sql.types._
   * `ClusteredDistribution(product_id)` + in-partition ordering by
   * (product, day, seq, pos) — so Catalyst plans the exchange and
   * external sort itself, co-plans them with neighboring operators,
-  * and AQE sizes the shuffle. The execution body is the identical
-  * O(1)-state streaming scan as pipeline.Allocate; `Allocate` remains
-  * the golden-path implementation, this node is the engine-integrated
-  * form (used via `Allocate.viaPlan`).
+  * and AQE sizes the shuffle. The execution body is the engine's one
+  * allocation scan, O(1) state per product; `Allocate.viaPlan` plans
+  * it and `Allocate.apply` is its typed view.
   *
   * Child contract (by column name): order_id, customer_id,
   * order_datetime, product_id, qty, unit_price decimal(38,18),

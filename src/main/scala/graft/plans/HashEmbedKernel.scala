@@ -2,12 +2,7 @@ package graft.plans
 
 import java.security.MessageDigest
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.UnaryExpression
-import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Single-pass signed feature-hash embedding kernel
@@ -70,33 +65,3 @@ object HashEmbedKernel {
   }
 }
 
-/** The expression wrapper: dims parameterizes the accumulator, so it
-  * must be a compile-time literal (the WinnowSelect/DsirCounts
-  * convention). */
-case class HashEmbed(child: Expression, dims: Int) extends UnaryExpression {
-
-  require(dims > 0 && dims <= 64 && (dims & (dims - 1)) == 0,
-    s"graft_hash_embed: dims must be a power of two in 1..64 — only then " +
-      s"is `h mod dims` a pure low-bit mask, keeping the sign (bit 6) " +
-      s"statistically independent of the bucket; got $dims")
-
-  override def dataType: DataType = ArrayType(FloatType, containsNull = false)
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"graft_hash_embed expects a string column, got ${other.simpleString}")
-  }
-
-  override protected def nullSafeEval(in: Any): Any =
-    HashEmbedKernel.embed(in.asInstanceOf[UTF8String], dims)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.plans.HashEmbedKernel.embed($a, $dims);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-
-  override def prettyName: String = "graft_hash_embed"
-}

@@ -1,11 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.types.{DataType, LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** HTML main-text extraction in ONE pass — the crawl pipeline's
@@ -64,39 +60,6 @@ import org.apache.spark.unsafe.types.UTF8String
   * HtmlExtractSpec pins kernel ≡ staged bit-equality on well-formed
   * and adversarial markup soup alike.
   */
-case class HtmlExtract(child: Expression, minTokens: Int, linkDensityInv: Int)
-    extends UnaryExpression {
-
-  require(minTokens >= 0 && linkDensityInv >= 0,
-    s"graft_html_extract: thresholds must be non-negative, " +
-      s"got ($minTokens, $linkDensityInv)")
-
-  override def dataType: DataType = StructType(Seq(
-    StructField("main_text", StringType, nullable = false),
-    StructField("n_blocks", LongType, nullable = false),
-    StructField("kept_blocks", LongType, nullable = false),
-    StructField("n_links", LongType, nullable = false)))
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"graft_html_extract expects a string column, got ${other.simpleString}")
-  }
-
-  override protected def nullSafeEval(in: Any): Any =
-    HtmlExtract.compute(in.asInstanceOf[UTF8String], minTokens, linkDensityInv)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.plans.HtmlExtract.compute(" +
-        s"$a, $minTokens, $linkDensityInv);")
-
-  override def prettyName: String = "graft_html_extract"
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object HtmlExtract {
 
   /** The HTML5 block-level tag set whose open/close (attributed or

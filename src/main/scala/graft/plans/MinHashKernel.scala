@@ -2,11 +2,7 @@ package graft.plans
 
 import java.security.MessageDigest
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Single-pass MinHash signature kernel
@@ -112,30 +108,3 @@ object MinHashKernel {
   }
 }
 
-/** Expression wrapper: the shingle width parameterizes the window
-  * walk, so it must be a compile-time literal (the kernel-family
-  * convention). */
-case class MinHashSig(child: Expression, n: Int) extends UnaryExpression {
-
-  require(n > 0, s"graft_minhash: n must be positive, got $n")
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"graft_minhash expects a string column, got ${other.simpleString}")
-  }
-
-  override protected def nullSafeEval(in: Any): Any =
-    MinHashKernel.signature(in.asInstanceOf[UTF8String], n)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.plans.MinHashKernel.signature($a, $n);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-
-  override def prettyName: String = "graft_minhash"
-}

@@ -1,9 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.types.{DataType, DoubleType, LongType, StructField, StructType}
 
 /** Whole-row ProphetLike normal-equation solve (changepoint + Fourier
@@ -34,46 +32,8 @@ import org.apache.spark.sql.types.{DataType, DoubleType, LongType, StructField, 
   * same left-associated subtract-multiply-divide chains. A property
   * spec (`ProphetKernelSpec`) pins bit-equality against the staged
   * level fold on live data.
-  */
-case class ProphetSolve(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = ProphetSolveKernel.outputType
-
-  override def nullable: Boolean = child.nullable
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case s: StructType if s.length == ProphetSolveKernel.nInputs =>
-      // per-FIELD types, not just the count: solve() reads by ordinal
-      // with getLong/getDouble, so a DoubleType where a LongType is
-      // expected would reinterpret raw bits into silently wrong
-      // coefficients instead of failing analysis
-      val expected = ProphetSolveKernel.inputTypes
-      val bad = s.fields.zip(expected).zipWithIndex.collect {
-        case ((f, want), i) if f.dataType != want =>
-          s"${ProphetSolveKernel.inputCols(i)}: got ${f.dataType.simpleString}," +
-            s" want ${want.simpleString}"
-      }
-      if (bad.isEmpty) TypeCheckResult.TypeCheckSuccess
-      else TypeCheckResult.TypeCheckFailure(
-        s"graft_prophet_solve field type mismatch — ${bad.mkString("; ")}")
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"graft_prophet_solve expects struct<${ProphetSolveKernel.nInputs} " +
-        s"Gram-sum fields>, got ${other.simpleString}")
-  }
-
-  override protected def nullSafeEval(in: Any): Any =
-    ProphetSolveKernel.solve(in.asInstanceOf[InternalRow])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.ProphetSolveKernel.solve($c)")
-
-  override def prettyName: String = "graft_prophet_solve"
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** The numeric core + the input/output layout contract. Constants
+  *
+  * The numeric core + the input/output layout contract. Constants
   * (`harmonics`/`period`/`ridge`/`fval`) are THE single source of
   * truth — `ProphetRel` builds its SQL level text from these, so the
   * kernel and the oracle text can never drift apart. */

@@ -1,11 +1,8 @@
 package graft.plans
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression, XXH64}
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, XXH64}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types._
 
 /** All Gopher-style repetition-signal NUMERATORS of one document in a
   * single compiled pass: `struct(total_chars, top: array<long>,
@@ -34,40 +31,6 @@ import org.apache.spark.sql.types._
   * 0 — the value the caller's `coalesce(num, 0)` produced for the
   * exploded form's absent row.
   */
-case class RepetitionStats(child: Expression, topNs: Seq[Int], dupNs: Seq[Int])
-    extends UnaryExpression {
-
-  override def dataType: DataType = StructType(Seq(
-    StructField("total_chars", LongType, nullable = false),
-    StructField("top", ArrayType(LongType, containsNull = false), nullable = false),
-    StructField("dup", ArrayType(LongType, containsNull = false), nullable = false)))
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) if (topNs ++ dupNs).forall(_ >= 1) =>
-      TypeCheckResult.TypeCheckSuccess
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckFailure(
-      s"graft_rep_stats widths must all be >= 1, got top=$topNs dup=$dupNs")
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"graft_rep_stats expects array<string>, got ${other.simpleString}")
-  }
-
-  override protected def nullSafeEval(in: Any): Any =
-    RepetitionStats.compute(in.asInstanceOf[ArrayData], topNs.toArray, dupNs.toArray)
-
-  // one static call per row — the loops live in compiled bytecode (the
-  // RollingGramHash posture), so whole-stage codegen and its
-  // subexpression elimination see a single opaque invoke
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val topRef = ctx.addReferenceObj("topNs", topNs.toArray, "int[]")
-    val dupRef = ctx.addReferenceObj("dupNs", dupNs.toArray, "int[]")
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.plans.RepetitionStats.compute($a, $topRef, $dupRef);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object RepetitionStats {
 
   def compute(toks: ArrayData, topNs: Array[Int], dupNs: Array[Int]): InternalRow = {

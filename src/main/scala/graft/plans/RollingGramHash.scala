@@ -1,10 +1,7 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
+import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 
 /** All word-k-gram fingerprints of a token array in one pass:
   * `array<long>`, element i = 64-bit Rabin–Karp polynomial hash of
@@ -32,31 +29,6 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
   * Token arrays from `split` never contain nulls; null elements are
   * not supported.
   */
-case class RollingGramHash(child: Expression, k: Int) extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) if k >= 1 => TypeCheckResult.TypeCheckSuccess
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckFailure(
-      s"graft_grams window size must be >= 1, got $k")
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"graft_grams expects array<string>, got ${other.simpleString}")
-  }
-
-  override protected def nullSafeEval(in: Any): Any =
-    RollingGramHash.compute(in.asInstanceOf[ArrayData], k)
-
-  // one static call per row — the loop body lives in compiled bytecode,
-  // so wrapping whole-stage codegen around it costs a single invoke
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.plans.RollingGramHash.compute($a, $k);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object RollingGramHash {
 
   /** Odd multiplier (2⁶⁴·φ⁻¹ rounded to odd) — invertible mod 2⁶⁴. */

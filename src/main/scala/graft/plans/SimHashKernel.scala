@@ -2,10 +2,7 @@ package graft.plans
 
 import java.security.MessageDigest
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -75,30 +72,3 @@ object SimHashKernel {
   }
 }
 
-/** Expression wrapper: the bit width sizes the vote array, so it must
-  * be a compile-time literal (the kernel-family convention). */
-case class SimHashFp(child: Expression, bits: Int) extends UnaryExpression {
-
-  require(bits > 0 && bits <= 64,
-    s"graft_simhash: bits must be in 1..64, got $bits")
-
-  override def dataType: DataType = LongType
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"graft_simhash expects a string column, got ${other.simpleString}")
-  }
-
-  override protected def nullSafeEval(in: Any): Any =
-    SimHashKernel.fingerprint(in.asInstanceOf[UTF8String], bits)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.plans.SimHashKernel.fingerprint($a, $bits);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-
-  override def prettyName: String = "graft_simhash"
-}

@@ -1,11 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.types.{DataType, LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Shannon-entropy signals of one string in ONE pass — no
@@ -30,32 +26,6 @@ import org.apache.spark.unsafe.types.UTF8String
   * a per-char explode would 500× the row count before the first
   * aggregation; this stays a projection inside whole-stage codegen.
   */
-case class TextEntropy(child: Expression, delim: String) extends UnaryExpression {
-
-  override def dataType: DataType = StructType(Seq(
-    StructField("n", LongType, nullable = false),
-    StructField("distinct", LongType, nullable = false),
-    StructField("entropy_u", LongType, nullable = false)))
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"graft_entropy expects a string column, got ${other.simpleString}")
-  }
-
-  override protected def nullSafeEval(in: Any): Any =
-    TextEntropy.compute(in.asInstanceOf[UTF8String], delim)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val d = ctx.addReferenceObj("delim", delim, "java.lang.String")
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.plans.TextEntropy.compute($a, $d);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object TextEntropy {
 
   def compute(s: UTF8String, delim: String): InternalRow = {

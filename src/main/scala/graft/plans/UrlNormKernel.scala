@@ -1,14 +1,11 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** URL canonicalization's two non-regex steps as compiled byte walks:
-  * percent-escape normalization (`graft_url_pct`, cascade step 2) and
-  * query-parameter sorting (`graft_url_qsort`, step 9).
+/** URL canonicalization as compiled byte walks: percent-escape
+  * normalization (`graft_url_pct`, cascade step 2), query-parameter
+  * sorting (`graft_url_qsort`, step 9), dot-segment folding
+  * (`graft_url_dotfold`) and the whole cascade (`graft_url_canon`).
   *
   * Why kernels and not `split`/`transform`/`array_sort`: higher-order
   * functions are interpreted (CodegenFallback), and the canonicalize
@@ -35,39 +32,9 @@ import org.apache.spark.unsafe.types.UTF8String
   *    comparison would diverge on supplementary-plane text. All
   *    structural bytes ('%', hex, '?', '&') are ASCII and never occur
   *    inside a UTF-8 continuation, so the byte walk is
-  *    encoding-safe. */
-abstract class UrlByteKernel extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects a string column, got ${other.simpleString}")
-  }
-}
-
-case class UrlPercentNorm(child: Expression) extends UrlByteKernel {
-  override protected def nullSafeEval(in: Any): Any =
-    UrlNorm.percentNorm(in.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.plans.UrlNorm.percentNorm($c);")
-  override def prettyName: String = "graft_url_pct"
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-case class UrlQuerySort(child: Expression) extends UrlByteKernel {
-  override protected def nullSafeEval(in: Any): Any =
-    UrlNorm.querySort(in.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.plans.UrlNorm.querySort($c);")
-  override def prettyName: String = "graft_url_qsort"
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** Cascade step 8.5 (`graft_url_dotfold`): RFC 3986
+  *    encoding-safe.
+  *
+  * Cascade step 8.5 (`graft_url_dotfold`): RFC 3986
   * remove_dot_segments over the URL's PATH portion — `/./` collapses,
   * `/seg/../` pops, `..` above the root is a no-op, and a trailing
   * `/.`|`/..` keeps the directory slash (so `/a/b/..` → `/a/`,
@@ -78,19 +45,9 @@ case class UrlQuerySort(child: Expression) extends UrlByteKernel {
   * kernels exist to avoid. Query and fragment are untouched; inputs
   * without a `scheme://authority/` prefix return unchanged. The
   * relational reference (the living spec UrlsSpec fuzzes this
-  * against) is Urls.foldDotSegmentsStaged. */
-case class UrlDotFold(child: Expression) extends UrlByteKernel {
-  override protected def nullSafeEval(in: Any): Any =
-    UrlNorm.dotFold(in.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.plans.UrlNorm.dotFold($c);")
-  override def prettyName: String = "graft_url_dotfold"
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** The WHOLE canonicalization cascade (`graft_url_canon`) — trim,
+  * against) is Urls.foldDotSegmentsStaged.
+  *
+  * The WHOLE canonicalization cascade (`graft_url_canon`) — trim,
   * percent normalization, scheme/authority lowering, www strip,
   * fragment strip, default-port strip, tracking-param strips, dot-
   * segment fold, trailing-slash strip, query sort — as ONE codegen'd
@@ -121,17 +78,6 @@ case class UrlDotFold(child: Expression) extends UrlByteKernel {
   * java.util.regex replay of the staged steps (the same engine
   * Catalyst's RegExpReplace uses, so the fallback is exact by
   * construction). */
-case class UrlCanon(child: Expression) extends UrlByteKernel {
-  override protected def nullSafeEval(in: Any): Any =
-    UrlNorm.canon(in.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.plans.UrlNorm.canon($c);")
-  override def prettyName: String = "graft_url_canon"
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object UrlNorm {
 
   private def isHex(b: Byte): Boolean =

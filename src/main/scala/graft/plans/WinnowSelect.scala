@@ -1,9 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 
@@ -37,29 +35,6 @@ import org.apache.spark.sql.types._
   * preferred some other element that also outranks (h, p) in every
   * later window containing both (WinnowSpec asserts equivalence with
   * the interpreted array_distinct form on random corpora). */
-case class WinnowSelect(child: Expression, w: Int) extends UnaryExpression {
-
-  override def dataType: DataType = WinnowSelect.outType
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(LongType, _) if w >= 1 => TypeCheckResult.TypeCheckSuccess
-    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckFailure(
-      s"graft_winnow window size must be >= 1, got $w")
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"graft_winnow expects array<bigint>, got ${other.simpleString}")
-  }
-
-  override protected def nullSafeEval(in: Any): Any =
-    WinnowSelect.compute(in.asInstanceOf[ArrayData], w)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.plans.WinnowSelect.compute($a, $w);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object WinnowSelect {
 
   val outType: ArrayType = ArrayType(StructType(Seq(

@@ -884,7 +884,7 @@ object Crawl {
     * dsCrawlRedirects posture, the corpus is never shuffled). The
     * streaming twin is `IngestCrawl.crawledIngest`, which keys
     * admission on the declared canonical and lands the same alias
-    * rows — see its honorCanonical contract. */
+    * rows. */
   def dsCrawlCanonical(s: SparkSession, d: String): DataFrame = {
     import graft.operators.{Html, Urls}
     import org.apache.spark.sql.expressions.Window

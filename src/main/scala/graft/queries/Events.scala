@@ -344,7 +344,7 @@ object Events {
   }
 
   /** The solved 1-row frame: the sums plus (icpt, x0..x7) from the
-    * whole-row [[graft.plans.ProphetSolve]] kernel — ONE compiled
+    * whole-row [[graft.plans.ProphetSolveKernel]] kernel — ONE compiled
     * call evaluating the identical double DAG the shared level text
     * spells out, with zero staging barriers. The r17 staged level
     * fold ([[prophetSolvedStaged]]) shipped ~7 sequential one-row

@@ -396,8 +396,7 @@ object IngestCrawl {
                     recrawlScope: Option[DataFrame] = None,
                     cashDir: Option[String] = None,
                     opicInit: Long = graft.queries.Crawl.opicCash,
-                    recrawlSnapshotDir: Option[String] = None,
-                    honorCanonical: Boolean = true)
+                    recrawlSnapshotDir: Option[String] = None)
       : StreamingQuery = {
     // Pin the recrawl scope EAGERLY at stream construction: the due
     // set is typically a plan over the fetched ledger this very
@@ -462,10 +461,10 @@ object IngestCrawl {
           // in the fetched ledger as `alias` rows below, so discovery
           // and nextWave never re-schedule a known redirect source.
           //
-          // rel=canonical (r19): with `honorCanonical`, the in-document
-          // half of the SAME signal — a page declaring
-          // `<link rel="canonical">` (Html.canonicalHref; possibly
-          // relative, resolved against the redirect-final base) keys its
+          // rel=canonical (r19): the in-document half of the SAME
+          // signal — a page declaring `<link rel="canonical">`
+          // (Html.canonicalHref; possibly relative, resolved against
+          // the redirect-final base) keys its
           // admission on the DECLARED canonical, the most specific
           // aliasing statement available (it overrides the transport
           // final: the site says what the fetched content IS). Both the
@@ -544,24 +543,21 @@ object IngestCrawl {
           // the same expression as __src when no final_url column, so
           // codegen CSE evaluates the cascade once) and __key (the
           // admission key: declared canonical when present, else base)
-          val keyed0 = gatedRaw.select(col("doc_id"), col("html"),
-            Urls.canonicalize(col("url")).as("__src"),
-            Urls.canonicalize(eff).as("__base"))
-          val keyed =
-            if (!honorCanonical) keyed0.withColumn("__key", col("__base"))
-            else keyed0
-              // __ch as its own column: resolveHref references the href
-              // ~8 times, and inlined each reference re-runs the two
-              // extraction regexes over the page (CollapseProject keeps
-              // the boundary — non-cheap, multi-referenced)
-              .withColumn("__ch", Html.canonicalHref(col("html")))
-              // declared-href gate: pages without a declaration (the
-              // vast majority) skip the resolve + canonicalize chain
-              // entirely — CaseWhen evaluates branches lazily
-              .withColumn("__key", when(col("__ch").isNotNull, coalesce(
-                  Urls.canonicalize(Urls.resolveHref(col("__base"), col("__ch"))),
-                  col("__base")))
-                .otherwise(col("__base")))
+          val keyed = gatedRaw.select(col("doc_id"), col("html"),
+              Urls.canonicalize(col("url")).as("__src"),
+              Urls.canonicalize(eff).as("__base"))
+            // __ch as its own column: resolveHref references the href
+            // ~8 times, and inlined each reference re-runs the two
+            // extraction regexes over the page (CollapseProject keeps
+            // the boundary — non-cheap, multi-referenced)
+            .withColumn("__ch", Html.canonicalHref(col("html")))
+            // declared-href gate: pages without a declaration (the
+            // vast majority) skip the resolve + canonicalize chain
+            // entirely — CaseWhen evaluates branches lazily
+            .withColumn("__key", when(col("__ch").isNotNull, coalesce(
+                Urls.canonicalize(Urls.resolveHref(col("__base"), col("__ch"))),
+                col("__base")))
+              .otherwise(col("__base")))
           // the keyed frame is read by UP TO four consumers in a full
           // configuration — admission's keep-first, the alias-pair
           // union's TWO branches, and discovery's own-batch exclusion —
@@ -586,16 +582,14 @@ object IngestCrawl {
           // maps to it; batch-content-only, so replay-stable like
           // firstInBatch; bounded by the batch's redirected or
           // canonical-declaring fetches after the src =!= dst filter
-          val aliasPairs =
-            if (!hasFinal && !honorCanonical) None
-            else Some(keyedC
-              .select(col("__src").as("src"), col("__key").as("dst"))
-              .unionByName(keyedC
-                .select(col("__base").as("src"), col("__key").as("dst")))
-              .filter(col("src") =!= col("dst"))
-              .filter(!Urls.hostBlocked(Urls.hostOf(col("src")),
-                blockedDomains))
-              .distinct())
+          val aliasPairs = keyedC
+            .select(col("__src").as("src"), col("__key").as("dst"))
+            .unionByName(keyedC
+              .select(col("__base").as("src"), col("__key").as("dst")))
+            .filter(col("src") =!= col("dst"))
+            .filter(!Urls.hostBlocked(Urls.hostOf(col("src")),
+              blockedDomains))
+            .distinct()
           // admitted frontier: settled run artifact + this run's EARLIER
           // batches (the current id excluded — a retry must not
           // anti-join its own partial output, see Frontier.scopePaths)
@@ -723,16 +717,13 @@ object IngestCrawl {
             // deterministic on replay. The fold's exchange is keyed on
             // the ALIAS frame only (bounded by the batch's redirected
             // fetches), never the whole batch.
-            val now = aliasPairs match {
-              case Some(ap) => contentNow.unionByName(
-                ap.groupBy(col("src").as("canon_url"))
-                  .agg(min(md5(col("dst").cast("binary"))).as("h"))
-                  .withColumn("verdict", lit("alias"))
-                  .join(contentNow.select("canon_url"),
-                    Seq("canon_url"), "left_anti")
-                  .select(col("canon_url"), col("verdict"), col("h")))
-              case None => contentNow
-            }
+            val now = contentNow.unionByName(
+              aliasPairs.groupBy(col("src").as("canon_url"))
+                .agg(min(md5(col("dst").cast("binary"))).as("h"))
+                .withColumn("verdict", lit("alias"))
+                .join(contentNow.select("canon_url"),
+                  Seq("canon_url"), "left_anti")
+                .select(col("canon_url"), col("verdict"), col("h")))
             // not_modified rows (r19): one observation per validated
             // URL — h CARRIES the previous hash (the server confirmed
             // that exact payload), the fetch counts, the change count
@@ -856,11 +847,8 @@ object IngestCrawl {
             // this batch's own alias SOURCES are fetched too (their
             // ledger rows land below this batch) — a page linking to a
             // just-redirected URL must not re-emit it as a candidate
-            val notOwn = aliasPairs match {
-              case Some(ap) => notOwn0.join(
-                ap.select(col("src").as("url")), Seq("url"), "left_anti")
-              case None => notOwn0
-            }
+            val notOwn = notOwn0.join(
+              aliasPairs.select(col("src").as("url")), Seq("url"), "left_anti")
             // robots gate LAST (fewest candidates left): a disallowed
             // URL is never EMITTED as a candidate, so no later stage —
             // nextWave, an external scheduler draining the dir — can

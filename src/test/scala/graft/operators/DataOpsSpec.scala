@@ -331,7 +331,9 @@ class DataOpsSpec extends SparkSpec {
   }
 
   test("Dataset allocator and custom-plan allocator agree on lineitem") {
-    val a = DataOps.allocGreedy(spark, sf).collect()
+    import spark.implicits._
+    val a = DataOps.allocByProduct(spark, sf)(demand => graft.pipeline.AllocateReference(
+        demand.as[graft.pipeline.Model.DemandLine]).toDF()).collect()
       .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2), r.getLong(3))).toMap
     val b = DataOps.allocGreedyPlan(spark, sf).collect()
       .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2), r.getLong(3))).toMap

@@ -1,8 +1,9 @@
 package graft.operators
 
 import graft.SparkSpec
-import graft.plans.DsirScore
+import graft.plans.GraftFunctions
 import graft.queries.DataOps
+import org.apache.spark.sql.GraftBridge
 import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.functions._
 
@@ -98,9 +99,10 @@ class DsirModelSpec extends SparkSpec {
     assert(plan() == first)
 
     val llr = Array.tabulate(16)(i => i * 7L - 3L)
-    val text = Literal("alpha beta")
-    assert(DsirScore(text, llr) == DsirScore(text, llr.clone))
-    assert(DsirScore(text, llr).hashCode == DsirScore(text, llr.clone).hashCode)
-    assert(DsirScore(text, llr) != DsirScore(text, llr.map(_ + 1)))
+    val text = GraftBridge.column(Literal("alpha beta"))
+    def score(m: Array[Long]) = GraftBridge.expression(GraftFunctions.dsirScore(text, m))
+    assert(score(llr) == score(llr.clone))
+    assert(score(llr).hashCode == score(llr.clone).hashCode)
+    assert(score(llr) != score(llr.map(_ + 1)))
   }
 }

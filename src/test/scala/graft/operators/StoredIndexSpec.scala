@@ -59,7 +59,7 @@ class StoredIndexSpec extends SparkSpec {
     val ix = Dedup.storedIndex(spark.read.parquet(dir), col("doc_id"))
     Seq(ix.md5s, ix.buckets, ix.shingleSets).foreach { df =>
       val plan = df.queryExecution.optimizedPlan.toString
-      assert(!plan.contains("graft_minhash") && !plan.contains("rollinggramhash") &&
+      assert(!plan.contains("graft_minhash") && !plan.contains("graft_grams") &&
         !plan.contains("md5("), plan)
     }
   }

@@ -75,12 +75,12 @@ class AllocateSpec extends SparkSpec {
       DemandLine(2L, 1L, "2024-02-02T00:30:00.000001", 10L, 4L, BigDecimal("2.50"), 5L, 20240201, 1L, 0),
       DemandLine(3L, 1L, "2024-02-02T08:00:00.000001", 10L, 4L, BigDecimal("2.50"), 5L, 20240202, 2L, 0)
     ).toDS()
-    val typed = Allocate(ds, reloadDaily = true).collect()
+    val typed = AllocateReference(ds, reloadDaily = true).collect()
       .map(l => l.order_id -> l.quantity).toMap
     // same day-file → no reset between rows 1 and 2; reset before row 3
     assert(typed == Map(1L -> 4L, 2L -> 0L, 3L -> 4L))
-    val planned = Allocate.viaPlan(ds.toDF(), reloadDaily = true).collect()
-      .map(r => r.getLong(0) -> r.getLong(4)).toMap
+    val planned = Allocate(ds, reloadDaily = true).collect()
+      .map(l => l.order_id -> l.quantity).toMap
     assert(planned == typed)
   }
 

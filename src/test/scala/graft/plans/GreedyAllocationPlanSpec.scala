@@ -1,11 +1,12 @@
 package graft.plans
 
 import graft.SparkSpec
-import graft.pipeline.{Allocate, Model}
+import graft.pipeline.{Allocate, AllocateReference, Model}
 
 /** The custom Catalyst operator must agree exactly with the Dataset
-  * allocator, and its declared requirements must make Catalyst plan
-  * exactly one exchange + sort beneath it. */
+  * allocator kept as reference (AllocateReference), and its declared
+  * requirements must make Catalyst plan exactly one exchange + sort
+  * beneath it. */
 class GreedyAllocationPlanSpec extends SparkSpec {
 
   private def demand(n: Int, seed: Int) = {
@@ -24,7 +25,7 @@ class GreedyAllocationPlanSpec extends SparkSpec {
   test("custom plan node matches the Dataset allocator on both modes") {
     for (mode <- Seq(false, true); seed <- Seq(1, 2, 3)) {
       val d = demand(200, seed)
-      val expected = Allocate(d, mode).collect()
+      val expected = AllocateReference(d, mode).collect()
         .map(l => (l.order_id, l.product_id) -> (l.quantity, l.line_total)).toMap
       val got = Allocate.viaPlan(d.toDF(), mode).collect()
         .map(r => (r.getLong(0), r.getLong(3)) -> (r.getLong(4), BigDecimal(r.getDecimal(6))))
@@ -47,7 +48,7 @@ class GreedyAllocationPlanSpec extends SparkSpec {
 
   test("schema of the planned operator matches the Dataset form") {
     val d = demand(10, 11)
-    val a = Allocate(d).toDF().schema.map(f => (f.name, f.dataType.simpleString))
+    val a = AllocateReference(d).toDF().schema.map(f => (f.name, f.dataType.simpleString))
     val b = Allocate.viaPlan(d.toDF()).schema.map(f => (f.name, f.dataType.simpleString))
     assert(a == b, s"$a vs $b")
   }

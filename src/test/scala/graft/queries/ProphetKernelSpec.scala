@@ -4,7 +4,7 @@ import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
 /** The ProphetLike whole-row solve kernel's bit-equality contract:
-  * [[graft.plans.ProphetSolve]] evaluates the IDENTICAL double DAG
+  * [[graft.plans.ProphetSolveKernel]] evaluates the IDENTICAL double DAG
   * the shared SQL level text (ProphetRel.levels + predictLevels)
   * spells out, so the kernel query path and the staged level-fold
   * path must agree to the BIT on live data — not to a tolerance.
